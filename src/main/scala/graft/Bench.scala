@@ -545,10 +545,8 @@ object Bench {
       // safe under any per-line parse cap), and the FINAL medians line —
       // the one whose "queries" survives the merge and the only one that
       // fits the tail window with the headline — carries the MOST
-      // EXPENSIVE entries by median (the perf-adjudicable set), plus any
-      // entries the previous sidecar artifact ranked in ITS top set, so
-      // round-over-round n_common covers the same heavy entries even as
-      // rankings shift. The sidecar above remains the complete record.
+      // EXPENSIVE entries by median (the perf-adjudicable set). The
+      // sidecar above remains the complete record.
       val kvOf = ok.map(n => n -> ("\"" + n + "\":" + r3(med(n)))).toMap
       // pack RIGHT-to-left so the fold's small leftover part lands at the
       // alphabetical START: the alphabetical part printed immediately
@@ -573,16 +571,12 @@ object Bench {
         }
         picked.toSeq
       }
-      val priorTop = priors.toSeq.sortBy(-_._2).map(_._1)
-        .take(40).filter(kvOf.contains)
       // zipf_fit is pinned first into the top set: it is the ONLY entry the
       // r18 driver artifact's parser kept, so it is the only possible
       // common key for the r18→r19 round-over-round comparison (~17 chars
       // of the budget; from r19 on the top sets overlap on their own)
       val topNames = packTop(
-        (Seq("zipf_fit").filter(kvOf.contains) ++
-          (ok.sortBy(n => (-med(n), n)) ++ priorTop).distinct
-            .sortBy(n => (-med(n), n))))
+        Seq("zipf_fit").filter(kvOf.contains) ++ ok.sortBy(n => (-med(n), n)))
       val parts = alphaParts :+ topNames.sorted.map(kvOf).toList
       parts.zipWithIndex.foreach { case (p, i) =>
         println(s"""{"detail":"medians","part":${i + 1},"of":${parts.size},"queries":${p.mkString("{", ",", "}")}}""")

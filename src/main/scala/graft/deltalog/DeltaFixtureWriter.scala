@@ -1,12 +1,13 @@
 package graft.deltalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import scala.collection.mutable
 
 /** Writes valid (minimal) Delta commit JSON so tests can build real
   * log-backed tables without a delta jar. Mirrors the mutation surface the
@@ -14,9 +15,11 @@ import scala.collection.mutable
   * test_delta_analyzer_metrics.py:23-29): partitioned overwrite/append
   * writes, predicate DELETE, and OPTIMIZE compaction.
   *
-  * Test/fixture scope only — it deliberately uses driver-side file listing
-  * (fixtures are tiny); the *reader* (DeltaLog/DeltaSnapshot) is the
-  * scale-path code.
+  * Every mutation appends parquet through Spark, finds the files it added
+  * by diffing [[DeltaLog.dataFiles]] around the write ([[appendFiles]]),
+  * and commits them through the one commit writer, [[writeCommitStream]] —
+  * which the scale-path operators in `Maintenance` use too. Commit files
+  * are written with java.nio, so the table must live on a local path.
   */
 object DeltaFixtureWriter {
 
@@ -49,90 +52,40 @@ object DeltaFixtureWriter {
     }
   }
 
-  /** Data files currently on disk (relative path, size), recursive,
-    * `_delta_log` excluded. */
-  private def listDataFiles(table: String): Map[String, Long] = {
-    val base = Paths.get(table)
-    val out = mutable.Map[String, Long]()
-    def walk(f: File): Unit = {
-      if (f.isDirectory) {
-        if (f.getName != "_delta_log") f.listFiles().foreach(walk)
-      } else if (f.getName.endsWith(".parquet")) {
-        out(base.relativize(f.toPath).toString) = f.length()
-      }
-    }
-    val root = new File(table)
-    if (root.exists()) walk(root)
-    out.toMap
-  }
-
-  /** Parse hive-style `col=value/` segments out of a relative file path. */
+  /** Parse hive-style `col=value/` segments out of a relative file path.
+    * Spark escapes special characters in partition directory names
+    * (`a:b` → `a%3Ab`); the partition value is the unescaped text. */
   private def partitionValuesOf(relPath: String, partitionBy: Seq[String]): Seq[(String, String)] = {
     val segs = relPath.split('/').dropRight(1)
     partitionBy.flatMap { c =>
       segs.collectFirst {
-        case s if s.startsWith(c + "=") => c -> s.substring(c.length + 1)
+        case s if s.startsWith(c + "=") =>
+          c -> ExternalCatalogUtils.unescapePathName(s.substring(c.length + 1))
       }
     }
   }
 
-  private def writeCommit(
-      table: String,
-      version: Long,
-      operation: String,
-      parameters: Seq[(String, String)],
-      adds: Seq[(String, Long)],
-      removes: Seq[String],
-      partitionBy: Seq[String],
-      writeMeta: Boolean,
-      schemaJson: Option[String] = None): Unit = {
-    val ts = System.currentTimeMillis()
-    val lines = mutable.ArrayBuffer[String]()
-    val metrics = Seq(
-      "num_added_files" -> adds.size.toString,
-      "num_removed_files" -> removes.size.toString)
-    lines += s"""{"commitInfo":{"timestamp":$ts,"operation":${jStr(operation)},"operationParameters":${jMap(parameters)},"operationMetrics":${jMap(metrics)}}}"""
-    if (writeMeta) {
-      val pcJson = partitionBy.map(jStr).mkString("[", ",", "]")
-      // schemaString is the authoritative FULL table schema (partition
-      // columns included), per the Delta protocol — readers must shape scans
-      // from it, never from a sampled data-file footer
-      val schemaStr = schemaJson.getOrElse("{}")
-      lines += s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
-      lines += s"""{"metaData":{"id":${jStr(java.util.UUID.nameUUIDFromBytes(table.getBytes(StandardCharsets.UTF_8)).toString)},"schemaString":${jStr(schemaStr)},"partitionColumns":$pcJson,"createdTime":$ts}}"""
-    }
-    removes.foreach { p =>
-      lines += s"""{"remove":{"path":${jStr(p)},"deletionTimestamp":$ts,"dataChange":true}}"""
-    }
-    adds.foreach { case (p, size) =>
-      val pv = jMap(partitionValuesOf(p, partitionBy))
-      lines += s"""{"add":{"path":${jStr(p)},"size":$size,"partitionValues":$pv,"modificationTime":$ts,"dataChange":true,"stats":""}}"""
-    }
-    val lp = logPath(table, version)
-    Files.createDirectories(lp.getParent)
-    // CREATE_NEW = the Delta protocol's put-if-absent commit claim: a
-    // concurrent writer racing to the same version FAILS loudly
-    // (FileAlreadyExistsException) instead of silently clobbering its
-    // rival's committed actions. Retry-with-reconciliation is the caller's
-    // policy decision; single-writer flows never see this.
-    try Files.write(lp,
-      lines.mkString("\n").getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE_NEW)
-    catch { case e: java.nio.file.FileAlreadyExistsException =>
-      throw new IllegalStateException(
-        s"concurrent commit: version $version of $table already exists " +
-          "(another writer won the race) — re-read the snapshot and retry " +
-          "at the next version", e)
-    }
+  /** Appends `rows` to the table directory as parquet (hive-partitioned by
+    * `partitionBy`) and returns the data files that write added, as
+    * (relative path, size) sorted by path. */
+  private[graft] def appendFiles(rows: DataFrame, table: String,
+                                 partitionBy: Seq[String]): Seq[(String, Long)] = {
+    val spark = rows.sparkSession
+    val before = DeltaLog.dataFiles(spark, table)
+    val w = rows.write.mode("append")
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(table)
+    DeltaLog.dataFiles(spark, table).filterNot(f => before.contains(f._1)).toSeq.sorted
   }
 
-  /** STREAMING commit writer for scale-path operators (OPTIMIZE): action
-    * lines are written as the iterators drain, so a commit with millions of
-    * removes never materializes as a driver-side Seq — the driver cost is
-    * the JSON bytes themselves, which are inherent to the Delta log format.
-    * commitInfo is appended LAST (after the counts are known); the log
-    * reader is line-order-agnostic (every action line is parsed
-    * independently and commitInfo rows are filtered by field). */
+  /** The commit writer: action lines are written as the iterators drain, so
+    * a commit with millions of removes never materializes as a driver-side
+    * Seq — the driver cost is the JSON bytes themselves, which are inherent
+    * to the Delta log format. With a `schema`, the commit also carries the
+    * `protocol` and `metaData` actions (the first commit, a schema-evolving
+    * write, a RESTORE across a schema change). commitInfo is appended LAST
+    * (after the counts are known); the log reader is line-order-agnostic
+    * (every action line is parsed independently and commitInfo rows are
+    * filtered by field). */
   private[graft] def writeCommitStream(
       table: String,
       version: Long,
@@ -140,15 +93,20 @@ object DeltaFixtureWriter {
       parameters: Seq[(String, String)],
       adds: Iterator[(String, Long)],
       removes: Iterator[String],
-      partitionBy: Seq[String]): Unit = {
+      partitionBy: Seq[String],
+      schema: Option[StructType] = None): Unit = {
     val ts = System.currentTimeMillis()
     val lp = logPath(table, version)
     Files.createDirectories(lp.getParent)
     // stream into a writer-private temp file, then claim the version with
-    // an atomic no-replace move — same put-if-absent contract as
-    // writeCommit, without buffering millions of action lines to get it
+    // an atomic no-replace link: the Delta protocol's put-if-absent commit
+    // claim, without buffering millions of action lines to get it
     val tmp = lp.resolveSibling(
       s".${lp.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    // a concurrent writer racing to the same version FAILS loudly instead
+    // of silently clobbering its rival's committed actions. Retry with
+    // reconciliation is the caller's policy decision; single-writer flows
+    // never see this
     def lostRace(cause: Throwable): Nothing =
       throw new IllegalStateException(
         s"concurrent commit: version $version of $table already exists " +
@@ -162,22 +120,31 @@ object DeltaFixtureWriter {
       val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8,
         StandardOpenOption.CREATE_NEW)
       try {
+        def line(s: String): Unit = { w.write(s); w.newLine() }
+        schema.foreach { st =>
+          // schemaString is the authoritative FULL table schema (partition
+          // columns included), per the Delta protocol — readers must shape
+          // scans from it, never from a sampled data-file footer
+          val id = java.util.UUID.nameUUIDFromBytes(
+            table.getBytes(StandardCharsets.UTF_8)).toString
+          line("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
+          line(s"""{"metaData":{"id":${jStr(id)},"schemaString":${jStr(st.json)},"partitionColumns":${partitionBy.map(jStr).mkString("[", ",", "]")},"createdTime":$ts}}""")
+        }
         var nRemoves = 0L
         var nAdds = 0L
         removes.foreach { p =>
-          w.write(s"""{"remove":{"path":${jStr(p)},"deletionTimestamp":$ts,"dataChange":true}}""")
-          w.newLine(); nRemoves += 1
+          line(s"""{"remove":{"path":${jStr(p)},"deletionTimestamp":$ts,"dataChange":true}}""")
+          nRemoves += 1
         }
         adds.foreach { case (p, size) =>
           val pv = jMap(partitionValuesOf(p, partitionBy))
-          w.write(s"""{"add":{"path":${jStr(p)},"size":$size,"partitionValues":$pv,"modificationTime":$ts,"dataChange":true,"stats":""}}""")
-          w.newLine(); nAdds += 1
+          line(s"""{"add":{"path":${jStr(p)},"size":$size,"partitionValues":$pv,"modificationTime":$ts,"dataChange":true,"stats":""}}""")
+          nAdds += 1
         }
         val metrics = Seq(
           "num_added_files" -> nAdds.toString,
           "num_removed_files" -> nRemoves.toString)
-        w.write(s"""{"commitInfo":{"timestamp":$ts,"operation":${jStr(operation)},"operationParameters":${jMap(parameters)},"operationMetrics":${jMap(metrics)}}}""")
-        w.newLine()
+        line(s"""{"commitInfo":{"timestamp":$ts,"operation":${jStr(operation)},"operationParameters":${jMap(parameters)},"operationMetrics":${jMap(metrics)}}}""")
       } finally w.close()
       // hard-link, not ATOMIC_MOVE: POSIX rename() silently REPLACES an
       // existing target, but link() is atomic put-if-absent — exactly the
@@ -205,7 +172,6 @@ object DeltaFixtureWriter {
   def write(df: DataFrame, table: String, mode: String = "overwrite",
             partitionBy: Seq[String] = Seq.empty): Unit = {
     require(mode == "overwrite" || mode == "append", s"bad mode $mode")
-    val before = listDataFiles(table)
     // one snapshot read serves both the overwrite remove-list and the
     // schema-evolution check
     val (snapBefore: Seq[String], schemaChanged: Boolean, effPartitionBy: Seq[String]) =
@@ -223,20 +189,17 @@ object DeltaFixtureWriter {
         snap.unpersist()
         (files, changed, pb)
       } else (Seq.empty, false, partitionBy)
-    val w = df.write.mode("append")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(table)
-    val after = listDataFiles(table)
-    val newFiles = (after.keySet -- before.keySet).toSeq.sorted.map(p => p -> after(p))
+    val newFiles = appendFiles(df, table, partitionBy)
     val version = currentVersion(table).map(_ + 1).getOrElse(0L)
-    writeCommit(table, version, "WRITE",
+    writeCommitStream(table, version, "WRITE",
       Seq("mode" -> (if (mode == "overwrite") "Overwrite" else "Append"),
           "partitionBy" -> partitionBy.mkString("[", ",", "]")),
-      adds = newFiles, removes = snapBefore,
+      adds = newFiles.iterator, removes = snapBefore.iterator,
+      partitionBy = effPartitionBy,
       // metaData rides the first commit AND any commit whose write changes
       // the schema (Delta schema evolution) — replay takes the latest, so
       // schemaString stays the live authority after evolving appends
-      partitionBy = effPartitionBy, writeMeta = version == 0L || schemaChanged,
-      schemaJson = Some(df.schema.json))
+      schema = Some(df.schema).filter(_ => version == 0L || schemaChanged))
   }
 
   /** Predicate DELETE: rewrites only the active files that contain matching
@@ -245,43 +208,31 @@ object DeltaFixtureWriter {
     import spark.implicits._
     val snap = DeltaLog.snapshot(spark, table)
     val partitionBy = snap.partitionColumns
-    val dataCols = snap.data.columns
-    snap.dataWithFile match {
-      case None =>
-        // empty table: still log the DELETE commit, no file changes
-        writeCommit(table, snap.version + 1, "DELETE",
-          Seq("predicate" -> predicate), Seq.empty, Seq.empty,
-          snap.partitionColumns, writeMeta = false)
-        snap.unpersist()
-        return
-      case Some(_) => ()
+    // __file is the active file's table-relative path (see
+    // DeltaSnapshot.dataWithFile); an empty table still logs the DELETE
+    // commit, with no file changes
+    val (adds, removes) = snap.dataWithFile match {
+      case None => (Seq.empty, Seq.empty)
+      case Some(withFile) =>
+        val hitFiles = withFile.where(expr(predicate))
+          .select($"__file").distinct().as[String].collect().sorted.toSeq
+        // surviving rows of hit files, rewritten (partition-aware). DELETE
+        // removes rows where the predicate is TRUE — rows where it
+        // evaluates NULL must survive (bare !pred would be NULL and
+        // silently drop them)
+        val survivors = snap.dataWithFileIn(hitFiles)
+          .where(!coalesce(expr(predicate), lit(false)))
+          .select(snap.data.columns.map(col).toIndexedSeq: _*)
+        val written =
+          if (survivors.isEmpty) Seq.empty
+          else appendFiles(survivors, table, partitionBy)
+        (written, hitFiles)
     }
-    val withFile = snap.dataWithFile.get
-    // __file is the table-relative path (see DeltaSnapshot.dataWithFile)
-    val hitFiles = withFile.where(expr(predicate))
-      .select($"__file").distinct().as[String].collect().toSet
-    val before = listDataFiles(table)
-    val hitRel = before.keySet.filter(hitFiles.contains)
-    // surviving rows of hit files, rewritten (partition-aware). DELETE
-    // removes rows where the predicate is TRUE — rows where it evaluates
-    // NULL must survive (bare !pred would be NULL and silently drop them)
-    val survivors = withFile
-      .where($"__file".isin(hitFiles.toSeq: _*) &&
-        !coalesce(expr(predicate), lit(false)))
-      .select(dataCols.map(col).toIndexedSeq: _*)
-    if (!survivors.isEmpty) {
-      val w = survivors.write.mode("append")
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(table)
-    }
-    val after = listDataFiles(table)
-    val newFiles = (after.keySet -- before.keySet).toSeq.sorted.map(p => p -> after(p))
-    val activeRel = snap.activeFiles.select("path").as[String].collect().toSet
-    val removes = hitRel.toSeq.sorted.filter(activeRel.contains)
     snap.unpersist()
-    writeCommit(table, snap.version + 1, "DELETE",
+    writeCommitStream(table, snap.version + 1, "DELETE",
       Seq("predicate" -> predicate),
-      adds = newFiles, removes = removes,
-      partitionBy = partitionBy, writeMeta = false)
+      adds = adds.iterator, removes = removes.iterator,
+      partitionBy = partitionBy)
   }
 
   /** OPTIMIZE compact: bin-packs each partition's active files into one file
@@ -290,28 +241,20 @@ object DeltaFixtureWriter {
     import spark.implicits._
     val snap = DeltaLog.snapshot(spark, table)
     val partitionBy = snap.partitionColumns
-    val activeRel = snap.activeFiles.select("path").as[String].collect().toSeq
-    if (activeRel.isEmpty) {
-      // fully-deleted table: log a no-op OPTIMIZE, nothing to rewrite
-      writeCommit(table, snap.version + 1, "OPTIMIZE",
-        Seq("predicate" -> "[]"), Seq.empty, Seq.empty, partitionBy,
-        writeMeta = false)
-      snap.unpersist()
-      return
-    }
-    val before = listDataFiles(table)
-    val data = snap.data
-    val exprs: Seq[org.apache.spark.sql.Column] =
-      if (partitionBy.isEmpty) Seq(lit(1)) else partitionBy.map(col)
-    val w = data.repartition(exprs: _*).write.mode("append")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(table)
-    val after = listDataFiles(table)
-    val newFiles = (after.keySet -- before.keySet).toSeq.sorted.map(p => p -> after(p))
+    val activeRel = snap.activeFiles.select("path").as[String].collect().sorted.toSeq
+    // a fully-deleted table logs a no-op OPTIMIZE, nothing to rewrite
+    val newFiles =
+      if (activeRel.isEmpty) Seq.empty
+      else {
+        val exprs: Seq[org.apache.spark.sql.Column] =
+          if (partitionBy.isEmpty) Seq(lit(1)) else partitionBy.map(col)
+        appendFiles(snap.data.repartition(exprs: _*), table, partitionBy)
+      }
     snap.unpersist()
-    writeCommit(table, snap.version + 1, "OPTIMIZE",
+    writeCommitStream(table, snap.version + 1, "OPTIMIZE",
       Seq("predicate" -> "[]"),
-      adds = newFiles, removes = activeRel.sorted,
-      partitionBy = partitionBy, writeMeta = false)
+      adds = newFiles.iterator, removes = activeRel.iterator,
+      partitionBy = partitionBy)
   }
 
   /** Simplified MERGE (upsert by key): source rows replace table rows with
@@ -326,73 +269,29 @@ object DeltaFixtureWriter {
     val partitionBy = snap.partitionColumns
     val dataCols = snap.data.columns
     val src = source.select(dataCols.map(col).toIndexedSeq: _*)
-    val before = listDataFiles(table)
     val (newRows, removes) = snap.dataWithFile match {
       case None => (src, Seq.empty[String])
       case Some(withFile) =>
         val hitFiles = withFile.join(src, keyCols, "left_semi")
-          .select($"__file").distinct().as[String].collect().toSet
-        val survivors = withFile
-          .where($"__file".isin(hitFiles.toSeq: _*))
+          .select($"__file").distinct().as[String].collect().sorted.toSeq
+        val survivors = snap.dataWithFileIn(hitFiles)
           .join(src, keyCols, "left_anti")
           .select(dataCols.map(col).toIndexedSeq: _*)
-        (survivors.union(src), hitFiles.toSeq.sorted)
+        (survivors.union(src), hitFiles)
     }
-    val w = newRows.write.mode("append")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(table)
-    val after = listDataFiles(table)
-    val newFiles = (after.keySet -- before.keySet).toSeq.sorted.map(p => p -> after(p))
+    val newFiles = appendFiles(newRows, table, partitionBy)
     snap.unpersist()
-    writeCommit(table, snap.version + 1, "MERGE",
+    writeCommitStream(table, snap.version + 1, "MERGE",
       Seq("matchedPredicate" -> keyCols.mkString(",")),
-      adds = newFiles, removes = removes,
-      partitionBy = partitionBy, writeMeta = false)
-  }
-
-  /** RESTORE the table to `version`: a metadata-only commit (no data
-    * rewrite) that re-adds the target snapshot's active files which are no
-    * longer active and removes the active files the target doesn't have —
-    * Delta's RESTORE semantics (the reference's operation color map
-    * tolerates the op, visualization/notebook/delta_operations.py:84-93).
-    * If the schema evolved past the target version the commit also
-    * re-emits the TARGET version's metaData, so the restored table reads
-    * with its historical schema. Fails fast (before writing anything) when
-    * a required historical file has been physically removed by VACUUM —
-    * that table state is unrestorable and must not be half-committed. */
-  def restore(spark: SparkSession, table: String, version: Long): Unit = {
-    import spark.implicits._
-    val cur = DeltaLog.snapshot(spark, table)
-    require(version >= 0 && version <= cur.version,
-      s"cannot restore $table to version $version (current ${cur.version})")
-    val target = DeltaLog.snapshotAt(spark, table, version)
-    try {
-      val targetFiles = target.activeFiles.select($"path", $"size")
-        .as[(String, Long)].collect().toMap
-      val curFiles = cur.activeFiles.select($"path").as[String].collect().toSet
-      val adds = (targetFiles.keySet -- curFiles).toSeq.sorted
-      val onDisk = listDataFiles(table)
-      val vacuumed = adds.filterNot(onDisk.contains)
-      require(vacuumed.isEmpty,
-        s"cannot restore $table to version $version: ${vacuumed.size} " +
-          s"historical data file(s) no longer on disk (vacuumed?), e.g. " +
-          vacuumed.take(3).mkString(", "))
-      val removes = (curFiles -- targetFiles.keySet).toSeq.sorted
-      val schemaChanged = cur.tableSchema != target.tableSchema
-      writeCommit(table, cur.version + 1, "RESTORE",
-        Seq("version" -> version.toString),
-        adds = adds.map(p => p -> targetFiles(p)), removes = removes,
-        partitionBy = target.partitionColumns,
-        writeMeta = schemaChanged,
-        schemaJson = target.tableSchema.map(_.json))
-    } finally { cur.unpersist(); target.unpersist() }
+      adds = newFiles.iterator, removes = removes.iterator,
+      partitionBy = partitionBy)
   }
 
   /** Append a data-free commit (e.g. VACUUM marker). */
   def logCommit(table: String, version: Long, operation: String,
                 parameters: Seq[(String, String)]): Unit =
-    writeCommit(table, version, operation, parameters,
-      adds = Seq.empty, removes = Seq.empty,
-      partitionBy = Seq.empty, writeMeta = false)
+    writeCommitStream(table, version, operation, parameters,
+      adds = Iterator.empty, removes = Iterator.empty, partitionBy = Seq.empty)
 
   /** rm -rf the table dir (test teardown; clean_delta_data.py:9-22). */
   def drop(table: String): Unit = {

@@ -151,8 +151,8 @@ object DeltaLog {
     * inclusive — here the FROM snapshot is the baseline, so changes start
     * at fromVersion+1.
     *
-    * How: one distributed scan of the table directory (same listing
-    * discipline as [[DeltaSnapshot.dataWithFile]]) joined against the
+    * How: one distributed scan of the table directory (same scan and
+    * file-path join as [[DeltaSnapshot.dataWithFile]]) joined against the
     * per-version (path, action) manifest of the requested window. A
     * rewriting commit (DELETE, OPTIMIZE, MERGE) both removes and re-adds
     * the surviving rows, so the net change per row is the ADD multiplicity
@@ -213,31 +213,25 @@ object DeltaLog {
         case None => throw new IllegalStateException(
           s"$tablePath: no schemaString in log; CDF needs a schema authority")
       }
-      val root = new org.apache.hadoop.fs.Path(qualified)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val entries = fs.listStatus(root).toSeq
-        .filterNot(_.getPath.getName == "_delta_log")
-        .map(_.getPath.toString)
       // fail fast if VACUUM already reclaimed a window file: the manifest
       // join would otherwise silently drop its rows and emit an incomplete
-      // feed. MUST run before the empty-dir early return — a non-partitioned
-      // table whose every data file was vacuumed lists zero entries but has
-      // a non-empty window manifest, and that is exactly the
-      // "changes no longer on disk" case, not an empty feed. One
-      // distributed LISTING job (no data scan).
+      // feed. MUST run before the empty-table early return — a
+      // non-partitioned table whose every data file was vacuumed lists no
+      // data files but has a non-empty window manifest, and that is exactly
+      // the "changes no longer on disk" case, not an empty feed. The
+      // driver-side listing is anti-joined as a local relation (no data
+      // scan).
+      val onDisk = dataFiles(spark, qualified)
       val missingFiles = manifest.select($"__file").distinct()
-        .join(
-          graft.operators.StorageAnalyzer.folderFilesDistributed(spark, qualified)
-            .select(relativize($"path", qualified).as("__file")),
-          Seq("__file"), "left_anti")
+        .join(onDisk.keys.toSeq.toDF("__file"), Seq("__file"), "left_anti")
         .limit(3).as[String].collect()
       require(missingFiles.isEmpty,
         s"change window ($fromVersion, $toVersion] references data file(s) " +
           s"no longer on disk (vacuumed?), e.g. ${missingFiles.mkString(", ")}")
-      // empty dir + empty manifest (the check above passed, so the manifest
-      // referenced nothing): a genuinely empty feed, but with the normal CDF
-      // schema so downstream unions/selects keep working
-      if (entries.isEmpty) {
+      // no data files + empty manifest (the check above passed, so the
+      // manifest referenced nothing): a genuinely empty feed, but with the
+      // normal CDF schema so downstream unions/selects keep working
+      if (onDisk.isEmpty) {
         val feedSchema = StructType(
           activeSchema.fields.toSeq ++
             snap.partitionColumns.map(StructField(_, StringType)) :+
@@ -246,17 +240,13 @@ object DeltaLog {
         return spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], feedSchema)
       }
-      val raw = spark.read
-        .schema(activeSchema)
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(entries: _*)
-        .withColumn("__file", relativize(col("_metadata.file_path"), qualified))
-      val dataCols = raw.columns.filterNot(_ == "__file").map(col).toSeq
+      val raw = scanTableDir(spark, qualified, activeSchema)
+      val dataCols = raw.columns.filterNot(_ == "__scan_path").map(col).toSeq
       val partCols = snap.partitionColumns.map(c =>
         element_at($"__pv", c).as(c))
       val changed = raw
-        .join(manifest, Seq("__file"))
+        .join(manifest.withColumn("__scan_path", scanPath($"__file", qualified)),
+          Seq("__scan_path"))
         .join(partVals, Seq("__file"))
         .select((dataCols ++ partCols) :+ $"version" :+ $"__sign": _*)
       val keyCols = changed.columns.filterNot(_ == "__sign").map(col).toSeq
@@ -270,6 +260,28 @@ object DeltaLog {
         .drop("__net", "__dup")
         .withColumnRenamed("version", "_commit_version")
     } finally snap.unpersist()
+  }
+
+  /** S6: every `*.parquet` file under the table root, `_delta_log`
+    * excluded, as (table-relative path, size) — the engine's one data-file
+    * listing (delta_python_analyzer.py:90-107). One recursive `listStatus`
+    * walk on the driver: a listing is metadata-sized, and unlike
+    * `listFiles(recursive)` it fetches no block locations per file. Relative
+    * paths are spelled as on disk (directory names as Spark escaped them),
+    * which is how `add.path` spells them. */
+  def dataFiles(spark: SparkSession, tablePath: String): Map[String, Long] = {
+    val root = new org.apache.hadoop.fs.Path(tablePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = Map.newBuilder[String, Long]
+    def walk(dir: org.apache.hadoop.fs.Path, prefix: String): Unit =
+      fs.listStatus(dir).foreach { st =>
+        val name = st.getPath.getName
+        if (st.isDirectory) {
+          if (name != "_delta_log") walk(st.getPath, s"$prefix$name/")
+        } else if (name.endsWith(".parquet")) out += (prefix + name) -> st.getLen
+      }
+    if (fs.exists(root)) walk(root, "")
+    out.result()
   }
 
   /** True if `path` looks like a Delta table (has a `_delta_log` dir). */
@@ -291,17 +303,6 @@ object DeltaLog {
     DeltaSnapshot(spark, tablePath,
       readActions(spark, tablePath).where(col("version") <= version).cache())
 
-  /** Normalize a (possibly schemed) URI to a plain absolute path: drops the
-    * scheme and any authority (`file:///x`, `file:/x`, `hdfs://nn:8020/x`,
-    * `s3a://bucket/x` all → `/x`), mirroring (and generalizing) the
-    * reference's prefix strip at file_distribution.py:18-21. Safe for
-    * same-table comparisons because both sides always live under one
-    * scheme/authority; apply it to BOTH sides of any path join. */
-  def stripScheme(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(
-      regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.\\-]*://[^/]*", ""),
-      "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/", "/")
-
   /** Fully-qualified form of `tablePath` on its filesystem (absolute, with
     * scheme) — relative paths are resolved against the FS working directory
     * so manifest-derived absolute paths compare correctly against
@@ -317,9 +318,9 @@ object DeltaLog {
     * stores that happen to share a path never collide
     * (`s3a://bucketA/x` → `//bucketA/x` ≠ `//bucketB/x`), while the usual
     * same-store spellings still normalize together
-    * (`file:///x`, `file:/x`, `/x` all → `/x`). Use this — not
-    * [[stripScheme]] — when either side of a path join may come from an
-    * arbitrary caller-supplied frame (e.g. orphan detection). */
+    * (`file:///x`, `file:/x`, `/x` all → `/x`). Use this when either side
+    * of a path join may come from an arbitrary caller-supplied frame (e.g.
+    * orphan detection). */
   def pathKey(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     regexp_replace(
       regexp_replace(
@@ -327,15 +328,49 @@ object DeltaLog {
         "^[a-zA-Z][a-zA-Z0-9+.\\-]*://", "//"),
       "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/", "/")
 
-  /** Scala-side twin of [[stripScheme]] for path strings. */
+  /** Plain absolute path of a (possibly schemed) path string: drops the
+    * scheme and any authority (`file:///x`, `file:/x`, `hdfs://nn:8020/x`
+    * all → `/x`), mirroring the reference's prefix strip at
+    * file_distribution.py:18-21. */
   def stripSchemeStr(s: String): String =
     s.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.\\-]*://[^/]*", "")
       .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.\\-]*:/", "/")
 
-  /** Table-relative path of an absolute/schemed file path; `tablePath` may
-    * itself be schemed or relative — both sides are normalized first. */
-  def relativize(c: org.apache.spark.sql.Column, tablePath: String): org.apache.spark.sql.Column =
-    substring_index(stripScheme(c), stripSchemeStr(tablePath).stripSuffix("/") + "/", -1)
+  /** One distributed parquet scan of the table directory under `schema`,
+    * with each row's `_metadata.file_path` as `__scan_path`. Only the
+    * top-level entries are listed on the driver — O(partition dirs) —
+    * keeping `_delta_log`, and thus checkpoint parquet with its foreign
+    * schema, out of the scan. `recursiveFileLookup` deliberately disables
+    * Hive partition-dir inference: partition values come from the
+    * MANIFEST (authoritative under replay), not from directory names. */
+  private[deltalog] def scanTableDir(spark: SparkSession, qualifiedRoot: String,
+                                     schema: StructType): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(qualifiedRoot)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val entries = fs.listStatus(root).toSeq
+      .filterNot(_.getPath.getName == "_delta_log")
+      .map(_.getPath.toString)
+    spark.read
+      .schema(schema)
+      .option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", "*.parquet")
+      .parquet(entries: _*)
+      .withColumn("__scan_path", col("_metadata.file_path"))
+  }
+
+  /** The `__scan_path` that [[scanTableDir]] reports for the file at the
+    * table-relative `path`: its URI under the table root, percent-encoded
+    * the way the scan encodes it (`day=Mon Tue` → `day=Mon%20Tue`, Spark's
+    * escaped `day=a%3Ab` → `day=a%253Ab`). Encoding the manifest side, one
+    * value per file, lets the scanned rows join on their raw file path. */
+  private[deltalog] def scanPathOf(qualifiedRoot: String, path: String): String =
+    new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(qualifiedRoot),
+      new org.apache.hadoop.fs.Path(null, null, path)).toUri.toString
+
+  /** [[scanPathOf]] over a column of table-relative paths. */
+  private[deltalog] def scanPath(path: org.apache.spark.sql.Column,
+                                 qualifiedRoot: String): org.apache.spark.sql.Column =
+    udf((p: String) => scanPathOf(qualifiedRoot, p)).apply(path)
 }
 
 /** Replayed view of a Delta table at its latest version.
@@ -446,7 +481,7 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
     *
     * Delta physical files do not contain the partition columns; their values
     * live in `add.partitionValues`. We read all active files in one parquet
-    * scan and join the per-file partition values back on the file name —
+    * scan and join the per-file partition values back on the file path —
     * a broadcast join against the (small) manifest, so the scan itself stays
     * a single distributed pass, no driver loop over partitions.
     */
@@ -459,79 +494,77 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
     * by file-targeted rewrites (DELETE). Built on `_metadata.file_path`,
     * which unlike `input_file_name()` stays legal in multi-source join plans.
     *
-    * Scale shape: ONE distributed scan of the table directory (top-level
-    * entries only are listed on the driver — O(partition dirs), never
-    * O(files) — keeping `_delta_log`, and thus checkpoint parquet with its
-    * foreign schema, out of the scan), then a single INNER join of
-    * `_metadata.file_path` (relativized) against the distributed active-file
-    * manifest. The join simultaneously (a) filters out removed/orphan files
-    * the dir scan picked up — delete/overwrite replay correctness — and
-    * (b) re-attaches `partitionValues`, which Delta physical files do not
-    * contain. No per-file driver enumeration: a manifest of millions of adds
-    * never lands on the driver (the earlier design collected every active
-    * path into `spark.read.parquet(files: _*)`).
+    * Scale shape: ONE distributed scan of the table directory
+    * ([[DeltaLog.scanTableDir]]), then a single INNER join of
+    * `_metadata.file_path` against the distributed active-file manifest,
+    * whose paths are encoded the same way per file
+    * ([[DeltaLog.scanPath]]) — so a partition value Spark escapes in the
+    * directory name (`a:b`, `50%`, `Mon Tue`) keeps its rows. The join
+    * simultaneously (a) filters out removed/orphan files the dir scan
+    * picked up — delete/overwrite replay correctness — and (b) re-attaches
+    * `partitionValues`, which Delta physical files do not contain. No
+    * per-file driver enumeration: a manifest of millions of adds never
+    * lands on the driver.
     *
-    * `recursiveFileLookup` deliberately disables Hive partition-dir
-    * inference: partition values come from the MANIFEST (authoritative under
-    * replay), not from directory names.
-    *
-    * The join key is the RELATIVE path, not the basename: a single Spark
+    * The join key is the full file path, not the basename: a single Spark
     * write job emits the same `part-NNNNN-<jobUUID>` basename into every
     * partition directory it touches, so basenames are NOT unique within a
     * table (the reference gets away with basename sets at
     * delta_python_analyzer.py:125-126 only because deltalake generates
     * per-file unique names). */
-  lazy val dataWithFile: Option[DataFrame] = {
+  lazy val dataWithFile: Option[DataFrame] =
     if (activeFiles.isEmpty) None
-    else {
-      val root = new org.apache.hadoop.fs.Path(qualifiedTablePath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val entries = fs.listStatus(root).toSeq
-        .filterNot(_.getPath.getName == "_delta_log")
-        .map(_.getPath.toString)
-      // The dir scan also sees REMOVED-but-not-yet-vacuumed and orphan
-      // files (the inner join below discards their rows; read amplification
-      // is bounded by how much dead data VACUUM — which this engine both
-      // recommends and executes — has not yet reclaimed). Two consequences
-      // are handled explicitly:
-      //  - schema authority: the latest metaData.schemaString (the Delta
-      //    protocol's authority — a column added by a later append is
-      //    present even if an unsampled old file lacks it, and a dead file's
-      //    foreign schema can never shape the read). Partition columns are
-      //    stripped because Delta physical files do not contain them (they
-      //    are re-attached from the manifest below). Logs that predate
-      //    schema emission fall back to ONE manifest-active footer, picked
-      //    DETERMINISTICALLY (min path) — not limit(1), whose choice is
-      //    partition-layout-dependent;
-      //  - a corrupt uncommitted file still fails the scan by default; set
-      //    spark.sql.files.ignoreCorruptFiles=true to tolerate dirty dirs
-      //    (active-file corruption then drops rows silently — the default
-      //    stays strict on purpose).
-      val activeSchema: StructType = tableSchema match {
-        case Some(full) =>
-          StructType(full.fields.filterNot(f => partitionColumns.contains(f.name)))
-        case None =>
-          val oneActive: String =
-            activeFilePaths.select($"path").orderBy($"path").limit(1).as[String].head()
-          spark.read.parquet(oneActive).schema
-      }
-      val raw = spark.read
-        .schema(activeSchema)
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(entries: _*)
-      val withFile = raw.withColumn("__file",
-        DeltaLog.relativize(col("_metadata.file_path"), qualifiedTablePath))
-      // no broadcast hint: an explicit broadcast would collect the whole
-      // manifest onto the driver even at millions of files — let the
-      // planner/AQE broadcast small manifests and shuffle-join huge ones
-      val manifest = activeFiles.select($"path".as("__file"), $"partitionValues")
-      val joined = withFile.join(manifest, Seq("__file"), "inner")
-      val partCols = partitionColumns.map(c =>
-        element_at($"partitionValues", c).as(c))
-      Some(joined.select(
-        (raw.columns.map(col).toSeq :+ $"__file") ++ partCols: _*))
-    }
+    else Some(withFile(DeltaLog.scanTableDir(spark, qualifiedTablePath, activeSchema)))
+
+  /** [[dataWithFile]] restricted to the active files at the table-relative
+    * `paths` (file-targeted rewrites: DELETE and MERGE survivors). The
+    * filter is on the scan's own file path, so Spark skips every other file
+    * instead of reading it and dropping its rows at the join. */
+  def dataWithFileIn(paths: Seq[String]): DataFrame = {
+    val keys = paths.map(DeltaLog.scanPathOf(qualifiedTablePath, _))
+    withFile(DeltaLog.scanTableDir(spark, qualifiedTablePath, activeSchema)
+      .where(col("__scan_path").isin(keys: _*)))
+  }
+
+  // The dir scan also sees REMOVED-but-not-yet-vacuumed and orphan files
+  // (the inner join in withFile discards their rows; read amplification is
+  // bounded by how much dead data VACUUM — which this engine both
+  // recommends and executes — has not yet reclaimed). Two consequences are
+  // handled explicitly:
+  //  - schema authority: the latest metaData.schemaString (the Delta
+  //    protocol's authority — a column added by a later append is present
+  //    even if an unsampled old file lacks it, and a dead file's foreign
+  //    schema can never shape the read). Partition columns are stripped
+  //    because Delta physical files do not contain them (they are
+  //    re-attached from the manifest). Logs that predate schema emission
+  //    fall back to ONE manifest-active footer, picked DETERMINISTICALLY
+  //    (min path) — not limit(1), whose choice is partition-layout-dependent;
+  //  - a corrupt uncommitted file still fails the scan by default; set
+  //    spark.sql.files.ignoreCorruptFiles=true to tolerate dirty dirs
+  //    (active-file corruption then drops rows silently — the default stays
+  //    strict on purpose).
+  private lazy val activeSchema: StructType = tableSchema match {
+    case Some(full) =>
+      StructType(full.fields.filterNot(f => partitionColumns.contains(f.name)))
+    case None =>
+      val oneActive: String =
+        activeFilePaths.select($"path").orderBy($"path").limit(1).as[String].head()
+      spark.read.parquet(oneActive).schema
+  }
+
+  /** Joins a [[DeltaLog.scanTableDir]] frame to the active-file manifest:
+    * data columns + `__file` + the partition columns. */
+  private def withFile(raw: DataFrame): DataFrame = {
+    // no broadcast hint: an explicit broadcast would collect the whole
+    // manifest onto the driver even at millions of files — let the
+    // planner/AQE broadcast small manifests and shuffle-join huge ones
+    val manifest = activeFiles.select(
+      DeltaLog.scanPath($"path", qualifiedTablePath).as("__scan_path"),
+      $"path".as("__file"), $"partitionValues")
+    val partCols = partitionColumns.map(c =>
+      element_at($"partitionValues", c).as(c))
+    raw.join(manifest, Seq("__scan_path"), "inner").select(
+      (activeSchema.fieldNames.map(col).toSeq :+ $"__file") ++ partCols: _*)
   }
 
   def unpersist(): Unit = { actions.unpersist(); () }

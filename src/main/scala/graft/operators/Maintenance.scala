@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 
@@ -20,9 +21,9 @@ import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
 object Maintenance {
 
   /** OPTIMIZE (S10 as an engine capability) — DISTRIBUTED small-file
-    * compaction, the scale-path replacement for the fixture compactor
-    * ([[graft.deltalog.DeltaFixtureWriter.compact]], which stays
-    * fixture/test-scope: it collects paths and java.io-walks the table dir).
+    * compaction, the scale-path counterpart of the fixture compactor
+    * ([[graft.deltalog.DeltaFixtureWriter.compact]], which rewrites every
+    * active file and collects the active paths).
     *
     * Semantics: per Hive partition, active files smaller than
     * `smallFileBytes` (default targetFileBytes/2) are bin-packed into
@@ -30,7 +31,7 @@ object Maintenance {
     * are left untouched (nothing to gain), as are files already at target
     * size — real OPTIMIZE never rewrites the whole table.
     *
-    * Scale shape — no driver file enumeration anywhere:
+    * Scale shape:
     *  - selection: a filter + aggregation over the DISTRIBUTED active-file
     *    manifest (never collected; the partition key is the sorted-entry
     *    JSON of `partitionValues`, so map internal order can't split a
@@ -44,14 +45,15 @@ object Maintenance {
     *  - rewrite: ONE scan of the selected files' rows (the snapshot's
     *    manifest-joined read), shuffled by (partition cols, bin) so each
     *    task writes whole output files, appended with partitionBy;
-    *  - discovery: distributed before/after listings
-    *    ([[StorageAnalyzer.folderFilesDistributed]]) anti-joined — only the
-    *    NEW file entries (one per output bin) reach the driver;
+    *  - discovery: the driver-side data-file listing
+    *    ([[graft.deltalog.DeltaLog.dataFiles]]) before and after the write,
+    *    diffed in Scala ([[DeltaFixtureWriter.appendFiles]]) — the new
+    *    entries are one per output bin;
     *  - commit: removes stream through `toLocalIterator` into the
     *    line-streaming commit writer — a million-file remove list never
     *    exists as a driver collection.
     *
-    * Single-writer assumption, like every commit writer here (no
+    * Single-writer assumption, like the commit writer (no
     * concurrent-commit arbitration — that is a transaction-protocol
     * concern, not a compaction one). */
   def optimize(spark: SparkSession, tablePath: String,
@@ -73,30 +75,17 @@ object Maintenance {
           try {
             if (chosen.isEmpty) noop()
             else {
-              val qualified = snap.qualifiedTablePath
-              val before = StorageAnalyzer
-                .folderFilesDistributed(spark, qualified).cache()
-              before.count() // pin the pre-write listing before writing
               val toRewrite = rows
                 .join(chosen.select(col("path").as("__file"), col("bin")), "__file")
               val shuffleKeys = partCols.map(col) :+ col("bin")
-              val w = toRewrite.repartition(shuffleKeys: _*)
-                .drop("__file", "bin")
-                .write.mode("append")
-              (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-                .parquet(qualified)
-              val added = StorageAnalyzer.folderFilesDistributed(spark, qualified)
-                .join(before.select(col("path")), Seq("path"), "left_anti")
-                .select(DeltaLog.relativize(col("path"), qualified).as("path"),
-                  col("size"))
-                .as[(String, Long)]
-                .collect() // one entry per output bin — small by construction
-              before.unpersist()
+              val added = DeltaFixtureWriter.appendFiles(
+                toRewrite.repartition(shuffleKeys: _*).drop("__file", "bin"),
+                snap.qualifiedTablePath, partCols)
               DeltaFixtureWriter.writeCommitStream(logTable, snap.version + 1,
                 "OPTIMIZE",
                 Seq("predicate" -> "[]",
                     "targetFileBytes" -> targetFileBytes.toString),
-                adds = added.sortBy(_._1).iterator,
+                adds = added.iterator,
                 removes = chosen.select(col("path")).orderBy(col("path"))
                   .as[String].toLocalIterator().asScala,
                 partitionBy = partCols)
@@ -130,9 +119,9 @@ object Maintenance {
     * boundary sampling, no global sort on a single reducer — with
     * `sortWithinPartitions` so every output file covers a contiguous
     * Z-range. Bit interleave is a constant-shift expression tree inside
-    * whole-stage codegen. Commit flow mirrors [[optimize]]: distributed
-    * before/after listings diffed for the adds, removes streamed, never a
-    * driver file enumeration. Single-writer assumption as everywhere. */
+    * whole-stage codegen. Commit flow mirrors [[optimize]]: the listings
+    * before and after the write are diffed for the adds, and the removes
+    * stream from the manifest. Single-writer assumption as everywhere. */
   def zorder(spark: SparkSession, tablePath: String, zorderCols: Seq[String],
              targetFileBytes: Long = 128L * 1024 * 1024,
              rankBased: Boolean = false): Unit = {
@@ -153,7 +142,6 @@ object Maintenance {
           DeltaFixtureWriter.logCommit(logTable, snap.version + 1, "OPTIMIZE",
             zParams)
         case Some(rows) =>
-          val qualified = snap.qualifiedTablePath
           // one job: global min/max per cluster column + total active bytes
           val nOut = math.max(1L, math.ceil(
             snap.activeFiles.agg(coalesce(sum($"size"), lit(0L)))
@@ -184,27 +172,16 @@ object Maintenance {
                 else bucket16(col(c), mm.getDouble(2 * i), mm.getDouble(2 * i + 1))
               })
             }
-          val before = StorageAnalyzer
-            .folderFilesDistributed(spark, qualified).cache()
-          before.count() // pin the pre-write listing before writing
           val shuffleKeys = partCols.map(col) :+ col("__z")
-          val w = rows.drop("__file").withColumn("__z", z)
-            .repartitionByRange(nOut, shuffleKeys: _*)
-            .sortWithinPartitions(shuffleKeys: _*)
-            .drop("__z")
-            .write.mode("append")
-          (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-            .parquet(qualified)
-          val added = StorageAnalyzer.folderFilesDistributed(spark, qualified)
-            .join(before.select(col("path")), Seq("path"), "left_anti")
-            .select(DeltaLog.relativize(col("path"), qualified).as("path"),
-              col("size"))
-            .as[(String, Long)]
-            .collect() // one entry per output file — nOut, small
-          before.unpersist()
+          val added = DeltaFixtureWriter.appendFiles(
+            rows.drop("__file").withColumn("__z", z)
+              .repartitionByRange(nOut, shuffleKeys: _*)
+              .sortWithinPartitions(shuffleKeys: _*)
+              .drop("__z"),
+            snap.qualifiedTablePath, partCols)
           DeltaFixtureWriter.writeCommitStream(logTable, snap.version + 1,
             "OPTIMIZE", zParams,
-            adds = added.sortBy(_._1).iterator,
+            adds = added.iterator,
             removes = snap.activeFiles.select(col("path"))
               .orderBy(col("path")).as[String].toLocalIterator().asScala,
             partitionBy = partCols)
@@ -277,17 +254,16 @@ object Maintenance {
     * Returns the deleted-file frame (path, size). `dryRun` lists without
     * deleting. Logs a VACUUM commit like deltalake does.
     *
-    * Scale shape: the folder listing is the distributed per-subtree walk
-    * and the per-file stat + delete run inside `mapPartitions` on the
-    * executors — at object-store scale both the LIST and the DELETE calls
-    * are the bottleneck and must parallelize; only the (path, size) result
-    * rows reach the driver. */
+    * The folder listing is the driver-side walk of
+    * [[StorageAnalyzer.folderFiles]]; the per-file stat + delete run inside
+    * `mapPartitions` on the executors, and only the (path, size) result
+    * rows come back to the driver. */
   def vacuum(spark: SparkSession, tablePath: String,
              retainMs: Long = 7L * 24 * 3600 * 1000,
              dryRun: Boolean = false): DataFrame = {
     import spark.implicits._
     val snap = DeltaLog.snapshot(spark, tablePath)
-    val folder = StorageAnalyzer.folderFilesDistributed(spark, tablePath)
+    val folder = StorageAnalyzer.folderFiles(spark, tablePath)
     val orphans = StorageAnalyzer.orphanFiles(folder, snap.activeFilePaths)
     val cutoff = System.currentTimeMillis() - retainMs
     val conf = new org.apache.spark.util.SerializableConfiguration(
@@ -341,12 +317,9 @@ object Maintenance {
     * re-add has been physically removed by [[vacuum]] — Delta's own
     * restore-after-vacuum failure contract. Restoring to the current
     * version records a no-op RESTORE commit. A restore across a SCHEMA
-    * change additionally rolls the metaData authority back to the target
-    * snapshot's schema — that path delegates to the fixture-scope
-    * [[DeltaFixtureWriter.restore]] (which writes the metaData action),
-    * while the common same-schema case streams the commit with no driver
-    * file enumeration — the [[optimize]]-vs-`compact` split applied to
-    * restore.
+    * change also rolls the metaData authority back to the target
+    * snapshot's schema: the commit re-emits the target's metaData, so the
+    * restored table reads with its historical schema.
     *
     * Cites delta-io/delta RESTORE semantics (PROTOCOL.md; the reference
     * delta-lake-health engine itself has no restore, so this extends the
@@ -365,12 +338,6 @@ object Maintenance {
         return
       }
       val tgt = DeltaLog.snapshotAt(spark, tablePath, toVersion)
-      if (cur.tableSchema != tgt.tableSchema) {
-        // schema rollback: the metaData-writing fixture path
-        tgt.unpersist(); cur.unpersist()
-        DeltaFixtureWriter.restore(spark, logTable, toVersion)
-        return
-      }
       try {
         val curPaths = cur.activeFiles.select(col("path"))
         val tgtFiles = tgt.activeFiles.select(col("path"), col("size"))
@@ -381,9 +348,8 @@ object Maintenance {
           val nAdds = adds.count()
           val nRemoves = removes.count()
           // vacuum check: every file to re-add must still exist on disk
-          val qualified = cur.qualifiedTablePath
-          val onDisk = StorageAnalyzer.folderFilesDistributed(spark, qualified)
-            .select(DeltaLog.relativize(col("path"), qualified).as("path"))
+          val onDisk = DeltaLog.dataFiles(spark, cur.qualifiedTablePath)
+            .keys.toSeq.toDF("path")
           val missing = adds.select(col("path"))
             .join(onDisk, Seq("path"), "left_anti")
             .limit(5).as[String].collect()
@@ -399,7 +365,9 @@ object Maintenance {
               .toLocalIterator().asScala,
             removes = removes.orderBy(col("path")).as[String]
               .toLocalIterator().asScala,
-            partitionBy = cur.partitionColumns)
+            partitionBy = tgt.partitionColumns,
+            schema = Option.when(cur.tableSchema != tgt.tableSchema)(
+              tgt.tableSchema.getOrElse(new StructType())))
         } finally { adds.unpersist(); removes.unpersist(); () }
       } finally tgt.unpersist()
     } finally cur.unpersist()

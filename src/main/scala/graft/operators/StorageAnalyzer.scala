@@ -1,85 +1,36 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.deltalog.DeltaLog
 
 /** Storage-health analytics (delta_python_analyzer.py:90-133,224-275):
   * folder listing, manifest aggregates, small-file and orphan-file detection.
   *
-  * The folder listing (S6) uses Hadoop `listFiles(recursive)` on the driver —
-  * the listing is metadata-sized, not data-sized; for object-store scale the
-  * resulting frame is immediately distributed and every subsequent operation
-  * (aggregation, anti-join) is a Spark plan. The orphan check (J1) is a
-  * broadcast left-anti join on file basename, mirroring the reference's
-  * Python set difference over `os.path.basename` (delta_python_analyzer.py:
-  * 125-126,264-266) without ever building driver-side sets.
+  * The folder listing (S6) is the Delta layer's one driver-side walk,
+  * [[graft.deltalog.DeltaLog.dataFiles]]; the resulting frame is a local
+  * relation, and every subsequent operation (aggregation, anti-join) is a
+  * Spark plan. The orphan check (J1) is a left-anti join on the file path,
+  * mirroring the reference's Python set difference over `os.path.basename`
+  * (delta_python_analyzer.py:125-126,264-266) without ever building
+  * driver-side sets.
   */
 object StorageAnalyzer {
 
   /** S6: recursive `*.parquet` listing of the table dir, `_delta_log`
-    * excluded → DataFrame(path, size). */
+    * excluded → DataFrame(path, size), paths fully qualified. */
   def folderFiles(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
-    val p = new Path(tablePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = Seq.newBuilder[(String, Long)]
-    if (fs.exists(p)) {
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        val path = st.getPath.toString
-        if (path.endsWith(".parquet") && !path.contains("_delta_log"))
-          out += ((path, st.getLen))
-      }
-    }
-    out.result().toDF("path", "size")
-  }
-
-  /** S6 at scale: distributed recursive listing — the driver lists only the
-    * first level, then each executor task walks its subtree. For
-    * object-store tables with millions of files the driver-side walk is the
-    * bottleneck (and on S3-likes, per-prefix parallel LIST is how every
-    * production lake tool does it); this keeps the driver O(top-level
-    * entries). Top-level files are attached directly. */
-  def folderFilesDistributed(spark: SparkSession, tablePath: String,
-                             parallelism: Int = 64): DataFrame = {
-    import spark.implicits._
-    val root = new Path(tablePath)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val fs = root.getFileSystem(conf.value)
-    if (!fs.exists(root)) return spark.emptyDataset[(String, Long)]
+    val root = DeltaLog.qualifiedPath(spark, tablePath).stripSuffix("/") + "/"
+    DeltaLog.dataFiles(spark, tablePath).toSeq
+      .map { case (p, size) => (root + p, size) }
       .toDF("path", "size")
-    val (dirs, files) = fs.listStatus(root).toSeq.partition(_.isDirectory)
-    val topLevel = files.map(st => (st.getPath.toString, st.getLen))
-      .filter { case (p, _) => p.endsWith(".parquet") && !p.contains("_delta_log") }
-    val subtrees = dirs.map(_.getPath.toString)
-      .filterNot(_.contains("_delta_log"))
-    val walked =
-      if (subtrees.isEmpty) spark.emptyDataset[(String, Long)]
-      else spark.sparkContext
-        .parallelize(subtrees, math.min(parallelism, subtrees.size))
-        .flatMap { dir =>
-          val p = new Path(dir)
-          val dfs = p.getFileSystem(conf.value)
-          val it = dfs.listFiles(p, true)
-          val out = Seq.newBuilder[(String, Long)]
-          while (it.hasNext) {
-            val st = it.next()
-            val path = st.getPath.toString
-            if (path.endsWith(".parquet") && !path.contains("_delta_log"))
-              out += ((path, st.getLen))
-          }
-          out.result()
-        }.toDS()
-    walked.toDF("path", "size")
-      .unionByName(topLevel.toDF("path", "size"))
   }
 
   /** J1: files on disk not referenced by the manifest — a left-anti join
     * on the scheme-stripped, AUTHORITY-KEEPING full path
-    * ([[graft.deltalog.DeltaLog.pathKey]]): both frames are caller-supplied,
+    * ([[DeltaLog.pathKey]]): both frames are caller-supplied,
     * so equal paths on different buckets/namenodes must not silently match.
     * (The reference differences basename *sets*, delta_python_analyzer.py:
     * 125-126,264-266; full paths are strictly safer since Spark-written
@@ -93,9 +44,9 @@ object StorageAnalyzer {
     * OOM, when it doesn't. */
   def orphanFiles(folder: DataFrame, manifest: DataFrame): DataFrame = {
     val f = folder.select(
-      graft.deltalog.DeltaLog.pathKey(col("path")).as("file_key"), col("size"))
+      DeltaLog.pathKey(col("path")).as("file_key"), col("size"))
     val m = manifest.select(
-      graft.deltalog.DeltaLog.pathKey(col("path")).as("file_key"))
+      DeltaLog.pathKey(col("path")).as("file_key"))
     f.join(m, Seq("file_key"), "left_anti")
   }
 

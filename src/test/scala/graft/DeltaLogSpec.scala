@@ -145,4 +145,55 @@ class DeltaLogSpec extends SparkSuite {
     assert(snap.data.count() === 6, "footer-pick fallback still reads the table")
     snap.unpersist()
   }
+
+  // analyze, changes, delete and optimize over partition values that Spark
+  // escapes in directory names
+  test("escaped partition values keep their rows") {
+    val path = tmpDir("dlog_escaped")
+    // "Mon Tue" is stored as is but URI-encoded in the scan's file path;
+    // "a:b" and "50%" are escaped in the directory name (a%3Ab, 50%25)
+    val days = Seq("Mon Tue", "a:b", "50%", "Mon")
+    def rows(ids: Range) = ids.map(i => (i.toLong, i * 1.5, days(i % 4)))
+      .toDF("id", "v", "day").coalesce(1)
+    DeltaFixtureWriter.write(rows(0 until 12), path, "overwrite", Seq("day"))
+    DeltaFixtureWriter.write(rows(12 until 24), path, "append", Seq("day"))
+
+    val m = graft.operators.HealthAnalyzer.analyzeTable(spark, path)
+    assert(m.recordCount === 24L)
+    assert(m.partitionCount === 4L)
+    assert(m.dataFileCount === 8L && m.orphanFilesCount === 0L)
+    val snap = DeltaLog.snapshot(spark, path)
+    val stored = snap.activeFiles
+      .select(element_at($"partitionValues", "day")).as[String].collect().toSet
+    assert(stored === days.toSet, "partitionValues hold the unescaped value")
+    val byDay = snap.data.groupBy("day").count().as[(String, Long)].collect().toMap
+    assert(byDay === days.map(_ -> 6L).toMap)
+    snap.unpersist()
+    val inserts = DeltaLog.changes(spark, path, 0, 1)
+      .select("id", "day").as[(Long, String)].collect().toSet
+    assert(inserts === (12 until 24).map(i => (i.toLong, days(i % 4))).toSet)
+
+    // every file holds a multiple of 3, so every partition is rewritten
+    DeltaFixtureWriter.delete(spark, path, "id % 3 = 0")
+    def live(): Set[(Long, String)] = {
+      val s = DeltaLog.snapshot(spark, path)
+      try s.data.select("id", "day").as[(Long, String)].collect().toSet
+      finally s.unpersist()
+    }
+    def keyed(ids: Seq[Int]) = ids.map(i => (i.toLong, days(i % 4))).toSet
+    val survivors = keyed((0 until 24).filter(_ % 3 != 0))
+    assert(live() === survivors)
+
+    // one more file per partition, so every partition has small files to
+    // compact; each compacts to one file
+    DeltaFixtureWriter.write(rows(24 until 32), path, "append", Seq("day"))
+    graft.operators.Maintenance.optimize(spark, path)
+    val all = survivors ++ keyed(24 until 32)
+    assert(live() === all)
+    val after = DeltaLog.snapshot(spark, path)
+    assert(after.activeFiles.count() === 4L)
+    after.unpersist()
+    assert(graft.operators.HealthAnalyzer.analyzeTable(spark, path)
+      .recordCount === all.size.toLong)
+  }
 }

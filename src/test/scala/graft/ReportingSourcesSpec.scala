@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
+import scala.jdk.CollectionConverters._
+
 import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
 import graft.health.DeltaAnalyzerMetrics
 import graft.operators.{HealthAnalyzer, HistoryAnalyzer, Reporting, SkewAnalyzer, StorageAnalyzer}
@@ -129,19 +131,35 @@ class ReportingSourcesSpec extends SparkSuite {
     assert(f.perVersionFileDeltas.count() === hist.length)
   }
 
-  test("distributed folder listing == driver-side listing") {
-    val path = tmpDir("dlist")
+  // nested two-level partitions and a top-level data file are listed;
+  // _SUCCESS, .crc and the checkpoint parquet in _delta_log are not
+  test("folderFiles == an independent java.io walk") {
+    val path = tmpDir("flist")
     val df = TestFixtures.tips(spark, Seq("Mon" -> 30, "Tue" -> 30),
       Seq("Dinner" -> 30, "Lunch" -> 30))
     DeltaFixtureWriter.write(df, path, "overwrite", Seq("day", "time"))
     DeltaFixtureWriter.write(df.limit(10), path, "append", Seq("day", "time"))
-    def normalize(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(r => (r.getString(0).stripPrefix("file:"), r.getLong(1)))
-        .toSet
-    val driver = normalize(StorageAnalyzer.folderFiles(spark, path))
-    val dist = normalize(StorageAnalyzer.folderFilesDistributed(spark, path, 4))
-    assert(driver.nonEmpty)
-    assert(dist === driver)
+    graft.operators.Maintenance.checkpoint(spark, path)
+    val root = java.nio.file.Paths.get(path)
+    val nested = java.nio.file.Files.walk(root).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .find(p => root.relativize(p).getNameCount == 3).get
+    java.nio.file.Files.copy(nested, root.resolve("top.parquet"))
+    val all = java.nio.file.Files.walk(root).iterator().asScala.toSeq
+      .filter(java.nio.file.Files.isRegularFile(_))
+    val names = all.map(_.getFileName.toString)
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")))
+    assert(all.exists(p => p.toString.contains("_delta_log") &&
+      p.toString.endsWith(".checkpoint.parquet")))
+    val walked = all
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .filterNot(p => root.relativize(p).startsWith("_delta_log"))
+      .map(p => (p.toString, java.nio.file.Files.size(p))).toSet
+    val listed = StorageAnalyzer.folderFiles(spark, path).collect()
+      .map(r => (r.getString(0).stripPrefix("file:"), r.getLong(1))).toSet
+    assert(walked.exists(_._1 == root.resolve("top.parquet").toString))
+    assert(walked.size > 4)
+    assert(listed === walked)
   }
 
   test("property: orphan count = folder - manifest when manifest ⊆ folder") {
