@@ -9,79 +9,43 @@ import graft.functions._
 /** Registers the engine's custom Catalyst expressions as SQL functions, so
   * `spark.sql("SELECT fingerprint64(text) ...")` works next to the Column
   * API. Install with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * `SparkSession.builder().withExtensions(new GraftExtensions)`, or call
+  * [[GraftFunctions.register]] on a live session; both read [[GraftFunctions.all]].
   */
 object GraftFunctions {
-  /** Runtime registration on a live session — same function set as
-    * [[GraftExtensions]], for sessions that already exist. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.GraftSqlBridge.registerFunction
-    registerFunction(spark, "fingerprint64", es => Fingerprint64(es.head))
-    registerFunction(spark, "simhash64", es => SimHash64(es.head))
-    registerFunction(spark, "cosine_similarity",
-      es => CosineSimilarity(es(0), es(1)))
-    registerFunction(spark, "word_shingle_set", es => ShingleSet(es.head, 3, 0))
-    registerFunction(spark, "char_shingle_set", es => ShingleSet(es.head, 3, 1))
-    registerFunction(spark, "minhash_sig", es => MinHashSig(es.head, 64))
-    registerFunction(spark, "sorted_intersect_count",
-      es => SortedLongIntersectCount(es(0), es(1)))
-    registerFunction(spark, "nfc_normalize", es => NfcNormalize(es.head))
-    registerFunction(spark, "char_entropy", es => CharEntropy(es.head))
-    registerFunction(spark, "squared_distance",
-      es => SquaredDistance(es(0), es(1)))
-    // text kernels with the engine's default shape parameters (the Column
-    // API exposes the knobs; SQL gets the canonical configuration)
-    registerFunction(spark, "winnow_fingerprints",
-      es => WinnowFingerprintsExpr(es.head, 8, 4))
-    registerFunction(spark, "word_grams", es => WordGramsExpr(es.head, 2))
-    registerFunction(spark, "cdc_chunks", es => CdcChunksExpr(es.head, 8, 1))
-  }
+
+  /** The one function table: (SQL name, expression class, builder). The
+    * text kernels carry the engine's default shape parameters (the Column
+    * API exposes the knobs; SQL gets the canonical configuration). */
+  val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("fingerprint64", classOf[Fingerprint64], es => Fingerprint64(es.head)),
+    ("simhash64", classOf[SimHash64], es => SimHash64(es.head)),
+    ("cosine_similarity", classOf[CosineSimilarity], es => CosineSimilarity(es(0), es(1))),
+    ("word_shingle_set", classOf[ShingleSet], es => ShingleSet(es.head, 3, 0)),
+    ("char_shingle_set", classOf[ShingleSet], es => ShingleSet(es.head, 3, 1)),
+    ("minhash_sig", classOf[MinHashSig], es => MinHashSig(es.head, 64)),
+    ("sorted_intersect_count", classOf[SortedLongIntersectCount],
+      es => SortedLongIntersectCount(es(0), es(1))),
+    ("nfc_normalize", classOf[NfcNormalize], es => NfcNormalize(es.head)),
+    ("char_entropy", classOf[CharEntropy], es => CharEntropy(es.head)),
+    ("squared_distance", classOf[SquaredDistance], es => SquaredDistance(es(0), es(1))),
+    ("winnow_fingerprints", classOf[WinnowFingerprintsExpr],
+      es => WinnowFingerprintsExpr(es.head, 8, 4)),
+    ("word_grams", classOf[WordGramsExpr], es => WordGramsExpr(es.head, 2)),
+    ("cdc_chunks", classOf[CdcChunksExpr], es => CdcChunksExpr(es.head, 8, 1)))
+
+  /** Runtime registration on a live session — for sessions that already
+    * exist. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    all.foreach { case (name, _, builder) =>
+      org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, name, builder)
+    }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(clazz: Class[_], name: String): ExpressionInfo =
-    new ExpressionInfo(clazz.getName, name)
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("fingerprint64"),
-      info(classOf[Fingerprint64], "fingerprint64"),
-      (es: Seq[Expression]) => Fingerprint64(es.head)))
-    e.injectFunction((FunctionIdentifier("simhash64"),
-      info(classOf[SimHash64], "simhash64"),
-      (es: Seq[Expression]) => SimHash64(es.head)))
-    e.injectFunction((FunctionIdentifier("cosine_similarity"),
-      info(classOf[CosineSimilarity], "cosine_similarity"),
-      (es: Seq[Expression]) => CosineSimilarity(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("word_shingle_set"),
-      info(classOf[ShingleSet], "word_shingle_set"),
-      (es: Seq[Expression]) => ShingleSet(es.head, 3, 0)))
-    e.injectFunction((FunctionIdentifier("char_shingle_set"),
-      info(classOf[ShingleSet], "char_shingle_set"),
-      (es: Seq[Expression]) => ShingleSet(es.head, 3, 1)))
-    e.injectFunction((FunctionIdentifier("minhash_sig"),
-      info(classOf[MinHashSig], "minhash_sig"),
-      (es: Seq[Expression]) => MinHashSig(es.head, 64)))
-    e.injectFunction((FunctionIdentifier("sorted_intersect_count"),
-      info(classOf[SortedLongIntersectCount], "sorted_intersect_count"),
-      (es: Seq[Expression]) => SortedLongIntersectCount(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("nfc_normalize"),
-      info(classOf[NfcNormalize], "nfc_normalize"),
-      (es: Seq[Expression]) => NfcNormalize(es.head)))
-    e.injectFunction((FunctionIdentifier("char_entropy"),
-      info(classOf[CharEntropy], "char_entropy"),
-      (es: Seq[Expression]) => CharEntropy(es.head)))
-    e.injectFunction((FunctionIdentifier("squared_distance"),
-      info(classOf[SquaredDistance], "squared_distance"),
-      (es: Seq[Expression]) => SquaredDistance(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("winnow_fingerprints"),
-      info(classOf[WinnowFingerprintsExpr], "winnow_fingerprints"),
-      (es: Seq[Expression]) => WinnowFingerprintsExpr(es.head, 8, 4)))
-    e.injectFunction((FunctionIdentifier("word_grams"),
-      info(classOf[WordGramsExpr], "word_grams"),
-      (es: Seq[Expression]) => WordGramsExpr(es.head, 2)))
-    e.injectFunction((FunctionIdentifier("cdc_chunks"),
-      info(classOf[CdcChunksExpr], "cdc_chunks"),
-      (es: Seq[Expression]) => CdcChunksExpr(es.head, 8, 1)))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.all.foreach { case (name, clazz, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(clazz.getName, name), builder))
+    }
 }

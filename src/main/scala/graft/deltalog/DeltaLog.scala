@@ -63,7 +63,8 @@ object DeltaLog {
     ))),
     StructField("protocol", StructType(Seq(
       StructField("minReaderVersion", IntegerType),
-      StructField("minWriterVersion", IntegerType)
+      StructField("minWriterVersion", IntegerType),
+      StructField("readerFeatures", ArrayType(StringType))
     )))
   ))
 
@@ -294,14 +295,36 @@ object DeltaLog {
     require(isDeltaTable(spark, tablePath),
       s"$tablePath is not a Delta table: no ${logDir(tablePath)} directory " +
         "(for plain parquet, read it directly with spark.read.parquet)")
-    DeltaSnapshot(spark, tablePath, readActions(spark, tablePath).cache())
+    open(spark, tablePath, readActions(spark, tablePath))
   }
 
   /** Time travel: snapshot as of `version` (inclusive). Requires the log to
     * still contain a checkpoint or JSON commits covering that version. */
   def snapshotAt(spark: SparkSession, tablePath: String, version: Long): DeltaSnapshot =
-    DeltaSnapshot(spark, tablePath,
-      readActions(spark, tablePath).where(col("version") <= version).cache())
+    open(spark, tablePath, readActions(spark, tablePath).where(col("version") <= version))
+
+  /** Caches `actions` and fails fast, releasing the cache, when the table's
+    * protocol needs a reader this one is not: reader version 2 is column
+    * mapping and version 3 lists reader features such as deletion vectors
+    * and v2 checkpoints (Delta PROTOCOL.md, "Protocol Evolution"). Any of
+    * them replays to a plausible but wrong record: deleted rows still
+    * counted, renamed columns resolved by their physical names. */
+  private def open(spark: SparkSession, tablePath: String, actions: DataFrame): DeltaSnapshot = {
+    val snap = DeltaSnapshot(spark, tablePath, actions.cache())
+    val (readerVersion, features) = try snap.readerProtocol catch {
+      case e: Throwable => snap.unpersist(); throw e
+    }
+    if (readerVersion > 1) {
+      snap.unpersist()
+      val named = if (features.nonEmpty) features else Seq("columnMapping")
+      throw new UnsupportedOperationException(
+        s"$tablePath needs Delta reader version $readerVersion with reader " +
+          s"feature(s) ${named.mkString(", ")}; only reader version 1 " +
+          "tables (no deletion vectors, column mapping or v2 checkpoints) " +
+          "can be analyzed")
+    }
+    snap
+  }
 
   /** Fully-qualified form of `tablePath` on its filesystem (absolute, with
     * scheme) — relative paths are resolved against the FS working directory
@@ -375,9 +398,10 @@ object DeltaLog {
 
 /** Replayed view of a Delta table at its latest version.
   *
-  * `actions` is the cached all-versions action frame; everything else is a
-  * lazy DataFrame derived from it (no driver-side materialization except the
-  * small `partitionColumns` lookup).
+  * `actions` is the cached all-versions action frame, and `activeFiles` the
+  * cached manifest replayed from it once; everything else is a lazy
+  * DataFrame derived from those two. The driver sees only the one-row
+  * [[latest]] lookup (version, schema, partition columns, protocol).
   */
 final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: DataFrame) {
   import spark.implicits._
@@ -395,42 +419,48 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
       $"commitInfo.operationParameters".as("operationParameters"),
       $"commitInfo.operationMetrics".as("operationMetrics"))
 
+  /** The one driver lookup over the log: max version, and the latest
+    * metaData and protocol actions (each null when the log has none). */
+  private lazy val latest: org.apache.spark.sql.Row = actions.agg(
+    max($"version").as("version"),
+    max_by($"metaData", when($"metaData".isNotNull, $"version")).as("metaData"),
+    max_by($"protocol", when($"protocol".isNotNull, $"version")).as("protocol"))
+    .first()
+
+  private def latestField[T](action: String, field: String): Option[T] =
+    Option(latest.getAs[org.apache.spark.sql.Row](action))
+      .flatMap(r => Option(r.getAs[T](field)))
+
   /** max commit version — the reference's `version_count` is max(version),
     * 0-based, NOT len(history) (delta_python_analyzer.py:189). */
   lazy val version: Long =
-    actions.agg(max($"version")).as[Option[Long]].first().getOrElse(0L)
+    Option(latest.getAs[java.lang.Long]("version")).map(_.longValue).getOrElse(0L)
 
   /** Authoritative table schema from the latest metaData action's
     * `schemaString` (the Delta protocol's schema authority — the FULL
     * schema, partition columns included). None when the log predates schema
     * emission (legacy fixtures wrote the stub "{}") or the string does not
     * parse as a StructType. */
-  lazy val tableSchema: Option[StructType] = {
-    val rows = actions
-      .where($"metaData".isNotNull)
-      .orderBy($"version".desc)
-      .select($"metaData.schemaString")
-      .limit(1)
-      .as[Option[String]]
-      .collect()
-    rows.headOption.flatten.flatMap { s =>
+  lazy val tableSchema: Option[StructType] =
+    latestField[String]("metaData", "schemaString").flatMap { s =>
       scala.util.Try(DataType.fromJson(s)).toOption.collect {
         case st: StructType if st.fields.nonEmpty => st
       }
     }
-  }
 
   /** Partition columns from the latest metaData action. */
-  lazy val partitionColumns: Seq[String] = {
-    val rows = actions
-      .where($"metaData".isNotNull)
-      .orderBy($"version".desc)
-      .select($"metaData.partitionColumns")
-      .limit(1)
-      .as[Option[Seq[String]]]
-      .collect()
-    rows.headOption.flatten.getOrElse(Seq.empty)
-  }
+  lazy val partitionColumns: Seq[String] =
+    latestField[collection.Seq[String]]("metaData", "partitionColumns")
+      .map(_.toSeq).getOrElse(Seq.empty)
+
+  /** (minReaderVersion, readerFeatures) of the latest protocol action;
+    * reader version 1 when the log carries none. */
+  private[deltalog] def readerProtocol: (Int, Seq[String]) =
+    (latestField[Int]("protocol", "minReaderVersion").getOrElse(1),
+      latestField[collection.Seq[String]]("protocol", "readerFeatures")
+        .map(_.toSeq).getOrElse(Seq.empty))
+
+  @volatile private var manifestCached = false
 
   /** Active file manifest: per path, the latest `add` survives unless a
     * `remove` with version >= the add's version exists. Columns:
@@ -438,6 +468,9 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
     *
     * Implemented as two hash aggregations plus a join on `path`; with AQE on,
     * the (normally much smaller) remove side is broadcast at runtime.
+    * Derived once per snapshot: the frame is cached on first use, so the
+    * emptiness check, the data scan's join and the storage stats all read
+    * the same copy; [[unpersist]] releases it.
     */
   lazy val activeFiles: DataFrame = {
     val adds = actions
@@ -449,10 +482,12 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
       .where($"remove".isNotNull)
       .groupBy($"remove.path".as("path"))
       .agg(max($"version").as("removeVersion"))
+    manifestCached = true
     adds
       .join(removes, Seq("path"), "left")
       .where($"removeVersion".isNull || $"addVersion" > $"removeVersion")
       .drop("removeVersion", "addVersion")
+      .cache()
   }
 
   /** Fully-qualified table root (scheme + absolute path) — the base for any
@@ -567,5 +602,11 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
       (activeSchema.fieldNames.map(col).toSeq :+ $"__file") ++ partCols: _*)
   }
 
-  def unpersist(): Unit = { actions.unpersist(); () }
+  /** Releases the cached manifest (if it was built) and then `actions`, the
+    * frame it was derived from. */
+  def unpersist(): Unit = {
+    if (manifestCached) activeFiles.unpersist()
+    actions.unpersist()
+    ()
+  }
 }

@@ -140,35 +140,6 @@ object Dedup {
 
   // -------------------------------------------------------- MinHash + LSH
 
-  /** REFERENCE implementation (pure functions._ composition) — the LSH
-    * pipelines use the ~50x faster fused kernels in minhashExpressions
-    * instead; kept public for composability with arbitrary shingle columns.
-    *
-    * MinHash signature (numHashes values) of a shingle array: shingle →
-    * xxhash64 once, then per-"permutation" min of the salted re-hash
-    * xxhash64(h, i). Salted re-hashing replaces the classic (a*h+b mod p)
-    * affine family — same independence in practice, and no 64-bit overflow
-    * under ANSI arithmetic.
-    *
-    * Built as ONE nested transform (outer loop over permutation ids) so the
-    * base hash array appears exactly once in the expression tree — an
-    * `array(perm0, perm1, ...)` form would re-inline (and re-evaluate) the
-    * shingle-hash transform per permutation after projection collapse
-    * (measured ~4x wall-clock on the LSH queries). Fully codegen'd, no
-    * shuffle. */
-  def minhashSignature(shingleCol: Column, numHashes: Int = 64, seed: Long = 42L): Column = {
-    val hashes = transform(shingleCol, s => xxhash64(s, lit(seed)))
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(hashes, h => xxhash64(h, i))))
-  }
-
-  /** Estimated Jaccard from two MinHash signatures: fraction of agreeing
-    * positions. O(numHashes) — the cheap prefilter before exact set
-    * verification. */
-  def sigEstimate(sigA: Column, sigB: Column): Column =
-    aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / size(sigA)
-
   /** LSH band keys: signature split into `bands` bands of `rows` values,
     * each hashed — docs sharing any band key are candidates. */
   def bandKeys(sigCol: Column, bands: Int, rows: Int): Column =
@@ -1558,14 +1529,6 @@ object Dedup {
       }
       m
     }
-
-  /** Character n-grams of normalized text. */
-  def charNgrams(text: Column, n: Int): Column = {
-    val norm = TextFunctions.normalized(text)
-    when(length(norm) <= n, array(norm))
-      .otherwise(transform(sequence(lit(1), length(norm) - (n - 1)),
-        i => substring(norm, i, lit(n))))
-  }
 
   // ------------------------------------------- embedding cosine near-dup
 

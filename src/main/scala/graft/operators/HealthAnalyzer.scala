@@ -7,10 +7,11 @@ import graft.deltalog.DeltaLog
 import graft.health._
 
 /** End-to-end table health analysis — the re-architected E1 entry point
-  * (SURVEY.md §3): one cached log snapshot, then independent DataFrame jobs
-  * (history aggregate, partition counts/skew, manifest aggregate, folder
-  * listing aggregate) that each cross the driver boundary exactly once at
-  * their terminal action, feeding the pure-Scala health calculus.
+  * (SURVEY.md §3): one cached log snapshot with its cached active manifest,
+  * then three passes that each derive their facts from one source — the
+  * history aggregate, one data scan into a cached per-partition counts
+  * aggregate (record count and skew), and one join of the folder listing
+  * with the manifest (storage) — feeding the pure-Scala health calculus.
   *
   * Implements the *Python* backend's measured semantics (the honest fork of
   * H6-H10 — delta_python_analyzer.py:224-275) since our log layer has full
@@ -78,22 +79,21 @@ object HealthAnalyzer {
     locally {
       // history pass (A5/A6)
       val ops = HistoryAnalyzer.opCounts(snap.history).first()
-      // skew pass (A1-A4) — once, both methods, unlike the reference's
-      // double materialization (delta_python_analyzer.py:192-193).
-      // Guard the fully-deleted table: data is schemaless when no file is
-      // active, so grouping by partition columns would not resolve.
-      val hasData = snap.dataWithFile.isDefined
-      val skew =
-        if (hasData)
-          SkewAnalyzer.analyze(snap.data, snap.partitionColumns,
+      // data pass (A1-A4, A7): one scan feeds one cached counts aggregate,
+      // whose stats row yields the record count and both skew methods,
+      // unlike the reference's double materialization
+      // (delta_python_analyzer.py:192-193). Guard the fully-deleted table:
+      // data is schemaless when no file is active, so grouping by partition
+      // columns would not resolve.
+      val (recordCount, skew) =
+        if (snap.dataWithFile.isDefined)
+          SkewAnalyzer.measure(snap.data, snap.partitionColumns,
             thresholds.skewThreshold)
-        else graft.health.SkewMetrics(partitionColumns = snap.partitionColumns)
+        else (0L, SkewMetrics(partitionColumns = snap.partitionColumns))
       // storage pass (A8-A13, J1)
       val folder = StorageAnalyzer.folderFiles(spark, tablePath)
       val storage = StorageAnalyzer.storageStats(folder, snap.activeFilePaths,
         thresholds.smallFileSizeMb.map(_ * 1024 * 1024)).first()
-      // record count (A7) — full-scan count, the parity-true form
-      val recordCount = if (hasData) snap.data.count() else 0L
 
       val tableSize = storage.getAs[Long]("table_size_bytes")
       val folderSize = storage.getAs[Long]("folder_size_bytes")

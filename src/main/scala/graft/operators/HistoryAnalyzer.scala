@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
   * history frame. */
 object HistoryAnalyzer {
 
-  val CountedOps: Seq[String] = Seq("WRITE", "MERGE", "DELETE", "OPTIMIZE")
-
   /** A5+A6: one-row frame (number_of_writes, number_of_deletes,
     * number_of_optimizes, number_of_merges, version_count). version_count is
     * max(version) — NOT the number of commits (delta_python_analyzer.py:189). */
@@ -21,10 +19,6 @@ object HistoryAnalyzer {
       coalesce(sum(when(col("operation") === "OPTIMIZE", 1L)), lit(0L)).as("number_of_optimizes"),
       coalesce(sum(when(col("operation") === "MERGE", 1L)), lit(0L)).as("number_of_merges"),
       coalesce(max(col("version")), lit(0L)).as("version_count"))
-
-  /** P4: the ops the reference buckets (delta_python_analyzer.py:168). */
-  def countedOperations(history: DataFrame): DataFrame =
-    history.where(col("operation").isin(CountedOps: _*))
 
   /** A17: per-version file deltas from operationMetrics with defaulting map
     * access (delta_operations.py:59-63). */

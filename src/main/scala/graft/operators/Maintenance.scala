@@ -409,7 +409,8 @@ object Maintenance {
     val proto = widen(
       if (loggedProto.isEmpty)
         spark.range(1).select(
-          struct(lit(1).as("minReaderVersion"), lit(2).as("minWriterVersion"))
+          struct(lit(1).as("minReaderVersion"), lit(2).as("minWriterVersion"),
+            lit(null).cast("array<string>").as("readerFeatures"))
             .cast(protoType).as("protocol"))
       else loggedProto)
     val ckpt = adds.unionByName(meta).unionByName(proto)

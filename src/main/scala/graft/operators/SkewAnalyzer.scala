@@ -40,7 +40,17 @@ object SkewAnalyzer {
       lit(")"))
 
   /** A2+A3 in one pure plan: returns a one-row frame
-    * (partition_cnt, skewness_max, skewness_average).
+    * (partition_cnt, skewness_max, skewness_average) — [[countsStats]]
+    * projected to its skew columns. */
+  def skewnessStats(counts: DataFrame): DataFrame =
+    countsStats(counts, Seq.empty)
+      .select(col("partition_cnt"), col("skewness_max"), col("skewness_average"))
+
+  /** The one stats aggregate over a [[partitionCounts]] frame, as a one-row
+    * frame: partition_cnt, skewness_max, skewness_average, record_count
+    * (A7, the sum of the counts) and the lightest/heaviest partition as
+    * (partition, count) structs `mn`/`mx`, ties broken by the `/`-joined
+    * partition key.
     *
     * skewness_max     = (max(c) - min(c)) / max(c)     [0 if <=1 part or max=0]
     * skewness_average = avg(|c - mean|) / mean          [0 if mean = 0]
@@ -50,15 +60,20 @@ object SkewAnalyzer {
     * everything through a single task) — the whole thing stays distributed
     * and collect-free regardless of partition-count cardinality.
     */
-  def skewnessStats(counts: DataFrame): DataFrame = {
+  def countsStats(counts: DataFrame, partitionCols: Seq[String]): DataFrame = {
     val mean = counts.agg(avg(col("count")).as("mean_count"))
+    val key = concat_ws("/", partitionCols.map(col): _*)
+    val byWeight = struct(col("count"), key)
     counts.crossJoin(broadcast(mean))
       .agg(
         count(lit(1)).as("partition_cnt"),
+        coalesce(sum(col("count")), lit(0L)).as("record_count"),
         max(col("count")).as("max_count"),
         min(col("count")).as("min_count"),
         avg(abs(col("count") - col("mean_count"))).as("avg_abs_dev"),
-        first(col("mean_count")).as("mean_count"))
+        first(col("mean_count")).as("mean_count"),
+        min_by(struct(key.as("partition"), col("count")), byWeight).as("mn"),
+        max_by(struct(key.as("partition"), col("count")), byWeight).as("mx"))
       .select(
         col("partition_cnt"),
         when(col("partition_cnt") <= 1 || col("max_count") === 0, lit(0.0))
@@ -66,7 +81,8 @@ object SkewAnalyzer {
           .as("skewness_max"),
         when(col("partition_cnt") <= 1 || col("mean_count") === 0, lit(0.0))
           .otherwise(col("avg_abs_dev") / col("mean_count"))
-          .as("skewness_average"))
+          .as("skewness_average"),
+        col("record_count"), col("mn"), col("mx"))
   }
 
   /** A16: distribution stats feeding the skew gauge
@@ -79,46 +95,50 @@ object SkewAnalyzer {
       coalesce(stddev_pop(col("count")), lit(0.0)).as("stddev_count"))
 
   /** Full skew bundle for a table, collected to the typed record the health
-    * calculus consumes. Only the (small) counts/stats rows ever reach the
-    * driver, and the per-partition dict is BOUNDED: the reference
+    * calculus consumes: [[partitionCounts]] then [[measure]]. An empty
+    * `partitionCols` reports no skew and reads nothing. */
+  def analyze(df: DataFrame, partitionCols: Seq[String], threshold: Double,
+              topN: Int = 1000): SkewMetrics =
+    if (partitionCols.isEmpty) SkewMetrics()
+    else measure(df, partitionCols, threshold, topN)._2
+
+  /** Record count and skew bundle from ONE scan of `df`: its
+    * [[partitionCounts]] frame is cached and read by the [[countsStats]]
+    * aggregate and the top-N collect, then released. Without partition
+    * columns the counts frame is a single global row and only the record
+    * count is taken from it. Only the (small) counts/stats rows ever reach
+    * the driver, and the per-partition dict is BOUNDED: the reference
     * materializes every partition key (delta_python_analyzer.py:51-57),
     * which a high-cardinality partition column (timestamps, ids) turns into
     * a driver OOM at 100× — here the map keeps only the `topN` heaviest
     * partitions, while the true cardinality and both exact extremes are
     * computed distributively and carried separately. */
-  def analyze(df: DataFrame, partitionCols: Seq[String], threshold: Double,
-              topN: Int = 1000): SkewMetrics = {
-    if (partitionCols.isEmpty) return SkewMetrics()
+  def measure(df: DataFrame, partitionCols: Seq[String], threshold: Double,
+              topN: Int = 1000): (Long, SkewMetrics) = {
     val counts = partitionCounts(df, partitionCols).cache()
     try {
-      val stats = skewnessStats(counts).first()
-      val skewMax = stats.getAs[Double]("skewness_max")
-      val skewAvg = stats.getAs[Double]("skewness_average")
-      val strCounts = counts.select(
-        concat_ws("/", partitionCols.map(col): _*).as("partition"), col("count"))
-      val records = strCounts
-        .orderBy(col("count").desc, col("partition").asc).limit(topN)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val mm = strCounts.agg(
-        min_by(struct(col("partition"), col("count")),
-          struct(col("count"), col("partition"))).as("mn"),
-        max_by(struct(col("partition"), col("count")),
-          struct(col("count"), col("partition"))).as("mx")).first()
-      def kv(i: Int): Option[(String, Long)] =
-        if (mm.isNullAt(i)) None
-        else {
-          val r = mm.getStruct(i)
-          Some(r.getString(0) -> r.getLong(1))
-        }
-      SkewMetrics(
-        partitionColumns = partitionCols,
-        skewnessMax = skewMax,
-        skewnessAverage = skewAvg,
-        isSkewed = skewMax > threshold,
-        partitionCount = stats.getAs[Long]("partition_cnt"),
-        recordsPerPartition = records,
-        minPartition = kv(0),
-        maxPartition = kv(1))
+      val stats = countsStats(counts, partitionCols).first()
+      val recordCount = stats.getAs[Long]("record_count")
+      if (partitionCols.isEmpty) (recordCount, SkewMetrics())
+      else {
+        val skewMax = stats.getAs[Double]("skewness_max")
+        val records = counts
+          .select(concat_ws("/", partitionCols.map(col): _*).as("partition"), col("count"))
+          .orderBy(col("count").desc, col("partition").asc).limit(topN)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        def kv(field: String): Option[(String, Long)] =
+          Option(stats.getAs[org.apache.spark.sql.Row](field))
+            .map(r => r.getString(0) -> r.getLong(1))
+        (recordCount, SkewMetrics(
+          partitionColumns = partitionCols,
+          skewnessMax = skewMax,
+          skewnessAverage = stats.getAs[Double]("skewness_average"),
+          isSkewed = skewMax > threshold,
+          partitionCount = stats.getAs[Long]("partition_cnt"),
+          recordsPerPartition = records,
+          minPartition = kv("mn"),
+          maxPartition = kv("mx")))
+      }
     } finally { counts.unpersist(); () }
   }
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.deltalog.DeltaLog
 
 /** Storage-health analytics (delta_python_analyzer.py:90-133,224-275):
-  * folder listing, manifest aggregates, small-file and orphan-file detection.
+  * folder listing, one folder ⋈ manifest storage aggregate, small-file and
+  * orphan-file detection.
   *
   * The folder listing (S6) is the Delta layer's one driver-side walk,
   * [[graft.deltalog.DeltaLog.dataFiles]]; the resulting frame is a local
@@ -50,41 +51,39 @@ object StorageAnalyzer {
     f.join(m, Seq("file_key"), "left_anti")
   }
 
-  /** One-pass manifest + folder storage aggregate. Returns a one-row frame:
+  /** Storage aggregate in one pass: the folder listing FULL-OUTER-joined
+    * with the manifest on [[DeltaLog.pathKey]] (each side lists a file once),
+    * then one aggregate. Returns a one-row frame:
     * (table_size_bytes, folder_size_bytes, data_file_count, total_file_count,
     *  orphan_files_count, avg_file_size_bytes, small_files_count).
+    * Manifest-side columns count manifest rows, folder-side columns count
+    * listed files, and an orphan is a listed file with no manifest row (the
+    * [[orphanFiles]] anti-join, counted in the same pass).
     *
     * `smallFileThresholdBytes = None` → use the manifest's average file size
-    * as the threshold (delta_python_analyzer.py:238-241), which needs a
-    * second (tiny) aggregation pass over the manifest, matching the
-    * reference's two-pass math.
+    * as the threshold (delta_python_analyzer.py:238-241), a scalar subquery
+    * over the same joined frame, matching the reference's two-pass math.
     */
   def storageStats(folder: DataFrame, manifest: DataFrame,
                    smallFileThresholdBytes: Option[Double]): DataFrame = {
-    val mAgg = manifest.agg(
-      coalesce(sum(col("size")), lit(0L)).as("table_size_bytes"),
-      count(lit(1)).as("data_file_count"),
-      coalesce(avg(col("size")), lit(0.0)).as("avg_file_size"))
-    val thrCol = smallFileThresholdBytes match {
-      case Some(t) => lit(t)
-      case None => col("avg_file_size")
-    }
-    val mSmall = manifest
-      .crossJoin(broadcast(mAgg.select(col("avg_file_size"))))
-      .agg(coalesce(sum(when(col("size") < thrCol, 1L).otherwise(0L)), lit(0L))
+    val joined = folder
+      .select(DeltaLog.pathKey(col("path")).as("file_key"),
+        col("size").as("folder_size"), lit(1L).as("listed"))
+      .join(manifest.select(DeltaLog.pathKey(col("path")).as("file_key"),
+        col("size").as("table_size"), lit(1L).as("active")),
+        Seq("file_key"), "full_outer")
+    val avgSize = coalesce(avg(col("table_size")), lit(0.0))
+    val thr = smallFileThresholdBytes.map(lit)
+      .getOrElse(joined.agg(avgSize).scalar())
+    joined.agg(
+      coalesce(sum(col("table_size")), lit(0L)).as("table_size_bytes"),
+      coalesce(sum(col("folder_size")), lit(0L)).as("folder_size_bytes"),
+      count(col("active")).as("data_file_count"),
+      count(col("listed")).as("total_file_count"),
+      count(when(col("active").isNull, col("listed"))).as("orphan_files_count"),
+      avgSize.cast("long").as("avg_file_size_bytes"),
+      count(when(col("active").isNotNull && col("table_size") < thr, 1L))
         .as("small_files_count"))
-    val fAgg = folder.agg(
-      coalesce(sum(col("size")), lit(0L)).as("folder_size_bytes"),
-      count(lit(1)).as("total_file_count"))
-    val orphans = orphanFiles(folder, manifest)
-      .agg(count(lit(1)).as("orphan_files_count"))
-    mAgg.crossJoin(mSmall).crossJoin(fAgg).crossJoin(orphans)
-      .select(
-        col("table_size_bytes"), col("folder_size_bytes"),
-        col("data_file_count"), col("total_file_count"),
-        col("orphan_files_count"),
-        col("avg_file_size").cast("long").as("avg_file_size_bytes"),
-        col("small_files_count"))
   }
 
   /** A14: fixed-bin histogram of file sizes in MB (file_distribution.py:46-54

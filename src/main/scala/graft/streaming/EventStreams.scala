@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming operators over the events table. Each transform is
   * written against a plain DataFrame so the SAME function runs in batch
@@ -22,13 +21,6 @@ object EventStreams {
       .select(col("win.start").as("window_start"), col("event_type"),
         col("cnt"), col("value_sum"))
 
-  /** Sliding window: 1-hour windows every 15 minutes. */
-  def slidingTypeCounts(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("win"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("win.start").as("window_start"), col("event_type"), col("cnt"))
-
   /** Session windows per user with an inactivity gap. */
   def userSessions(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events
@@ -36,16 +28,6 @@ object EventStreams {
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("value_sum"))
       .select(col("user_id"), col("win.start").as("session_start"),
         col("win.end").as("session_end"), col("n_events"), col("value_sum"))
-
-  /** Open a parquet dir as a stream (schema must be supplied up front for
-    * streaming sources; watermark bounds state for the windowed aggs). */
-  def streamFromParquet(spark: SparkSession, dir: String, schema: StructType,
-                        watermark: String = "2 hours"): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .withWatermark("ts", watermark)
 
   /** Typed event row for stateful processing. */
   final case class UserEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)

@@ -196,4 +196,73 @@ class DeltaLogSpec extends SparkSuite {
     assert(graft.operators.HealthAnalyzer.analyzeTable(spark, path)
       .recordCount === all.size.toLong)
   }
+
+  // commit lines spelled as in Delta's PROTOCOL.md ("Protocol Evolution",
+  // "Deletion Vectors", "Column Mapping"); no data files are needed, the
+  // protocol is checked when the snapshot opens
+  private def writeLog(path: String, commits: Seq[String]*): Unit = {
+    val dir = java.nio.file.Paths.get(path, "_delta_log")
+    java.nio.file.Files.createDirectories(dir)
+    commits.zipWithIndex.foreach { case (lines, v) =>
+      java.nio.file.Files.write(dir.resolve(f"$v%020d.json"),
+        lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+  }
+
+  private val schemaString =
+    """{\"type\":\"struct\",\"fields\":[{\"name\":\"id\",\"type\":\"long\",\"nullable\":true,\"metadata\":{}}]}"""
+
+  private def metaData(configuration: String) =
+    s"""{"metaData":{"id":"5fba94ed-9794-4965-ba6e-6ee3c0d22af9","format":{"provider":"parquet","options":{}},"schemaString":"$schemaString","partitionColumns":[],"configuration":$configuration,"createdTime":1564524294376}}"""
+
+  private def commitInfo(op: String) =
+    s"""{"commitInfo":{"timestamp":1564524295000,"operation":"$op","operationParameters":{}}}"""
+
+  test("protocol guard: deletion vectors and column mapping fail fast, naming the features") {
+    val dv = tmpDir("dlog_dv")
+    writeLog(dv, Seq(
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""",
+      metaData("""{"delta.enableDeletionVectors":"true"}"""),
+      """{"add":{"path":"part-00000-a.parquet","partitionValues":{},"size":400,"modificationTime":1564524294000,"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":"ab^-aqEH.-t@S}K{vb[*k^","offset":4,"sizeInBytes":40,"cardinality":6}}}""",
+      commitInfo("WRITE")))
+    val e = intercept[UnsupportedOperationException](DeltaLog.snapshot(spark, dv))
+    assert(e.getMessage.contains("deletionVectors") && e.getMessage.contains("reader version 3"),
+      e.getMessage)
+    intercept[UnsupportedOperationException](
+      graft.operators.HealthAnalyzer.analyzeTable(spark, dv))
+
+    // reader version 2 is column mapping, which predates the features list
+    val cm = tmpDir("dlog_cm")
+    writeLog(cm, Seq(
+      """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
+      metaData("""{"delta.columnMapping.mode":"name","delta.columnMapping.maxColumnId":"1"}"""),
+      commitInfo("CREATE TABLE")))
+    val e2 = intercept[UnsupportedOperationException](DeltaLog.snapshot(spark, cm))
+    assert(e2.getMessage.contains("columnMapping"), e2.getMessage)
+
+    val both = tmpDir("dlog_both")
+    writeLog(both, Seq(
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["columnMapping","deletionVectors"],"writerFeatures":["columnMapping","deletionVectors"]}}""",
+      metaData("{}"), commitInfo("CREATE TABLE")))
+    val e3 = intercept[UnsupportedOperationException](DeltaLog.snapshot(spark, both))
+    assert(e3.getMessage.contains("columnMapping, deletionVectors"), e3.getMessage)
+  }
+
+  test("protocol guard: the latest protocol action decides, writer-only features pass") {
+    val path = tmpDir("dlog_upgrade")
+    writeLog(path,
+      Seq("""{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["appendOnly","invariants"]}}""",
+        metaData("{}"), commitInfo("CREATE TABLE")),
+      Seq("""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["appendOnly","invariants","deletionVectors"]}}""",
+        commitInfo("UPGRADE PROTOCOL")))
+    val e = intercept[UnsupportedOperationException](DeltaLog.snapshot(spark, path))
+    assert(e.getMessage.contains("deletionVectors"), e.getMessage)
+    // before the upgrade the table is reader version 1
+    val v0 = DeltaLog.snapshotAt(spark, path, 0)
+    try {
+      assert(v0.version === 0L)
+      assert(v0.partitionColumns === Seq.empty)
+      assert(v0.tableSchema.map(_.fieldNames.toSeq) === Some(Seq("id")))
+    } finally v0.unpersist()
+  }
 }

@@ -1,6 +1,9 @@
 package graft
 
-import graft.health.Thresholds
+import org.apache.spark.sql.functions._
+
+import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
+import graft.health.{DeltaAnalyzerMetrics, Thresholds}
 import graft.operators.HealthAnalyzer
 
 /** 1:1 port of the reference's pytest suite
@@ -110,6 +113,115 @@ class HealthAnalyzerSpec extends SparkSuite {
       spark.sql(s"DROP TABLE IF EXISTS $name")
       ()
     }
+  }
+
+  /** Every count and storage field of the record, computed without the
+    * analyzer: a `java.io` walk of the table directory for the folder side,
+    * the collected active manifest for the table side, and parquet footer
+    * row counts of the active files for `recordCount` and `partitionCount`. */
+  private def independentCounts(path: String, thresholds: Thresholds): Map[String, Long] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) {
+        if (f.getName == "_delta_log") Seq.empty
+        else f.listFiles().toSeq.flatMap(walk)
+      } else if (f.getName.endsWith(".parquet")) Seq(f)
+      else Seq.empty
+    val onDisk = walk(new java.io.File(path))
+    val snap = DeltaLog.snapshot(spark, path)
+    val active = try snap.activeFiles.select("path", "size", "partitionValues")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getMap[String, String](2).toMap))
+      .toSeq
+    finally snap.unpersist()
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footerRows(rel: String): Long = {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new java.io.File(path, rel).toURI), conf))
+      try reader.getRecordCount finally reader.close()
+    }
+    val rows = active.map { case (p, _, pv) => (pv, footerRows(p)) }
+    val sizes = active.map(_._2)
+    val avg = if (sizes.isEmpty) 0.0 else sizes.sum.toDouble / sizes.size
+    val thr = thresholds.smallFileSizeMb.map(_ * 1024 * 1024).getOrElse(avg)
+    val partitioned = active.exists(_._3.nonEmpty)
+    Map(
+      "recordCount" -> rows.map(_._2).sum,
+      "tableSizeBytes" -> sizes.sum,
+      "folderSizeBytes" -> onDisk.map(_.length).sum,
+      "dataFileCount" -> active.size.toLong,
+      "totalFileCount" -> onDisk.size.toLong,
+      "orphanFilesCount" -> (onDisk.size - active.size).toLong,
+      "avgFileSizeBytes" -> avg.toLong,
+      "smallFilesCount" -> sizes.count(_ < thr).toLong,
+      "partitionCount" ->
+        (if (partitioned) rows.filter(_._2 > 0).map(_._1).distinct.size.toLong else 0L))
+  }
+
+  private def reportedCounts(m: DeltaAnalyzerMetrics): Map[String, Long] = Map(
+    "recordCount" -> m.recordCount,
+    "tableSizeBytes" -> m.tableSizeBytes,
+    "folderSizeBytes" -> m.folderSizeBytes,
+    "dataFileCount" -> m.dataFileCount,
+    "totalFileCount" -> m.totalFileCount,
+    "orphanFilesCount" -> m.orphanFilesCount,
+    "avgFileSizeBytes" -> m.avgFileSizeBytes,
+    "smallFilesCount" -> m.smallFilesCount,
+    "partitionCount" -> m.partitionCount)
+
+  private def assertCountsPinned(path: String, thresholds: Thresholds = Thresholds()): DeltaAnalyzerMetrics = {
+    val m = HealthAnalyzer.analyzeTable(spark, path, thresholds)
+    assert(reportedCounts(m) === independentCounts(path, thresholds))
+    m
+  }
+
+  /** An overwrite, an append and a delete: the delete leaves the files it
+    * rewrote on disk as dead files. */
+  private def buildChurnedTable(path: String, partitionBy: Seq[String]): Unit = {
+    val df = TestFixtures.tips(spark,
+      Seq("Mon" -> 50, "Tue" -> 30, "Wed" -> 20),
+      Seq("Dinner" -> 60, "Lunch" -> 40))
+    DeltaFixtureWriter.write(df, path, "overwrite", partitionBy)
+    DeltaFixtureWriter.write(df.where(col("size") === 2), path, "append", partitionBy)
+    DeltaFixtureWriter.delete(spark, path, "total_bill > 40")
+  }
+
+  test("counts and storage fields == an independent walk, footers and manifest: partitioned, with dead files") {
+    val path = tmpDir("pin_part")
+    buildChurnedTable(path, Seq("day"))
+    val m = assertCountsPinned(path)
+    assert(m.orphanFilesCount > 0, "the delete must leave dead files on disk")
+    assert(m.partitionCount === 3L)
+    assert(m.partitionSkewness === Some(m.skewnessMax))
+    assert(m.skewMetrics.map(_.partitionCount) === Some(3L))
+  }
+
+  test("counts and storage fields pinned: unpartitioned table") {
+    val path = tmpDir("pin_flat")
+    buildChurnedTable(path, Seq.empty)
+    val m = assertCountsPinned(path)
+    assert(m.recordCount > 0)
+    assert(m.partitionCount === 0L)
+    assert(m.skewMetrics === None)
+    assert(m.partitionSkewness === None)
+  }
+
+  test("counts and storage fields pinned: average-size small-file threshold") {
+    val path = tmpDir("pin_avg")
+    buildChurnedTable(path, Seq("day", "time"))
+    val m = assertCountsPinned(path, Thresholds(smallFileSizeMb = None))
+    assert(m.smallFilesCount < m.dataFileCount,
+      "the average is not below every file, so some files must not be small")
+  }
+
+  test("counts and storage fields pinned: fully-deleted table") {
+    val path = tmpDir("pin_empty")
+    buildChurnedTable(path, Seq("day"))
+    DeltaFixtureWriter.delete(spark, path, "total_bill > 0")
+    val m = assertCountsPinned(path)
+    assert(m.recordCount === 0L)
+    assert(m.dataFileCount === 0L)
+    assert(m.totalFileCount > 0L)
+    assert(m.partitionCount === 0L)
   }
 
   test("smoke: complex table loads and reports version_count > 0 (test_delta_analyzer_load.py:6-11)") {

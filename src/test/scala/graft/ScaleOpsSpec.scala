@@ -187,6 +187,28 @@ class ScaleOpsSpec extends SparkSuite {
     }
   }
 
+  test("GraftExtensions and GraftFunctions.register expose the same SQL functions") {
+    val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(
+          f: (org.apache.spark.sql.catalyst.FunctionIdentifier,
+            org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
+            Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+              org.apache.spark.sql.catalyst.expressions.Expression)): Unit = {
+        assert(f._2.getName === f._1.funcName)
+        injected += f._1.funcName
+      }
+    })
+    val fresh = spark.newSession()
+    def names(): Set[String] = fresh.catalog.listFunctions().collect().map(_.name).toSet
+    val before = names()
+    GraftFunctions.register(fresh)
+    val registered = names() -- before
+    assert(injected.size === 13)
+    assert(injected.toSet === registered)
+    assert(registered === GraftFunctions.all.map(_._1).toSet)
+  }
+
   test("stateful sessionization (flatMapGroupsWithState) splits on gap") {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val events = Seq(
