@@ -381,7 +381,7 @@ object Bench {
         // cold signature materialization and the rest free-rode on its
         // cache — r7 read that asymmetry as "decontamination_auto costs
         // 2.5x its bloom sibling" when cold-for-cold they are at parity
-        // (demo.DecontProbe). Per-query release makes every median that
+        // (BASELINE.md r8). Per-query release makes every median that
         // query's own standalone cost. Trained ANN index memos stay warm
         // by design (train-once is the thing knn medians measure).
         graft.operators.Dedup.unpersistAll()
@@ -577,23 +577,24 @@ object Bench {
       // of the budget; from r19 on the top sets overlap on their own)
       val topNames = packTop(
         Seq("zipf_fit").filter(kvOf.contains) ++ ok.sortBy(n => (-med(n), n)))
-      val parts = alphaParts :+ topNames.sorted.map(kvOf).toList
-      parts.zipWithIndex.foreach { case (p, i) =>
-        println(s"""{"detail":"medians","part":${i + 1},"of":${parts.size},"queries":${p.mkString("{", ",", "}")}}""")
-      }
       // index_build_sec moves to its own detail line (it can be ~200+
-      // chars) so the headline stays far below the tail window's budget
-      // and the final medians line above always fits beside it. Keyed
-      // "builds", NOT "queries" — a same-named map would clobber the
+      // chars) so the headline stays far below the tail window's budget.
+      // Keyed "builds", NOT "queries" — a same-named map would clobber the
       // surviving medians map in the tail-window merge.
       println(s"""{"detail":"index_build_sec","builds":$buildJson}""")
       // errors/partial stay inline only while small: kill forensics can
       // exceed the whole tail window (r17: three kills made the headline
       // >2 KB and the artifact parsed null) — overflow goes to a detail
-      // line and the headline keeps the counts
+      // line and the headline keeps the counts. Both detail lines print
+      // BEFORE the medians parts, so the top medians line and the headline
+      // are always the last two lines of stdout.
       val inlineErrs = errJson.length + partialJson.length <= 300
       if (!inlineErrs)
         println(s"""{"detail":"errors_partial","errors":$errJson,"partial":$partialJson}""")
+      val parts = alphaParts :+ topNames.sorted.map(kvOf).toList
+      parts.zipWithIndex.foreach { case (p, i) =>
+        println(s"""{"detail":"medians","part":${i + 1},"of":${parts.size},"queries":${p.mkString("{", ",", "}")}}""")
+      }
       val errFields =
         if (inlineErrs) s""""errors":$errJson,"partial":$partialJson"""
         else s""""n_errors":${errors.size},"n_partial":${partialJson.count(_ == '{') - 1}"""

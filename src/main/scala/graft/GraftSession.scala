@@ -78,16 +78,17 @@ object GraftSession {
     // group-count threshold), where the 128-group default fell back to
     // spillable one-group-at-a-time sort aggregation almost immediately.
     // Measured green to sf10 at 8 GiB; a deployment with multi-GB shuffle
-    // partitions of multi-MB documents should dial the threshold DOWN via
-    // SPARK_GRAFT_OBJ_AGG_FALLBACK (re-accepting the sort fallback's wall
-    // cost, which for the reassembly sites is the scale-safe shape)
+    // partitions of multi-MB documents should dial the threshold DOWN by
+    // setting this same conf on the builder after `tuned`/`localBuilder`,
+    // or with `spark.conf.set` (re-accepting the sort fallback's wall
+    // cost, which for the reassembly sites is the scale-safe shape),
     // rather than fork the session policy. The default stays 2^20 because
     // the bounded-agg paths need it: NND's map-side partial aggregates
     // see up to ~n distinct node groups per task (~500k at sf10), which a
     // smaller 2^17 would silently flip back to the measured-1.6×-slower
     // sort fallback.
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
-      sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", (1 << 20).toString))
+      (1 << 20).toString)
 
   /** Apply the scale policy to an externally-configured builder (cluster
     * master, memory, dynamic allocation etc. stay the caller's business). */

@@ -286,7 +286,7 @@ object SparkEntry {
     // the cluster-form near-dup at FULL corpus — component labels instead
     // of a pair list. The r15 sf10 leg proved the pair interface is
     // output-quadratic at high copy multiplicity (>=24.75M true pairs,
-    // NgramLshDiag); labels are O(n) at any multiplicity and are what
+    // BASELINE.md r15); labels are O(n) at any multiplicity and are what
     // keepList consumes anyway. Anchor-pruned candidates; components ==
     // full pair-path components on the planted corpus (PipelineSpec pin)
     "dedup_ngram_clusters_scale" -> ((s: SparkSession, d: String) =>
@@ -320,14 +320,14 @@ object SparkEntry {
     // the exact knn_graph slice is spec-pinned in RandomProjectSpec
     "knn_graph_nnd" -> (PipelineQueries.knnGraphNndQ _),
     // round 14: the same graph at the MEASURED production sample rate
-    // (ρ=0.7 — 19% cheaper at identical sampled recall, NndTune sweep in
-    // BASELINE.md): the knob a large-corpus deployment runs; recall at
+    // (ρ=0.7 — 19% cheaper at identical sampled recall, BASELINE.md r14
+    // sweep): the knob a large-corpus deployment runs; recall at
     // ρ=0.7 is spec-gated at corpus scale in RandomProjectSpec
     "knn_graph_nnd_rho" -> (PipelineQueries.knnGraphNndRhoQ _),
     // round 15: the same graph with the MEASURED scale-aware seed bucket
     // count (the 8-plane seed's per-query candidate volume grows linearly
     // with n; 12 planes at 20k+ nodes cut the seed 5x and four rounds
-    // recover recall 0.992 vs 0.991 — NndPlanes sweep in BASELINE.md):
+    // recover recall 0.992 vs 0.991 — BASELINE.md r15 planes sweep):
     // identical to knn_graph_nnd at gate scale, ~30% cheaper at 20k+
     "knn_graph_nnd_auto" -> (PipelineQueries.knnGraphNndAutoQ _),
     // round 14: SemDeDup at the measured-k facade (k sized to the corpus

@@ -70,15 +70,6 @@ object DeltaLog {
 
   def logDir(tablePath: String): String = s"$tablePath/_delta_log"
 
-  /** All actions across all commits, one row per JSON line, tagged with the
-    * commit version extracted from the file name (`%020d.json`).
-    *
-    * Checkpoint-aware: if `_last_checkpoint` exists, the parquet checkpoint
-    * at version N stands in for all commits <= N (its rows are treated as
-    * actions at version N) and is unioned with ALL surviving JSON commits —
-    * replay is per-path last-add-wins, so pre-checkpoint JSONs coexist
-    * harmlessly while they keep history/time-travel working, and replay
-    * stays correct after expired JSON commits are cleaned. */
   /** The surviving JSON commits ONLY — per-commit action rows, version
     * tagged from the file name. Unlike [[readActions]] this is NOT
     * checkpoint-aware: a checkpoint's rows aggregate the table STATE at its
@@ -93,16 +84,37 @@ object DeltaLog {
         "version",
         regexp_extract(col("_metadata.file_name"), "(\\d+)\\.json$", 1).cast(LongType))
 
+  /** All actions across all commits, one row per JSON line, tagged with the
+    * commit version extracted from the file name (`%020d.json`).
+    *
+    * Checkpoint-aware: if `_last_checkpoint` exists, the parquet checkpoint
+    * at version N stands in for all commits <= N (its rows are treated as
+    * actions at version N) and is unioned with ALL surviving JSON commits —
+    * replay is per-path last-add-wins, so pre-checkpoint JSONs coexist
+    * harmlessly while they keep history/time-travel working, and replay
+    * stays correct after expired JSON commits are cleaned. A multi-part
+    * checkpoint (`"parts": n` in `_last_checkpoint`) is read as its n
+    * `%020d.checkpoint.%010d.%010d.parquet` files in one scan; a missing
+    * checkpoint file fails naming it. */
   def readActions(spark: SparkSession, tablePath: String): DataFrame = {
     // _metadata.file_name (not input_file_name(), which Spark's PreReadCheck
     // forbids in multi-source plans — and snapshot replay joins this frame
     // against the parquet scan)
     val jsonActions = readJsonActions(spark, tablePath)
-    lastCheckpointVersion(spark, tablePath) match {
+    lastCheckpoint(spark, tablePath) match {
       case None => jsonActions
-      case Some(ckptV) =>
-        val ckpt = spark.read
-          .parquet(f"${logDir(tablePath)}/$ckptV%020d.checkpoint.parquet")
+      case Some((ckptV, parts)) =>
+        val files = parts match {
+          case None => Seq(f"$ckptV%020d.checkpoint.parquet")
+          case Some(n) => (1 to n).map(i => f"$ckptV%020d.checkpoint.$i%010d.$n%010d.parquet")
+        }
+        val paths = files.map(f => new org.apache.hadoop.fs.Path(logDir(tablePath), f))
+        val fs = paths.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        paths.find(!fs.exists(_)).foreach { p =>
+          throw new java.io.FileNotFoundException(
+            s"_last_checkpoint names version $ckptV, but its checkpoint file $p is missing")
+        }
+        val ckpt = spark.read.parquet(paths.map(_.toString): _*)
         // field-wise alignment to actionSchema: real checkpoints carry extra
         // top-level actions (txn) and extra nested fields (stats_parsed,
         // tags, ...) — a struct cast would fail on arity, so rebuild each
@@ -132,14 +144,21 @@ object DeltaLog {
   }
 
   /** Version recorded in `_last_checkpoint`, if any. */
-  def lastCheckpointVersion(spark: SparkSession, tablePath: String): Option[Long] = {
+  def lastCheckpointVersion(spark: SparkSession, tablePath: String): Option[Long] =
+    lastCheckpoint(spark, tablePath).map(_._1)
+
+  /** (version, parts) recorded in `_last_checkpoint`, if any; `parts` is
+    * set only for a multi-part checkpoint. */
+  private def lastCheckpoint(spark: SparkSession, tablePath: String): Option[(Long, Option[Int])] = {
     val p = new org.apache.hadoop.fs.Path(logDir(tablePath), "_last_checkpoint")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
       val content = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-      "\"version\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(content).map(_.group(1).toLong)
+      def field(name: String) =
+        s"\"$name\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(content).map(_.group(1))
+      field("version").map(v => (v.toLong, field("parts").map(_.toInt)))
     }
   }
 
@@ -421,7 +440,7 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
 
   /** The one driver lookup over the log: max version, and the latest
     * metaData and protocol actions (each null when the log has none). */
-  private lazy val latest: org.apache.spark.sql.Row = actions.agg(
+  private[graft] lazy val latest: org.apache.spark.sql.Row = actions.agg(
     max($"version").as("version"),
     max_by($"metaData", when($"metaData".isNotNull, $"version")).as("metaData"),
     max_by($"protocol", when($"protocol".isNotNull, $"version")).as("protocol"))

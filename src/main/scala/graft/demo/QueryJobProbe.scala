@@ -3,8 +3,8 @@ package graft.demo
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Generic JOB+stage wall attribution for any contract/bench entry — the
-  * [[NndJobProbe]] pattern generalized (r19): one warm-up run, one measured
-  * run, every job's wall + gap-to-previous and each ≥0.2 s job's stages
+  * NN-descent job attribution of OPTIMIZATION_r19.md's baseline,
+  * generalized (r19): one warm-up run, one measured run, every job's wall + gap-to-previous and each ≥0.2 s job's stages
   * (duration, executor run time, task count, callsite). Tells per-action
   * fixed overhead from compute, and names which stage to attack.
   *

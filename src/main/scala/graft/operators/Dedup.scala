@@ -302,7 +302,7 @@ object Dedup {
     * (sh + sig) row. The candidate bound is Σ C(m,2) for the self-join
     * path or Σ m·min(m−1, reps) for the anchored path. Neither shape
     * dominates — the gate exists because the measured sf10 table splits
-    * (ShapeGateProbe, convention):
+    * (convention; the shape-gate evidence of OPTIMIZATION_r18.md):
     *
     *   char-ngram 4×8: classic 124 GB vs bucket-local 2.7 GB → BL
     *     (measured 971 s → 192 s); word-minhash 16×4: classic 4.4 GB vs
@@ -383,8 +383,8 @@ object Dedup {
     // 2.3 s dedup_ngram_lsh at sf0.1; a premature unconditional
     // bucket-local rewrite read 5.9 s there). ABOVE the gate that shape
     // exchanges candidate-volume × array-width, which is corpus-
-    // SUPER-linear when organic band collisions pile buckets up (NgcProbe:
-    // the anchored sibling read 32M distinct candidates and ~80 GB of
+    // SUPER-linear when organic band collisions pile buckets up (sf10
+    // evidence accepted in OPTIMIZATION_r18.md: the anchored sibling read 32M distinct candidates and ~80 GB of
     // exchange at sf10 — 971 s; the C(m,2) self-join here is strictly
     // denser, 1,299 s). There the BUCKET-LOCAL shape wins: attach the
     // arrays ONCE per bucket-row (bucket_rows ≈ bands·n, corpus-linear),
@@ -1361,7 +1361,7 @@ object Dedup {
     * list — the scalable CONTRACT at high duplicate multiplicity. The r15
     * sf10 leg proved the pair interface is output-quadratic by nature: at
     * 100 copies per base document any correct J ≥ t pair-finder must emit
-    * ≥ 5000·C(100,2) ≈ 24.75M rows (NgramLshDiag — the breach was output
+    * ≥ 5000·C(100,2) ≈ 24.75M rows (BASELINE.md r15 — the breach was output
     * cardinality, not algorithm). Component labels are what downstream
     * dedup consumes anyway (keepList/keepBest collapse the pairs
     * immediately), and they are O(n) however dense the duplication.
@@ -1378,7 +1378,7 @@ object Dedup {
     * so components can only SPLIT relative to the full path, never
     * falsely merge — the right error direction for dedup (a split keeps
     * both docs). The `reps` default is MEASURED, not guessed
-    * (NgramClusterProbe, sf0.01 planted corpus incl. its chain-shaped
+    * (BASELINE.md r16, sf0.01 planted corpus incl. its chain-shaped
     * organic components): diverged docs vs the full pair path fall
     * 41/22/10/4/0 at reps 4/8/16/32/64 — 64 reproduces the full
     * components exactly and is spec-pinned; candidate volume stays
@@ -1416,7 +1416,7 @@ object Dedup {
     // corpus-linear when the signature space piles up: on the synthetic
     // fixtures' ~54-token vocabulary, organic band collisions push
     // per-member anchor fan-out toward its min(reps, m) saturation as
-    // occupancy m grows with the corpus (measured, NgcProbe: sf1
+    // occupancy m grows with the corpus (measured, OPTIMIZATION_r18.md: sf1
     // bucket-occupancy q99 = 17 and 1.6M distinct candidates; sf10
     // q99 = 63 and 32.2M — 20× candidates for 10× docs), so the classic
     // candidate-distinct shape's wide join was ~80 GB of exchange at sf10
@@ -1483,7 +1483,7 @@ object Dedup {
     *    (linear) and whose edge set is a subset of the banded pair path's —
     *    components split-only, never falsely merge (the right error
     *    direction for dedup), reps=64 measured to reproduce the full
-    *    pair-path components (NgramClusterProbe).
+    *    pair-path components (BASELINE.md r16).
     *
     * Output either way: (id, cluster_id) for EVERY input doc, cluster_id =
     * component min id. */

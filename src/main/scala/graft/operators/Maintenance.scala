@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -383,37 +383,24 @@ object Maintenance {
   def checkpoint(spark: SparkSession, tablePath: String): Long = {
     val snap = DeltaLog.snapshot(spark, tablePath)
     val v = snap.version
-    val addType = DeltaLog.actionSchema("add").dataType
     val metaType = DeltaLog.actionSchema("metaData").dataType
     val protoType = DeltaLog.actionSchema("protocol").dataType
-    def widen(df: DataFrame): DataFrame = {
-      val withAdd = if (df.columns.contains("add")) df
-        else df.withColumn("add", lit(null).cast(addType))
-      val withMeta = if (withAdd.columns.contains("metaData")) withAdd
-        else withAdd.withColumn("metaData", lit(null).cast(metaType))
-      val full = if (withMeta.columns.contains("protocol")) withMeta
-        else withMeta.withColumn("protocol", lit(null).cast(protoType))
-      full.select(col("add"), col("metaData"), col("protocol"))
-    }
-    val adds = widen(snap.activeFiles.select(
+    val adds = snap.activeFiles.select(
       struct(
         col("path"), col("size"), col("partitionValues"),
         col("modificationTime"), lit(true).as("dataChange"),
-        lit(null).cast("string").as("stats")).as("add")))
-    val meta = widen(snap.actions.where(col("metaData").isNotNull)
-      .orderBy(col("version").desc).limit(1).select(col("metaData")))
-    val loggedProto = snap.actions.where(col("protocol").isNotNull)
-      .orderBy(col("version").desc).limit(1).select(col("protocol"))
-    // tables whose log predates protocol emission still get a valid
-    // checkpoint: default to the minimal classic protocol (1, 2)
-    val proto = widen(
-      if (loggedProto.isEmpty)
-        spark.range(1).select(
-          struct(lit(1).as("minReaderVersion"), lit(2).as("minWriterVersion"),
-            lit(null).cast("array<string>").as("readerFeatures"))
-            .cast(protoType).as("protocol"))
-      else loggedProto)
-    val ckpt = adds.unionByName(meta).unionByName(proto)
+        lit(null).cast("string").as("stats")).as("add"),
+      lit(null).cast(metaType).as("metaData"),
+      lit(null).cast(protoType).as("protocol"))
+    // metaData and protocol come from the snapshot's one-row lookup; a log
+    // that predates protocol emission still gets a valid checkpoint with
+    // the minimal classic protocol (1, 2)
+    val meta = Option(snap.latest.getAs[Row]("metaData"))
+    val proto = Option(snap.latest.getAs[Row]("protocol")).getOrElse(Row(1, 2, null))
+    val tail = spark.createDataFrame(
+      (meta.map(m => Row(null, m, null)).toSeq :+ Row(null, null, proto)).asJava,
+      StructType(Seq("add", "metaData", "protocol").map(DeltaLog.actionSchema(_))))
+    val ckpt = adds.unionByName(tail)
     val dir = DeltaLog.logDir(tablePath)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dir, f".$v%020d.checkpoint.tmp")
@@ -421,9 +408,7 @@ object Maintenance {
     val part = fs.listStatus(tmp).map(_.getPath)
       .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
       .getOrElse(sys.error(s"checkpoint write produced no part file under $tmp"))
-    // count the actual checkpoint rows BEFORE any destructive move: a table
-    // whose log never emitted metaData would otherwise overstate `size`
-    val ckptRows = snap.activeFiles.count() + meta.count() + 1 // adds + metaData(0|1) + protocol
+    val ckptRows = snap.activeFiles.count() + meta.size + 1 // adds + metaData (0|1) + protocol
     val dest = new Path(dir, f"$v%020d.checkpoint.parquet")
     if (fs.exists(dest)) fs.delete(dest, true)
     require(fs.rename(part, dest), s"checkpoint rename failed: $part -> $dest")

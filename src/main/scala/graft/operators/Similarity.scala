@@ -628,7 +628,7 @@ object Similarity {
     // descend with EXPANDED neighbor lists (K = expand·k, the paper's
     // sample-size-over-k headroom): the local join only discovers what the
     // current lists can reach, and lists cut to k too early starve it.
-    // Measured (NndTune, 500 near-random synthetic vectors — the HARD,
+    // Measured (BASELINE.md r12, 500 near-random synthetic vectors, the HARD,
     // low-locality case — k=5): recall 0.56/0.80 at expand=2 it=2/4;
     // 0.90/0.96 at expand=3 it=3/4; 0.99+ at expand=4 it=4. Defaults sit
     // at expand=3 it=4; per-round candidate volume is n·(expand·k)², so
@@ -652,7 +652,7 @@ object Similarity {
     // Scoped persist of the 2-column vector table (r19; guide §8 "move
     // heavy bytes once"): WITHOUT it every consumer re-scanned the source —
     // the broadcast-score mode alone rebuilds its two vec broadcasts per
-    // round from the parquet scan (job-level attribution, NndJobProbe: the
+    // round from the parquet scan (job-level attribution, BASELINE.md r19: the
     // 3-task broadcast-build job was 0.5–1.0 s of each round's ~1.3 s at
     // sf0.1), plus the seed's two corpus passes and the size-gate count —
     // ~11 source scans per build. One materialization feeds all of them;
@@ -666,7 +666,7 @@ object Similarity {
       .persist()
     try {
     // Broadcast-score mode (r16 verdict #4, probe-measured): the sf1 stage
-    // profile (NndShuffleProbe) put ~270 MB/round into the candidate
+    // profile (BASELINE.md r16) put ~270 MB/round into the candidate
     // distinct's map write (33M partially-deduped pair rows) on top of the
     // ~207 MB/round top-k partial-state merge — the distinct existed only
     // to (a) collapse duplicate candidates and (b) shrink the vec-attach
@@ -710,8 +710,8 @@ object Similarity {
             exprs.cosineSimilarity(col("__sv"), col("__dv")).as("cosine"))
         rankTopK(scored, kk)
       }
-    // Seeding is RP-LSH and that choice is load-bearing (r15 NndSeed +
-    // CellSeedDebug, both measured decades): the descent can only explore
+    // Seeding is RP-LSH and that choice is load-bearing (BASELINE.md r15
+    // seeding experiment, both measured decades): the descent can only explore
     // the CONNECTED COMPONENTS of its seed graph — neighbor-of-neighbor
     // expansion never crosses a component boundary — so seed-graph
     // connectivity across the corpus is a correctness precondition, not a
@@ -747,7 +747,7 @@ object Similarity {
         dim, bucketCap)
       .localCheckpoint(true)
     var converged = false
-    // MEASURED NEGATIVE (r19, NndJobProbe at sf0.1 local[32]): widening the
+    // MEASURED NEGATIVE (OPTIMIZATION_r19.md, sf0.1 local[32]): widening the
     // round's 3-partition map stage (the checkpoint inherits AQE's ~1 MB
     // bytes-based coalescing) with a gated repartition-to-defaultParallelism
     // of the edge frame looked like the §2 starved-parallelism remedy, but
@@ -765,7 +765,7 @@ object Similarity {
       // the paper's sample rate ρ: thin each node's participation in the
       // LOCAL JOIN to a deterministic md5-keyed subset of its edges —
       // candidate volume scales ρ², recall decays gracefully (measured in
-      // NndTune: 500-node hard corpus, defaults, ρ 1.0/0.7/0.5). Current
+      // BASELINE.md r14: 500-node hard corpus, ρ 1.0/0.7/0.5). Current
       // edges always stay in the top-k merge, so ρ never FORGETS a found
       // neighbor — it only thins discovery.
       val und = if (rho >= 1.0) undAll
@@ -806,7 +806,7 @@ object Similarity {
     * query GROWS linearly with n at fixed planes. Finer buckets fix that:
     * at 20k nodes, 12 planes (4096 buckets) cut the seed from 10.5 s to
     * 1.9 s and the four descent rounds fully recover the recall (0.992 vs
-    * 0.991 default; NndPlanes sweep, recall deterministic). Small corpora
+    * 0.991 default; BASELINE.md r15 sweep, recall deterministic). Small corpora
     * must KEEP coarse buckets: fine buckets over few nodes go singleton,
     * and a sparse seed graph risks the connectivity precondition the
     * cell-seed post-mortem above establishes (at 2k nodes, 8 planes is

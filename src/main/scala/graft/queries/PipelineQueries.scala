@@ -1702,7 +1702,7 @@ object PipelineQueries {
       .orderBy(col("query_id"), col("rank"))
 
   /** The NN-descent graph at the MEASURED production sample rate (ρ = 0.7
-    * — NndTune: 19% cheaper at identical 0.921 sampled recall at 20k
+    * — BASELINE.md r14: 19% cheaper at identical 0.921 sampled recall at 20k
     * nodes; candidate volume ∝ ρ²): the knob a 100-TB deployment actually
     * runs, benched as a twin so [[knnGraphNndQ]]'s full-ρ number stays the
     * longitudinal reference. Recall at ρ=0.7 is spec-gated at corpus

@@ -440,7 +440,7 @@ object Queries {
     // userSessions' window semantics. Row-identical on null-free event
     // fixtures; on nullable inputs the window form is the intended one. The boundary/interior branches
     // below each consume this frame; the duplicated subtree's exchanges
-    // are runtime-reused by AQE (measured on bm25TopK, BmProf r18), so no
+    // are runtime-reused by AQE (measured on bm25TopK, OPTIMIZATION_r18.md), so no
     // persist — a tracked persist benched wall-neutral here while adding
     // a materialization the reuse makes redundant.
     val byUserChunk = Window.partitionBy(col("user_id"), col("chunk"))

@@ -51,7 +51,7 @@ object DriftStreams {
     *                  profile rides into the plan as a `typedLit` map that
     *                  is serialized with EVERY task binary, so the bound is
     *                  a plan/driver-memory budget, not a statistics one —
-    *                  measured (DriftLitProbe, BASELINE.md): 10.8 s flat
+    *                  measured (BASELINE.md r14): 10.8 s flat
     *                  through 1M entries, then 41 s and a 4.5 GB driver
     *                  heap at the old 4M guard. References past the guard
     *                  belong on [[driftMonitorJoined]], which keeps the
@@ -112,7 +112,7 @@ object DriftStreams {
     // key-index union once per row — O(V + k)); a per-key element_at
     // formulation instead linear-scans the V-entry reference literal for
     // EVERY union key in interpreted eval, O(V²) per group — measured
-    // (DriftLitProbe): a single 64-group×4096-token reference drove one
+    // (BASELINE.md r14): a single 64-group×4096-token reference drove one
     // finisher task past 10 CPU-minutes before the rewrite.
     val mm = col("__m"); val rr = col("__r")
     val tb = col("__tb"); val ta = col("__ta")
@@ -252,7 +252,7 @@ object DriftStreams {
     // absent-form terms already inside the construction-time sums — a
     // single map_entries walk (O(k)); per-key element_at lookups would
     // linear-scan the summary map per key, O(k²) in interpreted eval
-    // (the same pathology DriftLitProbe measured on the literal route)
+    // (the same pathology BASELINE.md r14 measured on the literal route)
     def terms(cb0: Column, ca0: Column): Column = {
       val cb = cb0; val ca = ca0
       val p = when(tb === 0L, 0.0).otherwise(d(cb) / d(tb))

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
 
 /** Log-layer unit tests: commit writing, replay, history, snapshot data. */
@@ -264,5 +266,88 @@ class DeltaLogSpec extends SparkSuite {
       assert(v0.partitionColumns === Seq.empty)
       assert(v0.tableSchema.map(_.fieldNames.toSeq) === Some(Seq("id")))
     } finally v0.unpersist()
+  }
+
+  private def lastCheckpointJson(path: String): String =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path, "_delta_log", "_last_checkpoint")),
+      java.nio.charset.StandardCharsets.UTF_8)
+
+  test("checkpoint defaults: a log without metaData or protocol gets (1, 2); size is the row count") {
+    val bare = tmpDir("dlog_ckpt_bare")
+    writeLog(bare, Seq(
+      """{"add":{"path":"part-00000-a.parquet","partitionValues":{},"size":400,"modificationTime":1564524294000,"dataChange":true}}""",
+      """{"add":{"path":"part-00001-b.parquet","partitionValues":{},"size":500,"modificationTime":1564524294000,"dataChange":true}}""",
+      commitInfo("WRITE")))
+    val full = tmpDir("dlog_ckpt_full")
+    DeltaFixtureWriter.write(TestFixtures.tips(spark, Seq("Mon" -> 10, "Tue" -> 10),
+      Seq("Dinner" -> 10, "Lunch" -> 10)), full, "overwrite", Seq("day"))
+    val expectedTypes = Seq("add", "metaData", "protocol").map(n =>
+      n -> DeltaLog.actionSchema(n).dataType.catalogString)
+    Seq(bare -> 0L, full -> 1L).foreach { case (path, metas) =>
+      val snap = DeltaLog.snapshot(spark, path)
+      val adds = try snap.activeFiles.count() finally snap.unpersist()
+      assert(adds >= 2L)
+      val v = graft.operators.Maintenance.checkpoint(spark, path)
+      val ckpt = spark.read.parquet(f"$path/_delta_log/$v%020d.checkpoint.parquet")
+      assert(ckpt.schema.fields.toSeq.map(f => f.name -> f.dataType.catalogString) === expectedTypes)
+      assert(ckpt.where($"add".isNotNull).count() === adds)
+      assert(ckpt.where($"metaData".isNotNull).count() === metas)
+      val proto = ckpt.where($"protocol".isNotNull)
+        .select("protocol.minReaderVersion", "protocol.minWriterVersion").as[(Int, Int)].collect()
+      assert(proto.toSeq === Seq((1, 2)), path)
+      val rows = ckpt.count()
+      assert(rows === adds + metas + 1)
+      assert(lastCheckpointJson(path) === s"""{"version":$v,"size":$rows}""")
+    }
+  }
+
+  test("multi-part checkpoint: replay reads every part _last_checkpoint names") {
+    val path = tmpDir("dlog_multipart")
+    val df = TestFixtures.tips(spark, Seq("Mon" -> 30, "Tue" -> 30),
+      Seq("Dinner" -> 30, "Lunch" -> 30))
+    DeltaFixtureWriter.write(df, path, "overwrite", Seq("day"))
+    DeltaFixtureWriter.write(df.limit(10), path, "append", Seq("day"))
+    val v = graft.operators.Maintenance.checkpoint(spark, path)
+    DeltaFixtureWriter.write(df.limit(5), path, "append", Seq("day"))
+    def state() = {
+      val snap = DeltaLog.snapshot(spark, path)
+      try (snap.activeFiles.select("path", "size").as[(String, Long)].collect().sorted.toSeq,
+        snap.version, snap.tableSchema, snap.partitionColumns)
+      finally snap.unpersist()
+    }
+    val want = state()
+
+    // split the single-file checkpoint into two parts, as multi-part
+    // writers do (PROTOCOL.md "Checkpoints"), then expire the JSON
+    // commits it covers
+    val log = java.nio.file.Paths.get(path, "_delta_log")
+    def partName(i: Int) = f"$v%020d.checkpoint.$i%010d.0000000002.parquet"
+    val single = log.resolve(f"$v%020d.checkpoint.parquet")
+    val rows = spark.read.parquet(single.toString)
+    val total = rows.count()
+    val paths = rows.where($"add".isNotNull).select("add.path").as[String].collect().sorted
+    val inFirst = coalesce($"add.path".isin(paths.take(paths.length / 2).toSeq: _*), lit(false))
+    Seq(rows.where(inFirst), rows.where(!inFirst)).zipWithIndex.foreach { case (part, i) =>
+      val tmp = log.resolve(s".part$i.tmp")
+      part.coalesce(1).write.parquet(tmp.toString)
+      val file = java.nio.file.Files.list(tmp).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      java.nio.file.Files.move(file, log.resolve(partName(i + 1)))
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
+    java.nio.file.Files.delete(single)
+    // the Hadoop checksum of the old _last_checkpoint would reject the rewrite
+    java.nio.file.Files.deleteIfExists(log.resolve("._last_checkpoint.crc"))
+    java.nio.file.Files.write(log.resolve("_last_checkpoint"),
+      s"""{"version":$v,"size":$total,"parts":2}""".getBytes("UTF-8"))
+    (0L to v).foreach(i => java.nio.file.Files.delete(log.resolve(f"$i%020d.json")))
+    assert(DeltaLog.lastCheckpointVersion(spark, path) === Some(v))
+    assert(state() === want)
+
+    val second = partName(2)
+    java.nio.file.Files.delete(log.resolve(second))
+    val e = intercept[java.io.FileNotFoundException](DeltaLog.snapshot(spark, path))
+    assert(e.getMessage.contains(second), e.getMessage)
   }
 }

@@ -121,7 +121,7 @@ class PlanLintSpec extends SparkSuite {
     // construction-time driver collect that rides back into the plan as a
     // giant typedLit / LocalRelation — the exact shape of driftMonitor's
     // reference profile, whose maxRefEntries guard is probe-bounded
-    // (DriftLitProbe, BASELINE.md). At the contract fixture every
+    // (BASELINE.md r14). At the contract fixture every
     // legitimate literal is a bounded model/profile (quota maps, k-means
     // centroids, PQ codebooks, sketch summaries — measured ≤ ~20k leaf
     // elements); the threshold sits above them with headroom and far
@@ -163,7 +163,7 @@ class PlanLintSpec extends SparkSuite {
 
   test("driftMonitor's reference guard stays at the probe-measured bound") {
     // ties the lint to the measured limit: if the default maxRefEntries is
-    // ever raised past the DriftLitProbe-recorded safe bound (256k), the
+    // ever raised past the safe bound recorded in BASELINE.md r14 (256k), the
     // oversized reference must be REJECTED by the guard — this fails
     // instead if someone silently loosens the default
     import org.apache.spark.sql.functions._

@@ -138,7 +138,7 @@ class RandomProjectSpec extends SparkSuite {
     // the local join must add real recall over the seed, not just shuffle
     assert(rDesc > rSeed, f"descent did not improve: $rSeed%.3f -> $rDesc%.3f")
     // measured floor (0.959 at the default expand=3/it=4 on this corpus —
-    // near-random vectors, the LOW-locality hard case; NndTune sweep) with
+    // near-random vectors, the LOW-locality hard case; BASELINE.md r12) with
     // slack for future corpus rewrites — a recall measurement, not an oracle
     assert(rDesc >= 0.85, f"descent recall regressed badly: $rDesc%.3f")
     // determinism: the identical graph on a rerun, rank-for-rank
@@ -176,7 +176,7 @@ class RandomProjectSpec extends SparkSuite {
       "delta=0.999 must stop after round 1 and reproduce the explicit " +
         "1-iteration graph exactly")
     // sanity: the paper's delta=0.001 does NOT fire on this corpus
-    // (round-4 lists still move ~4% at contract scale — NndConv), so it
+    // (round-4 lists still move ~4% at contract scale, BASELINE.md r12), so it
     // equals the full 4-round run here. The library DEFAULT is 0.0
     // (early termination is opt-in — r13 advice: a nonzero default would
     // silently change output for corpora that quiesce before the cap).
@@ -200,7 +200,7 @@ class RandomProjectSpec extends SparkSuite {
     // r13 verdict item 1: the rho=0.7 graph (knn_graph_nnd_rho bench twin
     // — the measured production knob, 19% cheaper) is gated against the
     // SAME truth set at the same floor, so the cheap knob cannot quietly
-    // trade away recall (NndTune measured it identical at 20k nodes).
+    // trade away recall (BASELINE.md r14: identical at 20k nodes).
     val e = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
     val sample = e.where(col("vec_id") % 20 === 0)
     val nQ = sample.count()
@@ -227,8 +227,8 @@ class RandomProjectSpec extends SparkSuite {
 
   test("nnDescentAuto: measured scale thresholds pinned; identical to the " +
       "default-knob graph on a gate-scale corpus") {
-    // the seed-bucket policy is measurement-derived (NndSeed/NndPlanes,
-    // BASELINE.md r15): coarse buckets at 2k nodes (fine ones go singleton
+    // the seed-bucket policy is measurement-derived (BASELINE.md r15
+    // sweeps): coarse buckets at 2k nodes (fine ones go singleton
     // and starve seed-graph connectivity), fine at 20k (the seed is the
     // biggest wall chunk and four rounds recover the recall) — pin the
     // decision function so a silent threshold edit can't ship unmeasured
