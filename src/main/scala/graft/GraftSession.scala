@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * designed against, instead of each caller rediscovering them:
   *
   *  - **AQE on, with partition coalescing and skew-join splitting**: the
-  *    dedup/ANN self-joins and the Delta-manifest joins are written to
+  *    dedup/ANN self-joins and the Delta storage and CDF joins are written to
   *    declare their shuffles and let runtime re-planning right-size them —
   *    a label-propagation round over a million-edge graph and one over a
   *    thousand-edge tail both get sensible partition counts from the SAME

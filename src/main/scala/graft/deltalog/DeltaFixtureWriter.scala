@@ -19,7 +19,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * by diffing [[DeltaLog.dataFiles]] around the write ([[appendFiles]]),
   * and commits them through the one commit writer, [[writeCommitStream]] —
   * which the scale-path operators in `Maintenance` use too. Commit files
-  * are written with java.nio, so the table must live on a local path.
+  * are written with java.nio, so the table must be a local path or a
+  * `file:` URI.
   */
 object DeltaFixtureWriter {
 
@@ -85,7 +86,8 @@ object DeltaFixtureWriter {
     * write, a RESTORE across a schema change). commitInfo is appended LAST
     * (after the counts are known); the log reader is line-order-agnostic
     * (every action line is parsed independently and commitInfo rows are
-    * filtered by field). */
+    * filtered by field). `table` is a plain path or a `file:` URI; any
+    * other scheme fails before anything is written. */
   private[graft] def writeCommitStream(
       table: String,
       version: Long,
@@ -95,8 +97,12 @@ object DeltaFixtureWriter {
       removes: Iterator[String],
       partitionBy: Seq[String],
       schema: Option[StructType] = None): Unit = {
+    val uri = new org.apache.hadoop.fs.Path(table).toUri
+    require(uri.getScheme == null || uri.getScheme == "file",
+      s"$table: commits are written with java.nio, so the table must be a local path or file: URI")
+    val dir = if (uri.getScheme == null) table else uri.getPath
     val ts = System.currentTimeMillis()
-    val lp = logPath(table, version)
+    val lp = logPath(dir, version)
     Files.createDirectories(lp.getParent)
     // stream into a writer-private temp file, then claim the version with
     // an atomic no-replace link: the Delta protocol's put-if-absent commit
@@ -126,7 +132,7 @@ object DeltaFixtureWriter {
           // columns included), per the Delta protocol — readers must shape
           // scans from it, never from a sampled data-file footer
           val id = java.util.UUID.nameUUIDFromBytes(
-            table.getBytes(StandardCharsets.UTF_8)).toString
+            dir.getBytes(StandardCharsets.UTF_8)).toString
           line("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
           line(s"""{"metaData":{"id":${jStr(id)},"schemaString":${jStr(st.json)},"partitionColumns":${partitionBy.map(jStr).mkString("[", ",", "]")},"createdTime":$ts}}""")
         }
@@ -177,17 +183,18 @@ object DeltaFixtureWriter {
     val (snapBefore: Seq[String], schemaChanged: Boolean, effPartitionBy: Seq[String]) =
       if (currentVersion(table).isDefined) {
         val snap = DeltaLog.snapshot(df.sparkSession, table)
-        val files =
-          if (mode == "overwrite")
-            snap.activeFiles.select("path").collect().map(_.getString(0)).toSeq
-          else Seq.empty
-        val changed = !snap.tableSchema.contains(df.schema)
-        // partitioning is immutable in Delta: a later write that omits
-        // partitionBy must not clobber partitionColumns in an evolved
-        // metaData action
-        val pb = if (partitionBy.nonEmpty) partitionBy else snap.partitionColumns
-        snap.unpersist()
-        (files, changed, pb)
+        try {
+          val files =
+            if (mode == "overwrite")
+              snap.activeFiles.select("path").collect().map(_.getString(0)).toSeq
+            else Seq.empty
+          val changed = !snap.tableSchema.contains(df.schema)
+          // partitioning is immutable in Delta: a later write that omits
+          // partitionBy must not clobber partitionColumns in an evolved
+          // metaData action
+          val pb = if (partitionBy.nonEmpty) partitionBy else snap.partitionColumns
+          (files, changed, pb)
+        } finally snap.unpersist()
       } else (Seq.empty, false, partitionBy)
     val newFiles = appendFiles(df, table, partitionBy)
     val version = currentVersion(table).map(_ + 1).getOrElse(0L)
@@ -211,10 +218,10 @@ object DeltaFixtureWriter {
     // __file is the active file's table-relative path (see
     // DeltaSnapshot.dataWithFile); an empty table still logs the DELETE
     // commit, with no file changes
-    val (adds, removes) = snap.dataWithFile match {
+    val (adds, removes) = try snap.dataWithFile match {
       case None => (Seq.empty, Seq.empty)
-      case Some(withFile) =>
-        val hitFiles = withFile.where(expr(predicate))
+      case Some(rows) =>
+        val hitFiles = rows.where(expr(predicate))
           .select($"__file").distinct().as[String].collect().sorted.toSeq
         // surviving rows of hit files, rewritten (partition-aware). DELETE
         // removes rows where the predicate is TRUE — rows where it
@@ -227,8 +234,7 @@ object DeltaFixtureWriter {
           if (survivors.isEmpty) Seq.empty
           else appendFiles(survivors, table, partitionBy)
         (written, hitFiles)
-    }
-    snap.unpersist()
+    } finally snap.unpersist()
     writeCommitStream(table, snap.version + 1, "DELETE",
       Seq("predicate" -> predicate),
       adds = adds.iterator, removes = removes.iterator,
@@ -241,16 +247,16 @@ object DeltaFixtureWriter {
     import spark.implicits._
     val snap = DeltaLog.snapshot(spark, table)
     val partitionBy = snap.partitionColumns
-    val activeRel = snap.activeFiles.select("path").as[String].collect().sorted.toSeq
-    // a fully-deleted table logs a no-op OPTIMIZE, nothing to rewrite
-    val newFiles =
-      if (activeRel.isEmpty) Seq.empty
+    val (activeRel, newFiles) = try {
+      val activeRel = snap.activeFiles.select("path").as[String].collect().sorted.toSeq
+      // a fully-deleted table logs a no-op OPTIMIZE, nothing to rewrite
+      if (activeRel.isEmpty) (activeRel, Seq.empty)
       else {
         val exprs: Seq[org.apache.spark.sql.Column] =
           if (partitionBy.isEmpty) Seq(lit(1)) else partitionBy.map(col)
-        appendFiles(snap.data.repartition(exprs: _*), table, partitionBy)
+        (activeRel, appendFiles(snap.data.repartition(exprs: _*), table, partitionBy))
       }
-    snap.unpersist()
+    } finally snap.unpersist()
     writeCommitStream(table, snap.version + 1, "OPTIMIZE",
       Seq("predicate" -> "[]"),
       adds = newFiles.iterator, removes = activeRel.iterator,
@@ -267,20 +273,21 @@ object DeltaFixtureWriter {
     import spark.implicits._
     val snap = DeltaLog.snapshot(spark, table)
     val partitionBy = snap.partitionColumns
-    val dataCols = snap.data.columns
-    val src = source.select(dataCols.map(col).toIndexedSeq: _*)
-    val (newRows, removes) = snap.dataWithFile match {
-      case None => (src, Seq.empty[String])
-      case Some(withFile) =>
-        val hitFiles = withFile.join(src, keyCols, "left_semi")
-          .select($"__file").distinct().as[String].collect().sorted.toSeq
-        val survivors = snap.dataWithFileIn(hitFiles)
-          .join(src, keyCols, "left_anti")
-          .select(dataCols.map(col).toIndexedSeq: _*)
-        (survivors.union(src), hitFiles)
-    }
-    val newFiles = appendFiles(newRows, table, partitionBy)
-    snap.unpersist()
+    val (newFiles, removes) = try {
+      val dataCols = snap.data.columns
+      val src = source.select(dataCols.map(col).toIndexedSeq: _*)
+      val (newRows, removes) = snap.dataWithFile match {
+        case None => (src, Seq.empty[String])
+        case Some(rows) =>
+          val hitFiles = rows.join(src, keyCols, "left_semi")
+            .select($"__file").distinct().as[String].collect().sorted.toSeq
+          val survivors = snap.dataWithFileIn(hitFiles)
+            .join(src, keyCols, "left_anti")
+            .select(dataCols.map(col).toIndexedSeq: _*)
+          (survivors.union(src), hitFiles)
+      }
+      (appendFiles(newRows, table, partitionBy), removes)
+    } finally snap.unpersist()
     writeCommitStream(table, snap.version + 1, "MERGE",
       Seq("matchedPredicate" -> keyCols.mkString(",")),
       adds = newFiles.iterator, removes = removes.iterator,

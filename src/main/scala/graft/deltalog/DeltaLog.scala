@@ -1,8 +1,13 @@
 package graft.deltalog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** Minimal Delta transaction-log reader.
   *
@@ -20,7 +25,11 @@ import org.apache.spark.sql.types._
   * Scale notes: the log scan and the add/remove replay are pure DataFrame
   * programs — the replay is a per-path max-version reconciliation implemented
   * as a hash aggregation on `path`, which shuffles once on the file path and
-  * parallelizes over executors for manifests with millions of add actions.
+  * parallelizes over executors for logs with millions of add actions. Its
+  * result, the active manifest, is collected to the driver (as Delta's own
+  * readers do) and data reads go through a [[ManifestFileIndex]] over it:
+  * the table directory is never listed for a read, and removed or orphan
+  * files are never opened.
   * Checkpoint parquet files ARE supported: `readActions` consults
   * `_last_checkpoint`, loads the checkpoint parquet (field-aligned to
   * `actionSchema`), and unions it with ALL surviving JSON commits — safe
@@ -98,8 +107,7 @@ object DeltaLog {
     * checkpoint file fails naming it. */
   def readActions(spark: SparkSession, tablePath: String): DataFrame = {
     // _metadata.file_name (not input_file_name(), which Spark's PreReadCheck
-    // forbids in multi-source plans — and snapshot replay joins this frame
-    // against the parquet scan)
+    // forbids in multi-source plans such as the checkpoint union below)
     val jsonActions = readJsonActions(spark, tablePath)
     lastCheckpoint(spark, tablePath) match {
       case None => jsonActions
@@ -108,7 +116,7 @@ object DeltaLog {
           case None => Seq(f"$ckptV%020d.checkpoint.parquet")
           case Some(n) => (1 to n).map(i => f"$ckptV%020d.checkpoint.$i%010d.$n%010d.parquet")
         }
-        val paths = files.map(f => new org.apache.hadoop.fs.Path(logDir(tablePath), f))
+        val paths = files.map(f => new Path(logDir(tablePath), f))
         val fs = paths.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
         paths.find(!fs.exists(_)).foreach { p =>
           throw new java.io.FileNotFoundException(
@@ -150,7 +158,7 @@ object DeltaLog {
   /** (version, parts) recorded in `_last_checkpoint`, if any; `parts` is
     * set only for a multi-part checkpoint. */
   private def lastCheckpoint(spark: SparkSession, tablePath: String): Option[(Long, Option[Int])] = {
-    val p = new org.apache.hadoop.fs.Path(logDir(tablePath), "_last_checkpoint")
+    val p = new Path(logDir(tablePath), "_last_checkpoint")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
@@ -171,16 +179,16 @@ object DeltaLog {
     * inclusive — here the FROM snapshot is the baseline, so changes start
     * at fromVersion+1.
     *
-    * How: one distributed scan of the table directory (same scan and
-    * file-path join as [[DeltaSnapshot.dataWithFile]]) joined against the
-    * per-version (path, action) manifest of the requested window. A
-    * rewriting commit (DELETE, OPTIMIZE, MERGE) both removes and re-adds
-    * the surviving rows, so the net change per row is the ADD multiplicity
-    * minus the REMOVE multiplicity within the commit: one hash aggregate
-    * over (row, version) computes it, and `sequence`-explode re-emits
-    * |net| copies — no per-version driver loop, no exceptAll cascade, one
-    * shuffle keyed by the changed rows themselves. Compaction commits net
-    * to zero everywhere and correctly vanish from the feed.
+    * How: one scan of exactly the files the window's add and remove
+    * actions name (the snapshot's [[DeltaSnapshot.scan]]) joined on
+    * `__file` against the per-version (path, action) manifest of the
+    * window. A rewriting commit (DELETE, OPTIMIZE, MERGE) both removes and
+    * re-adds the surviving rows, so the net change per row is the ADD
+    * multiplicity minus the REMOVE multiplicity within the commit: one hash
+    * aggregate over (row, version) computes it, and `sequence`-explode
+    * re-emits |net| copies — no per-version driver loop, no exceptAll
+    * cascade, one shuffle keyed by the changed rows themselves. Compaction
+    * commits net to zero everywhere and correctly vanish from the feed.
     *
     * Requires the window's removed files to still exist on disk (VACUUM
     * destroys pre-vacuum change history — the same constraint real Delta
@@ -189,9 +197,7 @@ object DeltaLog {
     * [[readJsonActions]], NEVER the checkpoint (whose rows aggregate table
     * STATE at its version — treating them as changes would replay the whole
     * active set as inserts). A window reaching below the retained log fails
-    * fast rather than returning a silently incomplete feed. Partition
-    * values reattach from the union of every version's add actions, which
-    * necessarily covers every file the window can reference. */
+    * fast rather than returning a silently incomplete feed. */
   def changes(spark: SparkSession, tablePath: String,
               fromVersion: Long, toVersion: Long): DataFrame = {
     import spark.implicits._
@@ -202,9 +208,8 @@ object DeltaLog {
       require(toVersion <= snap.version,
         s"change window ($fromVersion, $toVersion] exceeds current " +
           s"version ${snap.version}")
-      val qualified = snap.qualifiedTablePath
-      val acts = readJsonActions(spark, tablePath)
-      val win = acts.where($"version" > fromVersion && $"version" <= toVersion)
+      val win = readJsonActions(spark, tablePath)
+        .where($"version" > fromVersion && $"version" <= toVersion)
       // every commit writes a commitInfo line, so missing versions mean the
       // window predates the retained JSON log (cleaned after a checkpoint)
       val present = win.where($"commitInfo".isNotNull)
@@ -215,60 +220,33 @@ object DeltaLog {
           s"retained JSON log: commit(s) ${missing.mkString(", ")} expired " +
           "(cleaned after a checkpoint) — per-commit changes are " +
           "unrecoverable from a state checkpoint")
+      if (snap.tableSchema.isEmpty) throw new IllegalStateException(
+        s"$tablePath: no schemaString in log; CDF needs a schema authority")
       val addM = win.where($"add".isNotNull)
         .select($"add.path".as("__file"), $"version", lit(1L).as("__sign"))
       val remM = win.where($"remove".isNotNull)
         .select($"remove.path".as("__file"), $"version", lit(-1L).as("__sign"))
       val manifest = addM.union(remM)
-      // partition values from ALL adds (any version), CHECKPOINT-AWARE
-      // (snap.actions, not the JSON window): a file removed inside the
-      // window may have been added in a commit whose JSON has expired —
-      // its add action survives only as a checkpoint row
-      val partVals = snap.actions.where($"add".isNotNull)
-        .select($"add.path".as("__file"), $"add.partitionValues".as("__pv"))
-        .groupBy($"__file").agg(min_by($"__pv", $"__file").as("__pv"))
-      val activeSchema: StructType = snap.tableSchema match {
-        case Some(full) => StructType(
-          full.fields.filterNot(f => snap.partitionColumns.contains(f.name)))
-        case None => throw new IllegalStateException(
-          s"$tablePath: no schemaString in log; CDF needs a schema authority")
-      }
-      // fail fast if VACUUM already reclaimed a window file: the manifest
-      // join would otherwise silently drop its rows and emit an incomplete
-      // feed. MUST run before the empty-table early return — a
-      // non-partitioned table whose every data file was vacuumed lists no
-      // data files but has a non-empty window manifest, and that is exactly
-      // the "changes no longer on disk" case, not an empty feed. The
-      // driver-side listing is anti-joined as a local relation (no data
-      // scan).
-      val onDisk = dataFiles(spark, qualified)
-      val missingFiles = manifest.select($"__file").distinct()
-        .join(onDisk.keys.toSeq.toDF("__file"), Seq("__file"), "left_anti")
-        .limit(3).as[String].collect()
-      require(missingFiles.isEmpty,
+      // fail fast if VACUUM already reclaimed a window file: its changes
+      // are gone, and the feed must not come back incomplete
+      val files = manifest.select($"__file").distinct().as[String].collect().toSet
+      val gone = (files -- dataFiles(spark, snap.qualifiedTablePath).keySet).toSeq.sorted
+      require(gone.isEmpty,
         s"change window ($fromVersion, $toVersion] references data file(s) " +
-          s"no longer on disk (vacuumed?), e.g. ${missingFiles.mkString(", ")}")
-      // no data files + empty manifest (the check above passed, so the
-      // manifest referenced nothing): a genuinely empty feed, but with the
-      // normal CDF schema so downstream unions/selects keep working
-      if (onDisk.isEmpty) {
-        val feedSchema = StructType(
-          activeSchema.fields.toSeq ++
-            snap.partitionColumns.map(StructField(_, StringType)) :+
-            StructField("_commit_version", LongType) :+
-            StructField("_change_type", StringType))
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], feedSchema)
-      }
-      val raw = scanTableDir(spark, qualified, activeSchema)
-      val dataCols = raw.columns.filterNot(_ == "__scan_path").map(col).toSeq
-      val partCols = snap.partitionColumns.map(c =>
-        element_at($"__pv", c).as(c))
-      val changed = raw
-        .join(manifest.withColumn("__scan_path", scanPath($"__file", qualified)),
-          Seq("__scan_path"))
-        .join(partVals, Seq("__file"))
-        .select((dataCols ++ partCols) :+ $"version" :+ $"__sign": _*)
+          s"no longer on disk (vacuumed?), e.g. ${gone.take(3).mkString(", ")}")
+      // partition values from the CHECKPOINT-AWARE adds (snap.actions, not
+      // the JSON window): a file removed inside the window may have been
+      // added in a commit whose JSON has expired — its add action survives
+      // only as a checkpoint row
+      val windowFiles = snap.actions.where($"add.path".isin(files.toSeq: _*))
+        .select($"add.path".as("path"), $"add.size".as("size"),
+          $"add.partitionValues".as("partitionValues"),
+          $"add.modificationTime".as("modificationTime"))
+        .collect().groupBy(_.getString(0)).values.map(_.head).toSeq
+      val rows = snap.scan(windowFiles)
+      val dataAndPartCols = rows.columns.filterNot(_ == "__file").map(col).toSeq
+      val changed = rows.join(manifest, Seq("__file"))
+        .select(dataAndPartCols :+ $"version" :+ $"__sign": _*)
       val keyCols = changed.columns.filterNot(_ == "__sign").map(col).toSeq
       changed
         .groupBy(keyCols: _*)
@@ -290,10 +268,10 @@ object DeltaLog {
     * paths are spelled as on disk (directory names as Spark escaped them),
     * which is how `add.path` spells them. */
   def dataFiles(spark: SparkSession, tablePath: String): Map[String, Long] = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
+    val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = Map.newBuilder[String, Long]
-    def walk(dir: org.apache.hadoop.fs.Path, prefix: String): Unit =
+    def walk(dir: Path, prefix: String): Unit =
       fs.listStatus(dir).foreach { st =>
         val name = st.getPath.getName
         if (st.isDirectory) {
@@ -306,7 +284,7 @@ object DeltaLog {
 
   /** True if `path` looks like a Delta table (has a `_delta_log` dir). */
   def isDeltaTable(spark: SparkSession, tablePath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(logDir(tablePath))
+    val p = new Path(logDir(tablePath))
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
@@ -350,7 +328,7 @@ object DeltaLog {
     * so manifest-derived absolute paths compare correctly against
     * folder-listing paths (which Hadoop always returns fully qualified). */
   def qualifiedPath(spark: SparkSession, tablePath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(tablePath)
+    val p = new Path(tablePath)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(p).toString
   }
@@ -369,58 +347,16 @@ object DeltaLog {
         regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.\\-]*:///", "/"),
         "^[a-zA-Z][a-zA-Z0-9+.\\-]*://", "//"),
       "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/", "/")
-
-  /** Plain absolute path of a (possibly schemed) path string: drops the
-    * scheme and any authority (`file:///x`, `file:/x`, `hdfs://nn:8020/x`
-    * all → `/x`), mirroring the reference's prefix strip at
-    * file_distribution.py:18-21. */
-  def stripSchemeStr(s: String): String =
-    s.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.\\-]*://[^/]*", "")
-      .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.\\-]*:/", "/")
-
-  /** One distributed parquet scan of the table directory under `schema`,
-    * with each row's `_metadata.file_path` as `__scan_path`. Only the
-    * top-level entries are listed on the driver — O(partition dirs) —
-    * keeping `_delta_log`, and thus checkpoint parquet with its foreign
-    * schema, out of the scan. `recursiveFileLookup` deliberately disables
-    * Hive partition-dir inference: partition values come from the
-    * MANIFEST (authoritative under replay), not from directory names. */
-  private[deltalog] def scanTableDir(spark: SparkSession, qualifiedRoot: String,
-                                     schema: StructType): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(qualifiedRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = fs.listStatus(root).toSeq
-      .filterNot(_.getPath.getName == "_delta_log")
-      .map(_.getPath.toString)
-    spark.read
-      .schema(schema)
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(entries: _*)
-      .withColumn("__scan_path", col("_metadata.file_path"))
-  }
-
-  /** The `__scan_path` that [[scanTableDir]] reports for the file at the
-    * table-relative `path`: its URI under the table root, percent-encoded
-    * the way the scan encodes it (`day=Mon Tue` → `day=Mon%20Tue`, Spark's
-    * escaped `day=a%3Ab` → `day=a%253Ab`). Encoding the manifest side, one
-    * value per file, lets the scanned rows join on their raw file path. */
-  private[deltalog] def scanPathOf(qualifiedRoot: String, path: String): String =
-    new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(qualifiedRoot),
-      new org.apache.hadoop.fs.Path(null, null, path)).toUri.toString
-
-  /** [[scanPathOf]] over a column of table-relative paths. */
-  private[deltalog] def scanPath(path: org.apache.spark.sql.Column,
-                                 qualifiedRoot: String): org.apache.spark.sql.Column =
-    udf((p: String) => scanPathOf(qualifiedRoot, p)).apply(path)
 }
 
 /** Replayed view of a Delta table at its latest version.
   *
-  * `actions` is the cached all-versions action frame, and `activeFiles` the
-  * cached manifest replayed from it once; everything else is a lazy
-  * DataFrame derived from those two. The driver sees only the one-row
-  * [[latest]] lookup (version, schema, partition columns, protocol).
+  * `actions` is the cached all-versions action frame. The active-file
+  * manifest is replayed from it once and held on the driver, and every data
+  * read is one parquet scan of exactly those files ([[scan]]); everything
+  * else is a lazy DataFrame over `actions` or the manifest. The driver also
+  * holds the one-row [[latest]] lookup (version, schema, partition columns,
+  * protocol).
   */
 final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: DataFrame) {
   import spark.implicits._
@@ -440,14 +376,14 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
 
   /** The one driver lookup over the log: max version, and the latest
     * metaData and protocol actions (each null when the log has none). */
-  private[graft] lazy val latest: org.apache.spark.sql.Row = actions.agg(
+  private[graft] lazy val latest: Row = actions.agg(
     max($"version").as("version"),
     max_by($"metaData", when($"metaData".isNotNull, $"version")).as("metaData"),
     max_by($"protocol", when($"protocol".isNotNull, $"version")).as("protocol"))
     .first()
 
   private def latestField[T](action: String, field: String): Option[T] =
-    Option(latest.getAs[org.apache.spark.sql.Row](action))
+    Option(latest.getAs[Row](action))
       .flatMap(r => Option(r.getAs[T](field)))
 
   /** max commit version — the reference's `version_count` is max(version),
@@ -479,18 +415,15 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
       latestField[collection.Seq[String]]("protocol", "readerFeatures")
         .map(_.toSeq).getOrElse(Seq.empty))
 
-  @volatile private var manifestCached = false
-
   /** Active file manifest: per path, the latest `add` survives unless a
     * `remove` with version >= the add's version exists. Columns:
     * path, size, partitionValues, modificationTime.
     *
-    * Implemented as two hash aggregations plus a join on `path`; with AQE on,
-    * the (normally much smaller) remove side is broadcast at runtime.
-    * Derived once per snapshot: the frame is cached on first use, so the
-    * emptiness check, the data scan's join and the storage stats all read
-    * the same copy; [[unpersist]] releases it.
-    */
+    * Replayed once per snapshot (two hash aggregations plus a join on
+    * `path`) and collected: a scan must name its files on the driver, where
+    * every analysis and append already lists the whole table folder
+    * ([[DeltaLog.dataFiles]]), and the active files are a subset of it. The
+    * frame is a local relation over those rows, so it needs no cache. */
   lazy val activeFiles: DataFrame = {
     val adds = actions
       .where($"add".isNotNull)
@@ -501,13 +434,14 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
       .where($"remove".isNotNull)
       .groupBy($"remove.path".as("path"))
       .agg(max($"version").as("removeVersion"))
-    manifestCached = true
-    adds
+    val replayed = adds
       .join(removes, Seq("path"), "left")
       .where($"removeVersion".isNull || $"addVersion" > $"removeVersion")
       .drop("removeVersion", "addVersion")
-      .cache()
+    spark.createDataFrame(replayed.collect().toSeq.asJava, replayed.schema)
   }
+
+  private lazy val manifest: Array[Row] = activeFiles.collect()
 
   /** Fully-qualified table root (scheme + absolute path) — the base for any
     * path that will be compared against filesystem listings, which Hadoop
@@ -531,101 +465,51 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
     .withColumn("partitionColumns", lit(partitionColumns.toArray))
     .withColumn("location", lit(tablePath))
 
-  /** Read the table's active rows, re-attaching partition columns.
-    *
-    * Delta physical files do not contain the partition columns; their values
-    * live in `add.partitionValues`. We read all active files in one parquet
-    * scan and join the per-file partition values back on the file path —
-    * a broadcast join against the (small) manifest, so the scan itself stays
-    * a single distributed pass, no driver loop over partitions.
-    */
+  /** Read the table's active rows, partition columns included. */
   lazy val data: DataFrame = dataWithFile match {
     case Some(df) => df.drop("__file")
     case None => spark.emptyDataFrame
   }
 
-  /** Active rows + a `__file` column (the file's table-relative path) — used
-    * by file-targeted rewrites (DELETE). Built on `_metadata.file_path`,
-    * which unlike `input_file_name()` stays legal in multi-source join plans.
-    *
-    * Scale shape: ONE distributed scan of the table directory
-    * ([[DeltaLog.scanTableDir]]), then a single INNER join of
-    * `_metadata.file_path` against the distributed active-file manifest,
-    * whose paths are encoded the same way per file
-    * ([[DeltaLog.scanPath]]) — so a partition value Spark escapes in the
-    * directory name (`a:b`, `50%`, `Mon Tue`) keeps its rows. The join
-    * simultaneously (a) filters out removed/orphan files the dir scan
-    * picked up — delete/overwrite replay correctness — and (b) re-attaches
-    * `partitionValues`, which Delta physical files do not contain. No
-    * per-file driver enumeration: a manifest of millions of adds never
-    * lands on the driver.
-    *
-    * The join key is the full file path, not the basename: a single Spark
-    * write job emits the same `part-NNNNN-<jobUUID>` basename into every
-    * partition directory it touches, so basenames are NOT unique within a
-    * table (the reference gets away with basename sets at
-    * delta_python_analyzer.py:125-126 only because deltalake generates
-    * per-file unique names). */
+  /** Active rows + a `__file` column (the file's table-relative path, as
+    * `add.path` spells it; not the basename, which one write job reuses in
+    * every partition directory) — used by file-targeted rewrites (DELETE).
+    * None when no file is active. */
   lazy val dataWithFile: Option[DataFrame] =
-    if (activeFiles.isEmpty) None
-    else Some(withFile(DeltaLog.scanTableDir(spark, qualifiedTablePath, activeSchema)))
+    if (manifest.isEmpty) None else Some(scan(manifest.toSeq))
 
   /** [[dataWithFile]] restricted to the active files at the table-relative
-    * `paths` (file-targeted rewrites: DELETE and MERGE survivors). The
-    * filter is on the scan's own file path, so Spark skips every other file
-    * instead of reading it and dropping its rows at the join. */
+    * `paths` (file-targeted rewrites: DELETE and MERGE survivors); no other
+    * file is opened. */
   def dataWithFileIn(paths: Seq[String]): DataFrame = {
-    val keys = paths.map(DeltaLog.scanPathOf(qualifiedTablePath, _))
-    withFile(DeltaLog.scanTableDir(spark, qualifiedTablePath, activeSchema)
-      .where(col("__scan_path").isin(keys: _*)))
+    val keep = paths.toSet
+    scan(manifest.toSeq.filter(f => keep(f.getString(0))))
   }
 
-  // The dir scan also sees REMOVED-but-not-yet-vacuumed and orphan files
-  // (the inner join in withFile discards their rows; read amplification is
-  // bounded by how much dead data VACUUM — which this engine both
-  // recommends and executes — has not yet reclaimed). Two consequences are
-  // handled explicitly:
-  //  - schema authority: the latest metaData.schemaString (the Delta
-  //    protocol's authority — a column added by a later append is present
-  //    even if an unsampled old file lacks it, and a dead file's foreign
-  //    schema can never shape the read). Partition columns are stripped
-  //    because Delta physical files do not contain them (they are
-  //    re-attached from the manifest). Logs that predate schema emission
-  //    fall back to ONE manifest-active footer, picked DETERMINISTICALLY
-  //    (min path) — not limit(1), whose choice is partition-layout-dependent;
-  //  - a corrupt uncommitted file still fails the scan by default; set
-  //    spark.sql.files.ignoreCorruptFiles=true to tolerate dirty dirs
-  //    (active-file corruption then drops rows silently — the default stays
-  //    strict on purpose).
+  /** The one read path: one parquet scan of exactly `files` (rows with
+    * [[activeFiles]]' columns) through a [[ManifestFileIndex]]. Columns:
+    * the data columns, `__file`, then the partition columns as strings;
+    * partition values come from the log, since Delta physical files do not
+    * contain them, and a filter on `__file` or a partition column prunes
+    * whole files. The read schema is the latest `metaData.schemaString`
+    * without its partition columns, so a column added by a later append
+    * reads as null from older files. */
+  private[deltalog] def scan(files: Seq[Row]): DataFrame = {
+    val index = new ManifestFileIndex(new Path(qualifiedTablePath), files, partitionColumns)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      GraftSqlBridge.asNullable(activeSchema), None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  // a log that predates schema emission reads with the footer schema of
+  // one active file, picked deterministically (min path)
   private lazy val activeSchema: StructType = tableSchema match {
     case Some(full) =>
       StructType(full.fields.filterNot(f => partitionColumns.contains(f.name)))
     case None =>
-      val oneActive: String =
-        activeFilePaths.select($"path").orderBy($"path").limit(1).as[String].head()
-      spark.read.parquet(oneActive).schema
+      val first = manifest.map(_.getString(0)).min
+      spark.read.parquet(new Path(new Path(qualifiedTablePath), new Path(null, null, first)).toString).schema
   }
 
-  /** Joins a [[DeltaLog.scanTableDir]] frame to the active-file manifest:
-    * data columns + `__file` + the partition columns. */
-  private def withFile(raw: DataFrame): DataFrame = {
-    // no broadcast hint: an explicit broadcast would collect the whole
-    // manifest onto the driver even at millions of files — let the
-    // planner/AQE broadcast small manifests and shuffle-join huge ones
-    val manifest = activeFiles.select(
-      DeltaLog.scanPath($"path", qualifiedTablePath).as("__scan_path"),
-      $"path".as("__file"), $"partitionValues")
-    val partCols = partitionColumns.map(c =>
-      element_at($"partitionValues", c).as(c))
-    raw.join(manifest, Seq("__scan_path"), "inner").select(
-      (activeSchema.fieldNames.map(col).toSeq :+ $"__file") ++ partCols: _*)
-  }
-
-  /** Releases the cached manifest (if it was built) and then `actions`, the
-    * frame it was derived from. */
-  def unpersist(): Unit = {
-    if (manifestCached) activeFiles.unpersist()
-    actions.unpersist()
-    ()
-  }
+  /** Releases the cached `actions` frame. */
+  def unpersist(): Unit = { actions.unpersist(); () }
 }

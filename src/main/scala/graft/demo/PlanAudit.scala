@@ -18,10 +18,9 @@ object PlanAudit {
         "skewness_metrics", "delta_scan"))
     targets.foreach {
       case "delta_scan" =>
-        // the replayed Delta data scan: ONE distributed parquet scan of the
-        // table dir + a broadcast inner join against the manifest — the plan
-        // must show no per-file driver enumeration (a long literal file list
-        // in the scan node) and no partition-dir inference
+        // the replayed Delta data scan: ONE parquet scan over the manifest's
+        // file index (`__file` and the partition columns as partition
+        // columns) — the plan must show no join and no directory listing
         println(s"########## delta_scan (DeltaSnapshot.data)")
         val path = java.nio.file.Files.createTempDirectory("graft_planaudit").toString
         val li = spark.read.parquet(s"$dir/lineitem.parquet")
@@ -33,9 +32,9 @@ object PlanAudit {
         snap.unpersist()
         graft.deltalog.DeltaFixtureWriter.drop(path)
       case "optimize" =>
-        // the distributed OPTIMIZE path: selection = manifest filter + agg +
-        // join; rewrite = one manifest-joined scan of the chosen files. The
-        // plans must contain no long literal file list (driver enumeration)
+        // the OPTIMIZE path: selection = manifest filter + agg + join;
+        // rewrite = one manifest-index scan joined to the chosen files on
+        // `__file`
         println(s"########## optimize (Maintenance.optimizeSelection + rewrite join)")
         val path = java.nio.file.Files.createTempDirectory("graft_planaudit_opt").toString
         val li = spark.read.parquet(s"$dir/lineitem.parquet")
@@ -53,9 +52,9 @@ object PlanAudit {
         snap.unpersist()
         graft.deltalog.DeltaFixtureWriter.drop(path)
       case "changes" =>
-        // the CDF plan: one distributed dir scan + manifest join + ONE hash
-        // aggregate over signed multiplicities — no per-version driver loop,
-        // no exceptAll cascade, no literal file list
+        // the CDF plan: one scan of the window's files + join to the
+        // window's signed actions on `__file` + ONE hash aggregate — no
+        // per-version driver loop, no exceptAll cascade
         println(s"########## changes (DeltaLog.changes row-level CDF)")
         val path = java.nio.file.Files.createTempDirectory("graft_planaudit_cdf").toString
         val li = spark.read.parquet(s"$dir/lineitem.parquet")

@@ -7,7 +7,7 @@ import graft.deltalog.DeltaLog
 import graft.health._
 
 /** End-to-end table health analysis — the re-architected E1 entry point
-  * (SURVEY.md §3): one cached log snapshot with its cached active manifest,
+  * (SURVEY.md §3): one cached log snapshot with its driver-held manifest,
   * then three passes that each derive their facts from one source — the
   * history aggregate, one data scan into a cached per-partition counts
   * aggregate (record count and skew), and one join of the folder listing

@@ -32,26 +32,27 @@ object Maintenance {
     * size — real OPTIMIZE never rewrites the whole table.
     *
     * Scale shape:
-    *  - selection: a filter + aggregation over the DISTRIBUTED active-file
-    *    manifest (never collected; the partition key is the sorted-entry
-    *    JSON of `partitionValues`, so map internal order can't split a
-    *    partition);
+    *  - selection: a filter + aggregation over the active-file manifest
+    *    (the snapshot's driver-held rows as a local frame; the partition
+    *    key is the sorted-entry JSON of `partitionValues`, so map internal
+    *    order can't split a partition);
     *  - bin assignment: ceil(partitionSmallBytes / target) bins per
     *    partition, files hashed to bins — a join of the manifest against
     *    per-partition bin counts, all distributed. Bins are size CEILINGS,
     *    approximately honored: two bins that hash-collide into one shuffle
     *    task (or get AQE-coalesced) merge into one larger output — benign
     *    over-packing, never a correctness issue;
-    *  - rewrite: ONE scan of the selected files' rows (the snapshot's
-    *    manifest-joined read), shuffled by (partition cols, bin) so each
-    *    task writes whole output files, appended with partitionBy;
+    *  - rewrite: ONE scan of the active rows (the snapshot's manifest
+    *    index) joined to the selection on `__file`, shuffled by (partition
+    *    cols, bin) so each task writes whole output files, appended with
+    *    partitionBy;
     *  - discovery: the driver-side data-file listing
     *    ([[graft.deltalog.DeltaLog.dataFiles]]) before and after the write,
     *    diffed in Scala ([[DeltaFixtureWriter.appendFiles]]) — the new
     *    entries are one per output bin;
     *  - commit: removes stream through `toLocalIterator` into the
-    *    line-streaming commit writer — a million-file remove list never
-    *    exists as a driver collection.
+    *    line-streaming commit writer, which writes each action line as it
+    *    arrives.
     *
     * Single-writer assumption, like the commit writer (no
     * concurrent-commit arbitration — that is a transaction-protocol
@@ -62,10 +63,9 @@ object Maintenance {
     import spark.implicits._
     val smallThr = if (smallFileBytes > 0L) smallFileBytes else targetFileBytes / 2
     val snap = DeltaLog.snapshot(spark, tablePath)
-    val logTable = DeltaLog.stripSchemeStr(tablePath)
     val partCols = snap.partitionColumns
     def noop(): Unit =
-      DeltaFixtureWriter.logCommit(logTable, snap.version + 1, "OPTIMIZE",
+      DeltaFixtureWriter.logCommit(tablePath, snap.version + 1, "OPTIMIZE",
         Seq("predicate" -> "[]", "targetFileBytes" -> targetFileBytes.toString))
     try {
       snap.dataWithFile match {
@@ -81,7 +81,7 @@ object Maintenance {
               val added = DeltaFixtureWriter.appendFiles(
                 toRewrite.repartition(shuffleKeys: _*).drop("__file", "bin"),
                 snap.qualifiedTablePath, partCols)
-              DeltaFixtureWriter.writeCommitStream(logTable, snap.version + 1,
+              DeltaFixtureWriter.writeCommitStream(tablePath, snap.version + 1,
                 "OPTIMIZE",
                 Seq("predicate" -> "[]",
                     "targetFileBytes" -> targetFileBytes.toString),
@@ -129,7 +129,6 @@ object Maintenance {
     require(zorderCols.nonEmpty && zorderCols.size <= 3,
       s"zorder takes 1-3 columns, got $zorderCols")
     val snap = DeltaLog.snapshot(spark, tablePath)
-    val logTable = DeltaLog.stripSchemeStr(tablePath)
     val partCols = snap.partitionColumns
     require(zorderCols.forall(c => !partCols.contains(c)),
       s"zorder columns must be data columns, not hive partition columns")
@@ -139,7 +138,7 @@ object Maintenance {
     try {
       snap.dataWithFile match {
         case None =>
-          DeltaFixtureWriter.logCommit(logTable, snap.version + 1, "OPTIMIZE",
+          DeltaFixtureWriter.logCommit(tablePath, snap.version + 1, "OPTIMIZE",
             zParams)
         case Some(rows) =>
           // one job: global min/max per cluster column + total active bytes
@@ -179,7 +178,7 @@ object Maintenance {
               .sortWithinPartitions(shuffleKeys: _*)
               .drop("__z"),
             snap.qualifiedTablePath, partCols)
-          DeltaFixtureWriter.writeCommitStream(logTable, snap.version + 1,
+          DeltaFixtureWriter.writeCommitStream(tablePath, snap.version + 1,
             "OPTIMIZE", zParams,
             adds = added.iterator,
             removes = snap.activeFiles.select(col("path"))
@@ -227,10 +226,10 @@ object Maintenance {
     terms.reduce(_ bitwiseOR _)
   }
 
-  /** The DISTRIBUTED file-selection + bin-assignment frame of [[optimize]]:
-    * (path, bin) for every small file in a ≥2-small-file partition. Exposed
-    * separately so PlanAudit can verify the plan contains no driver file
-    * enumeration (it is manifest aggregations + a join, end to end). */
+  /** The file-selection + bin-assignment frame of [[optimize]]: (path,
+    * bin) for every small file in a ≥2-small-file partition. Exposed
+    * separately so PlanAudit can print its plan (manifest aggregations + a
+    * join, end to end). */
   private[graft] def optimizeSelection(snap: graft.deltalog.DeltaSnapshot,
                                        targetFileBytes: Long,
                                        smallThr: Long): DataFrame = {
@@ -263,48 +262,45 @@ object Maintenance {
              dryRun: Boolean = false): DataFrame = {
     import spark.implicits._
     val snap = DeltaLog.snapshot(spark, tablePath)
-    val folder = StorageAnalyzer.folderFiles(spark, tablePath)
-    val orphans = StorageAnalyzer.orphanFiles(folder, snap.activeFilePaths)
-    val cutoff = System.currentTimeMillis() - retainMs
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    // one row PER candidate with an outcome flag — never a filter on the
-    // delete result: a task re-attempt (retry/speculation) re-runs the
-    // lambda, sees exists()=false for files its first attempt already
-    // removed, and a filter would silently drop those rows, undercounting
-    // numFilesDeleted in the VACUUM commit
-    val processed: Array[(String, Long, String)] = orphans
-      .select(col("file_key"), col("size")).as[(String, Long)]
-      .mapPartitions { it =>
-        it.map { case (p, sz) =>
-          val path = new Path(p)
-          val pfs = path.getFileSystem(conf.value)
-          val status =
-            if (!pfs.exists(path)) "missing" // gone already — a prior attempt of this run (or an external actor) removed it
-            else if (pfs.getFileStatus(path).getModificationTime >= cutoff) "retained"
-            else if (dryRun) "deleted"
-            // a false delete() that leaves the file in place is a real
-            // failure (permissions, lease); a false delete() on a vanished
-            // file is just a lost race with a concurrent attempt
-            else if (pfs.delete(path, false) || !pfs.exists(path)) "deleted"
-            else "failed"
-          (p, sz, status)
+    try {
+      val folder = StorageAnalyzer.folderFiles(spark, tablePath)
+      val orphans = StorageAnalyzer.orphanFiles(folder, snap.activeFilePaths)
+      val cutoff = System.currentTimeMillis() - retainMs
+      val conf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration)
+      // one row PER candidate with an outcome flag — never a filter on the
+      // delete result: a task re-attempt (retry/speculation) re-runs the
+      // lambda, sees exists()=false for files its first attempt already
+      // removed, and a filter would silently drop those rows, undercounting
+      // numFilesDeleted in the VACUUM commit
+      val processed: Array[(String, Long, String)] = orphans
+        .select(col("file_key"), col("size")).as[(String, Long)]
+        .mapPartitions { it =>
+          it.map { case (p, sz) =>
+            val path = new Path(p)
+            val pfs = path.getFileSystem(conf.value)
+            val status =
+              if (!pfs.exists(path)) "missing" // gone already — a prior attempt of this run (or an external actor) removed it
+              else if (pfs.getFileStatus(path).getModificationTime >= cutoff) "retained"
+              else if (dryRun) "deleted"
+              // a false delete() that leaves the file in place is a real
+              // failure (permissions, lease); a false delete() on a vanished
+              // file is just a lost race with a concurrent attempt
+              else if (pfs.delete(path, false) || !pfs.exists(path)) "deleted"
+              else "failed"
+            (p, sz, status)
+          }
         }
-      }
-      .collect()   // materializes (and on !dryRun, performs) the deletes
-    // "missing" counts as removed-by-this-run: the only way a listed orphan
-    // is already gone mid-job is an earlier attempt's delete
-    val gone = processed.filter(t => t._3 == "deleted" || t._3 == "missing")
-    if (!dryRun) {
-      // logCommit is java.nio-based (fixture scope): give it a plain local
-      // path even when the caller addressed the table by file: URI
-      DeltaFixtureWriter.logCommit(DeltaLog.stripSchemeStr(tablePath),
-        snap.version + 1, "VACUUM",
-        Seq("retentionCheck" -> "false",
-            "numFilesDeleted" -> gone.length.toString))
-    }
-    snap.unpersist()
-    gone.toSeq.map { case (p, s, _) => (p, s) }.toDF("path", "size")
+        .collect()   // materializes (and on !dryRun, performs) the deletes
+      // "missing" counts as removed-by-this-run: the only way a listed orphan
+      // is already gone mid-job is an earlier attempt's delete
+      val gone = processed.filter(t => t._3 == "deleted" || t._3 == "missing")
+      if (!dryRun)
+        DeltaFixtureWriter.logCommit(tablePath, snap.version + 1, "VACUUM",
+          Seq("retentionCheck" -> "false",
+              "numFilesDeleted" -> gone.length.toString))
+      gone.toSeq.map { case (p, s, _) => (p, s) }.toDF("path", "size")
+    } finally snap.unpersist()
   }
 
   /** RESTORE TABLE TO VERSION — Delta's `RESTORE` as a METADATA-ONLY
@@ -330,9 +326,8 @@ object Maintenance {
     try {
       require(toVersion >= 0 && toVersion <= cur.version,
         s"restore target $toVersion outside [0, ${cur.version}]")
-      val logTable = DeltaLog.stripSchemeStr(tablePath)
       if (toVersion == cur.version) {
-        DeltaFixtureWriter.logCommit(logTable, cur.version + 1, "RESTORE",
+        DeltaFixtureWriter.logCommit(tablePath, cur.version + 1, "RESTORE",
           Seq("version" -> toVersion.toString, "numRestoredFiles" -> "0",
             "numRemovedFiles" -> "0"))
         return
@@ -356,7 +351,7 @@ object Maintenance {
           require(missing.isEmpty,
             s"restore to $toVersion impossible: ${missing.length}+ target " +
               s"files no longer on disk (vacuumed?), e.g. ${missing.headOption.getOrElse("")}")
-          DeltaFixtureWriter.writeCommitStream(logTable, cur.version + 1,
+          DeltaFixtureWriter.writeCommitStream(tablePath, cur.version + 1,
             "RESTORE",
             Seq("version" -> toVersion.toString,
               "numRestoredFiles" -> nAdds.toString,
@@ -382,45 +377,46 @@ object Maintenance {
     * and protocol/metaData survive their cleanup. */
   def checkpoint(spark: SparkSession, tablePath: String): Long = {
     val snap = DeltaLog.snapshot(spark, tablePath)
-    val v = snap.version
-    val metaType = DeltaLog.actionSchema("metaData").dataType
-    val protoType = DeltaLog.actionSchema("protocol").dataType
-    val adds = snap.activeFiles.select(
-      struct(
-        col("path"), col("size"), col("partitionValues"),
-        col("modificationTime"), lit(true).as("dataChange"),
-        lit(null).cast("string").as("stats")).as("add"),
-      lit(null).cast(metaType).as("metaData"),
-      lit(null).cast(protoType).as("protocol"))
-    // metaData and protocol come from the snapshot's one-row lookup; a log
-    // that predates protocol emission still gets a valid checkpoint with
-    // the minimal classic protocol (1, 2)
-    val meta = Option(snap.latest.getAs[Row]("metaData"))
-    val proto = Option(snap.latest.getAs[Row]("protocol")).getOrElse(Row(1, 2, null))
-    val tail = spark.createDataFrame(
-      (meta.map(m => Row(null, m, null)).toSeq :+ Row(null, null, proto)).asJava,
-      StructType(Seq("add", "metaData", "protocol").map(DeltaLog.actionSchema(_))))
-    val ckpt = adds.unionByName(tail)
-    val dir = DeltaLog.logDir(tablePath)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir, f".$v%020d.checkpoint.tmp")
-    ckpt.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = fs.listStatus(tmp).map(_.getPath)
-      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"checkpoint write produced no part file under $tmp"))
-    val ckptRows = snap.activeFiles.count() + meta.size + 1 // adds + metaData (0|1) + protocol
-    val dest = new Path(dir, f"$v%020d.checkpoint.parquet")
-    if (fs.exists(dest)) fs.delete(dest, true)
-    require(fs.rename(part, dest), s"checkpoint rename failed: $part -> $dest")
-    fs.delete(tmp, true)
-    // _last_checkpoint only after the checkpoint file verifiably exists, and
-    // through the Hadoop fs handle so schemed/remote table paths resolve
-    // (java.nio on an unstripped "file:..." dir string would throw)
-    val lcOut = fs.create(new Path(dir, "_last_checkpoint"), true)
-    try lcOut.write(
-      s"""{"version":$v,"size":$ckptRows}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally lcOut.close()
-    snap.unpersist()
-    v
+    try {
+      val v = snap.version
+      val metaType = DeltaLog.actionSchema("metaData").dataType
+      val protoType = DeltaLog.actionSchema("protocol").dataType
+      val adds = snap.activeFiles.select(
+        struct(
+          col("path"), col("size"), col("partitionValues"),
+          col("modificationTime"), lit(true).as("dataChange"),
+          lit(null).cast("string").as("stats")).as("add"),
+        lit(null).cast(metaType).as("metaData"),
+        lit(null).cast(protoType).as("protocol"))
+      // metaData and protocol come from the snapshot's one-row lookup; a log
+      // that predates protocol emission still gets a valid checkpoint with
+      // the minimal classic protocol (1, 2)
+      val meta = Option(snap.latest.getAs[Row]("metaData"))
+      val proto = Option(snap.latest.getAs[Row]("protocol")).getOrElse(Row(1, 2, null))
+      val tail = spark.createDataFrame(
+        (meta.map(m => Row(null, m, null)).toSeq :+ Row(null, null, proto)).asJava,
+        StructType(Seq("add", "metaData", "protocol").map(DeltaLog.actionSchema(_))))
+      val ckpt = adds.unionByName(tail)
+      val dir = DeltaLog.logDir(tablePath)
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val tmp = new Path(dir, f".$v%020d.checkpoint.tmp")
+      ckpt.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = fs.listStatus(tmp).map(_.getPath)
+        .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+        .getOrElse(sys.error(s"checkpoint write produced no part file under $tmp"))
+      val ckptRows = snap.activeFiles.count() + meta.size + 1 // adds + metaData (0|1) + protocol
+      val dest = new Path(dir, f"$v%020d.checkpoint.parquet")
+      if (fs.exists(dest)) fs.delete(dest, true)
+      require(fs.rename(part, dest), s"checkpoint rename failed: $part -> $dest")
+      fs.delete(tmp, true)
+      // _last_checkpoint only after the checkpoint file verifiably exists, and
+      // through the Hadoop fs handle so schemed/remote table paths resolve
+      // (java.nio on an unstripped "file:..." dir string would throw)
+      val lcOut = fs.create(new Path(dir, "_last_checkpoint"), true)
+      try lcOut.write(
+        s"""{"version":$v,"size":$ckptRows}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally lcOut.close()
+      v
+    } finally snap.unpersist()
   }
 }

@@ -10,6 +10,9 @@ object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `StructType.asNullable` (`private[spark]`): a file read's data schema. */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   /** Unset the context's reliable-checkpoint dir (SparkContext offers a
     * setter but no clearer; `checkpointDir` is `private[spark]`, reachable
     * from this bridge package). Lets tests restore the

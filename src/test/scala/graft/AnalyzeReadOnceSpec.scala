@@ -5,12 +5,15 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
-import graft.deltalog.DeltaFixtureWriter
+import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
+import graft.health.DeltaAnalyzerMetrics
 import graft.operators.HealthAnalyzer
 
 /** `analyzeTable` reads every data file at most once: the record count,
-  * the partition counts and the skew statistics all come from one scan. */
+  * the partition counts and the skew statistics all come from one scan,
+  * and that scan opens only the active files. */
 class AnalyzeReadOnceSpec extends SparkSuite {
+  import spark.implicits._
 
   private final class InputRows extends SparkListener {
     val rows = new AtomicLong
@@ -23,36 +26,44 @@ class AnalyzeReadOnceSpec extends SparkSuite {
     else if (f.getName.endsWith(".parquet")) Seq(f)
     else Seq.empty
 
-  test("analyzeTable scans each parquet file on disk at most once") {
-    val path = tmpDir("readonce")
-    val df = spark.range(20000).select(
-      (col("id") % 4).cast("string").as("k"),
-      col("id").as("v"),
-      (col("id") * 7 % 1000).as("w"))
-    DeltaFixtureWriter.write(df, path, "overwrite", Seq("k"))
-    DeltaFixtureWriter.write(df.where(col("v") < 4000), path, "append", Seq("k"))
-    DeltaFixtureWriter.delete(spark, path, "w < 100")
-
+  private def footerRows(files: Seq[java.io.File]): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val diskRows = parquetFiles(new java.io.File(path)).map { f =>
+    files.map { f =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(f.toURI), conf))
       try reader.getRecordCount finally reader.close()
     }.sum
-    // log side: each commit line is parsed once into the cached action
-    // frame; a read of an in-memory cached frame counts one input record
-    // per cached batch, a few per job
-    val logLines = new java.io.File(path, "_delta_log").listFiles().toSeq
+  }
+
+  // log side: each commit line is parsed once into the cached action
+  // frame; a read of an in-memory cached frame counts one input record
+  // per cached batch, a few per job
+  private def logLines(path: String): Long =
+    new java.io.File(path, "_delta_log").listFiles().toSeq
       .filter(_.getName.endsWith(".json"))
       .map { f =>
         val src = scala.io.Source.fromFile(f)
         try src.getLines().count(_.trim.nonEmpty).toLong finally src.close()
       }.sum
-    val cachedBatchAllowance = 200L
-    assert(diskRows > 10 * (logLines + cachedBatchAllowance),
-      "the fixture's data must dwarf its log so a second scan shows")
 
+  private val cachedBatchAllowance = 200L
+
+  private val df = spark.range(20000).select(
+    (col("id") % 4).cast("string").as("k"),
+    col("id").as("v"),
+    (col("id") * 7 % 1000).as("w"))
+
+  /** An overwrite, an append and a delete that rewrites every file, so
+    * the dead files on disk hold more rows than the active ones. */
+  private def buildTable(path: String): Unit = {
+    DeltaFixtureWriter.write(df, path, "overwrite", Seq("k"))
+    DeltaFixtureWriter.write(df.where(col("v") < 4000), path, "append", Seq("k"))
+    DeltaFixtureWriter.delete(spark, path, "w < 100")
+  }
+
+  /** One warm `analyzeTable` with its task input records. */
+  private def analyzeCountingRows(path: String): (DeltaAnalyzerMetrics, Long) = {
     HealthAnalyzer.analyzeTable(spark, path) // warm-up: same plans, no first-use effects
     val listener = new InputRows
     val sc = spark.sparkContext
@@ -65,9 +76,36 @@ class AnalyzeReadOnceSpec extends SparkSuite {
       } finally sc.removeSparkListener(listener)
     assert(m.recordCount === df.where(col("w") >= 100).count() +
       df.where(col("v") < 4000 && col("w") >= 100).count())
-    val read = listener.rows.get()
-    assert(read <= diskRows + logLines + cachedBatchAllowance,
-      s"input records $read > $diskRows parquet rows on disk + $logLines log " +
+    (m, listener.rows.get())
+  }
+
+  test("analyzeTable scans each parquet file on disk at most once") {
+    val path = tmpDir("readonce")
+    buildTable(path)
+    val diskRows = footerRows(parquetFiles(new java.io.File(path)))
+    val log = logLines(path)
+    assert(diskRows > 10 * (log + cachedBatchAllowance),
+      "the fixture's data must dwarf its log so a second scan shows")
+    val (_, read) = analyzeCountingRows(path)
+    assert(read <= diskRows + log + cachedBatchAllowance,
+      s"input records $read > $diskRows parquet rows on disk + $log log " +
         s"lines + $cachedBatchAllowance cached batches: a data file was scanned twice")
+  }
+
+  test("analyzeTable reads only the active files' rows") {
+    val path = tmpDir("readlive")
+    buildTable(path)
+    val snap = DeltaLog.snapshot(spark, path)
+    val active = try snap.activeFiles.select("path").as[String].collect().toSeq
+    finally snap.unpersist()
+    val liveRows = footerRows(active.map(p => new java.io.File(path, p)))
+    val deadRows = footerRows(parquetFiles(new java.io.File(path))) - liveRows
+    val log = logLines(path)
+    assert(deadRows > log + cachedBatchAllowance,
+      "the dead files must hold enough rows that reading them shows")
+    val (_, read) = analyzeCountingRows(path)
+    assert(read <= liveRows + log + cachedBatchAllowance,
+      s"input records $read > $liveRows active-file rows + $log log lines + " +
+        s"$cachedBatchAllowance cached batches: a removed file was read")
   }
 }

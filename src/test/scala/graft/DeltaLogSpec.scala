@@ -152,8 +152,8 @@ class DeltaLogSpec extends SparkSuite {
   // escapes in directory names
   test("escaped partition values keep their rows") {
     val path = tmpDir("dlog_escaped")
-    // "Mon Tue" is stored as is but URI-encoded in the scan's file path;
-    // "a:b" and "50%" are escaped in the directory name (a%3Ab, 50%25)
+    // "Mon Tue" is stored as is; "a:b" and "50%" are escaped in the
+    // directory name (a%3Ab, 50%25)
     val days = Seq("Mon Tue", "a:b", "50%", "Mon")
     def rows(ids: Range) = ids.map(i => (i.toLong, i * 1.5, days(i % 4)))
       .toDF("id", "v", "day").coalesce(1)
@@ -197,6 +197,54 @@ class DeltaLogSpec extends SparkSuite {
     after.unpersist()
     assert(graft.operators.HealthAnalyzer.analyzeTable(spark, path)
       .recordCount === all.size.toLong)
+  }
+
+  // the manifest index must apply partition filters itself: Spark drops
+  // them from the filter it runs after the scan
+  test("filters on partition columns and __file return exactly their rows") {
+    val path = tmpDir("dlog_prune")
+    val days = Seq("Mon", "Tue", "Wed")
+    def rows(ids: Range) = ids.map(i => (i.toLong, i * 2L, days(i % 3))).toDF("id", "v", "day")
+    DeltaFixtureWriter.write(rows(0 until 30).coalesce(1), path, "overwrite", Seq("day"))
+    DeltaFixtureWriter.write(rows(30 until 60).coalesce(1), path, "append", Seq("day"))
+    def expected(ids: Range, day: String) =
+      ids.filter(i => days(i % 3) == day).map(i => (i.toLong, i * 2L, day)).toSet
+    def active(): Seq[(String, String)] = {
+      val s = DeltaLog.snapshot(spark, path)
+      try s.activeFiles.select($"path", element_at($"partitionValues", "day"))
+        .as[(String, String)].collect().sorted.toSeq
+      finally s.unpersist()
+    }
+
+    val snap = DeltaLog.snapshot(spark, path)
+    try {
+      assert(snap.data.where($"day" === "Mon").select("id", "v", "day")
+        .as[(Long, Long, String)].collect().toSet === expected(0 until 60, "Mon"))
+      val tue = active().filter(_._2 == "Tue").map(_._1)
+      assert(tue.size === 2)
+      val perFile = tue.map { f =>
+        val got = snap.dataWithFile.get.where($"__file" === f)
+          .select("id", "v", "day").as[(Long, Long, String)].collect().toSet
+        val direct = spark.read.parquet(s"$path/$f").select("id", "v")
+          .as[(Long, Long)].collect().map { case (i, v) => (i, v, "Tue") }.toSet
+        assert(got.nonEmpty && got === direct, f)
+        got
+      }
+      assert(perFile.reduce(_ ++ _) === expected(0 until 60, "Tue"))
+    } finally snap.unpersist()
+
+    // a DELETE on a partition predicate rewrites only that partition
+    val before = active()
+    DeltaFixtureWriter.delete(spark, path, "day = 'Wed' AND id < 30")
+    val after = active()
+    assert(after.filter(_._2 != "Wed") === before.filter(_._2 != "Wed"))
+    val wed = after.filter(_._2 == "Wed").map(_._1)
+    assert(wed.size === 1 && before.map(_._1).contains(wed.head),
+      "the Wed file without matches stays; the one whose rows all match is removed")
+    val s2 = DeltaLog.snapshot(spark, path)
+    try assert(s2.data.where($"day" === "Wed").select("id", "v", "day")
+      .as[(Long, Long, String)].collect().toSet === expected(30 until 60, "Wed"))
+    finally s2.unpersist()
   }
 
   // commit lines spelled as in Delta's PROTOCOL.md ("Protocol Evolution",

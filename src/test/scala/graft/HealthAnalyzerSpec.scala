@@ -105,7 +105,7 @@ class HealthAnalyzerSpec extends SparkSuite {
       // identical metrics; only the recorded tablePath spelling (catalog
       // locations come back scheme-qualified) may differ
       assert(byName.copy(tablePath = "") === byPath.copy(tablePath = ""))
-      assert(graft.deltalog.DeltaLog.stripSchemeStr(byName.tablePath) === path)
+      assert(new org.apache.hadoop.fs.Path(byName.tablePath).toUri.getPath === path)
       // facade sniff: same result through DeltaAnalyzer.analyze
       val viaFacade = graft.DeltaAnalyzer.analyze(spark, name)
       assert(viaFacade.copy(tablePath = "") === byPath.copy(tablePath = ""))
@@ -222,6 +222,43 @@ class HealthAnalyzerSpec extends SparkSuite {
     assert(m.dataFileCount === 0L)
     assert(m.totalFileCount > 0L)
     assert(m.partitionCount === 0L)
+  }
+
+  test("orphan parquet files of random bytes or a foreign schema are counted, never read") {
+    val path = tmpDir("pin_garbage")
+    buildChurnedTable(path, Seq("day"))
+    val before = HealthAnalyzer.analyzeTable(spark, path)
+    val garbage = new java.io.File(path, "day=Mon/part-99998-garbage.c000.snappy.parquet")
+    val bytes = new Array[Byte](4096)
+    new scala.util.Random(7).nextBytes(bytes)
+    java.nio.file.Files.write(garbage.toPath, bytes)
+    // a foreign file whose total_bill is a string: a read under the table
+    // schema fails on it
+    val tmp = tmpDir("foreign")
+    spark.range(5).select(col("id").cast("string").as("total_bill"), col("id").as("other"))
+      .coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath,
+      new java.io.File(path, "day=Tue/part-99999-foreign.c000.snappy.parquet").toPath)
+
+    val m = assertCountsPinned(path)
+    assert(m.orphanFilesCount === before.orphanFilesCount + 2)
+    assert(m.recordCount === before.recordCount)
+    assert(m.dataFileCount === before.dataFileCount)
+  }
+
+  test("an active file missing from disk fails the analysis, naming the file") {
+    val path = tmpDir("missing_active")
+    buildChurnedTable(path, Seq("day"))
+    val snap = DeltaLog.snapshot(spark, path)
+    val victim = try snap.activeFiles.select("path").collect().map(_.getString(0)).min
+    finally snap.unpersist()
+    assert(new java.io.File(path, victim).delete())
+    val e = intercept[Exception](HealthAnalyzer.analyzeTable(spark, path))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    val name = victim.split('/').last
+    assert(messages.exists(_.contains(name)), messages.mkString("\n"))
   }
 
   test("smoke: complex table loads and reports version_count > 0 (test_delta_analyzer_load.py:6-11)") {

@@ -591,6 +591,33 @@ class MaintenanceSpec extends SparkSuite {
     assert(leftovers.isEmpty, s"temp files leaked: ${leftovers.toSeq}")
   }
 
+  test("commit writer: a file: URI commits into the table's log, any other scheme fails and writes nothing") {
+    val e = intercept[IllegalArgumentException] {
+      DeltaFixtureWriter.logCommit("hdfs://nn:8020/t", 0L, "VACUUM", Seq())
+    }
+    assert(e.getMessage.contains("hdfs://nn:8020/t"), e.getMessage)
+    assert(!new java.io.File("hdfs:").exists(), "nothing may be created under the working directory")
+
+    val path = tmpDir("fileuri")
+    DeltaFixtureWriter.write(Seq((1L, "a")).toDF("id", "v"), path, "overwrite", Seq())
+    DeltaFixtureWriter.logCommit(new java.io.File(path).toURI.toString, 1L, "VACUUM", Seq())
+    assert(new java.io.File(path, f"_delta_log/${1L}%020d.json").isFile)
+    Maintenance.vacuum(spark, "file://" + path, retainMs = 0L)
+    val snap = DeltaLog.snapshot(spark, path)
+    try assert(snap.version === 2L && snap.data.count() === 1L)
+    finally snap.unpersist()
+  }
+
+  test("a failed DELETE releases its snapshot") {
+    val path = tmpDir("release")
+    DeltaFixtureWriter.write(Seq((1L, "a")).toDF("id", "v"), path, "overwrite", Seq())
+    spark.catalog.clearCache()
+    intercept[org.apache.spark.sql.AnalysisException] {
+      DeltaFixtureWriter.delete(spark, path, "no_such_col > 1")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "the snapshot's cached actions leaked")
+  }
+
   test("changes: CDF shows appends as inserts, deletes as deletes, compaction as nothing") {
     val path = tmpDir("cdf")
     val mk = (ids: Seq[Int], day: String) =>
