@@ -1,5 +1,6 @@
 package graft.deltalog
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
@@ -18,9 +19,11 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * Every mutation appends parquet through Spark, finds the files it added
   * by diffing [[DeltaLog.dataFiles]] around the write ([[appendFiles]]),
   * and commits them through the one commit writer, [[writeCommitStream]] —
-  * which the scale-path operators in `Maintenance` use too. Commit files
-  * are written with java.nio, so the table must be a local path or a
-  * `file:` URI.
+  * which the scale-path operators in `Maintenance` use too. Every `add`
+  * line carries `"stats":"{\"numRecords\":N}"` (Delta PROTOCOL.md,
+  * "Per-file Statistics"), N read from the file's parquet footer on the
+  * driver, so readers count rows from the log. Commit files are written
+  * with java.nio, so the table must be a local path or a `file:` URI.
   */
 object DeltaFixtureWriter {
 
@@ -86,8 +89,10 @@ object DeltaFixtureWriter {
     * write, a RESTORE across a schema change). commitInfo is appended LAST
     * (after the counts are known); the log reader is line-order-agnostic
     * (every action line is parsed independently and commitInfo rows are
-    * filtered by field). `table` is a plain path or a `file:` URI; any
-    * other scheme fails before anything is written. */
+    * filtered by field). Each add's `stats.numRecords` is its parquet
+    * footer row count, read on the driver as the line is written: no Spark
+    * job. `table` is a plain path or a `file:` URI; any other scheme fails
+    * before anything is written. */
   private[graft] def writeCommitStream(
       table: String,
       version: Long,
@@ -97,11 +102,13 @@ object DeltaFixtureWriter {
       removes: Iterator[String],
       partitionBy: Seq[String],
       schema: Option[StructType] = None): Unit = {
-    val uri = new org.apache.hadoop.fs.Path(table).toUri
+    val uri = new Path(table).toUri
     require(uri.getScheme == null || uri.getScheme == "file",
       s"$table: commits are written with java.nio, so the table must be a local path or file: URI")
     val dir = if (uri.getScheme == null) table else uri.getPath
     val ts = System.currentTimeMillis()
+    lazy val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    val root = new Path(table)
     val lp = logPath(dir, version)
     Files.createDirectories(lp.getParent)
     // stream into a writer-private temp file, then claim the version with
@@ -144,7 +151,8 @@ object DeltaFixtureWriter {
         }
         adds.foreach { case (p, size) =>
           val pv = jMap(partitionValuesOf(p, partitionBy))
-          line(s"""{"add":{"path":${jStr(p)},"size":$size,"partitionValues":$pv,"modificationTime":$ts,"dataChange":true,"stats":""}}""")
+          val stats = jStr(s"""{"numRecords":${DeltaLog.footerRecordCount(conf, root, p)}}""")
+          line(s"""{"add":{"path":${jStr(p)},"size":$size,"partitionValues":$pv,"modificationTime":$ts,"dataChange":true,"stats":$stats}}""")
           nAdds += 1
         }
         val metrics = Seq(

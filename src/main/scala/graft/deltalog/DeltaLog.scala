@@ -1,6 +1,11 @@
 package graft.deltalog
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -16,11 +21,14 @@ import scala.jdk.CollectionConverters._
   * `spark.read.json` under an explicit action schema, and replay add/remove
   * actions to reconstruct the active-file snapshot.
   *
-  * Consumes exactly the five log-derived facts the reference workload needs
+  * Consumes exactly the six log-derived facts the reference workload needs
   * (see /root/reference/src/delta_lake_health/health_analyzers/
   * delta_python_analyzer.py:20,115,167 and delta_spark_analyzer.py:116-118):
   * history entries, metadata partition columns, active file URIs, add-action
-  * sizes, and version numbers.
+  * sizes, per-file row counts (`add.stats.numRecords`, Delta PROTOCOL.md
+  * "Per-file Statistics"), and version numbers. The row counts make the
+  * record count and partition skew a sum over the manifest: no data file
+  * is opened to count rows.
   *
   * Scale notes: the log scan and the add/remove replay are pure DataFrame
   * programs — the replay is a per-path max-version reconciliation implemented
@@ -282,6 +290,29 @@ object DeltaLog {
     out.result()
   }
 
+  /** Row count of the parquet file at `rel` (an `add.path`, relative to the
+    * table root `root`), from its footer, read on the driver: no Spark job
+    * and no task input rows. The read options come from `conf`: the
+    * no-argument `open` builds a fresh Hadoop `Configuration` per file,
+    * which costs more than the footer read itself. */
+  private[graft] def footerRecordCount(conf: Configuration, root: Path, rel: String): Long = {
+    val file = new Path(root, new Path(null, null, rel))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
+    try reader.getRecordCount finally reader.close()
+  }
+
+  private val statsMapper = new ObjectMapper()
+
+  /** The top-level `numRecords` of an `add.stats` JSON string; None for
+    * null, empty (legacy `"stats":""`) or unparsable stats, or stats
+    * without it. */
+  private[graft] def statsNumRecords(stats: String): Option[Long] =
+    Option(stats).filter(_.nonEmpty)
+      .flatMap(s => scala.util.Try(statsMapper.readTree(s)).toOption)
+      .flatMap(j => Option(j.get("numRecords")))
+      .filter(_.canConvertToLong).map(_.asLong)
+
   /** True if `path` looks like a Delta table (has a `_delta_log` dir). */
   def isDeltaTable(spark: SparkSession, tablePath: String): Boolean = {
     val p = new Path(logDir(tablePath))
@@ -417,7 +448,9 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
 
   /** Active file manifest: per path, the latest `add` survives unless a
     * `remove` with version >= the add's version exists. Columns:
-    * path, size, partitionValues, modificationTime.
+    * path, size, partitionValues, modificationTime, stats (the add's
+    * per-file statistics JSON, whose `numRecords` feeds [[partitionCounts]];
+    * null or empty in logs whose writers recorded none).
     *
     * Replayed once per snapshot (two hash aggregations plus a join on
     * `path`) and collected: a scan must name its files on the driver, where
@@ -428,8 +461,8 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
     val adds = actions
       .where($"add".isNotNull)
       .groupBy($"add.path".as("path"))
-      .agg(max_by(struct($"add.size", $"add.partitionValues", $"add.modificationTime", $"version"), $"version").as("a"))
-      .select($"path", $"a.size", $"a.partitionValues", $"a.modificationTime", $"a.version".as("addVersion"))
+      .agg(max_by(struct($"add.size", $"add.partitionValues", $"add.modificationTime", $"add.stats", $"version"), $"version").as("a"))
+      .select($"path", $"a.size", $"a.partitionValues", $"a.modificationTime", $"a.stats", $"a.version".as("addVersion"))
     val removes = actions
       .where($"remove".isNotNull)
       .groupBy($"remove.path".as("path"))
@@ -442,6 +475,42 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
   }
 
   private lazy val manifest: Array[Row] = activeFiles.collect()
+
+  /** Per-partition record counts from the log alone, shaped like
+    * [[graft.operators.SkewAnalyzer.partitionCounts]] over [[data]]: the
+    * partition columns (strings, as the scan reads them) plus `count`.
+    * Each active file counts its `add.stats.numRecords`, or, when its
+    * stats lack one (legacy `"stats":""` logs, foreign checkpoints), its
+    * parquet footer row count, read on the driver; no data row is read.
+    * A partitioned table drops partitions whose sum is 0, as a data-scan
+    * `groupBy` never emits them; an unpartitioned one is one global row. */
+  lazy val partitionCounts: DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(qualifiedTablePath)
+    val perFile = manifest.toSeq.map { f =>
+      val pv = Option(f.getAs[collection.Map[String, String]]("partitionValues"))
+        .getOrElse(Map.empty[String, String])
+      val n = DeltaLog.statsNumRecords(f.getAs[String]("stats"))
+        .getOrElse(DeltaLog.footerRecordCount(conf, root, f.getString(0)))
+      partitionColumns.map(pv.getOrElse(_, null)) -> n
+    }
+    val kept =
+      if (partitionColumns.isEmpty) Seq(Seq.empty -> perFile.map(_._2).sum)
+      else perFile.groupMapReduce(_._1)(_._2)(_ + _).toSeq.filter(_._2 > 0)
+    val schema = StructType(partitionColumns.map(StructField(_, StringType)) :+
+      StructField("count", LongType, nullable = false))
+    spark.createDataFrame(kept.map { case (k, n) => Row.fromSeq(k :+ n) }.asJava, schema)
+  }
+
+  /** Fails, naming them, when active files are missing from `onDisk`, the
+    * table-relative paths of a [[DeltaLog.dataFiles]] listing of this
+    * table: with counts taken from the log, no scan would notice. */
+  private[graft] def requireActiveFilesIn(onDisk: collection.Set[String]): Unit = {
+    val missing = manifest.map(_.getString(0)).filterNot(onDisk).sorted
+    if (missing.nonEmpty) throw new java.io.FileNotFoundException(
+      s"$tablePath: ${missing.length} active file(s) named by the log are " +
+        s"missing from disk, e.g. ${missing.take(3).mkString(", ")}")
+  }
 
   /** Fully-qualified table root (scheme + absolute path) — the base for any
     * path that will be compared against filesystem listings, which Hadoop

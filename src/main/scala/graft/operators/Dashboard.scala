@@ -22,8 +22,8 @@ object Dashboard {
   def frames(spark: SparkSession, tablePath: String,
              thresholds: Thresholds = Thresholds()): Frames = {
     // ONE snapshot (one log replay) feeds both the analysis and the frames;
-    // partition counts reuse the map analyzeSnapshot already collected
-    // instead of re-scanning the table
+    // partition counts reuse the map analyzeSnapshot already collected, or
+    // the snapshot's log-derived counts: no data file is opened
     val snap = DeltaLog.snapshot(spark, tablePath)
     // dashboard frames are display-sized (top-15, 20 bins, one row per
     // commit) — materialize them eagerly so the snapshot cache can be
@@ -37,9 +37,9 @@ object Dashboard {
       val counts = m.skewMetrics match {
         case Some(sk) if sk.partitionCount > sk.recordsPerPartition.size =>
           // the driver dict was capped to the top-N heaviest partitions —
-          // rebuild the FULL counts frame distributively so the "Others"
-          // bucket sums the whole tail, not just ranks topN-and-under
-          SkewAnalyzer.recordsPerPartition(snap.data, sk.partitionColumns)
+          // key the FULL log-derived counts frame so the "Others" bucket
+          // sums the whole tail, not just ranks topN-and-under
+          SkewAnalyzer.keyedCounts(snap.partitionCounts, sk.partitionColumns)
         case Some(sk) =>
           sk.recordsPerPartition.toSeq.toDF("partition", "count")
         case None => Seq.empty[(String, Long)].toDF("partition", "count")

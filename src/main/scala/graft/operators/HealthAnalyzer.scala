@@ -9,9 +9,11 @@ import graft.health._
 /** End-to-end table health analysis — the re-architected E1 entry point
   * (SURVEY.md §3): one cached log snapshot with its driver-held manifest,
   * then three passes that each derive their facts from one source — the
-  * history aggregate, one data scan into a cached per-partition counts
-  * aggregate (record count and skew), and one join of the folder listing
-  * with the manifest (storage) — feeding the pure-Scala health calculus.
+  * history aggregate, the manifest's per-file `numRecords` summed per
+  * partition on the driver (record count and skew), and one join of the
+  * folder listing with the manifest (storage) — feeding the pure-Scala
+  * health calculus. No data file is opened: a file whose log stats lack a
+  * row count is counted from its parquet footer.
   *
   * Implements the *Python* backend's measured semantics (the honest fork of
   * H6-H10 — delta_python_analyzer.py:224-275) since our log layer has full
@@ -79,19 +81,18 @@ object HealthAnalyzer {
     locally {
       // history pass (A5/A6)
       val ops = HistoryAnalyzer.opCounts(snap.history).first()
-      // data pass (A1-A4, A7): one scan feeds one cached counts aggregate,
-      // whose stats row yields the record count and both skew methods,
-      // unlike the reference's double materialization
-      // (delta_python_analyzer.py:192-193). Guard the fully-deleted table:
-      // data is schemaless when no file is active, so grouping by partition
-      // columns would not resolve.
-      val (recordCount, skew) =
-        if (snap.dataWithFile.isDefined)
-          SkewAnalyzer.measure(snap.data, snap.partitionColumns,
-            thresholds.skewThreshold)
-        else (0L, SkewMetrics(partitionColumns = snap.partitionColumns))
+      // one folder listing serves the storage pass and the check that
+      // every active file exists: no data scan is left to notice one gone
+      val listing = DeltaLog.dataFiles(spark, tablePath)
+      snap.requireActiveFilesIn(listing.keySet)
+      // counts pass (A1-A4, A7): the log-derived per-partition counts feed
+      // the same stats aggregate the contract queries use, whose one row
+      // yields the record count and both skew methods, unlike the
+      // reference's double materialization (delta_python_analyzer.py:192-193)
+      val (recordCount, skew) = SkewAnalyzer.measureCounts(snap.partitionCounts,
+        snap.partitionColumns, thresholds.skewThreshold)
       // storage pass (A8-A13, J1)
-      val folder = StorageAnalyzer.folderFiles(spark, tablePath)
+      val folder = StorageAnalyzer.folderFiles(spark, tablePath, listing)
       val storage = StorageAnalyzer.storageStats(folder, snap.activeFilePaths,
         thresholds.smallFileSizeMb.map(_ * 1024 * 1024)).first()
 

@@ -369,6 +369,7 @@ object Maintenance {
   }
 
   /** Write a parquet checkpoint of the current snapshot state — active adds
+    * (with their `stats`, so row counts survive the JSONs' cleanup)
     * + latest metaData + latest protocol, as the SINGLE file
     * `NNN.checkpoint.parquet` the classic Delta checkpoint layout requires
     * (external readers like delta-rs/delta-spark expect one file, not a
@@ -385,7 +386,7 @@ object Maintenance {
         struct(
           col("path"), col("size"), col("partitionValues"),
           col("modificationTime"), lit(true).as("dataChange"),
-          lit(null).cast("string").as("stats")).as("add"),
+          col("stats")).as("add"),
         lit(null).cast(metaType).as("metaData"),
         lit(null).cast(protoType).as("protocol"))
       // metaData and protocol come from the snapshot's one-row lookup; a log

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import graft.functions.{exprs, TextFunctions}
 
@@ -46,7 +47,10 @@ object Search {
     * [[graft.functions.BoundedTopK]] hash aggregation: O(k) state per
     * query, no global sort, no windows.
     *
-    * @param corpus  (idCol, textCol) — ids must be unique LONGs
+    * @param corpus  (idCol, textCol) — ids must be unique and of an
+    *                integral type (cast to long losslessly); any other id
+    *                type fails, naming the column, rather than letting an
+    *                uncastable id vanish from N and avgdl
     * @param queries (qIdCol, qTextCol) — broadcast-small query set
     * @return (query_id, doc_id, score, rank), rank 1..k per query */
   def bm25TopK(corpus: DataFrame, queries: DataFrame, idCol: String,
@@ -55,6 +59,12 @@ object Search {
     require(k > 0, s"bad k $k")
     require(k1 >= 0, s"bad k1 $k1")
     require(b >= 0 && b <= 1, s"bad b $b (want [0,1])")
+    corpus.select(col(idCol)).schema.head.dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case t => throw new IllegalArgumentException(
+        s"bm25TopK id column '$idCol' is ${t.simpleString}, not an integral type: " +
+          "a non-integral id can fail the cast to long and silently drop its document")
+    }
     // Explicit isnotnull on the join keys (r19, §7.2 duplicated-subtree
     // fix): the scored path's joins PUSH isnotnull(doc_id)/isnotnull(__t)
     // into their tf subtrees while dl/dfreq/stats consume tf unfiltered —

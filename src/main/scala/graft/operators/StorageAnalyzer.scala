@@ -21,10 +21,15 @@ object StorageAnalyzer {
 
   /** S6: recursive `*.parquet` listing of the table dir, `_delta_log`
     * excluded → DataFrame(path, size), paths fully qualified. */
-  def folderFiles(spark: SparkSession, tablePath: String): DataFrame = {
+  def folderFiles(spark: SparkSession, tablePath: String): DataFrame =
+    folderFiles(spark, tablePath, DeltaLog.dataFiles(spark, tablePath))
+
+  /** [[folderFiles]] over a listing the caller already holds. */
+  def folderFiles(spark: SparkSession, tablePath: String,
+                  listing: Map[String, Long]): DataFrame = {
     import spark.implicits._
     val root = DeltaLog.qualifiedPath(spark, tablePath).stripSuffix("/") + "/"
-    DeltaLog.dataFiles(spark, tablePath).toSeq
+    listing.toSeq
       .map { case (p, size) => (root + p, size) }
       .toDF("path", "size")
   }

@@ -9,9 +9,10 @@ import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
 import graft.health.DeltaAnalyzerMetrics
 import graft.operators.HealthAnalyzer
 
-/** `analyzeTable` reads every data file at most once: the record count,
-  * the partition counts and the skew statistics all come from one scan,
-  * and that scan opens only the active files. */
+/** `analyzeTable` reads no data rows: the record count, the partition
+  * counts and the skew statistics all come from the log's per-file
+  * `numRecords`, so only log lines are read — well within the older
+  * bounds of reading each file at most once and only the active ones. */
 class AnalyzeReadOnceSpec extends SparkSuite {
   import spark.implicits._
 
@@ -107,5 +108,22 @@ class AnalyzeReadOnceSpec extends SparkSuite {
     assert(read <= liveRows + log + cachedBatchAllowance,
       s"input records $read > $liveRows active-file rows + $log log lines + " +
         s"$cachedBatchAllowance cached batches: a removed file was read")
+  }
+
+  test("analyzeTable reads no data rows when every add carries numRecords") {
+    val path = tmpDir("readnone")
+    buildTable(path)
+    val log = logLines(path)
+    val (_, read) = analyzeCountingRows(path)
+    assert(read <= log + cachedBatchAllowance,
+      s"input records $read > $log log lines + $cachedBatchAllowance cached " +
+        "batches: a data file was read")
+    val adds = new java.io.File(path, "_delta_log").listFiles().toSeq
+      .filter(_.getName.endsWith(".json"))
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f)
+        try src.getLines().filter(_.startsWith("{\"add\"")).toList finally src.close()
+      }
+    assert(adds.nonEmpty && adds.forall(_.contains("numRecords")), adds.mkString("\n"))
   }
 }

@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
 import graft.health.{DeltaAnalyzerMetrics, Thresholds}
-import graft.operators.HealthAnalyzer
+import graft.operators.{HealthAnalyzer, SkewAnalyzer}
 
 /** 1:1 port of the reference's pytest suite
   * (test/test_delta_analyzer_metrics.py, test/test_delta_analyzer_load.py) —
@@ -259,6 +261,159 @@ class HealthAnalyzerSpec extends SparkSuite {
       .map(t => String.valueOf(t.getMessage)).toSeq
     val name = victim.split('/').last
     assert(messages.exists(_.contains(name)), messages.mkString("\n"))
+  }
+
+  /** A copy of the table whose every `add.stats` (JSON commits and
+    * checkpoint) is rewritten to `""`, as legacy writers left it: its
+    * counts can only come from parquet footers. */
+  private def copyWithoutStats(path: String): String = {
+    val dest = tmpDir("nostats")
+    val src = java.nio.file.Paths.get(path)
+    val files = java.nio.file.Files.walk(src)
+    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .filterNot(_.getFileName.toString.endsWith(".crc")).foreach { f =>
+        val to = java.nio.file.Paths.get(dest).resolve(src.relativize(f))
+        java.nio.file.Files.createDirectories(to.getParent)
+        val name = f.getFileName.toString
+        if (name.endsWith(".json")) {
+          val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+          java.nio.file.Files.write(to,
+            text.replaceAll("\"stats\":\"(?:[^\"\\\\]|\\\\.)*\"", "\"stats\":\"\"").getBytes("UTF-8"))
+        } else if (name.endsWith(".checkpoint.parquet")) {
+          val tmp = tmpDir("ckpt_nostats")
+          spark.read.parquet(f.toString)
+            .withColumn("add", when(col("add").isNotNull, col("add").withField("stats", lit(""))))
+            .coalesce(1).write.mode("overwrite").parquet(tmp)
+          val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+          java.nio.file.Files.copy(part.toPath, to)
+        } else java.nio.file.Files.copy(f, to)
+      }
+    finally files.close()
+    val log = new java.io.File(dest, "_delta_log").listFiles().toSeq
+    val stillCounted = log.filter(_.getName.endsWith(".json")).exists { f =>
+      val src = scala.io.Source.fromFile(f)
+      try src.mkString.contains("numRecords") finally src.close()
+    }
+    assert(!stillCounted, "the copy's JSON commits must carry no numRecords")
+    dest
+  }
+
+  /** The three sources of the record count and skew agree field for
+    * field, `tablePath` aside: the log's `numRecords`, parquet footers (a
+    * copy without stats) and a forced data scan
+    * (`SkewAnalyzer.measure(snap.data, …)`). */
+  private def assertCountSourcesAgree(path: String): DeltaAnalyzerMetrics = {
+    val fromStats = HealthAnalyzer.analyzeTable(spark, path)
+    val fromFooters = HealthAnalyzer.analyzeTable(spark, copyWithoutStats(path))
+    val snap = DeltaLog.snapshot(spark, path)
+    val (recordCount, skew) = try SkewAnalyzer.measure(snap.data,
+      snap.partitionColumns, Thresholds().skewThreshold) finally snap.unpersist()
+    val partitioned = snap.partitionColumns.nonEmpty
+    val fromScan = fromStats.copy(recordCount = recordCount,
+      partitionCount = skew.partitionCount, isSkewed = skew.isSkewed,
+      skewnessMax = skew.skewnessMax, skewnessAverage = skew.skewnessAverage,
+      partitionSkewness = Option.when(partitioned)(skew.skewnessMax),
+      skewMetrics = Option.when(partitioned)(skew)).withHealthScore
+    assert(fromFooters.copy(tablePath = "") === fromStats.copy(tablePath = ""),
+      "the record from footers differs from the record from stats")
+    assert(fromScan === fromStats, "the record from a data scan differs from the record from stats")
+    fromStats
+  }
+
+  test("record from stats == from footers == from a data scan: escaped partition values") {
+    val path = tmpDir("exact_escaped")
+    val days = Seq("Mon Tue", "a:b", "50%", "Mon")
+    def rows(ids: Range) = spark.createDataFrame(ids.map(i => (i.toLong, i * 1.5, days(i % 4))))
+      .toDF("id", "v", "day").coalesce(1)
+    DeltaFixtureWriter.write(rows(0 until 40), path, "overwrite", Seq("day"))
+    DeltaFixtureWriter.write(rows(40 until 50), path, "append", Seq("day"))
+    DeltaFixtureWriter.delete(spark, path, "id % 3 = 0")
+    val m = assertCountSourcesAgree(path)
+    assert(m.partitionCount === 4L)
+    assert(m.recordCount === (0 until 50).count(_ % 3 != 0).toLong)
+  }
+
+  test("record from stats == from footers == from a data scan: zero-row files") {
+    val path = tmpDir("exact_zero")
+    buildChurnedTable(path, Seq("day"))
+    // one zero-row file in a partition that has rows, one alone in a new
+    // partition, which the counts must not report
+    val empty = tmpDir("zero_rows")
+    spark.range(0).select(lit(1.0).as("total_bill"), lit(1.0).as("tip"),
+      lit("Dinner").as("time"), lit(1).as("size"))
+      .coalesce(1).write.mode("overwrite").parquet(empty)
+    val part = new java.io.File(empty).listFiles().find(_.getName.endsWith(".parquet")).get
+    val adds = Seq("day=Mon", "day=Thu").map { dir =>
+      val rel = s"$dir/part-99990-zero.c000.snappy.parquet"
+      val to = new java.io.File(path, rel)
+      to.getParentFile.mkdirs()
+      java.nio.file.Files.copy(part.toPath, to.toPath)
+      rel -> to.length()
+    }
+    val snap = DeltaLog.snapshot(spark, path)
+    val v = try snap.version finally snap.unpersist()
+    DeltaFixtureWriter.writeCommitStream(path, v + 1, "WRITE", Seq("mode" -> "Append"),
+      adds.iterator, Iterator.empty, Seq("day"))
+    val m = assertCountSourcesAgree(path)
+    assert(m.partitionCount === 3L, "a partition of zero-row files is not a partition")
+    assert(m.skewMetrics.get.recordsPerPartition.keySet === Set("Mon", "Tue", "Wed"))
+  }
+
+  test("record from stats == from footers == from a data scan: checkpointed, pre-checkpoint JSONs deleted") {
+    val path = tmpDir("exact_ckpt")
+    buildChurnedTable(path, Seq("day", "time"))
+    val v = graft.operators.Maintenance.checkpoint(spark, path)
+    (0L to v).foreach(i => java.nio.file.Files.delete(
+      java.nio.file.Paths.get(path, "_delta_log", f"$i%020d.json")))
+    DeltaFixtureWriter.write(TestFixtures.tips(spark, Seq("Wed" -> 6), Seq("Lunch" -> 6)),
+      path, "append", Seq("day", "time"))
+    val m = assertCountSourcesAgree(path)
+    assert(m.recordCount > 0)
+  }
+
+  test("record from stats == from footers == from a data scan: more partitions than the top-N map") {
+    val path = tmpDir("exact_highcard")
+    val keys = spark.range(1050).select(format_string("k%04d", col("id")).as("k"), col("id"))
+    val hot = spark.range(40).select(lit("k0007").as("k"), col("id"))
+    DeltaFixtureWriter.write(keys.union(hot).coalesce(1), path, "overwrite", Seq("k"))
+    val m = assertCountSourcesAgree(path)
+    val sk = m.skewMetrics.get
+    assert(sk.partitionCount === 1050L)
+    assert(sk.recordsPerPartition.size === 1000)
+    assert(sk.maxPartition === Some("k0007" -> 41L))
+  }
+
+  test("record from stats == from footers == from a data scan: hand-written legacy log without stats") {
+    val path = tmpDir("exact_legacy")
+    val df = TestFixtures.tips(spark, Seq("Mon" -> 30, "Tue" -> 20, "Wed" -> 10),
+      Seq("Dinner" -> 40, "Lunch" -> 20))
+    df.repartition(2).write.mode("append").partitionBy("day").parquet(path)
+    val files = DeltaLog.dataFiles(spark, path).toSeq.sorted
+    val schema = df.schema.json.replace("\\", "\\\\").replace("\"", "\\\"")
+    def add(rel: String, size: Long, stats: String) = {
+      val day = rel.split('/').head.stripPrefix("day=")
+      s"""{"add":{"path":"$rel","partitionValues":{"day":"$day"},"size":$size,"modificationTime":1,"dataChange":true$stats}}"""
+    }
+    // empty stats, no stats field, and stats without numRecords
+    val stats = Seq(""","stats":""""", "", ""","stats":"{\"minValues\":{}}"""")
+    val commit0 = Seq(
+      """{"commitInfo":{"timestamp":1,"operation":"WRITE","operationParameters":{"mode":"Overwrite"}}}""",
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+      s"""{"metaData":{"id":"legacy","format":{"provider":"parquet","options":{}},"schemaString":"$schema","partitionColumns":["day"],"configuration":{},"createdTime":1}}""") ++
+      files.zipWithIndex.map { case ((rel, size), i) => add(rel, size, stats(i % 3)) }
+    val removed = files.head._1
+    val commit1 = Seq(
+      """{"commitInfo":{"timestamp":2,"operation":"DELETE","operationParameters":{"predicate":"[]"}}}""",
+      s"""{"remove":{"path":"$removed","deletionTimestamp":2,"dataChange":true}}""")
+    val log = new java.io.File(path, "_delta_log")
+    log.mkdirs()
+    Seq(commit0, commit1).zipWithIndex.foreach { case (lines, v) =>
+      java.nio.file.Files.write(new java.io.File(log, f"$v%020d.json").toPath,
+        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    }
+    val m = assertCountSourcesAgree(path)
+    assert(m.partitionCount === 3L)
+    assert(m.dataFileCount === files.size - 1L)
   }
 
   test("smoke: complex table loads and reports version_count > 0 (test_delta_analyzer_load.py:6-11)") {

@@ -843,4 +843,48 @@ class MaintenanceSpec extends SparkSuite {
     }
     assert(perPartition === 1L)
   }
+
+  test("every add from write, delete, merge, compact, optimize, zorder and restore, and every checkpoint add, records its footer row count") {
+    val path = tmpDir("numrecords")
+    val rows = spark.range(60).select(col("id"), (col("id") % 3).cast("string").as("k"),
+      (col("id") * 7 % 11).cast("double").as("x"))
+    DeltaFixtureWriter.write(rows, path, "overwrite", Seq("k"))
+    DeltaFixtureWriter.write(rows.where(col("id") < 20), path, "append", Seq("k"))
+    DeltaFixtureWriter.delete(spark, path, "id % 5 = 0")
+    DeltaFixtureWriter.merge(spark, path,
+      rows.where(col("id") > 50).withColumn("x", lit(-1.0)), Seq("id"))
+    DeltaFixtureWriter.compact(spark, path)
+    DeltaFixtureWriter.write(rows.where(col("id") < 30), path, "append", Seq("k"))
+    Maintenance.optimize(spark, path, targetFileBytes = 1L << 20)
+    Maintenance.zorder(spark, path, Seq("id", "x"))
+    Maintenance.restore(spark, path, 1L)
+    Maintenance.checkpoint(spark, path)
+
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footerRows(rel: String): Long = {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new java.io.File(path, rel).toURI), conf))
+      try reader.getRecordCount finally reader.close()
+    }
+    def recorded(adds: org.apache.spark.sql.DataFrame): Seq[(String, Option[Long])] =
+      adds.select($"path", get_json_object($"stats", "$.numRecords").cast("long"))
+        .as[(String, Option[Long])].collect().toSeq
+    val log = DeltaLog.readJsonActions(spark, path)
+    val ops = log.where($"commitInfo".isNotNull)
+      .select($"version", $"commitInfo.operation").as[(Long, String)].collect().toMap
+    val jsonAdds = log.where($"add".isNotNull).select($"version", $"add.*")
+    val addOps = jsonAdds.select($"version").as[Long].collect().map(ops).toSet
+    assert(addOps === Set("WRITE", "DELETE", "MERGE", "OPTIMIZE", "RESTORE"),
+      s"every rewriting operation must add files, got ${ops.toSeq.sorted}")
+    assert(ops.values.count(_ == "OPTIMIZE") === 3, "compact, optimize and zorder")
+    val fromJson = recorded(jsonAdds)
+    val ckpt = spark.read.parquet(new java.io.File(path, "_delta_log").listFiles()
+      .map(_.getPath).filter(_.endsWith(".checkpoint.parquet")).toSeq: _*)
+    val fromCheckpoint = recorded(ckpt.where($"add".isNotNull).select($"add.*"))
+    assert(fromCheckpoint.nonEmpty)
+    (fromJson ++ fromCheckpoint).foreach { case (rel, n) =>
+      assert(n === Some(footerRows(rel)), s"$rel: numRecords $n")
+    }
+  }
 }

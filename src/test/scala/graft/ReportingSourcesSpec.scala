@@ -131,6 +131,19 @@ class ReportingSourcesSpec extends SparkSuite {
     assert(f.perVersionFileDeltas.count() === hist.length)
   }
 
+  test("E3: with more partitions than the top-N map, the dashboard's Others bucket sums the whole tail") {
+    val path = tmpDir("dash_highcard")
+    val keys = spark.range(1050).select(format_string("k%04d", col("id")).as("k"), col("id"))
+    val hot = spark.range(40).select(lit("k0007").as("k"), col("id"))
+    graft.deltalog.DeltaFixtureWriter.write(keys.union(hot).coalesce(1), path, "overwrite", Seq("k"))
+    val f = graft.operators.Dashboard.frames(spark, path)
+    assert(f.metrics.skewMetrics.get.recordsPerPartition.size === 1000, "the top-N cap is hit")
+    val top = f.partitionCountsTopN.as[(String, Long)].collect()
+    assert(top.length === 16)
+    assert(top.head === ("k0007" -> 41L))
+    assert(top.last === ("Others" -> (1090L - 41L - 14L)))
+  }
+
   // nested two-level partitions and a top-level data file are listed;
   // _SUCCESS, .crc and the checkpoint parquet in _delta_log are not
   test("folderFiles == an independent java.io walk") {

@@ -20,6 +20,15 @@ class SearchSpec extends SparkSuite {
     Search.bm25TopK(corpus, qs.toDF("qid", "qtext"),
       "doc_id", "text", "qid", "qtext", k = 10)
 
+  test("a non-integral id column fails, naming the column, instead of dropping uncastable ids") {
+    val strIds = Seq(("abc", "apple banana"), ("2", "banana fig")).toDF("sid", "text")
+    val e = intercept[IllegalArgumentException] {
+      Search.bm25TopK(strIds, Seq(1L -> "apple").toDF("qid", "qtext"),
+        "sid", "text", "qid", "qtext", k = 10)
+    }
+    assert(e.getMessage.contains("'sid'") && e.getMessage.contains("string"), e.getMessage)
+  }
+
   test("hand-computed single-term score") {
     // 'apple': df=1, N=3 -> idf = ln(1 + 2.5/1.5) = ln(8/3) = 0.980829253
     // doc 1: tf=2, dl=4 -> 0.980829253 * 2*2.2 / (2 + 1.2*(0.25+0.75*4/(10.0/3)))
