@@ -45,17 +45,6 @@ object DeltaFixtureWriter {
   private def jMap(m: Seq[(String, String)]): String =
     m.map { case (k, v) => s"${jStr(k)}:${jStr(v)}" }.mkString("{", ",", "}")
 
-  private def currentVersion(table: String): Option[Long] = {
-    val dir = new File(table, "_delta_log")
-    if (!dir.exists()) None
-    else {
-      val vs = dir.listFiles().toSeq
-        .map(_.getName)
-        .collect { case n if n.endsWith(".json") => n.stripSuffix(".json").toLong }
-      if (vs.isEmpty) None else Some(vs.max)
-    }
-  }
-
   /** Parse hive-style `col=value/` segments out of a relative file path.
     * Spark escapes special characters in partition directory names
     * (`a:b` → `a%3Ab`); the partition value is the unescaped text. */
@@ -93,6 +82,15 @@ object DeltaFixtureWriter {
     * footer row count, read on the driver as the line is written: no Spark
     * job. `table` is a plain path or a `file:` URI; any other scheme fails
     * before anything is written. */
+  /** The local directory of `table`, a plain path or a `file:` URI; any
+    * other scheme fails. */
+  private def localDir(table: String): String = {
+    val uri = new Path(table).toUri
+    require(uri.getScheme == null || uri.getScheme == "file",
+      s"$table: commits are written with java.nio, so the table must be a local path or file: URI")
+    if (uri.getScheme == null) table else uri.getPath
+  }
+
   private[graft] def writeCommitStream(
       table: String,
       version: Long,
@@ -102,10 +100,7 @@ object DeltaFixtureWriter {
       removes: Iterator[String],
       partitionBy: Seq[String],
       schema: Option[StructType] = None): Unit = {
-    val uri = new Path(table).toUri
-    require(uri.getScheme == null || uri.getScheme == "file",
-      s"$table: commits are written with java.nio, so the table must be a local path or file: URI")
-    val dir = if (uri.getScheme == null) table else uri.getPath
+    val dir = localDir(table)
     val ts = System.currentTimeMillis()
     lazy val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val root = new Path(table)
@@ -186,26 +181,24 @@ object DeltaFixtureWriter {
   def write(df: DataFrame, table: String, mode: String = "overwrite",
             partitionBy: Seq[String] = Seq.empty): Unit = {
     require(mode == "overwrite" || mode == "append", s"bad mode $mode")
-    // one snapshot read serves both the overwrite remove-list and the
-    // schema-evolution check
-    val (snapBefore: Seq[String], schemaChanged: Boolean, effPartitionBy: Seq[String]) =
-      if (currentVersion(table).isDefined) {
+    // one snapshot read serves the version, the overwrite remove-list and
+    // the schema-evolution check
+    val (version, snapBefore, schemaChanged, effPartitionBy) =
+      if (DeltaLog.isDeltaTable(df.sparkSession, table)) {
         val snap = DeltaLog.snapshot(df.sparkSession, table)
         try {
           val files =
-            if (mode == "overwrite")
-              snap.activeFiles.select("path").collect().map(_.getString(0)).toSeq
+            if (mode == "overwrite") snap.manifest.map(_.getString(0)).toSeq
             else Seq.empty
           val changed = !snap.tableSchema.contains(df.schema)
           // partitioning is immutable in Delta: a later write that omits
           // partitionBy must not clobber partitionColumns in an evolved
           // metaData action
           val pb = if (partitionBy.nonEmpty) partitionBy else snap.partitionColumns
-          (files, changed, pb)
+          (snap.version + 1, files, changed, pb)
         } finally snap.unpersist()
-      } else (Seq.empty, false, partitionBy)
+      } else (0L, Seq.empty, false, partitionBy)
     val newFiles = appendFiles(df, table, partitionBy)
-    val version = currentVersion(table).map(_ + 1).getOrElse(0L)
     writeCommitStream(table, version, "WRITE",
       Seq("mode" -> (if (mode == "overwrite") "Overwrite" else "Append"),
           "partitionBy" -> partitionBy.mkString("[", ",", "]")),
@@ -252,11 +245,10 @@ object DeltaFixtureWriter {
   /** OPTIMIZE compact: bin-packs each partition's active files into one file
     * per partition. */
   def compact(spark: SparkSession, table: String): Unit = {
-    import spark.implicits._
     val snap = DeltaLog.snapshot(spark, table)
     val partitionBy = snap.partitionColumns
     val (activeRel, newFiles) = try {
-      val activeRel = snap.activeFiles.select("path").as[String].collect().sorted.toSeq
+      val activeRel = snap.manifest.map(_.getString(0)).sorted.toSeq
       // a fully-deleted table logs a no-op OPTIMIZE, nothing to rewrite
       if (activeRel.isEmpty) (activeRel, Seq.empty)
       else {
@@ -308,13 +300,14 @@ object DeltaFixtureWriter {
     writeCommitStream(table, version, operation, parameters,
       adds = Iterator.empty, removes = Iterator.empty, partitionBy = Seq.empty)
 
-  /** rm -rf the table dir (test teardown; clean_delta_data.py:9-22). */
+  /** rm -rf the table dir (test teardown; clean_delta_data.py:9-22);
+    * `table` is a plain path or a `file:` URI. */
   def drop(table: String): Unit = {
     def rec(f: File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rec)
       f.delete(); ()
     }
-    val root = new File(table)
+    val root = new File(localDir(table))
     if (root.exists()) rec(root)
   }
 }

@@ -30,14 +30,16 @@ import scala.jdk.CollectionConverters._
   * record count and partition skew a sum over the manifest: no data file
   * is opened to count rows.
   *
-  * Scale notes: the log scan and the add/remove replay are pure DataFrame
-  * programs — the replay is a per-path max-version reconciliation implemented
-  * as a hash aggregation on `path`, which shuffles once on the file path and
-  * parallelizes over executors for logs with millions of add actions. Its
+  * Scale notes: the log scan and the add/remove replay are DataFrame
+  * programs — the replay is one hash aggregation on the file path, which
+  * parallelizes over executors for logs with millions of actions. Its
   * result, the active manifest, is collected to the driver (as Delta's own
-  * readers do) and data reads go through a [[ManifestFileIndex]] over it:
-  * the table directory is never listed for a read, and removed or orphan
-  * files are never opened.
+  * readers do). Data reads go through a [[ManifestFileIndex]] over it, and
+  * every file-set decision (storage, orphans, OPTIMIZE selection, RESTORE,
+  * VACUUM candidates) is plain Scala over it and the [[dataFiles]] listing,
+  * keyed by the table-relative path both spell the same way: the table
+  * directory is never listed for a read, and removed or orphan files are
+  * never opened.
   * Checkpoint parquet files ARE supported: `readActions` consults
   * `_last_checkpoint`, loads the checkpoint parquet (field-aligned to
   * `actionSchema`), and unions it with ALL surviving JSON commits — safe
@@ -116,9 +118,8 @@ object DeltaLog {
   def readActions(spark: SparkSession, tablePath: String): DataFrame = {
     // _metadata.file_name (not input_file_name(), which Spark's PreReadCheck
     // forbids in multi-source plans such as the checkpoint union below)
-    val jsonActions = readJsonActions(spark, tablePath)
     lastCheckpoint(spark, tablePath) match {
-      case None => jsonActions
+      case None => readJsonActions(spark, tablePath)
       case Some((ckptV, parts)) =>
         val files = parts match {
           case None => Seq(f"$ckptV%020d.checkpoint.parquet")
@@ -152,10 +153,12 @@ object DeltaLog {
         // those after it: replay is per-path last-add-wins, so checkpoint
         // rows (at ckptV) and older JSON adds coexist harmlessly, while the
         // older commitInfo rows keep history metrics and pre-checkpoint
-        // time travel working for as long as those JSONs are retained.
-        ckpt.select(aligned.toIndexedSeq: _*)
-          .withColumn("version", lit(ckptV))
-          .unionByName(jsonActions)
+        // time travel working for as long as those JSONs are retained. Once
+        // every JSON commit has been cleaned up, the checkpoint alone is the
+        // table's state.
+        val state = ckpt.select(aligned.toIndexedSeq: _*).withColumn("version", lit(ckptV))
+        if (Option(fs.globStatus(new Path(logDir(tablePath), "*.json"))).forall(_.isEmpty)) state
+        else state.unionByName(readJsonActions(spark, tablePath))
     }
   }
 
@@ -355,37 +358,21 @@ object DeltaLog {
   }
 
   /** Fully-qualified form of `tablePath` on its filesystem (absolute, with
-    * scheme) — relative paths are resolved against the FS working directory
-    * so manifest-derived absolute paths compare correctly against
-    * folder-listing paths (which Hadoop always returns fully qualified). */
+    * scheme) — relative paths are resolved against the FS working
+    * directory. */
   def qualifiedPath(spark: SparkSession, tablePath: String): String = {
     val p = new Path(tablePath)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(p).toString
   }
-
-  /** Join key for cross-frame path comparison: strips only the SCHEME but
-    * keeps the URI authority (bucket / namenode), so files from different
-    * stores that happen to share a path never collide
-    * (`s3a://bucketA/x` → `//bucketA/x` ≠ `//bucketB/x`), while the usual
-    * same-store spellings still normalize together
-    * (`file:///x`, `file:/x`, `/x` all → `/x`). Use this when either side
-    * of a path join may come from an arbitrary caller-supplied frame (e.g.
-    * orphan detection). */
-  def pathKey(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.\\-]*:///", "/"),
-        "^[a-zA-Z][a-zA-Z0-9+.\\-]*://", "//"),
-      "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/", "/")
 }
 
 /** Replayed view of a Delta table at its latest version.
   *
   * `actions` is the cached all-versions action frame. The active-file
-  * manifest is replayed from it once and held on the driver, and every data
-  * read is one parquet scan of exactly those files ([[scan]]); everything
-  * else is a lazy DataFrame over `actions` or the manifest. The driver also
+  * manifest is replayed from it once and held on the driver ([[manifest]]),
+  * and every data read is one parquet scan of exactly those files
+  * ([[scan]]); history is a lazy DataFrame over `actions`. The driver also
   * holds the one-row [[latest]] lookup (version, schema, partition columns,
   * protocol).
   */
@@ -452,29 +439,31 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
     * per-file statistics JSON, whose `numRecords` feeds [[partitionCounts]];
     * null or empty in logs whose writers recorded none).
     *
-    * Replayed once per snapshot (two hash aggregations plus a join on
-    * `path`) and collected: a scan must name its files on the driver, where
-    * every analysis and append already lists the whole table folder
-    * ([[DeltaLog.dataFiles]]), and the active files are a subset of it. The
-    * frame is a local relation over those rows, so it needs no cache. */
-  lazy val activeFiles: DataFrame = {
-    val adds = actions
-      .where($"add".isNotNull)
-      .groupBy($"add.path".as("path"))
-      .agg(max_by(struct($"add.size", $"add.partitionValues", $"add.modificationTime", $"add.stats", $"version"), $"version").as("a"))
-      .select($"path", $"a.size", $"a.partitionValues", $"a.modificationTime", $"a.stats", $"a.version".as("addVersion"))
-    val removes = actions
-      .where($"remove".isNotNull)
-      .groupBy($"remove.path".as("path"))
-      .agg(max($"version").as("removeVersion"))
-    val replayed = adds
-      .join(removes, Seq("path"), "left")
-      .where($"removeVersion".isNull || $"addVersion" > $"removeVersion")
-      .drop("removeVersion", "addVersion")
-    spark.createDataFrame(replayed.collect().toSeq.asJava, replayed.schema)
-  }
+    * Replayed once per snapshot (one hash aggregation on the path of the
+    * add or remove) and collected into [[manifest]]: a scan must name its
+    * files on the driver, where every analysis and append already lists the
+    * whole table folder ([[DeltaLog.dataFiles]]), and the active files are a
+    * subset of it. The frame is a local relation over those rows, so it
+    * needs no cache. */
+  lazy val activeFiles: DataFrame =
+    spark.createDataFrame(manifest.toSeq.asJava, replayed.schema)
 
-  private lazy val manifest: Array[Row] = activeFiles.collect()
+  private lazy val replayed: DataFrame = actions
+    .where($"add".isNotNull || $"remove".isNotNull)
+    .groupBy(coalesce($"add.path", $"remove.path").as("path"))
+    .agg(
+      max_by(struct($"add.size", $"add.partitionValues", $"add.modificationTime", $"add.stats", $"version"),
+        when($"add".isNotNull, $"version")).as("a"),
+      max(when($"remove".isNotNull, $"version")).as("removeVersion"))
+    .where($"a".isNotNull && ($"removeVersion".isNull || $"a.version" > $"removeVersion"))
+    .select($"path", $"a.size", $"a.partitionValues", $"a.modificationTime", $"a.stats")
+
+  /** [[activeFiles]]' rows, held on the driver. */
+  private[graft] lazy val manifest: Array[Row] = replayed.collect()
+
+  /** Active table-relative path → size, from [[manifest]]. */
+  private[graft] lazy val activeSizes: Map[String, Long] =
+    manifest.map(f => f.getString(0) -> f.getLong(1)).toMap
 
   /** Per-partition record counts from the log alone, shaped like
     * [[graft.operators.SkewAnalyzer.partitionCounts]] over [[data]]: the
@@ -502,24 +491,12 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
     spark.createDataFrame(kept.map { case (k, n) => Row.fromSeq(k :+ n) }.asJava, schema)
   }
 
-  /** Fails, naming them, when active files are missing from `onDisk`, the
-    * table-relative paths of a [[DeltaLog.dataFiles]] listing of this
-    * table: with counts taken from the log, no scan would notice. */
-  private[graft] def requireActiveFilesIn(onDisk: collection.Set[String]): Unit = {
-    val missing = manifest.map(_.getString(0)).filterNot(onDisk).sorted
-    if (missing.nonEmpty) throw new java.io.FileNotFoundException(
-      s"$tablePath: ${missing.length} active file(s) named by the log are " +
-        s"missing from disk, e.g. ${missing.take(3).mkString(", ")}")
-  }
-
-  /** Fully-qualified table root (scheme + absolute path) — the base for any
-    * path that will be compared against filesystem listings, which Hadoop
-    * always returns fully qualified. */
+  /** Fully-qualified table root (scheme + absolute path). */
   lazy val qualifiedTablePath: String = DeltaLog.qualifiedPath(spark, tablePath)
 
-  /** Absolute filesystem paths of active data files, fully qualified so they
-    * join correctly against folder listings regardless of how `tablePath`
-    * was spelled (relative, `file:`-schemed, hdfs/s3a, ...). */
+  /** (path, size) of the active data files, paths fully qualified under
+    * [[qualifiedTablePath]] — the spelling of
+    * [[graft.operators.StorageAnalyzer.folderFiles]]. */
   lazy val activeFilePaths: DataFrame =
     activeFiles.select(
       concat(lit(qualifiedTablePath.stripSuffix("/") + "/"), $"path").as("path"),

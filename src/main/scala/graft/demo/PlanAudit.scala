@@ -32,23 +32,18 @@ object PlanAudit {
         snap.unpersist()
         graft.deltalog.DeltaFixtureWriter.drop(path)
       case "optimize" =>
-        // the OPTIMIZE path: selection = manifest filter + agg + join;
-        // rewrite = one manifest-index scan joined to the chosen files on
-        // `__file`
-        println(s"########## optimize (Maintenance.optimizeSelection + rewrite join)")
+        // the OPTIMIZE rewrite: one manifest-index scan of exactly the
+        // chosen files (selected on the driver), binned and shuffled by
+        // (partition cols, bin)
+        println(s"########## optimize (Maintenance.optimizeRewrite)")
         val path = java.nio.file.Files.createTempDirectory("graft_planaudit_opt").toString
         val li = spark.read.parquet(s"$dir/lineitem.parquet")
           .select("l_orderkey", "l_quantity", "l_returnflag")
         graft.deltalog.DeltaFixtureWriter.write(li, path, "overwrite", Seq("l_returnflag"))
         graft.deltalog.DeltaFixtureWriter.write(li.limit(500), path, "append", Seq("l_returnflag"))
         val snap = graft.deltalog.DeltaLog.snapshot(spark, path)
-        val chosen = graft.operators.Maintenance.optimizeSelection(
-          snap, 128L * 1024 * 1024, 64L * 1024 * 1024)
-        chosen.explain("formatted")
-        snap.dataWithFile.foreach(rows =>
-          rows.join(chosen.select(org.apache.spark.sql.functions.col("path").as("__file"),
-              org.apache.spark.sql.functions.col("bin")), "__file")
-            .explain("formatted"))
+        graft.operators.Maintenance.optimizeRewrite(snap, 128L * 1024 * 1024, 64L * 1024 * 1024)
+          .foreach(_._1.explain("formatted"))
         snap.unpersist()
         graft.deltalog.DeltaFixtureWriter.drop(path)
       case "changes" =>

@@ -10,10 +10,10 @@ import graft.health._
   * (SURVEY.md §3): one cached log snapshot with its driver-held manifest,
   * then three passes that each derive their facts from one source — the
   * history aggregate, the manifest's per-file `numRecords` summed per
-  * partition on the driver (record count and skew), and one join of the
-  * folder listing with the manifest (storage) — feeding the pure-Scala
-  * health calculus. No data file is opened: a file whose log stats lack a
-  * row count is counted from its parquet footer.
+  * partition on the driver (record count and skew), and the folder listing
+  * set against the manifest in plain Scala (storage) — feeding the
+  * pure-Scala health calculus. No data file is opened: a file whose log
+  * stats lack a row count is counted from its parquet footer.
   *
   * Implements the *Python* backend's measured semantics (the honest fork of
   * H6-H10 — delta_python_analyzer.py:224-275) since our log layer has full
@@ -81,28 +81,22 @@ object HealthAnalyzer {
     locally {
       // history pass (A5/A6)
       val ops = HistoryAnalyzer.opCounts(snap.history).first()
-      // one folder listing serves the storage pass and the check that
-      // every active file exists: no data scan is left to notice one gone
-      val listing = DeltaLog.dataFiles(spark, tablePath)
-      snap.requireActiveFilesIn(listing.keySet)
+      // storage pass (A8-A13, J1): one folder listing against the manifest,
+      // which also checks that every active file exists — with counts taken
+      // from the log, no data scan is left to notice one gone
+      val StorageStats(tableSize, folderSize, dataFiles, totalFiles, avgFileSize, smallFiles,
+          orphanPaths, missing) = StorageAnalyzer.storage(DeltaLog.dataFiles(spark, tablePath),
+        snap.activeSizes, thresholds.smallFileSizeMb.map(_ * 1024 * 1024))
+      if (missing.nonEmpty) throw new java.io.FileNotFoundException(
+        s"$tablePath: ${missing.length} active file(s) named by the log are " +
+          s"missing from disk, e.g. ${missing.take(3).mkString(", ")}")
+      val orphans = orphanPaths.size.toLong
       // counts pass (A1-A4, A7): the log-derived per-partition counts feed
       // the same stats aggregate the contract queries use, whose one row
       // yields the record count and both skew methods, unlike the
       // reference's double materialization (delta_python_analyzer.py:192-193)
       val (recordCount, skew) = SkewAnalyzer.measureCounts(snap.partitionCounts,
         snap.partitionColumns, thresholds.skewThreshold)
-      // storage pass (A8-A13, J1)
-      val folder = StorageAnalyzer.folderFiles(spark, tablePath, listing)
-      val storage = StorageAnalyzer.storageStats(folder, snap.activeFilePaths,
-        thresholds.smallFileSizeMb.map(_ * 1024 * 1024)).first()
-
-      val tableSize = storage.getAs[Long]("table_size_bytes")
-      val folderSize = storage.getAs[Long]("folder_size_bytes")
-      val dataFiles = storage.getAs[Long]("data_file_count")
-      val totalFiles = storage.getAs[Long]("total_file_count")
-      val orphans = storage.getAs[Long]("orphan_files_count")
-      val avgFileSize = storage.getAs[Long]("avg_file_size_bytes")
-      val smallFiles = storage.getAs[Long]("small_files_count")
 
       // H6/H7/H8: measured ratio semantics (delta_python_analyzer.py:231-243)
       val sizeRatio = if (folderSize > 0) tableSize.toDouble / folderSize else 1.0

@@ -20,10 +20,10 @@ import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
   */
 object Maintenance {
 
-  /** OPTIMIZE (S10 as an engine capability) — DISTRIBUTED small-file
-    * compaction, the scale-path counterpart of the fixture compactor
+  /** OPTIMIZE (S10 as an engine capability) — small-file compaction, the
+    * scale-path counterpart of the fixture compactor
     * ([[graft.deltalog.DeltaFixtureWriter.compact]], which rewrites every
-    * active file and collects the active paths).
+    * active file).
     *
     * Semantics: per Hive partition, active files smaller than
     * `smallFileBytes` (default targetFileBytes/2) are bin-packed into
@@ -31,28 +31,22 @@ object Maintenance {
     * are left untouched (nothing to gain), as are files already at target
     * size — real OPTIMIZE never rewrites the whole table.
     *
-    * Scale shape:
-    *  - selection: a filter + aggregation over the active-file manifest
-    *    (the snapshot's driver-held rows as a local frame; the partition
-    *    key is the sorted-entry JSON of `partitionValues`, so map internal
-    *    order can't split a partition);
-    *  - bin assignment: ceil(partitionSmallBytes / target) bins per
-    *    partition, files hashed to bins — a join of the manifest against
-    *    per-partition bin counts, all distributed. Bins are size CEILINGS,
-    *    approximately honored: two bins that hash-collide into one shuffle
-    *    task (or get AQE-coalesced) merge into one larger output — benign
-    *    over-packing, never a correctness issue;
-    *  - rewrite: ONE scan of the active rows (the snapshot's manifest
-    *    index) joined to the selection on `__file`, shuffled by (partition
-    *    cols, bin) so each task writes whole output files, appended with
-    *    partitionBy;
+    * Shape:
+    *  - selection ([[optimizeRewrite]]): plain Scala over the snapshot's
+    *    driver-held manifest, grouped by `partitionValues`;
+    *    ceil(partitionSmallBytes / target) bins per partition;
+    *  - rewrite: ONE scan of exactly the chosen files (the snapshot's
+    *    manifest index), each row binned by a hash of its file, shuffled by
+    *    (partition cols, bin) so each task writes whole output files,
+    *    appended with partitionBy. Bins are size CEILINGS, approximately
+    *    honored: two bins that hash-collide into one shuffle task (or get
+    *    AQE-coalesced) merge into one larger output — benign over-packing,
+    *    never a correctness issue;
     *  - discovery: the driver-side data-file listing
     *    ([[graft.deltalog.DeltaLog.dataFiles]]) before and after the write,
     *    diffed in Scala ([[DeltaFixtureWriter.appendFiles]]) — the new
     *    entries are one per output bin;
-    *  - commit: removes stream through `toLocalIterator` into the
-    *    line-streaming commit writer, which writes each action line as it
-    *    arrives.
+    *  - commit: the chosen paths, sorted on the driver, are the removes.
     *
     * Single-writer assumption, like the commit writer (no
     * concurrent-commit arbitration — that is a transaction-protocol
@@ -60,39 +54,46 @@ object Maintenance {
   def optimize(spark: SparkSession, tablePath: String,
                targetFileBytes: Long = 128L * 1024 * 1024,
                smallFileBytes: Long = 0L): Unit = {
-    import spark.implicits._
     val smallThr = if (smallFileBytes > 0L) smallFileBytes else targetFileBytes / 2
     val snap = DeltaLog.snapshot(spark, tablePath)
-    val partCols = snap.partitionColumns
-    def noop(): Unit =
-      DeltaFixtureWriter.logCommit(tablePath, snap.version + 1, "OPTIMIZE",
-        Seq("predicate" -> "[]", "targetFileBytes" -> targetFileBytes.toString))
-    try {
-      snap.dataWithFile match {
-        case None => noop()
-        case Some(rows) =>
-          val chosen = optimizeSelection(snap, targetFileBytes, smallThr).cache()
-          try {
-            if (chosen.isEmpty) noop()
-            else {
-              val toRewrite = rows
-                .join(chosen.select(col("path").as("__file"), col("bin")), "__file")
-              val shuffleKeys = partCols.map(col) :+ col("bin")
-              val added = DeltaFixtureWriter.appendFiles(
-                toRewrite.repartition(shuffleKeys: _*).drop("__file", "bin"),
-                snap.qualifiedTablePath, partCols)
-              DeltaFixtureWriter.writeCommitStream(tablePath, snap.version + 1,
-                "OPTIMIZE",
-                Seq("predicate" -> "[]",
-                    "targetFileBytes" -> targetFileBytes.toString),
-                adds = added.iterator,
-                removes = chosen.select(col("path")).orderBy(col("path"))
-                  .as[String].toLocalIterator().asScala,
-                partitionBy = partCols)
-            }
-          } finally { chosen.unpersist(); () }
-      }
+    val params = Seq("predicate" -> "[]", "targetFileBytes" -> targetFileBytes.toString)
+    try optimizeRewrite(snap, targetFileBytes, smallThr) match {
+      case None =>
+        DeltaFixtureWriter.logCommit(tablePath, snap.version + 1, "OPTIMIZE", params)
+      case Some((rows, removes)) =>
+        val added = DeltaFixtureWriter.appendFiles(rows, snap.qualifiedTablePath,
+          snap.partitionColumns)
+        DeltaFixtureWriter.writeCommitStream(tablePath, snap.version + 1, "OPTIMIZE",
+          params, adds = added.iterator, removes = removes.iterator,
+          partitionBy = snap.partitionColumns)
     } finally snap.unpersist()
+  }
+
+  /** The rewrite of [[optimize]], None when no partition has two small
+    * files: the rows of every file under `smallThr` in a partition with at
+    * least two of them, repartitioned by (partition cols, bin) with
+    * `bin = pmod(xxhash64(__file), n_bins)`, and those files' paths,
+    * sorted. Exposed separately so PlanAudit can print its plan. */
+  private[graft] def optimizeRewrite(snap: graft.deltalog.DeltaSnapshot,
+                                     targetFileBytes: Long,
+                                     smallThr: Long): Option[(DataFrame, Seq[String])] = {
+    val small = snap.manifest.toSeq.filter(_.getLong(1) < smallThr)
+    val nBins: Map[String, Int] = small
+      .groupBy(f => Option(f.getAs[collection.Map[String, String]]("partitionValues"))
+        .getOrElse(Map.empty[String, String]))
+      .values.filter(_.size >= 2)
+      .flatMap { files =>
+        val n = math.max(1L, math.ceil(files.map(_.getLong(1)).sum.toDouble / targetFileBytes).toLong)
+        files.map(_.getString(0) -> n.toInt)
+      }.toMap
+    Option.when(nBins.nonEmpty) {
+      val chosen = nBins.keys.toSeq.sorted
+      val bin = pmod(xxhash64(col("__file")), element_at(typedLit(nBins), col("__file")))
+      val rows = snap.dataWithFileIn(chosen).withColumn("bin", bin.cast("int"))
+        .repartition(snap.partitionColumns.map(col) :+ col("bin"): _*)
+        .drop("__file", "bin")
+      (rows, chosen)
+    }
   }
 
   /** OPTIMIZE ZORDER BY — multi-dimensional clustering rewrite (the Delta
@@ -114,18 +115,18 @@ object Maintenance {
     * spread rows evenly whatever the value distribution at the cost of one
     * extra sketch pass. Numeric/date/timestamp cluster columns only.
     *
-    * Scale shape: one aggregate for min/max, one scan of the active rows,
+    * Shape: one aggregate for min/max, one scan of the active rows,
     * `repartitionByRange` on (hive partition cols, z) — distributed
     * boundary sampling, no global sort on a single reducer — with
     * `sortWithinPartitions` so every output file covers a contiguous
     * Z-range. Bit interleave is a constant-shift expression tree inside
     * whole-stage codegen. Commit flow mirrors [[optimize]]: the listings
     * before and after the write are diffed for the adds, and the removes
-    * stream from the manifest. Single-writer assumption as everywhere. */
+    * are the driver-held manifest's paths, sorted. Single-writer assumption
+    * as everywhere. */
   def zorder(spark: SparkSession, tablePath: String, zorderCols: Seq[String],
              targetFileBytes: Long = 128L * 1024 * 1024,
              rankBased: Boolean = false): Unit = {
-    import spark.implicits._
     require(zorderCols.nonEmpty && zorderCols.size <= 3,
       s"zorder takes 1-3 columns, got $zorderCols")
     val snap = DeltaLog.snapshot(spark, tablePath)
@@ -141,10 +142,8 @@ object Maintenance {
           DeltaFixtureWriter.logCommit(tablePath, snap.version + 1, "OPTIMIZE",
             zParams)
         case Some(rows) =>
-          // one job: global min/max per cluster column + total active bytes
           val nOut = math.max(1L, math.ceil(
-            snap.activeFiles.agg(coalesce(sum($"size"), lit(0L)))
-              .as[Long].first().toDouble / targetFileBytes).toLong).toInt
+            snap.activeSizes.values.sum.toDouble / targetFileBytes).toLong).toInt
           val z =
             if (rankBased) {
               // equi-depth cells: 255 approx-quantile boundaries per column
@@ -181,8 +180,7 @@ object Maintenance {
           DeltaFixtureWriter.writeCommitStream(tablePath, snap.version + 1,
             "OPTIMIZE", zParams,
             adds = added.iterator,
-            removes = snap.activeFiles.select(col("path"))
-              .orderBy(col("path")).as[String].toLocalIterator().asScala,
+            removes = snap.activeSizes.keys.toSeq.sorted.iterator,
             partitionBy = partCols)
       }
     } finally snap.unpersist()
@@ -226,45 +224,25 @@ object Maintenance {
     terms.reduce(_ bitwiseOR _)
   }
 
-  /** The file-selection + bin-assignment frame of [[optimize]]: (path,
-    * bin) for every small file in a ≥2-small-file partition. Exposed
-    * separately so PlanAudit can print its plan (manifest aggregations + a
-    * join, end to end). */
-  private[graft] def optimizeSelection(snap: graft.deltalog.DeltaSnapshot,
-                                       targetFileBytes: Long,
-                                       smallThr: Long): DataFrame = {
-    val pkey = to_json(array_sort(map_entries(col("partitionValues"))))
-    val small = snap.activeFiles
-      .where(col("size") < smallThr)
-      .select(col("path"), col("size"), pkey.as("pkey"))
-    val bins = small.groupBy(col("pkey"))
-      .agg(count(lit(1)).as("n"), sum(col("size")).as("bytes"))
-      .where(col("n") >= 2)
-      .select(col("pkey"),
-        greatest(lit(1L), ceil(col("bytes").cast("double") / targetFileBytes))
-          .cast("int").as("n_bins"))
-    small.join(bins, "pkey")
-      .select(col("path"),
-        pmod(xxhash64(col("path")), col("n_bins")).cast("int").as("bin"))
-  }
-
   /** VACUUM: delete on-disk data files that are not in the active manifest
     * and are older than `retainMs` (by filesystem modification time).
     * Returns the deleted-file frame (path, size). `dryRun` lists without
     * deleting. Logs a VACUUM commit like deltalake does.
     *
-    * The folder listing is the driver-side walk of
-    * [[StorageAnalyzer.folderFiles]]; the per-file stat + delete run inside
-    * `mapPartitions` on the executors, and only the (path, size) result
-    * rows come back to the driver. */
+    * The candidates are the orphan paths of [[StorageAnalyzer.storage]] over
+    * the driver-side folder listing and the manifest; the per-file stat +
+    * delete run inside `mapPartitions` on the executors, and only the
+    * (path, size) result rows come back to the driver. */
   def vacuum(spark: SparkSession, tablePath: String,
              retainMs: Long = 7L * 24 * 3600 * 1000,
              dryRun: Boolean = false): DataFrame = {
     import spark.implicits._
     val snap = DeltaLog.snapshot(spark, tablePath)
     try {
-      val folder = StorageAnalyzer.folderFiles(spark, tablePath)
-      val orphans = StorageAnalyzer.orphanFiles(folder, snap.activeFilePaths)
+      val listing = DeltaLog.dataFiles(spark, tablePath)
+      val dir = new Path(snap.qualifiedTablePath).toUri.getPath.stripSuffix("/")
+      val orphans = StorageAnalyzer.storage(listing, snap.activeSizes, None).orphans
+        .map(rel => (s"$dir/$rel", listing(rel)))
       val cutoff = System.currentTimeMillis() - retainMs
       val conf = new org.apache.spark.util.SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration)
@@ -273,8 +251,7 @@ object Maintenance {
       // lambda, sees exists()=false for files its first attempt already
       // removed, and a filter would silently drop those rows, undercounting
       // numFilesDeleted in the VACUUM commit
-      val processed: Array[(String, Long, String)] = orphans
-        .select(col("file_key"), col("size")).as[(String, Long)]
+      val processed: Array[(String, Long, String)] = orphans.toDS()
         .mapPartitions { it =>
           it.map { case (p, sz) =>
             val path = new Path(p)
@@ -308,9 +285,9 @@ object Maintenance {
     * snapshot's (remove every currently-active file absent at the target,
     * re-add every target file not currently active). No data files are
     * rewritten or copied — like OPTIMIZE's commit, only the log moves —
-    * so restoring a 100-TB table costs two manifest anti-joins plus one
-    * streamed commit. Fails fast (before writing anything) if a file to
-    * re-add has been physically removed by [[vacuum]] — Delta's own
+    * so restoring costs two set differences of the driver-held manifests
+    * plus one streamed commit. Fails fast (before writing anything) if a
+    * file to re-add has been physically removed by [[vacuum]] — Delta's own
     * restore-after-vacuum failure contract. Restoring to the current
     * version records a no-op RESTORE commit. A restore across a SCHEMA
     * change also rolls the metaData authority back to the target
@@ -321,7 +298,6 @@ object Maintenance {
     * delta-lake-health engine itself has no restore, so this extends the
     * maintenance family alongside MERGE/VACUUM/ZORDER/CDF). */
   def restore(spark: SparkSession, tablePath: String, toVersion: Long): Unit = {
-    import spark.implicits._
     val cur = DeltaLog.snapshot(spark, tablePath)
     try {
       require(toVersion >= 0 && toVersion <= cur.version,
@@ -334,36 +310,24 @@ object Maintenance {
       }
       val tgt = DeltaLog.snapshotAt(spark, tablePath, toVersion)
       try {
-        val curPaths = cur.activeFiles.select(col("path"))
-        val tgtFiles = tgt.activeFiles.select(col("path"), col("size"))
-        val adds = tgtFiles.join(curPaths, Seq("path"), "left_anti").cache()
-        val removes = curPaths
-          .join(tgtFiles.select(col("path")), Seq("path"), "left_anti").cache()
-        try {
-          val nAdds = adds.count()
-          val nRemoves = removes.count()
-          // vacuum check: every file to re-add must still exist on disk
-          val onDisk = DeltaLog.dataFiles(spark, cur.qualifiedTablePath)
-            .keys.toSeq.toDF("path")
-          val missing = adds.select(col("path"))
-            .join(onDisk, Seq("path"), "left_anti")
-            .limit(5).as[String].collect()
-          require(missing.isEmpty,
-            s"restore to $toVersion impossible: ${missing.length}+ target " +
-              s"files no longer on disk (vacuumed?), e.g. ${missing.headOption.getOrElse("")}")
-          DeltaFixtureWriter.writeCommitStream(tablePath, cur.version + 1,
-            "RESTORE",
-            Seq("version" -> toVersion.toString,
-              "numRestoredFiles" -> nAdds.toString,
-              "numRemovedFiles" -> nRemoves.toString),
-            adds = adds.orderBy(col("path")).as[(String, Long)]
-              .toLocalIterator().asScala,
-            removes = removes.orderBy(col("path")).as[String]
-              .toLocalIterator().asScala,
-            partitionBy = tgt.partitionColumns,
-            schema = Option.when(cur.tableSchema != tgt.tableSchema)(
-              tgt.tableSchema.getOrElse(new StructType())))
-        } finally { adds.unpersist(); removes.unpersist(); () }
+        val adds = (tgt.activeSizes -- cur.activeSizes.keys).toSeq.sorted
+        val removes = (cur.activeSizes.keySet -- tgt.activeSizes.keys).toSeq.sorted
+        // vacuum check: every file to re-add must still exist on disk
+        val onDisk = DeltaLog.dataFiles(spark, cur.qualifiedTablePath)
+        val missing = adds.map(_._1).filterNot(onDisk.contains)
+        require(missing.isEmpty,
+          s"restore to $toVersion impossible: ${missing.length} target " +
+            s"files no longer on disk (vacuumed?), e.g. ${missing.head}")
+        DeltaFixtureWriter.writeCommitStream(tablePath, cur.version + 1,
+          "RESTORE",
+          Seq("version" -> toVersion.toString,
+            "numRestoredFiles" -> adds.length.toString,
+            "numRemovedFiles" -> removes.length.toString),
+          adds = adds.iterator,
+          removes = removes.iterator,
+          partitionBy = tgt.partitionColumns,
+          schema = Option.when(cur.tableSchema != tgt.tableSchema)(
+            tgt.tableSchema.getOrElse(new StructType())))
       } finally tgt.unpersist()
     } finally cur.unpersist()
   }
@@ -405,7 +369,7 @@ object Maintenance {
       val part = fs.listStatus(tmp).map(_.getPath)
         .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
         .getOrElse(sys.error(s"checkpoint write produced no part file under $tmp"))
-      val ckptRows = snap.activeFiles.count() + meta.size + 1 // adds + metaData (0|1) + protocol
+      val ckptRows = snap.manifest.length + meta.size + 1 // adds + metaData (0|1) + protocol
       val dest = new Path(dir, f"$v%020d.checkpoint.parquet")
       if (fs.exists(dest)) fs.delete(dest, true)
       require(fs.rename(part, dest), s"checkpoint rename failed: $part -> $dest")

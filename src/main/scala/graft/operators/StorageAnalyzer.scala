@@ -6,89 +6,70 @@ import org.apache.spark.sql.functions._
 import graft.deltalog.DeltaLog
 
 /** Storage-health analytics (delta_python_analyzer.py:90-133,224-275):
-  * folder listing, one folder ⋈ manifest storage aggregate, small-file and
-  * orphan-file detection.
+  * folder listing, the storage numbers, small-file and orphan-file
+  * detection.
   *
   * The folder listing (S6) is the Delta layer's one driver-side walk,
-  * [[graft.deltalog.DeltaLog.dataFiles]]; the resulting frame is a local
-  * relation, and every subsequent operation (aggregation, anti-join) is a
-  * Spark plan. The orphan check (J1) is a left-anti join on the file path,
-  * mirroring the reference's Python set difference over `os.path.basename`
-  * (delta_python_analyzer.py:125-126,264-266) without ever building
-  * driver-side sets.
+  * [[graft.deltalog.DeltaLog.dataFiles]], and the active manifest is held on
+  * the driver too, both keyed by the table-relative path `add.path` spells.
+  * [[storage]] is plain Scala over the two maps: the orphan check (J1) is
+  * the reference's Python set difference (delta_python_analyzer.py:
+  * 125-126,264-266) on full relative paths rather than basenames, since
+  * Spark-written tables repeat basenames across partition directories.
   */
 object StorageAnalyzer {
 
   /** S6: recursive `*.parquet` listing of the table dir, `_delta_log`
     * excluded → DataFrame(path, size), paths fully qualified. */
-  def folderFiles(spark: SparkSession, tablePath: String): DataFrame =
-    folderFiles(spark, tablePath, DeltaLog.dataFiles(spark, tablePath))
-
-  /** [[folderFiles]] over a listing the caller already holds. */
-  def folderFiles(spark: SparkSession, tablePath: String,
-                  listing: Map[String, Long]): DataFrame = {
+  def folderFiles(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
     val root = DeltaLog.qualifiedPath(spark, tablePath).stripSuffix("/") + "/"
-    listing.toSeq
+    DeltaLog.dataFiles(spark, tablePath).toSeq
       .map { case (p, size) => (root + p, size) }
       .toDF("path", "size")
   }
 
-  /** J1: files on disk not referenced by the manifest — a left-anti join
-    * on the scheme-stripped, AUTHORITY-KEEPING full path
-    * ([[DeltaLog.pathKey]]): both frames are caller-supplied,
-    * so equal paths on different buckets/namenodes must not silently match.
-    * (The reference differences basename *sets*, delta_python_analyzer.py:
-    * 125-126,264-266; full paths are strictly safer since Spark-written
-    * tables repeat basenames across partition directories.)
+  /** The storage pass (A8-A13, J1) over a folder `listing` and the active
+    * `manifest`, each path → size: the seven storage numbers, the orphan
+    * paths (listed, not active) and the active paths missing from the
+    * listing, both sorted. Manifest-side numbers count every active file,
+    * listed or not; folder-side numbers count listed files.
     *
-    * No broadcast hint on the manifest side: a 100-TB Delta table's active
-    * manifest runs to millions of files, and a FORCED broadcast of it is
-    * the same unbounded-table hazard as the round-11 BM25/customer fixes —
-    * AQE broadcasts at runtime whenever the measured manifest fits (every
-    * test sf), and degrades to a manifest-sized shuffle join, never an
-    * OOM, when it doesn't. */
-  def orphanFiles(folder: DataFrame, manifest: DataFrame): DataFrame = {
-    val f = folder.select(
-      DeltaLog.pathKey(col("path")).as("file_key"), col("size"))
-    val m = manifest.select(
-      DeltaLog.pathKey(col("path")).as("file_key"))
-    f.join(m, Seq("file_key"), "left_anti")
+    * `smallFileThresholdBytes = None` → the manifest's mean file size is the
+    * threshold (delta_python_analyzer.py:238-241), compared as a double;
+    * `avgFileSizeBytes` is that mean truncated. */
+  def storage(listing: collection.Map[String, Long], manifest: collection.Map[String, Long],
+              smallFileThresholdBytes: Option[Double]): StorageStats = {
+    val tableSize = manifest.values.sum
+    val mean = if (manifest.isEmpty) 0.0 else tableSize.toDouble / manifest.size
+    val thr = smallFileThresholdBytes.getOrElse(mean)
+    StorageStats(
+      tableSizeBytes = tableSize,
+      folderSizeBytes = listing.values.sum,
+      dataFileCount = manifest.size,
+      totalFileCount = listing.size,
+      avgFileSizeBytes = mean.toLong,
+      smallFilesCount = manifest.values.count(_ < thr),
+      orphans = listing.keys.filterNot(manifest.contains).toSeq.sorted,
+      missing = manifest.keys.filterNot(listing.contains).toSeq.sorted)
   }
 
-  /** Storage aggregate in one pass: the folder listing FULL-OUTER-joined
-    * with the manifest on [[DeltaLog.pathKey]] (each side lists a file once),
-    * then one aggregate. Returns a one-row frame:
-    * (table_size_bytes, folder_size_bytes, data_file_count, total_file_count,
-    *  orphan_files_count, avg_file_size_bytes, small_files_count).
-    * Manifest-side columns count manifest rows, folder-side columns count
-    * listed files, and an orphan is a listed file with no manifest row (the
-    * [[orphanFiles]] anti-join, counted in the same pass).
-    *
-    * `smallFileThresholdBytes = None` → use the manifest's average file size
-    * as the threshold (delta_python_analyzer.py:238-241), a scalar subquery
-    * over the same joined frame, matching the reference's two-pass math.
-    */
+  /** [[storage]] over two (path, size) frames — local relations in every
+    * caller, so collecting them runs no job — as a one-row frame:
+    * (table_size_bytes, folder_size_bytes, data_file_count,
+    *  total_file_count, orphan_files_count, avg_file_size_bytes,
+    *  small_files_count). */
   def storageStats(folder: DataFrame, manifest: DataFrame,
                    smallFileThresholdBytes: Option[Double]): DataFrame = {
-    val joined = folder
-      .select(DeltaLog.pathKey(col("path")).as("file_key"),
-        col("size").as("folder_size"), lit(1L).as("listed"))
-      .join(manifest.select(DeltaLog.pathKey(col("path")).as("file_key"),
-        col("size").as("table_size"), lit(1L).as("active")),
-        Seq("file_key"), "full_outer")
-    val avgSize = coalesce(avg(col("table_size")), lit(0.0))
-    val thr = smallFileThresholdBytes.map(lit)
-      .getOrElse(joined.agg(avgSize).scalar())
-    joined.agg(
-      coalesce(sum(col("table_size")), lit(0L)).as("table_size_bytes"),
-      coalesce(sum(col("folder_size")), lit(0L)).as("folder_size_bytes"),
-      count(col("active")).as("data_file_count"),
-      count(col("listed")).as("total_file_count"),
-      count(when(col("active").isNull, col("listed"))).as("orphan_files_count"),
-      avgSize.cast("long").as("avg_file_size_bytes"),
-      count(when(col("active").isNotNull && col("table_size") < thr, 1L))
-        .as("small_files_count"))
+    import folder.sparkSession.implicits._
+    def sizes(df: DataFrame) =
+      df.select(col("path"), col("size")).as[(String, Long)].collect().toMap
+    val s = storage(sizes(folder), sizes(manifest), smallFileThresholdBytes)
+    Seq((s.tableSizeBytes, s.folderSizeBytes, s.dataFileCount, s.totalFileCount,
+      s.orphanFilesCount, s.avgFileSizeBytes, s.smallFilesCount))
+      .toDF("table_size_bytes", "folder_size_bytes", "data_file_count",
+        "total_file_count", "orphan_files_count", "avg_file_size_bytes",
+        "small_files_count")
   }
 
   /** A14: fixed-bin histogram of file sizes in MB (file_distribution.py:46-54
@@ -106,4 +87,12 @@ object StorageAnalyzer {
       .groupBy(col("bin")).agg(count(lit(1)).as("count"))
       .orderBy(col("bin"))
   }
+}
+
+/** The result of [[StorageAnalyzer.storage]]. */
+final case class StorageStats(tableSizeBytes: Long, folderSizeBytes: Long,
+                              dataFileCount: Long, totalFileCount: Long,
+                              avgFileSizeBytes: Long, smallFilesCount: Long,
+                              orphans: Seq[String], missing: Seq[String]) {
+  def orphanFilesCount: Long = orphans.size.toLong
 }

@@ -316,6 +316,42 @@ class DeltaLogSpec extends SparkSuite {
     } finally v0.unpersist()
   }
 
+  test("replay: re-adds, same-commit add+remove, removes without adds, checkpoint + later remove") {
+    val path = tmpDir("dlog_replay")
+    def add(p: String, size: Long, t: Long) =
+      s"""{"add":{"path":"$p","partitionValues":{},"size":$size,"modificationTime":$t,"dataChange":true,"stats":"{\\"numRecords\\":$size}"}}"""
+    def remove(p: String) =
+      s"""{"remove":{"path":"$p","deletionTimestamp":1564524296000,"dataChange":true}}"""
+    writeLog(path,
+      Seq(metaData("{}"), add("keep.parquet", 10, 1), commitInfo("WRITE")),
+      Seq(add("readd.parquet", 100, 2), commitInfo("WRITE")),
+      // removed in the commit after its add; added and removed in one
+      // commit; removed without ever being added
+      Seq(remove("readd.parquet"), add("same.parquet", 5, 3), remove("same.parquet"),
+        remove("ghost.parquet"), commitInfo("DELETE")),
+      Seq(add("readd.parquet", 101, 4), commitInfo("WRITE")))
+    def active() = {
+      val snap = DeltaLog.snapshot(spark, path)
+      try snap.activeFiles.select("path", "size", "modificationTime", "stats")
+        .as[(String, Long, Long, String)].collect().toSet
+      finally snap.unpersist()
+    }
+    val stats = (n: Long) => s"""{"numRecords":$n}"""
+    assert(active() === Set(("keep.parquet", 10L, 1L, stats(10)), ("readd.parquet", 101L, 4L, stats(101))))
+
+    // the checkpoint's rows stand in for commits 0-3, alone once their
+    // JSONs are cleaned up; a later JSON remove of one of them must win
+    // over its checkpoint add
+    assert(graft.operators.Maintenance.checkpoint(spark, path) === 3L)
+    val log = java.nio.file.Paths.get(path, "_delta_log")
+    (0 to 3).foreach(v => java.nio.file.Files.delete(log.resolve(f"$v%020d.json")))
+    assert(active() === Set(("keep.parquet", 10L, 1L, stats(10)), ("readd.parquet", 101L, 4L, stats(101))))
+    java.nio.file.Files.write(log.resolve("00000000000000000004.json"),
+      Seq(remove("keep.parquet"), add("late.parquet", 7, 5), commitInfo("WRITE"))
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    assert(active() === Set(("readd.parquet", 101L, 4L, stats(101)), ("late.parquet", 7L, 5L, stats(7))))
+  }
+
   private def lastCheckpointJson(path: String): String =
     new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path, "_delta_log", "_last_checkpoint")),

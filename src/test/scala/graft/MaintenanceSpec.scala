@@ -215,6 +215,52 @@ class MaintenanceSpec extends SparkSuite {
     after.unpersist()
   }
 
+  test("vacuum on escaped partition directories deletes exactly the dead files") {
+    val path = tmpDir("vacesc")
+    val df = Seq("Mon Tue", "a:b", "50%", "Mon").flatMap(d => (1L to 3L).map(i => (i, d)))
+      .toDF("id", "day")
+    DeltaFixtureWriter.write(df, path, "overwrite", Seq("day"))
+    DeltaFixtureWriter.write(df, path, "append", Seq("day"))
+    DeltaFixtureWriter.delete(spark, path, "id = 1")
+    val before = HealthAnalyzer.analyzeTable(spark, path)
+    assert(before.recordCount === 16L)
+    val snap = DeltaLog.snapshot(spark, path)
+    val live = try snap.activeFiles.select("path").as[String].collect().toSet
+    finally snap.unpersist()
+    val onDisk = DeltaLog.dataFiles(spark, path).keySet
+    val dead = onDisk -- live
+    assert(dead.size === before.orphanFilesCount && dead.nonEmpty)
+    assert(dead.exists(_.contains("%")), "the escaped directories hold dead files")
+
+    val deleted = Maintenance.vacuum(spark, path, retainMs = 0L)
+      .select("path").as[String].collect().toSet
+    assert(deleted === dead.map(rel => new java.io.File(path, rel).getPath))
+    assert(DeltaLog.dataFiles(spark, path).keySet === live)
+    val after = HealthAnalyzer.analyzeTable(spark, path)
+    assert(after.orphanFilesCount === 0L)
+    assert(after.recordCount === before.recordCount)
+  }
+
+  test("write, append and overwrite through a file: URI commit versions 0, 1, 2; drop removes it") {
+    val dir = tmpDir("fileuri")
+    val uri = s"file:$dir"
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "day")
+    DeltaFixtureWriter.write(df, uri, "overwrite", Seq("day"))
+    DeltaFixtureWriter.write(df.limit(1), uri, "append", Seq("day"))
+    def state() = {
+      val snap = DeltaLog.snapshot(spark, uri)
+      try (snap.version, snap.data.select("id").as[Long].collect().sorted.toSeq)
+      finally snap.unpersist()
+    }
+    assert(state() === (1L, Seq(1L, 1L, 2L)))
+    DeltaFixtureWriter.write(Seq((3L, "c")).toDF("id", "day"), uri, "overwrite", Seq("day"))
+    assert(state() === (2L, Seq(3L)))
+    val m = HealthAnalyzer.analyzeTable(spark, uri)
+    assert(m.numberOfWrites === 3L && m.orphanFilesCount > 0)
+    DeltaFixtureWriter.drop(uri)
+    assert(!new java.io.File(dir).exists())
+  }
+
   test("DELETE keeps rows whose predicate evaluates to NULL") {
     val path = tmpDir("delnull")
     val df = Seq(

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
 import graft.health.DeltaAnalyzerMetrics
-import graft.operators.{HealthAnalyzer, HistoryAnalyzer, Reporting, SkewAnalyzer, StorageAnalyzer}
+import graft.operators.{HealthAnalyzer, HistoryAnalyzer, Reporting, SkewAnalyzer, StorageAnalyzer, StorageStats}
 import graft.sources.Sources
 
 /** Coverage for the remaining SURVEY §2 rows: S7 CSV, A17 per-version
@@ -181,11 +181,42 @@ class ReportingSourcesSpec extends SparkSuite {
       active <- Gen.chooseNum(0, total)
     } yield (total, active)
     check(Prop.forAll(gen) { case (total, active) =>
-      val folder = (0 until total).map(i => (s"/t/f$i.parquet", 100L))
-        .toDF("path", "size")
-      val manifest = (0 until active).map(i => (s"/t/f$i.parquet", 100L))
-        .toDF("path", "size")
-      StorageAnalyzer.orphanFiles(folder, manifest).count() == (total - active).toLong
+      val folder = (0 until total).map(i => (s"f$i.parquet", 100L)).toMap
+      val manifest = (0 until active).map(i => (s"f$i.parquet", 100L)).toMap
+      StorageAnalyzer.storage(folder, manifest, None).orphanFilesCount == (total - active).toLong
+    })
+  }
+
+  test("property: storage numbers == a brute-force count over random listings and manifests") {
+    // manifest indices reach past the listing, so some active files are
+    // missing from disk; small sizes make ties with the mean common
+    val files = (n: Int) => Gen.mapOf(Gen.zip(
+      Gen.chooseNum(0, n).map(i => s"p=${i % 3}/f$i.parquet"), Gen.chooseNum(1L, 12L)))
+    val gen = for {
+      listing <- files(30)
+      manifest <- files(40)
+      thr <- Gen.option(Gen.chooseNum(0.0, 13.0))
+    } yield (listing, manifest, thr)
+    check(Prop.forAll(gen) { case (listing, manifest, thr) =>
+      var tableSize, folderSize, dataFiles, totalFiles, small = 0L
+      val orphans, missing = Seq.newBuilder[String]
+      for (k <- (listing.keySet ++ manifest.keySet).toSeq.sorted) {
+        (listing.get(k), manifest.get(k)) match {
+          case (Some(f), Some(m)) => folderSize += f; totalFiles += 1; tableSize += m; dataFiles += 1
+          case (Some(f), None) => folderSize += f; totalFiles += 1; orphans += k
+          case (None, Some(m)) => tableSize += m; dataFiles += 1; missing += k
+          case (None, None) =>
+        }
+      }
+      // size < mean  <=>  size * n < total, in exact integers
+      for (m <- manifest.values)
+        if (thr.fold(m * dataFiles < tableSize)(m < _)) small += 1
+      val want = StorageStats(tableSize, folderSize, dataFiles, totalFiles,
+        if (dataFiles == 0) 0L else tableSize / dataFiles, small,
+        orphans.result(), missing.result())
+      val got = StorageAnalyzer.storage(listing, manifest, thr)
+      Prop(got == want && got.orphanFilesCount == totalFiles - (dataFiles - want.missing.size)) :|
+        s"got $got, want $want"
     })
   }
 }
