@@ -70,6 +70,15 @@ object DeltaFixtureWriter {
     DeltaLog.dataFiles(spark, table).filterNot(f => before.contains(f._1)).toSeq.sorted
   }
 
+  /** The local directory of `table`, a plain path or a `file:` URI; any
+    * other scheme fails. */
+  private def localDir(table: String): String = {
+    val uri = new Path(table).toUri
+    require(uri.getScheme == null || uri.getScheme == "file",
+      s"$table: commits are written with java.nio, so the table must be a local path or file: URI")
+    if (uri.getScheme == null) table else uri.getPath
+  }
+
   /** The commit writer: action lines are written as the iterators drain, so
     * a commit with millions of removes never materializes as a driver-side
     * Seq — the driver cost is the JSON bytes themselves, which are inherent
@@ -82,15 +91,6 @@ object DeltaFixtureWriter {
     * footer row count, read on the driver as the line is written: no Spark
     * job. `table` is a plain path or a `file:` URI; any other scheme fails
     * before anything is written. */
-  /** The local directory of `table`, a plain path or a `file:` URI; any
-    * other scheme fails. */
-  private def localDir(table: String): String = {
-    val uri = new Path(table).toUri
-    require(uri.getScheme == null || uri.getScheme == "file",
-      s"$table: commits are written with java.nio, so the table must be a local path or file: URI")
-    if (uri.getScheme == null) table else uri.getPath
-  }
-
   private[graft] def writeCommitStream(
       table: String,
       version: Long,

@@ -27,8 +27,8 @@ import scala.jdk.CollectionConverters._
   * history entries, metadata partition columns, active file URIs, add-action
   * sizes, per-file row counts (`add.stats.numRecords`, Delta PROTOCOL.md
   * "Per-file Statistics"), and version numbers. The row counts make the
-  * record count and partition skew a sum over the manifest: no data file
-  * is opened to count rows.
+  * record count and partition skew a sum over the manifest, on the driver:
+  * no data file is opened and no Spark job runs to count rows.
   *
   * Scale notes: the log scan and the add/remove replay are DataFrame
   * programs — the replay is one hash aggregation on the file path, which
@@ -465,30 +465,26 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
   private[graft] lazy val activeSizes: Map[String, Long] =
     manifest.map(f => f.getString(0) -> f.getLong(1)).toMap
 
-  /** Per-partition record counts from the log alone, shaped like
-    * [[graft.operators.SkewAnalyzer.partitionCounts]] over [[data]]: the
-    * partition columns (strings, as the scan reads them) plus `count`.
+  /** Per-partition record counts from the log alone, held on the driver:
+    * partition-value tuple (in [[partitionColumns]] order, null for a
+    * missing value) → rows, the numbers
+    * [[graft.operators.SkewAnalyzer.partitionCounts]] counts over [[data]].
     * Each active file counts its `add.stats.numRecords`, or, when its
     * stats lack one (legacy `"stats":""` logs, foreign checkpoints), its
-    * parquet footer row count, read on the driver; no data row is read.
-    * A partitioned table drops partitions whose sum is 0, as a data-scan
-    * `groupBy` never emits them; an unpartitioned one is one global row. */
-  lazy val partitionCounts: DataFrame = {
+    * parquet footer row count, read on the driver; no data row is read and
+    * no Spark job runs. Partitions whose sum is 0 are dropped, as a
+    * data-scan `groupBy` never emits them; an unpartitioned table is at
+    * most one entry, keyed by the empty tuple. */
+  lazy val partitionCounts: Map[Seq[String], Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(qualifiedTablePath)
-    val perFile = manifest.toSeq.map { f =>
+    manifest.toSeq.map { f =>
       val pv = Option(f.getAs[collection.Map[String, String]]("partitionValues"))
         .getOrElse(Map.empty[String, String])
       val n = DeltaLog.statsNumRecords(f.getAs[String]("stats"))
         .getOrElse(DeltaLog.footerRecordCount(conf, root, f.getString(0)))
       partitionColumns.map(pv.getOrElse(_, null)) -> n
-    }
-    val kept =
-      if (partitionColumns.isEmpty) Seq(Seq.empty -> perFile.map(_._2).sum)
-      else perFile.groupMapReduce(_._1)(_._2)(_ + _).toSeq.filter(_._2 > 0)
-    val schema = StructType(partitionColumns.map(StructField(_, StringType)) :+
-      StructField("count", LongType, nullable = false))
-    spark.createDataFrame(kept.map { case (k, n) => Row.fromSeq(k :+ n) }.asJava, schema)
+    }.groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0)
   }
 
   /** Fully-qualified table root (scheme + absolute path). */

@@ -37,9 +37,9 @@ object Dashboard {
       val counts = m.skewMetrics match {
         case Some(sk) if sk.partitionCount > sk.recordsPerPartition.size =>
           // the driver dict was capped to the top-N heaviest partitions —
-          // key the FULL log-derived counts frame so the "Others" bucket
-          // sums the whole tail, not just ranks topN-and-under
-          SkewAnalyzer.keyedCounts(snap.partitionCounts, sk.partitionColumns)
+          // key the FULL log-derived counts so the "Others" bucket sums the
+          // whole tail, not just ranks topN-and-under
+          SkewAnalyzer.keyed(snap.partitionCounts).toDF("partition", "count")
         case Some(sk) =>
           sk.recordsPerPartition.toSeq.toDF("partition", "count")
         case None => Seq.empty[(String, Long)].toDF("partition", "count")

@@ -10,10 +10,12 @@ import graft.health._
   * (SURVEY.md §3): one cached log snapshot with its driver-held manifest,
   * then three passes that each derive their facts from one source — the
   * history aggregate, the manifest's per-file `numRecords` summed per
-  * partition on the driver (record count and skew), and the folder listing
-  * set against the manifest in plain Scala (storage) — feeding the
-  * pure-Scala health calculus. No data file is opened: a file whose log
-  * stats lack a row count is counted from its parquet footer.
+  * partition on the driver and folded into the record count and skew by
+  * [[SkewAnalyzer.stats]], and the folder listing set against the manifest
+  * (storage) — feeding the pure-Scala health calculus. Only the log read,
+  * its replay and the history aggregate run Spark jobs; the counts and
+  * storage passes are plain Scala. No data file is opened: a file whose
+  * log stats lack a row count is counted from its parquet footer.
   *
   * Implements the *Python* backend's measured semantics (the honest fork of
   * H6-H10 — delta_python_analyzer.py:224-275) since our log layer has full
@@ -78,70 +80,68 @@ object HealthAnalyzer {
                       thresholds: Thresholds = Thresholds()): DeltaAnalyzerMetrics = {
     val spark = snap.spark
     val tablePath = snap.tablePath
-    locally {
-      // history pass (A5/A6)
-      val ops = HistoryAnalyzer.opCounts(snap.history).first()
-      // storage pass (A8-A13, J1): one folder listing against the manifest,
-      // which also checks that every active file exists — with counts taken
-      // from the log, no data scan is left to notice one gone
-      val StorageStats(tableSize, folderSize, dataFiles, totalFiles, avgFileSize, smallFiles,
-          orphanPaths, missing) = StorageAnalyzer.storage(DeltaLog.dataFiles(spark, tablePath),
-        snap.activeSizes, thresholds.smallFileSizeMb.map(_ * 1024 * 1024))
-      if (missing.nonEmpty) throw new java.io.FileNotFoundException(
-        s"$tablePath: ${missing.length} active file(s) named by the log are " +
-          s"missing from disk, e.g. ${missing.take(3).mkString(", ")}")
-      val orphans = orphanPaths.size.toLong
-      // counts pass (A1-A4, A7): the log-derived per-partition counts feed
-      // the same stats aggregate the contract queries use, whose one row
-      // yields the record count and both skew methods, unlike the
-      // reference's double materialization (delta_python_analyzer.py:192-193)
-      val (recordCount, skew) = SkewAnalyzer.measureCounts(snap.partitionCounts,
-        snap.partitionColumns, thresholds.skewThreshold)
+    // history pass (A5/A6)
+    val ops = HistoryAnalyzer.opCounts(snap.history).first()
+    // storage pass (A8-A13, J1): one folder listing against the manifest,
+    // which also checks that every active file exists — with counts taken
+    // from the log, no data scan is left to notice one gone
+    val StorageStats(tableSize, folderSize, dataFiles, totalFiles, avgFileSize, smallFiles,
+        orphanPaths, missing) = StorageAnalyzer.storage(DeltaLog.dataFiles(spark, tablePath),
+      snap.activeSizes, thresholds.smallFileSizeMb.map(_ * 1024 * 1024))
+    if (missing.nonEmpty) throw new java.io.FileNotFoundException(
+      s"$tablePath: ${missing.length} active file(s) named by the log are " +
+        s"missing from disk, e.g. ${missing.take(3).mkString(", ")}")
+    val orphans = orphanPaths.size.toLong
+    // counts pass (A1-A4, A7): the log-derived per-partition counts feed
+    // the same stats function the contract queries use, which yields the
+    // record count and both skew methods, unlike the reference's double
+    // materialization (delta_python_analyzer.py:192-193)
+    val (recordCount, skew) = SkewAnalyzer.measureCounts(SkewAnalyzer.keyed(snap.partitionCounts),
+      snap.partitionColumns, thresholds.skewThreshold)
 
-      // H6/H7/H8: measured ratio semantics (delta_python_analyzer.py:231-243)
-      val sizeRatio = if (folderSize > 0) tableSize.toDouble / folderSize else 1.0
-      val needsVacuum = sizeRatio < thresholds.vacuumSizeRatioThreshold
-      val fileRatio = if (totalFiles > 0) dataFiles.toDouble / totalFiles else 1.0
-      val hasOrphans = fileRatio < thresholds.orphanFileRatioThreshold
-      val needsOptimize =
-        dataFiles > 0 && smallFiles > dataFiles * thresholds.smallFileRatioThreshold
+    // H6/H7/H8: measured ratio semantics (delta_python_analyzer.py:231-243)
+    val sizeRatio = if (folderSize > 0) tableSize.toDouble / folderSize else 1.0
+    val needsVacuum = sizeRatio < thresholds.vacuumSizeRatioThreshold
+    val fileRatio = if (totalFiles > 0) dataFiles.toDouble / totalFiles else 1.0
+    val hasOrphans = fileRatio < thresholds.orphanFileRatioThreshold
+    val needsOptimize =
+      dataFiles > 0 && smallFiles > dataFiles * thresholds.smallFileRatioThreshold
 
-      val m = DeltaAnalyzerMetrics(
-        versionCount = snap.version,
-        partitionCount = skew.partitionCount,
-        recordCount = recordCount,
-        isSkewed = skew.isSkewed,
-        skewnessMax = skew.skewnessMax,
-        skewnessAverage = skew.skewnessAverage,
-        numberOfWrites = ops.getAs[Long]("number_of_writes"),
-        numberOfDeletes = ops.getAs[Long]("number_of_deletes"),
-        numberOfOptimizes = ops.getAs[Long]("number_of_optimizes"),
-        isCompacted = ops.getAs[Long]("number_of_optimizes") > 0,
-        tableSizeBytes = tableSize,
-        folderSizeBytes = folderSize,
-        needsVacuum = needsVacuum,
-        hasOrphanFiles = hasOrphans,
-        needsOptimize = needsOptimize,
-        smallFilesCount = if (dataFiles > 0) smallFiles else 0L,
-        avgFileSizeBytes = if (dataFiles > 0) avgFileSize else 0L,
-        partitionSkewness =
-          if (snap.partitionColumns.nonEmpty) Some(skew.skewnessMax) else None,
-        dataFileCount = dataFiles,
-        orphanFilesCount = orphans,
-        // H9 preserved as-written (delta_python_analyzer.py:268)
-        filesNeedingVacuum = if (needsVacuum) orphans else 0L,
-        fileSizeEfficiency =
-          if (dataFiles > 0 && avgFileSize > 0)
-            Some(math.min(1.0, avgFileSize.toDouble / (128.0 * 1024 * 1024)))
-          else None,
-        storageEfficiency =
-          if (folderSize > 0) Some(tableSize.toDouble / folderSize) else None,
-        tablePath = tablePath,
-        totalFileCount = totalFiles,
-        skewMetrics =
-          if (snap.partitionColumns.nonEmpty) Some(skew) else None)
-      m.withHealthScore
-    }
+    val m = DeltaAnalyzerMetrics(
+      versionCount = snap.version,
+      partitionCount = skew.partitionCount,
+      recordCount = recordCount,
+      isSkewed = skew.isSkewed,
+      skewnessMax = skew.skewnessMax,
+      skewnessAverage = skew.skewnessAverage,
+      numberOfWrites = ops.getAs[Long]("number_of_writes"),
+      numberOfDeletes = ops.getAs[Long]("number_of_deletes"),
+      numberOfOptimizes = ops.getAs[Long]("number_of_optimizes"),
+      isCompacted = ops.getAs[Long]("number_of_optimizes") > 0,
+      tableSizeBytes = tableSize,
+      folderSizeBytes = folderSize,
+      needsVacuum = needsVacuum,
+      hasOrphanFiles = hasOrphans,
+      needsOptimize = needsOptimize,
+      smallFilesCount = if (dataFiles > 0) smallFiles else 0L,
+      avgFileSizeBytes = if (dataFiles > 0) avgFileSize else 0L,
+      partitionSkewness =
+        if (snap.partitionColumns.nonEmpty) Some(skew.skewnessMax) else None,
+      dataFileCount = dataFiles,
+      orphanFilesCount = orphans,
+      // H9 preserved as-written (delta_python_analyzer.py:268)
+      filesNeedingVacuum = if (needsVacuum) orphans else 0L,
+      fileSizeEfficiency =
+        if (dataFiles > 0 && avgFileSize > 0)
+          Some(math.min(1.0, avgFileSize.toDouble / (128.0 * 1024 * 1024)))
+        else None,
+      storageEfficiency =
+        if (folderSize > 0) Some(tableSize.toDouble / folderSize) else None,
+      tablePath = tablePath,
+      totalFileCount = totalFiles,
+      skewMetrics =
+        if (snap.partitionColumns.nonEmpty) Some(skew) else None)
+    m.withHealthScore
   }
 
   /** The Spark backend's heuristic fork (delta_spark_analyzer.py:161-187),

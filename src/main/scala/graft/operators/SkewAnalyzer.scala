@@ -1,22 +1,25 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.health.SkewMetrics
 
 /** Partition-skew analytics (delta_python_analyzer.py:33-88,
-  * delta_spark_analyzer.py:38-81) re-expressed as declarative Spark plans.
+  * delta_spark_analyzer.py:38-81).
   *
   * Works over ANY DataFrame + grouping columns (plain parquet or a replayed
   * Delta snapshot): the per-partition counts are one hash aggregation whose
-  * input scan Catalyst prunes to the grouping columns only; the skewness
-  * reductions run over the (low-cardinality) counts frame. Unlike the
-  * reference — which materializes the whole table into pandas twice, once per
-  * skew method (delta_python_analyzer.py:47,192-193) — the counts are
-  * computed once and both metrics are derived from the same frame in a
-  * single plan with no driver-side loops.
+  * input scan Catalyst prunes to the grouping columns only. Everything
+  * derived from the counts — both skew methods, the record count, the
+  * extremes and the per-partition dict — is [[stats]], plain Scala over the
+  * (low-cardinality) counts held on the driver, whether collected from that
+  * aggregation or summed from the Delta log's per-file `numRecords`. Unlike
+  * the reference — which materializes the whole table into pandas twice,
+  * once per skew method (delta_python_analyzer.py:47,192-193) — the counts
+  * are computed once and both metrics are derived from them.
   */
 object SkewAnalyzer {
 
@@ -44,55 +47,63 @@ object SkewAnalyzer {
       concat_ws(", ", cols.map(c => concat(lit("'"), col(c), lit("'"))): _*),
       lit(")"))
 
-  /** A2+A3 in one pure plan: returns a one-row frame
-    * (partition_cnt, skewness_max, skewness_average) — [[countsStats]]
-    * projected to its skew columns. */
-  def skewnessStats(counts: DataFrame): DataFrame =
-    countsStats(counts, Seq.empty)
-      .select(col("partition_cnt"), col("skewness_max"), col("skewness_average"))
+  /** Driver-held counts per partition-value tuple (e.g.
+    * [[graft.deltalog.DeltaSnapshot.partitionCounts]]) as (key, count)
+    * pairs, each key the tuple's values `/`-joined with nulls skipped — the
+    * string `concat_ws` renders in [[keyedCounts]]. Distinct tuples that
+    * render to one key stay distinct pairs. */
+  def keyed(counts: Map[Seq[String], Long]): Seq[(String, Long)] =
+    counts.toSeq.map { case (values, n) => values.filter(_ != null).mkString("/") -> n }
 
-  /** The one stats aggregate over a [[partitionCounts]] frame, as a one-row
-    * frame: partition_cnt, skewness_max, skewness_average, record_count
-    * (A7, the sum of the counts) and the lightest/heaviest partition as
-    * (partition, count) structs `mn`/`mx`, ties broken by the `/`-joined
-    * partition key.
+  /** A2+A3: a one-row frame (partition_cnt, skewness_max, skewness_average)
+    * — [[stats]] over the collected counts of a [[partitionCounts]] frame. */
+  def skewnessStats(counts: DataFrame): DataFrame = {
+    val (_, sk) = stats(counts.select(col("count")).collect().toSeq.map(r => "" -> r.getLong(0)))
+    counts.sparkSession.createDataFrame(Seq((sk.partitionCount, sk.skewnessMax, sk.skewnessAverage)))
+      .toDF("partition_cnt", "skewness_max", "skewness_average")
+  }
+
+  /** Spark's string order: UTF-8 bytes, unsigned. `String.compareTo` orders
+    * UTF-16 units, which differs for characters outside the BMP. */
+  private val sparkStringOrder: Ordering[String] = (a, b) =>
+    java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+
+  /** The one skew and record-count computation (A2-A4, A7), over (partition
+    * key, count) pairs, one per partition. Returns the record count (the
+    * sum of the counts) and the skew bundle without partition columns or
+    * verdict: partitionCount, both skew methods, the lightest and heaviest
+    * partitions, and the `topN` heaviest as the per-partition dict.
     *
     * skewness_max     = (max(c) - min(c)) / max(c)     [0 if <=1 part or max=0]
-    * skewness_average = avg(|c - mean|) / mean          [0 if mean = 0]
+    * skewness_average = avg(|c - mean|) / mean          [0 if <=1 part or mean=0]
     *                  = sum(|n*c - s|) / (n*s)          (n partitions, s rows)
     *
-    * The second form sums integers, exactly (as decimal(38,0)), so the
-    * result does not depend on the order in which rows reach the sum: a
-    * counts frame from a data scan and the same counts from the Delta log
-    * yield the same double, whatever the shuffle partitioning. The totals
-    * are attached via a broadcast cross-join of a one-row aggregate rather
-    * than an empty-frame window (`Window.partitionBy()` would funnel
-    * everything through a single task) — the whole thing stays distributed
-    * and collect-free regardless of partition-count cardinality.
-    */
-  def countsStats(counts: DataFrame, partitionCols: Seq[String]): DataFrame = {
-    val totals = counts.agg(count(lit(1)).as("n"), sum(col("count")).as("s"))
-    val key = concat_ws("/", partitionCols.map(col): _*)
-    val byWeight = struct(col("count"), key)
-    counts.crossJoin(broadcast(totals))
-      .agg(
-        count(lit(1)).as("partition_cnt"),
-        coalesce(sum(col("count")), lit(0L)).as("record_count"),
-        max(col("count")).as("max_count"),
-        min(col("count")).as("min_count"),
-        sum(abs(col("count").cast(DecimalType(38, 0)) * col("n") - col("s"))).as("abs_dev_sum"),
-        min_by(struct(key.as("partition"), col("count")), byWeight).as("mn"),
-        max_by(struct(key.as("partition"), col("count")), byWeight).as("mx"))
-      .select(
-        col("partition_cnt"),
-        when(col("partition_cnt") <= 1 || col("max_count") === 0, lit(0.0))
-          .otherwise((col("max_count") - col("min_count")) / col("max_count"))
-          .as("skewness_max"),
-        when(col("partition_cnt") <= 1 || col("record_count") === 0, lit(0.0))
-          .otherwise(col("abs_dev_sum").cast("double") /
-            (col("partition_cnt").cast("double") * col("record_count").cast("double")))
-          .as("skewness_average"),
-        col("record_count"), col("mn"), col("mx"))
+    * The second form sums integers exactly, so the result does not depend
+    * on the order of the pairs: counts from a data scan and the same counts
+    * from the Delta log yield the same double. Ties between equal counts
+    * break on the key in [[sparkStringOrder]], as Spark's
+    * `ORDER BY count, partition` would. The dict is BOUNDED: the reference
+    * materializes every partition key (delta_python_analyzer.py:51-57),
+    * which a high-cardinality partition column (timestamps, ids) turns into
+    * a huge driver map — here it keeps only the `topN` heaviest partitions,
+    * while the true cardinality and both exact extremes are carried
+    * separately. */
+  def stats(counts: Seq[(String, Long)], topN: Int = 1000): (Long, SkewMetrics) = {
+    val n = counts.size.toLong
+    val s = counts.iterator.map(_._2).sum
+    val byWeight = Ordering.by[(String, Long), Long](_._2).orElseBy(_._1)(sparkStringOrder)
+    val mn = counts.minOption(byWeight)
+    val mx = counts.maxOption(byWeight)
+    val maxCount = mx.fold(0L)(_._2)
+    val skewMax =
+      if (n <= 1 || maxCount == 0) 0.0 else (maxCount - mn.get._2).toDouble / maxCount
+    val skewAvg =
+      if (n <= 1 || s == 0) 0.0
+      else counts.iterator.map(c => (BigInt(n) * c._2 - s).abs).sum.toDouble / (n.toDouble * s.toDouble)
+    val top = counts.sorted(Ordering.by[(String, Long), Long](_._2).reverse
+      .orElseBy(_._1)(sparkStringOrder)).take(topN).toMap
+    (s, SkewMetrics(skewnessMax = skewMax, skewnessAverage = skewAvg, partitionCount = n,
+      recordsPerPartition = top, minPartition = mn, maxPartition = mx))
   }
 
   /** A16: distribution stats feeding the skew gauge
@@ -112,50 +123,22 @@ object SkewAnalyzer {
     if (partitionCols.isEmpty) SkewMetrics()
     else measure(df, partitionCols, threshold, topN)._2
 
-  /** Record count and skew bundle from ONE scan of `df`: its
-    * [[partitionCounts]] frame is cached, read by [[measureCounts]], then
-    * released. */
+  /** Record count and skew bundle from ONE scan of `df`: its keyed
+    * [[partitionCounts]] are collected once and fed to [[measureCounts]]. */
   def measure(df: DataFrame, partitionCols: Seq[String], threshold: Double,
-              topN: Int = 1000): (Long, SkewMetrics) = {
-    val counts = partitionCounts(df, partitionCols).cache()
-    try measureCounts(counts, partitionCols, threshold, topN)
-    finally { counts.unpersist(); () }
-  }
+              topN: Int = 1000): (Long, SkewMetrics) =
+    measureCounts(keyedCounts(partitionCounts(df, partitionCols), partitionCols).collect().toSeq
+      .map(r => r.getString(0) -> r.getLong(1)), partitionCols, threshold, topN)
 
-  /** Record count and skew bundle from a [[partitionCounts]]-shaped frame
-    * (the health analysis passes the log-derived
-    * [[graft.deltalog.DeltaSnapshot.partitionCounts]]): read by the
-    * [[countsStats]] aggregate and the top-N collect. Without partition
-    * columns the counts frame is a single global row and only the record
-    * count is taken from it. Only the (small) counts/stats rows ever reach
-    * the driver, and the per-partition dict is BOUNDED: the reference
-    * materializes every partition key (delta_python_analyzer.py:51-57),
-    * which a high-cardinality partition column (timestamps, ids) turns into
-    * a driver OOM at 100× — here the map keeps only the `topN` heaviest
-    * partitions, while the true cardinality and both exact extremes are
-    * computed distributively and carried separately. */
-  def measureCounts(counts: DataFrame, partitionCols: Seq[String], threshold: Double,
+  /** Record count and skew bundle from driver-held (partition key, count)
+    * pairs: [[stats]], with the partition columns and the `threshold`
+    * verdict attached. Without partition columns the pairs are at most one
+    * global count and only the record count is taken from them. */
+  def measureCounts(counts: Seq[(String, Long)], partitionCols: Seq[String], threshold: Double,
                     topN: Int = 1000): (Long, SkewMetrics) = {
-    val stats = countsStats(counts, partitionCols).first()
-    val recordCount = stats.getAs[Long]("record_count")
-    if (partitionCols.isEmpty) (recordCount, SkewMetrics())
-    else {
-      val skewMax = stats.getAs[Double]("skewness_max")
-      val records = keyedCounts(counts, partitionCols)
-        .orderBy(col("count").desc, col("partition").asc).limit(topN)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      def kv(field: String): Option[(String, Long)] =
-        Option(stats.getAs[org.apache.spark.sql.Row](field))
-          .map(r => r.getString(0) -> r.getLong(1))
-      (recordCount, SkewMetrics(
-        partitionColumns = partitionCols,
-        skewnessMax = skewMax,
-        skewnessAverage = stats.getAs[Double]("skewness_average"),
-        isSkewed = skewMax > threshold,
-        partitionCount = stats.getAs[Long]("partition_cnt"),
-        recordsPerPartition = records,
-        minPartition = kv("mn"),
-        maxPartition = kv("mx")))
-    }
+    val (recordCount, sk) = stats(counts, topN)
+    (recordCount,
+      if (partitionCols.isEmpty) SkewMetrics()
+      else sk.copy(partitionColumns = partitionCols, isSkewed = sk.skewnessMax > threshold))
   }
 }

@@ -40,7 +40,7 @@ class PlanLintSpec extends SparkSuite {
     "tfidf_topterms", "bm25_search", "zipf_fit", "dsir_select",
     "domain_weights", "lm_heldout", "ppl_buckets", "health_score_sql",
     "lm_backoff", "lm_score", "nb_classify", "ngram_exact",
-    "skewness_metrics", "unimax_sample")
+    "unimax_sample")
 
   // unpartitioned windows are allowed ONLY over provably bounded frames:
   // quality_budget's offset window runs over the guarded DISTINCT-SCORE

@@ -110,9 +110,69 @@ class ReportingSourcesSpec extends SparkSuite {
         .toDF("k", "count")
       val row2 = SkewAnalyzer.skewnessStats(df2).first()
       inRange && singleOk &&
-        math.abs(mx - row2.getAs[Double]("skewness_max")) < 1e-12 &&
-        math.abs(avg - row2.getAs[Double]("skewness_average")) < 1e-12
+        mx == row2.getAs[Double]("skewness_max") &&
+        avg == row2.getAs[Double]("skewness_average")
     })
+  }
+
+  /** (lightest, heaviest, the `topN` heaviest as a dict) of `rows` — one
+    * partition (a, b, count) each — by a Spark sort over the keys
+    * `keyedCounts` renders. */
+  private def sparkExtremes(rows: Seq[(String, String, Long)], topN: Int)
+      : (Option[(String, Long)], Option[(String, Long)], Map[String, Long]) = {
+    val keyed = SkewAnalyzer.keyedCounts(rows.toDF("a", "b", "count"), Seq("a", "b"))
+    val asc = keyed.orderBy(col("count"), col("partition")).as[(String, Long)].collect()
+    val top = keyed.orderBy(col("count").desc, col("partition")).limit(topN)
+      .as[(String, Long)].collect().toMap
+    (asc.headOption, asc.lastOption, top)
+  }
+
+  /** `d` is the exact rational `p / q` to 1e-15, relative. */
+  private def near(d: Double, p: BigInt, q: BigInt): Boolean = {
+    val want = BigDecimal(p).bigDecimal.divide(BigDecimal(q).bigDecimal, java.math.MathContext.DECIMAL128)
+    (BigDecimal(d) - BigDecimal(want)).abs <= BigDecimal(want) * BigDecimal("1e-15")
+  }
+
+  test("property: stats == a brute-force exact definition; extremes and top-N tie order == a Spark sort") {
+    val value = Gen.option(Gen.oneOf("Mon", "Tue", "a/b", "a", "b", "｡", "😀"))
+    val count = Gen.frequency(1 -> Gen.const(0L), 3 -> Gen.chooseNum(1L, 4L), 2 -> Gen.chooseNum(0L, 10000L))
+    val partitions = Gen.listOf(Gen.zip(value, value)).map(_.distinct)
+    val gen = for {
+      ps <- partitions
+      equal <- Gen.oneOf(true, false)
+      c <- count
+      cs <- Gen.listOfN(ps.size, count)
+      topN <- Gen.chooseNum(1, ps.size + 1)
+    } yield (ps.zip(if (equal) ps.map(_ => c) else cs)
+      .map { case ((a, b), n) => (a.orNull, b.orNull, n) }, topN)
+    check(Prop.forAllNoShrink(gen) { case (rows, topN) =>
+      val pairs = SkewAnalyzer.keyed(rows.map { case (a, b, n) => Seq(a, b) -> n }.toMap)
+      val (recordCount, sk) = SkewAnalyzer.stats(pairs, topN)
+      val cs = rows.map(_._3)
+      val n = cs.size
+      val s = cs.sum
+      // rational mean s/n; |c - s/n| = |c*n - s| / n, so the mean absolute
+      // deviation over the mean is sum|c*n - s| / n / n / (s/n)
+      val devs = cs.map(c => (BigInt(c) * n - s).abs).sum
+      val avgOk =
+        if (n <= 1 || s == 0) sk.skewnessAverage == 0.0
+        else near(sk.skewnessAverage, devs * n, BigInt(n) * n * s)
+      val maxOk =
+        if (n <= 1 || cs.max == 0) sk.skewnessMax == 0.0
+        else near(sk.skewnessMax, cs.max - cs.min, cs.max)
+      val (mn, mx, top) = sparkExtremes(rows, topN)
+      Prop(recordCount == s && sk.partitionCount == n && avgOk && maxOk &&
+        sk.minPartition == mn && sk.maxPartition == mx && sk.recordsPerPartition == top) :|
+        s"rows $rows topN $topN: got ($recordCount, $sk), Spark ($mn, $mx, $top)"
+    })
+    // U+FF61 sorts before U+1F600 in UTF-8 bytes, after it in UTF-16 units
+    val tied = Seq(("😀", null, 5L), ("｡", null, 5L))
+    val (_, sk) = SkewAnalyzer.stats(tied.map(r => r._1 -> r._3), topN = 1)
+    assert("😀".compareTo("｡") < 0, "String.compareTo orders the tie the other way")
+    assert(sk.minPartition === Some("｡" -> 5L))
+    assert(sk.maxPartition === Some("😀" -> 5L))
+    assert(sk.recordsPerPartition === Map("｡" -> 5L))
+    assert((sk.minPartition, sk.maxPartition, sk.recordsPerPartition) === sparkExtremes(tied, 1))
   }
 
   test("E3: dashboard frames bundle all five visualization inputs") {
