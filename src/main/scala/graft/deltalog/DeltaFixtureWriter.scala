@@ -42,18 +42,26 @@ object DeltaFixtureWriter {
 
   private def jStr(s: String): String = "\"" + jsonEscape(s) + "\""
 
+  /** A JSON object of string values; a null value is written as JSON
+    * `null`. */
   private def jMap(m: Seq[(String, String)]): String =
-    m.map { case (k, v) => s"${jStr(k)}:${jStr(v)}" }.mkString("{", ",", "}")
+    m.map { case (k, v) => s"${jStr(k)}:${if (v == null) "null" else jStr(v)}" }
+      .mkString("{", ",", "}")
 
   /** Parse hive-style `col=value/` segments out of a relative file path.
     * Spark escapes special characters in partition directory names
-    * (`a:b` → `a%3Ab`); the partition value is the unescaped text. */
+    * (`a:b` → `a%3Ab`); the partition value is the unescaped text. Spark
+    * writes a null value as the directory `col=__HIVE_DEFAULT_PARTITION__`;
+    * its value is null, which the log records as JSON `null` (Delta
+    * PROTOCOL.md, "Partition Value Serialization"). */
   private def partitionValuesOf(relPath: String, partitionBy: Seq[String]): Seq[(String, String)] = {
     val segs = relPath.split('/').dropRight(1)
     partitionBy.flatMap { c =>
       segs.collectFirst {
         case s if s.startsWith(c + "=") =>
-          c -> ExternalCatalogUtils.unescapePathName(s.substring(c.length + 1))
+          val v = s.substring(c.length + 1)
+          c -> (if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+                else ExternalCatalogUtils.unescapePathName(v))
       }
     }
   }
@@ -186,17 +194,15 @@ object DeltaFixtureWriter {
     val (version, snapBefore, schemaChanged, effPartitionBy) =
       if (DeltaLog.isDeltaTable(df.sparkSession, table)) {
         val snap = DeltaLog.snapshot(df.sparkSession, table)
-        try {
-          val files =
-            if (mode == "overwrite") snap.manifest.map(_.getString(0)).toSeq
-            else Seq.empty
-          val changed = !snap.tableSchema.contains(df.schema)
-          // partitioning is immutable in Delta: a later write that omits
-          // partitionBy must not clobber partitionColumns in an evolved
-          // metaData action
-          val pb = if (partitionBy.nonEmpty) partitionBy else snap.partitionColumns
-          (snap.version + 1, files, changed, pb)
-        } finally snap.unpersist()
+        val files =
+          if (mode == "overwrite") snap.manifest.map(_.getString(0)).toSeq
+          else Seq.empty
+        val changed = !snap.tableSchema.contains(df.schema)
+        // partitioning is immutable in Delta: a later write that omits
+        // partitionBy must not clobber partitionColumns in an evolved
+        // metaData action
+        val pb = if (partitionBy.nonEmpty) partitionBy else snap.partitionColumns
+        (snap.version + 1, files, changed, pb)
       } else (0L, Seq.empty, false, partitionBy)
     val newFiles = appendFiles(df, table, partitionBy)
     writeCommitStream(table, version, "WRITE",
@@ -219,7 +225,7 @@ object DeltaFixtureWriter {
     // __file is the active file's table-relative path (see
     // DeltaSnapshot.dataWithFile); an empty table still logs the DELETE
     // commit, with no file changes
-    val (adds, removes) = try snap.dataWithFile match {
+    val (adds, removes) = snap.dataWithFile match {
       case None => (Seq.empty, Seq.empty)
       case Some(rows) =>
         val hitFiles = rows.where(expr(predicate))
@@ -235,7 +241,7 @@ object DeltaFixtureWriter {
           if (survivors.isEmpty) Seq.empty
           else appendFiles(survivors, table, partitionBy)
         (written, hitFiles)
-    } finally snap.unpersist()
+    }
     writeCommitStream(table, snap.version + 1, "DELETE",
       Seq("predicate" -> predicate),
       adds = adds.iterator, removes = removes.iterator,
@@ -247,16 +253,15 @@ object DeltaFixtureWriter {
   def compact(spark: SparkSession, table: String): Unit = {
     val snap = DeltaLog.snapshot(spark, table)
     val partitionBy = snap.partitionColumns
-    val (activeRel, newFiles) = try {
-      val activeRel = snap.manifest.map(_.getString(0)).sorted.toSeq
-      // a fully-deleted table logs a no-op OPTIMIZE, nothing to rewrite
-      if (activeRel.isEmpty) (activeRel, Seq.empty)
+    val activeRel = snap.manifest.map(_.getString(0)).sorted.toSeq
+    // a fully-deleted table logs a no-op OPTIMIZE, nothing to rewrite
+    val newFiles =
+      if (activeRel.isEmpty) Seq.empty
       else {
         val exprs: Seq[org.apache.spark.sql.Column] =
           if (partitionBy.isEmpty) Seq(lit(1)) else partitionBy.map(col)
-        (activeRel, appendFiles(snap.data.repartition(exprs: _*), table, partitionBy))
+        appendFiles(snap.data.repartition(exprs: _*), table, partitionBy)
       }
-    } finally snap.unpersist()
     writeCommitStream(table, snap.version + 1, "OPTIMIZE",
       Seq("predicate" -> "[]"),
       adds = newFiles.iterator, removes = activeRel.iterator,
@@ -273,21 +278,19 @@ object DeltaFixtureWriter {
     import spark.implicits._
     val snap = DeltaLog.snapshot(spark, table)
     val partitionBy = snap.partitionColumns
-    val (newFiles, removes) = try {
-      val dataCols = snap.data.columns
-      val src = source.select(dataCols.map(col).toIndexedSeq: _*)
-      val (newRows, removes) = snap.dataWithFile match {
-        case None => (src, Seq.empty[String])
-        case Some(rows) =>
-          val hitFiles = rows.join(src, keyCols, "left_semi")
-            .select($"__file").distinct().as[String].collect().sorted.toSeq
-          val survivors = snap.dataWithFileIn(hitFiles)
-            .join(src, keyCols, "left_anti")
-            .select(dataCols.map(col).toIndexedSeq: _*)
-          (survivors.union(src), hitFiles)
-      }
-      (appendFiles(newRows, table, partitionBy), removes)
-    } finally snap.unpersist()
+    val dataCols = snap.data.columns
+    val src = source.select(dataCols.map(col).toIndexedSeq: _*)
+    val (newRows, removes) = snap.dataWithFile match {
+      case None => (src, Seq.empty[String])
+      case Some(rows) =>
+        val hitFiles = rows.join(src, keyCols, "left_semi")
+          .select($"__file").distinct().as[String].collect().sorted.toSeq
+        val survivors = snap.dataWithFileIn(hitFiles)
+          .join(src, keyCols, "left_anti")
+          .select(dataCols.map(col).toIndexedSeq: _*)
+        (survivors.union(src), hitFiles)
+    }
+    val newFiles = appendFiles(newRows, table, partitionBy)
     writeCommitStream(table, snap.version + 1, "MERGE",
       Seq("matchedPredicate" -> keyCols.mkString(",")),
       adds = newFiles.iterator, removes = removes.iterator,

@@ -7,6 +7,7 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
@@ -30,23 +31,26 @@ import scala.jdk.CollectionConverters._
   * record count and partition skew a sum over the manifest, on the driver:
   * no data file is opened and no Spark job runs to count rows.
   *
-  * Scale notes: the log scan and the add/remove replay are DataFrame
-  * programs — the replay is one hash aggregation on the file path, which
-  * parallelizes over executors for logs with millions of actions. Its
-  * result, the active manifest, is collected to the driver (as Delta's own
-  * readers do). Data reads go through a [[ManifestFileIndex]] over it, and
-  * every file-set decision (storage, orphans, OPTIMIZE selection, RESTORE,
-  * VACUUM candidates) is plain Scala over it and the [[dataFiles]] listing,
-  * keyed by the table-relative path both spell the same way: the table
-  * directory is never listed for a read, and removed or orphan files are
-  * never opened.
+  * Scale notes: a snapshot opens with one scan of the log and one
+  * `groupingSets` aggregate over it — grouped by file path it replays
+  * add/remove into the active manifest, grouped by commit version it yields
+  * the version, the latest metaData and protocol and the history — so the
+  * aggregation parallelizes over executors for logs with millions of
+  * actions, and nothing is cached. Its result, the active manifest plus one
+  * row per commit, is collected to the driver (as Delta's own readers do),
+  * in two Spark jobs. Data reads go through a [[ManifestFileIndex]] over
+  * the manifest, and every file-set decision (storage, orphans, OPTIMIZE
+  * selection, RESTORE, VACUUM candidates) is plain Scala over it and the
+  * [[dataFiles]] listing, keyed by the table-relative path both spell the
+  * same way: the table directory is never listed for a read, and removed
+  * or orphan files are never opened.
   * Checkpoint parquet files ARE supported: `readActions` consults
-  * `_last_checkpoint`, loads the checkpoint parquet (field-aligned to
-  * `actionSchema`), and unions it with ALL surviving JSON commits — safe
-  * because replay is per-path last-add-wins, so checkpoint STATE rows and
-  * post-checkpoint deltas reconcile in one aggregation. Consumers that need
-  * per-commit CHANGES (CDF) must use `readJsonActions` instead: checkpoint
-  * rows are cumulative state, not deltas.
+  * `_last_checkpoint`, reads the checkpoint parquet under `actionSchema`,
+  * and unions it with ALL surviving JSON commits — safe because replay is
+  * per-path last-add-wins, so checkpoint STATE rows and post-checkpoint
+  * deltas reconcile in one aggregation. Consumers that need per-commit
+  * CHANGES (CDF) must use `readJsonActions` instead: checkpoint rows are
+  * cumulative state, not deltas.
   */
 object DeltaLog {
 
@@ -94,32 +98,45 @@ object DeltaLog {
     * checkpoint-aware: a checkpoint's rows aggregate the table STATE at its
     * version, not the commit's changes, so consumers that need per-commit
     * deltas (CDF) must read from here and fail when the window's JSONs have
-    * been cleaned. */
+    * been cleaned.
+    *
+    * The scan reads the `_delta_log` directory filtered to `*.json`: one
+    * root path, listed serially on the driver however many commits there
+    * are (a glob expands to one root per commit, which Spark lists in a
+    * job once there are more than 32), and a log without JSON commits is
+    * an empty frame rather than a missing path. */
   def readJsonActions(spark: SparkSession, tablePath: String): DataFrame =
     spark.read
       .schema(actionSchema)
-      .json(s"${logDir(tablePath)}/*.json")
+      .option("pathGlobFilter", "*.json")
+      .json(logDir(tablePath))
       .withColumn(
         "version",
         regexp_extract(col("_metadata.file_name"), "(\\d+)\\.json$", 1).cast(LongType))
 
   /** All actions across all commits, one row per JSON line, tagged with the
-    * commit version extracted from the file name (`%020d.json`).
+    * commit version extracted from the file name (`%020d.json`). The frame
+    * is not cached: its lines are read each time a query over it runs.
     *
     * Checkpoint-aware: if `_last_checkpoint` exists, the parquet checkpoint
     * at version N stands in for all commits <= N (its rows are treated as
     * actions at version N) and is unioned with ALL surviving JSON commits —
     * replay is per-path last-add-wins, so pre-checkpoint JSONs coexist
     * harmlessly while they keep history/time-travel working, and replay
-    * stays correct after expired JSON commits are cleaned. A multi-part
-    * checkpoint (`"parts": n` in `_last_checkpoint`) is read as its n
+    * stays correct after expired JSON commits are cleaned. The checkpoint
+    * is read under [[actionSchema]]: fields and actions it lacks read as
+    * null and those it adds (`txn`, `add.tags`, `metaData.configuration`,
+    * ...) are not read, so a foreign writer's checkpoint needs no footer
+    * inference. A multi-part checkpoint (`"parts": n` in
+    * `_last_checkpoint`) is read as its n
     * `%020d.checkpoint.%010d.%010d.parquet` files in one scan; a missing
     * checkpoint file fails naming it. */
   def readActions(spark: SparkSession, tablePath: String): DataFrame = {
     // _metadata.file_name (not input_file_name(), which Spark's PreReadCheck
     // forbids in multi-source plans such as the checkpoint union below)
+    val json = readJsonActions(spark, tablePath)
     lastCheckpoint(spark, tablePath) match {
-      case None => readJsonActions(spark, tablePath)
+      case None => json
       case Some((ckptV, parts)) =>
         val files = parts match {
           case None => Seq(f"$ckptV%020d.checkpoint.parquet")
@@ -131,24 +148,6 @@ object DeltaLog {
           throw new java.io.FileNotFoundException(
             s"_last_checkpoint names version $ckptV, but its checkpoint file $p is missing")
         }
-        val ckpt = spark.read.parquet(paths.map(_.toString): _*)
-        // field-wise alignment to actionSchema: real checkpoints carry extra
-        // top-level actions (txn) and extra nested fields (stats_parsed,
-        // tags, ...) — a struct cast would fail on arity, so rebuild each
-        // action struct from the subfields we consume, null-filling gaps
-        def alignedStruct(action: String, st: StructType): org.apache.spark.sql.Column = {
-          if (!ckpt.columns.contains(action)) return lit(null).cast(st).as(action)
-          val actionType = ckpt.schema(action).dataType.asInstanceOf[StructType]
-          val fields = st.fields.map { f =>
-            if (actionType.fieldNames.contains(f.name))
-              col(s"$action.${f.name}").cast(f.dataType).as(f.name)
-            else lit(null).cast(f.dataType).as(f.name)
-          }
-          when(col(action).isNotNull, struct(fields.toIndexedSeq: _*))
-            .otherwise(lit(null).cast(st)).as(action)
-        }
-        val aligned = actionSchema.fields.map(f =>
-          alignedStruct(f.name, f.dataType.asInstanceOf[StructType]))
         // Union the checkpoint with ALL surviving JSON commits, not only
         // those after it: replay is per-path last-add-wins, so checkpoint
         // rows (at ckptV) and older JSON adds coexist harmlessly, while the
@@ -156,9 +155,9 @@ object DeltaLog {
         // time travel working for as long as those JSONs are retained. Once
         // every JSON commit has been cleaned up, the checkpoint alone is the
         // table's state.
-        val state = ckpt.select(aligned.toIndexedSeq: _*).withColumn("version", lit(ckptV))
-        if (Option(fs.globStatus(new Path(logDir(tablePath), "*.json"))).forall(_.isEmpty)) state
-        else state.unionByName(readJsonActions(spark, tablePath))
+        spark.read.schema(actionSchema).parquet(paths.map(_.toString): _*)
+          .withColumn("version", lit(ckptV))
+          .unionByName(json)
     }
   }
 
@@ -215,60 +214,58 @@ object DeltaLog {
     require(fromVersion <= toVersion,
       s"bad change window ($fromVersion, $toVersion]")
     val snap = snapshot(spark, tablePath)
-    try {
-      require(toVersion <= snap.version,
-        s"change window ($fromVersion, $toVersion] exceeds current " +
-          s"version ${snap.version}")
-      val win = readJsonActions(spark, tablePath)
-        .where($"version" > fromVersion && $"version" <= toVersion)
-      // every commit writes a commitInfo line, so missing versions mean the
-      // window predates the retained JSON log (cleaned after a checkpoint)
-      val present = win.where($"commitInfo".isNotNull)
-        .select($"version").distinct().as[Long].collect().toSet
-      val missing = ((fromVersion + 1) to toVersion).filterNot(present)
-      require(missing.isEmpty,
-        s"change window ($fromVersion, $toVersion] reaches below the " +
-          s"retained JSON log: commit(s) ${missing.mkString(", ")} expired " +
-          "(cleaned after a checkpoint) — per-commit changes are " +
-          "unrecoverable from a state checkpoint")
-      if (snap.tableSchema.isEmpty) throw new IllegalStateException(
-        s"$tablePath: no schemaString in log; CDF needs a schema authority")
-      val addM = win.where($"add".isNotNull)
-        .select($"add.path".as("__file"), $"version", lit(1L).as("__sign"))
-      val remM = win.where($"remove".isNotNull)
-        .select($"remove.path".as("__file"), $"version", lit(-1L).as("__sign"))
-      val manifest = addM.union(remM)
-      // fail fast if VACUUM already reclaimed a window file: its changes
-      // are gone, and the feed must not come back incomplete
-      val files = manifest.select($"__file").distinct().as[String].collect().toSet
-      val gone = (files -- dataFiles(spark, snap.qualifiedTablePath).keySet).toSeq.sorted
-      require(gone.isEmpty,
-        s"change window ($fromVersion, $toVersion] references data file(s) " +
-          s"no longer on disk (vacuumed?), e.g. ${gone.take(3).mkString(", ")}")
-      // partition values from the CHECKPOINT-AWARE adds (snap.actions, not
-      // the JSON window): a file removed inside the window may have been
-      // added in a commit whose JSON has expired — its add action survives
-      // only as a checkpoint row
-      val windowFiles = snap.actions.where($"add.path".isin(files.toSeq: _*))
-        .select($"add.path".as("path"), $"add.size".as("size"),
-          $"add.partitionValues".as("partitionValues"),
-          $"add.modificationTime".as("modificationTime"))
-        .collect().groupBy(_.getString(0)).values.map(_.head).toSeq
-      val rows = snap.scan(windowFiles)
-      val dataAndPartCols = rows.columns.filterNot(_ == "__file").map(col).toSeq
-      val changed = rows.join(manifest, Seq("__file"))
-        .select(dataAndPartCols :+ $"version" :+ $"__sign": _*)
-      val keyCols = changed.columns.filterNot(_ == "__sign").map(col).toSeq
-      changed
-        .groupBy(keyCols: _*)
-        .agg(sum($"__sign").as("__net"))
-        .where($"__net" =!= 0L)
-        .withColumn("_change_type",
-          when($"__net" > 0L, "insert").otherwise("delete"))
-        .withColumn("__dup", explode(sequence(lit(1L), abs($"__net"))))
-        .drop("__net", "__dup")
-        .withColumnRenamed("version", "_commit_version")
-    } finally snap.unpersist()
+    require(toVersion <= snap.version,
+      s"change window ($fromVersion, $toVersion] exceeds current " +
+        s"version ${snap.version}")
+    val win = readJsonActions(spark, tablePath)
+      .where($"version" > fromVersion && $"version" <= toVersion)
+    // every commit writes a commitInfo line, so missing versions mean the
+    // window predates the retained JSON log (cleaned after a checkpoint)
+    val present = win.where($"commitInfo".isNotNull)
+      .select($"version").distinct().as[Long].collect().toSet
+    val missing = ((fromVersion + 1) to toVersion).filterNot(present)
+    require(missing.isEmpty,
+      s"change window ($fromVersion, $toVersion] reaches below the " +
+        s"retained JSON log: commit(s) ${missing.mkString(", ")} expired " +
+        "(cleaned after a checkpoint) — per-commit changes are " +
+        "unrecoverable from a state checkpoint")
+    if (snap.tableSchema.isEmpty) throw new IllegalStateException(
+      s"$tablePath: no schemaString in log; CDF needs a schema authority")
+    val addM = win.where($"add".isNotNull)
+      .select($"add.path".as("__file"), $"version", lit(1L).as("__sign"))
+    val remM = win.where($"remove".isNotNull)
+      .select($"remove.path".as("__file"), $"version", lit(-1L).as("__sign"))
+    val manifest = addM.union(remM)
+    // fail fast if VACUUM already reclaimed a window file: its changes
+    // are gone, and the feed must not come back incomplete
+    val files = manifest.select($"__file").distinct().as[String].collect().toSet
+    val gone = (files -- dataFiles(spark, snap.qualifiedTablePath).keySet).toSeq.sorted
+    require(gone.isEmpty,
+      s"change window ($fromVersion, $toVersion] references data file(s) " +
+        s"no longer on disk (vacuumed?), e.g. ${gone.take(3).mkString(", ")}")
+    // partition values from the CHECKPOINT-AWARE adds (snap.actions, not
+    // the JSON window): a file removed inside the window may have been
+    // added in a commit whose JSON has expired — its add action survives
+    // only as a checkpoint row
+    val windowFiles = snap.actions.where($"add.path".isin(files.toSeq: _*))
+      .select($"add.path".as("path"), $"add.size".as("size"),
+        $"add.partitionValues".as("partitionValues"),
+        $"add.modificationTime".as("modificationTime"))
+      .collect().groupBy(_.getString(0)).values.map(_.head).toSeq
+    val rows = snap.scan(windowFiles)
+    val dataAndPartCols = rows.columns.filterNot(_ == "__file").map(col).toSeq
+    val changed = rows.join(manifest, Seq("__file"))
+      .select(dataAndPartCols :+ $"version" :+ $"__sign": _*)
+    val keyCols = changed.columns.filterNot(_ == "__sign").map(col).toSeq
+    changed
+      .groupBy(keyCols: _*)
+      .agg(sum($"__sign").as("__net"))
+      .where($"__net" =!= 0L)
+      .withColumn("_change_type",
+        when($"__net" > 0L, "insert").otherwise("delete"))
+      .withColumn("__dup", explode(sequence(lit(1L), abs($"__net"))))
+      .drop("__net", "__dup")
+      .withColumnRenamed("version", "_commit_version")
   }
 
   /** S6: every `*.parquet` file under the table root, `_delta_log`
@@ -334,19 +331,16 @@ object DeltaLog {
   def snapshotAt(spark: SparkSession, tablePath: String, version: Long): DeltaSnapshot =
     open(spark, tablePath, readActions(spark, tablePath).where(col("version") <= version))
 
-  /** Caches `actions` and fails fast, releasing the cache, when the table's
-    * protocol needs a reader this one is not: reader version 2 is column
-    * mapping and version 3 lists reader features such as deletion vectors
-    * and v2 checkpoints (Delta PROTOCOL.md, "Protocol Evolution"). Any of
-    * them replays to a plausible but wrong record: deleted rows still
-    * counted, renamed columns resolved by their physical names. */
+  /** Runs the snapshot's one pass over the log and fails fast when the
+    * table's protocol needs a reader this one is not: reader version 2 is
+    * column mapping and version 3 lists reader features such as deletion
+    * vectors and v2 checkpoints (Delta PROTOCOL.md, "Protocol Evolution").
+    * Any of them replays to a plausible but wrong record: deleted rows
+    * still counted, renamed columns resolved by their physical names. */
   private def open(spark: SparkSession, tablePath: String, actions: DataFrame): DeltaSnapshot = {
-    val snap = DeltaSnapshot(spark, tablePath, actions.cache())
-    val (readerVersion, features) = try snap.readerProtocol catch {
-      case e: Throwable => snap.unpersist(); throw e
-    }
+    val snap = DeltaSnapshot(spark, tablePath, actions)
+    val (readerVersion, features) = snap.readerProtocol
     if (readerVersion > 1) {
-      snap.unpersist()
       val named = if (features.nonEmpty) features else Seq("columnMapping")
       throw new UnsupportedOperationException(
         s"$tablePath needs Delta reader version $readerVersion with reader " +
@@ -369,45 +363,88 @@ object DeltaLog {
 
 /** Replayed view of a Delta table at its latest version.
   *
-  * `actions` is the cached all-versions action frame. The active-file
-  * manifest is replayed from it once and held on the driver ([[manifest]]),
-  * and every data read is one parquet scan of exactly those files
-  * ([[scan]]); history is a lazy DataFrame over `actions`. The driver also
-  * holds the one-row [[latest]] lookup (version, schema, partition columns,
-  * protocol).
+  * `actions` is the lazy, uncached all-versions action frame. Opening the
+  * snapshot runs ONE aggregate over it ([[groups]]), collected to the
+  * driver: one group per file path, which replays add/remove into the
+  * active-file [[manifest]], and one group per commit version, which
+  * carries that commit's commitInfo, metaData and protocol. Every other
+  * fact is plain Scala over those rows: [[version]], the [[latest]]
+  * metaData and protocol ([[tableSchema]], [[partitionColumns]], the
+  * reader protocol), [[history]] and [[partitionCounts]]. Every data read
+  * is one parquet scan of exactly the manifest's files ([[scan]]).
   */
 final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: DataFrame) {
   import spark.implicits._
 
-  /** One row per commit: version, timestamp (epoch millis), operation,
-    * operationParameters, operationMetrics. Mirrors `dt.history()` /
-    * `DESCRIBE HISTORY` (delta_python_analyzer.py:167,
-    * delta_spark_analyzer.py:118). */
-  lazy val history: DataFrame = actions
-    .where($"commitInfo".isNotNull)
-    .select(
-      $"version",
-      $"commitInfo.timestamp".as("timestamp"),
-      $"commitInfo.operation".as("operation"),
-      $"commitInfo.operationParameters".as("operationParameters"),
-      $"commitInfo.operationMetrics".as("operationMetrics"))
+  /** The one pass over the log: a `groupingSets` aggregate with one group
+    * per file path (`coalesce(add.path, remove.path)`) and one per commit
+    * version, so the log is scanned once and collected in two Spark jobs
+    * (the aggregate's map stage and its result).
+    *
+    * A path group is a `file` row when the path is active: its latest
+    * `add` survives unless a `remove` with version >= the add's version
+    * exists; a remove without an add yields no row. A version group is a
+    * commit row: `version` and the commit's `commitInfo`, `metaData` and
+    * `protocol` (each null when the commit has none). Dead paths are
+    * dropped before the collect, so the driver holds the active files and
+    * one row per commit. */
+  private lazy val pass: DataFrame = {
+    def inCommit(action: String) =
+      max_by(col(action), when(col(action).isNotNull, $"version")).as(action)
+    actions
+      .withColumn("path", coalesce($"add.path", $"remove.path"))
+      .groupingSets(Seq(Seq($"path"), Seq($"version")), $"path", $"version")
+      .agg(
+        (grouping($"path") === 1).as("isCommit"),
+        max_by(struct($"add.size", $"add.partitionValues", $"add.modificationTime", $"add.stats", $"version"),
+          when($"add".isNotNull, $"version")).as("a"),
+        max(when($"remove".isNotNull, $"version")).as("removeVersion"),
+        inCommit("commitInfo"), inCommit("metaData"), inCommit("protocol"))
+      .where($"isCommit" || ($"path".isNotNull && $"a".isNotNull &&
+        ($"removeVersion".isNull || $"a.version" > $"removeVersion")))
+      .select(
+        when(!$"isCommit", struct($"path", $"a.size", $"a.partitionValues",
+          $"a.modificationTime", $"a.stats")).as("file"),
+        $"version", $"commitInfo", $"metaData", $"protocol")
+  }
 
-  /** The one driver lookup over the log: max version, and the latest
-    * metaData and protocol actions (each null when the log has none). */
-  private[graft] lazy val latest: Row = actions.agg(
-    max($"version").as("version"),
-    max_by($"metaData", when($"metaData".isNotNull, $"version")).as("metaData"),
-    max_by($"protocol", when($"protocol".isNotNull, $"version")).as("protocol"))
-    .first()
+  private lazy val groups: Array[Row] = pass.collect()
+
+  /** The commit rows of [[groups]]: version, commitInfo, metaData,
+    * protocol, each action null when the commit has none. */
+  private lazy val commits: Array[Row] =
+    groups.filter(r => r.isNullAt(0) && !r.isNullAt(1))
+
+  private lazy val historySchema: StructType = StructType(pass.schema("version") +:
+    pass.schema("commitInfo").dataType.asInstanceOf[StructType].fields)
+
+  /** History rows, held on the driver in version order: the commits that
+    * carry a commitInfo, as version, timestamp (epoch millis), operation,
+    * operationParameters, operationMetrics. */
+  private[graft] lazy val historyRows: Array[Row] = commits
+    .filter(_.getAs[Row]("commitInfo") != null)
+    .sortBy(_.getAs[Long]("version"))
+    .map(c => new GenericRowWithSchema(
+      (c.getAs[Long]("version") +: c.getAs[Row]("commitInfo").toSeq).toArray, historySchema))
+
+  /** [[historyRows]] as a local frame. Mirrors `dt.history()` /
+    * `DESCRIBE HISTORY` (delta_python_analyzer.py:167,
+    * delta_spark_analyzer.py:118): one row per commit, metadata-sized as
+    * `DESCRIBE HISTORY`'s output is, so it is held on the driver. */
+  lazy val history: DataFrame = spark.createDataFrame(historyRows.toSeq.asJava, historySchema)
+
+  /** The latest `action` ("metaData" or "protocol") in the log, if any:
+    * the one carried by the highest commit version that has one. */
+  private[graft] def latest(action: String): Option[Row] =
+    commits.filter(_.getAs[Row](action) != null)
+      .maxByOption(_.getAs[Long]("version")).map(_.getAs[Row](action))
 
   private def latestField[T](action: String, field: String): Option[T] =
-    Option(latest.getAs[Row](action))
-      .flatMap(r => Option(r.getAs[T](field)))
+    latest(action).flatMap(r => Option(r.getAs[T](field)))
 
   /** max commit version — the reference's `version_count` is max(version),
     * 0-based, NOT len(history) (delta_python_analyzer.py:189). */
-  lazy val version: Long =
-    Option(latest.getAs[java.lang.Long]("version")).map(_.longValue).getOrElse(0L)
+  lazy val version: Long = commits.map(_.getAs[Long]("version")).maxOption.getOrElse(0L)
 
   /** Authoritative table schema from the latest metaData action's
     * `schemaString` (the Delta protocol's schema authority — the FULL
@@ -433,33 +470,18 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
       latestField[collection.Seq[String]]("protocol", "readerFeatures")
         .map(_.toSeq).getOrElse(Seq.empty))
 
-  /** Active file manifest: per path, the latest `add` survives unless a
-    * `remove` with version >= the add's version exists. Columns:
-    * path, size, partitionValues, modificationTime, stats (the add's
-    * per-file statistics JSON, whose `numRecords` feeds [[partitionCounts]];
-    * null or empty in logs whose writers recorded none).
-    *
-    * Replayed once per snapshot (one hash aggregation on the path of the
-    * add or remove) and collected into [[manifest]]: a scan must name its
-    * files on the driver, where every analysis and append already lists the
-    * whole table folder ([[DeltaLog.dataFiles]]), and the active files are a
-    * subset of it. The frame is a local relation over those rows, so it
-    * needs no cache. */
+  /** Active file manifest, held on the driver: the `file` rows of
+    * [[groups]], with columns path, size, partitionValues,
+    * modificationTime, stats (the add's per-file statistics JSON, whose
+    * `numRecords` feeds [[partitionCounts]]; null or empty in logs whose
+    * writers recorded none). A scan must name its files on the driver,
+    * where every analysis and append already lists the whole table folder
+    * ([[DeltaLog.dataFiles]]), and the active files are a subset of it. */
+  private[graft] lazy val manifest: Array[Row] = groups.flatMap(r => Option(r.getStruct(0)))
+
+  /** [[manifest]] as a local frame. */
   lazy val activeFiles: DataFrame =
-    spark.createDataFrame(manifest.toSeq.asJava, replayed.schema)
-
-  private lazy val replayed: DataFrame = actions
-    .where($"add".isNotNull || $"remove".isNotNull)
-    .groupBy(coalesce($"add.path", $"remove.path").as("path"))
-    .agg(
-      max_by(struct($"add.size", $"add.partitionValues", $"add.modificationTime", $"add.stats", $"version"),
-        when($"add".isNotNull, $"version")).as("a"),
-      max(when($"remove".isNotNull, $"version")).as("removeVersion"))
-    .where($"a".isNotNull && ($"removeVersion".isNull || $"a.version" > $"removeVersion"))
-    .select($"path", $"a.size", $"a.partitionValues", $"a.modificationTime", $"a.stats")
-
-  /** [[activeFiles]]' rows, held on the driver. */
-  private[graft] lazy val manifest: Array[Row] = replayed.collect()
+    spark.createDataFrame(manifest.toSeq.asJava, pass.schema("file").dataType.asInstanceOf[StructType])
 
   /** Active table-relative path → size, from [[manifest]]. */
   private[graft] lazy val activeSizes: Map[String, Long] =
@@ -552,6 +574,7 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
       spark.read.parquet(new Path(new Path(qualifiedTablePath), new Path(null, null, first)).toString).schema
   }
 
-  /** Releases the cached `actions` frame. */
-  def unpersist(): Unit = { actions.unpersist(); () }
+  /** A no-op: a snapshot caches nothing, its state is the driver-held rows
+    * of [[groups]]. Kept for callers written when it released a cache. */
+  def unpersist(): Unit = ()
 }

@@ -44,7 +44,6 @@ object HealthDemo {
     println("=== active files ===")
     snap.activeFiles.orderBy("path").show(60, false)
     println(s"=== replayed row count = ${snap.data.count()}")
-    snap.unpersist()
 
     println("=== health analysis ===")
     val m = HealthAnalyzer.analyzeTable(spark, path)

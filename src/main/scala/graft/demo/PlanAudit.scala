@@ -29,7 +29,6 @@ object PlanAudit {
         graft.deltalog.DeltaFixtureWriter.delete(spark, path, "l_quantity > 45")
         val snap = graft.deltalog.DeltaLog.snapshot(spark, path)
         snap.data.explain("formatted")
-        snap.unpersist()
         graft.deltalog.DeltaFixtureWriter.drop(path)
       case "optimize" =>
         // the OPTIMIZE rewrite: one manifest-index scan of exactly the
@@ -44,7 +43,6 @@ object PlanAudit {
         val snap = graft.deltalog.DeltaLog.snapshot(spark, path)
         graft.operators.Maintenance.optimizeRewrite(snap, 128L * 1024 * 1024, 64L * 1024 * 1024)
           .foreach(_._1.explain("formatted"))
-        snap.unpersist()
         graft.deltalog.DeltaFixtureWriter.drop(path)
       case "changes" =>
         // the CDF plan: one scan of the window's files + join to the

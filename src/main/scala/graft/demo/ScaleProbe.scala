@@ -591,7 +591,6 @@ object ScaleProbe {
           .agg(min(col(c)).as("mn"), max(col(c)).as("mx"))
           .where(col("mn") <= hi && col("mx") >= lo)
           .count()
-        snap.unpersist()
         (hit, total)
       }
 
@@ -608,7 +607,6 @@ object ScaleProbe {
         val snap0 = DeltaLog.snapshot(spark, tbl)
         val bytes = snap0.detail.select("sizeInBytes")
           .collect().head.getLong(0)
-        snap0.unpersist()
         time(s"OPTIMIZE ZORDER (rankBased=$rank) over 6M rows") {
           Maintenance.zorder(spark, tbl, Seq("l_orderkey", "l_partkey"),
             targetFileBytes = math.max(1L, bytes / 32), rankBased = rank)

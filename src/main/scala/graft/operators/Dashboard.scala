@@ -26,33 +26,30 @@ object Dashboard {
     // the snapshot's log-derived counts: no data file is opened
     val snap = DeltaLog.snapshot(spark, tablePath)
     // dashboard frames are display-sized (top-15, 20 bins, one row per
-    // commit) — materialize them eagerly so the snapshot cache can be
-    // released here rather than leaking into the caller's session
+    // commit) — materialize them eagerly into local frames
     def eager(df: DataFrame): DataFrame =
       spark.createDataFrame(
         java.util.Arrays.asList(df.collect(): _*), df.schema)
-    try {
-      val m = HealthAnalyzer.analyzeSnapshot(snap, thresholds)
-      import spark.implicits._
-      val counts = m.skewMetrics match {
-        case Some(sk) if sk.partitionCount > sk.recordsPerPartition.size =>
-          // the driver dict was capped to the top-N heaviest partitions —
-          // key the FULL log-derived counts so the "Others" bucket sums the
-          // whole tail, not just ranks topN-and-under
-          SkewAnalyzer.keyed(snap.partitionCounts).toDF("partition", "count")
-        case Some(sk) =>
-          sk.recordsPerPartition.toSeq.toDF("partition", "count")
-        case None => Seq.empty[(String, Long)].toDF("partition", "count")
-      }
-      Frames(
-        metrics = m,
-        recommendations = HealthAnalyzer.recommendations(spark, m),
-        partitionCountsTopN =
-          eager(RollupOps.topNWithOthers(counts, "partition", "count", 15)),
-        fileSizeBins = eager(StorageAnalyzer.sizeHistogram(snap.activeFiles)),
-        historyEnriched = eager(HistoryAnalyzer.enriched(snap.history)),
-        perVersionFileDeltas =
-          eager(HistoryAnalyzer.perVersionFileDeltas(snap.history)))
-    } finally snap.unpersist()
+    val m = HealthAnalyzer.analyzeSnapshot(snap, thresholds)
+    import spark.implicits._
+    val counts = m.skewMetrics match {
+      case Some(sk) if sk.partitionCount > sk.recordsPerPartition.size =>
+        // the driver dict was capped to the top-N heaviest partitions —
+        // key the FULL log-derived counts so the "Others" bucket sums the
+        // whole tail, not just ranks topN-and-under
+        SkewAnalyzer.keyed(snap.partitionCounts).toDF("partition", "count")
+      case Some(sk) =>
+        sk.recordsPerPartition.toSeq.toDF("partition", "count")
+      case None => Seq.empty[(String, Long)].toDF("partition", "count")
+    }
+    Frames(
+      metrics = m,
+      recommendations = HealthAnalyzer.recommendations(spark, m),
+      partitionCountsTopN =
+        eager(RollupOps.topNWithOthers(counts, "partition", "count", 15)),
+      fileSizeBins = eager(StorageAnalyzer.sizeHistogram(snap.activeFiles)),
+      historyEnriched = eager(HistoryAnalyzer.enriched(snap.history)),
+      perVersionFileDeltas =
+        eager(HistoryAnalyzer.perVersionFileDeltas(snap.history)))
   }
 }

@@ -7,15 +7,16 @@ import graft.deltalog.DeltaLog
 import graft.health._
 
 /** End-to-end table health analysis — the re-architected E1 entry point
-  * (SURVEY.md §3): one cached log snapshot with its driver-held manifest,
-  * then three passes that each derive their facts from one source — the
-  * history aggregate, the manifest's per-file `numRecords` summed per
-  * partition on the driver and folded into the record count and skew by
-  * [[SkewAnalyzer.stats]], and the folder listing set against the manifest
-  * (storage) — feeding the pure-Scala health calculus. Only the log read,
-  * its replay and the history aggregate run Spark jobs; the counts and
-  * storage passes are plain Scala. No data file is opened: a file whose
-  * log stats lack a row count is counted from its parquet footer.
+  * (SURVEY.md §3): one log snapshot, whose single aggregate over the log
+  * leaves the manifest and the commit history on the driver, then three
+  * passes that each derive their facts from one source — the history rows
+  * counted by [[HistoryAnalyzer.counts]], the manifest's per-file
+  * `numRecords` summed per partition and folded into the record count and
+  * skew by [[SkewAnalyzer.stats]], and the folder listing set against the
+  * manifest (storage) — feeding the pure-Scala health calculus. Only
+  * opening the snapshot runs Spark jobs (two); the three passes are plain
+  * Scala. No data file is opened: a file whose log stats lack a row count
+  * is counted from its parquet footer.
   *
   * Implements the *Python* backend's measured semantics (the honest fork of
   * H6-H10 — delta_python_analyzer.py:224-275) since our log layer has full
@@ -26,8 +27,7 @@ object HealthAnalyzer {
 
   def analyzeTable(spark: SparkSession, tablePath: String,
                    thresholds: Thresholds = Thresholds()): DeltaAnalyzerMetrics = {
-    val snap = DeltaLog.snapshot(spark, tablePath)
-    try analyzeSnapshot(snap, thresholds) finally snap.unpersist()
+    analyzeSnapshot(DeltaLog.snapshot(spark, tablePath), thresholds)
   }
 
   /** S1 with catalog dispatch: accepts EITHER a filesystem path or a
@@ -81,7 +81,7 @@ object HealthAnalyzer {
     val spark = snap.spark
     val tablePath = snap.tablePath
     // history pass (A5/A6)
-    val ops = HistoryAnalyzer.opCounts(snap.history).first()
+    val ops = HistoryAnalyzer.counts(snap.historyRows.toSeq)
     // storage pass (A8-A13, J1): one folder listing against the manifest,
     // which also checks that every active file exists — with counts taken
     // from the log, no data scan is left to notice one gone
@@ -114,10 +114,10 @@ object HealthAnalyzer {
       isSkewed = skew.isSkewed,
       skewnessMax = skew.skewnessMax,
       skewnessAverage = skew.skewnessAverage,
-      numberOfWrites = ops.getAs[Long]("number_of_writes"),
-      numberOfDeletes = ops.getAs[Long]("number_of_deletes"),
-      numberOfOptimizes = ops.getAs[Long]("number_of_optimizes"),
-      isCompacted = ops.getAs[Long]("number_of_optimizes") > 0,
+      numberOfWrites = ops.writes,
+      numberOfDeletes = ops.deletes,
+      numberOfOptimizes = ops.optimizes,
+      isCompacted = ops.optimizes > 0,
       tableSizeBytes = tableSize,
       folderSizeBytes = folderSize,
       needsVacuum = needsVacuum,

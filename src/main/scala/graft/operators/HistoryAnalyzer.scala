@@ -1,24 +1,41 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** History analytics over the commit log (delta_python_analyzer.py:167-189,
   * delta_spark_analyzer.py:118-136, visualization/notebook/delta_operations.py).
-  * All single-pass conditional aggregations / projections over the (small)
-  * history frame. */
+  * The op counts are plain Scala over the history rows; the rest are
+  * projections over the (small) history frame. */
 object HistoryAnalyzer {
 
+  /** A5+A6 of one history: the WRITE, DELETE, OPTIMIZE and MERGE commit
+    * counts, and versionCount = max(version), 0 without commits — NOT the
+    * number of commits (delta_python_analyzer.py:189). */
+  final case class OpCounts(writes: Long, deletes: Long, optimizes: Long,
+                            merges: Long, versionCount: Long)
+
+  /** The one op-count computation, over history rows with `version` and
+    * `operation` fields (the rows
+    * [[graft.deltalog.DeltaSnapshot.historyRows]] holds on the driver). */
+  def counts(history: Seq[Row]): OpCounts = {
+    val ops = history.flatMap(r => Option(r.getAs[String]("operation")))
+      .groupMapReduce(identity)(_ => 1L)(_ + _).withDefaultValue(0L)
+    val maxVersion = history.flatMap(r => Option(r.getAs[java.lang.Long]("version")))
+      .map(_.longValue).maxOption.getOrElse(0L)
+    OpCounts(ops("WRITE"), ops("DELETE"), ops("OPTIMIZE"), ops("MERGE"), maxVersion)
+  }
+
   /** A5+A6: one-row frame (number_of_writes, number_of_deletes,
-    * number_of_optimizes, number_of_merges, version_count). version_count is
-    * max(version) — NOT the number of commits (delta_python_analyzer.py:189). */
-  def opCounts(history: DataFrame): DataFrame =
-    history.agg(
-      coalesce(sum(when(col("operation") === "WRITE", 1L)), lit(0L)).as("number_of_writes"),
-      coalesce(sum(when(col("operation") === "DELETE", 1L)), lit(0L)).as("number_of_deletes"),
-      coalesce(sum(when(col("operation") === "OPTIMIZE", 1L)), lit(0L)).as("number_of_optimizes"),
-      coalesce(sum(when(col("operation") === "MERGE", 1L)), lit(0L)).as("number_of_merges"),
-      coalesce(max(col("version")), lit(0L)).as("version_count"))
+    * number_of_optimizes, number_of_merges, version_count) — [[counts]]
+    * over the collected `history`. */
+  def opCounts(history: DataFrame): DataFrame = {
+    val c = counts(history.select("version", "operation").collect().toSeq)
+    history.sparkSession
+      .createDataFrame(Seq((c.writes, c.deletes, c.optimizes, c.merges, c.versionCount)))
+      .toDF("number_of_writes", "number_of_deletes", "number_of_optimizes",
+        "number_of_merges", "version_count")
+  }
 
   /** A17: per-version file deltas from operationMetrics with defaulting map
     * access (delta_operations.py:59-63). */

@@ -57,7 +57,7 @@ object Maintenance {
     val smallThr = if (smallFileBytes > 0L) smallFileBytes else targetFileBytes / 2
     val snap = DeltaLog.snapshot(spark, tablePath)
     val params = Seq("predicate" -> "[]", "targetFileBytes" -> targetFileBytes.toString)
-    try optimizeRewrite(snap, targetFileBytes, smallThr) match {
+    optimizeRewrite(snap, targetFileBytes, smallThr) match {
       case None =>
         DeltaFixtureWriter.logCommit(tablePath, snap.version + 1, "OPTIMIZE", params)
       case Some((rows, removes)) =>
@@ -66,7 +66,7 @@ object Maintenance {
         DeltaFixtureWriter.writeCommitStream(tablePath, snap.version + 1, "OPTIMIZE",
           params, adds = added.iterator, removes = removes.iterator,
           partitionBy = snap.partitionColumns)
-    } finally snap.unpersist()
+    }
   }
 
   /** The rewrite of [[optimize]], None when no partition has two small
@@ -136,54 +136,52 @@ object Maintenance {
     val zParams = Seq(
       "zOrderBy" -> zorderCols.mkString("[\"", "\",\"", "\"]"),
       "targetFileBytes" -> targetFileBytes.toString)
-    try {
-      snap.dataWithFile match {
-        case None =>
-          DeltaFixtureWriter.logCommit(tablePath, snap.version + 1, "OPTIMIZE",
-            zParams)
-        case Some(rows) =>
-          val nOut = math.max(1L, math.ceil(
-            snap.activeSizes.values.sum.toDouble / targetFileBytes).toLong).toInt
-          val z =
-            if (rankBased) {
-              // equi-depth cells: 255 approx-quantile boundaries per column
-              // (one GK-sketch pass over the active rows, driver payload =
-              // 255 doubles/col) — immune to outlier-stretched ranges
-              val probs = (1 until 256).map(_ / 256.0).toArray
-              val doubled = rows.select(zorderCols.map(c =>
-                col(c).cast("double").as(c)): _*)
-              val bounds = doubled.stat.approxQuantile(
-                zorderCols.toArray, probs, 0.001)
-              zValue(zorderCols.zipWithIndex.map { case (c, i) =>
-                rankCell(col(c).cast("double"), bounds(i))
-              }, bits = 8)
-            } else {
-              val mmCols = zorderCols.flatMap(c => Seq(
-                min(col(c).cast("double")).as(s"mn_$c"),
-                max(col(c).cast("double")).as(s"mx_$c")))
-              val mm = rows.agg(mmCols.head, mmCols.tail: _*).first()
-              zValue(zorderCols.zipWithIndex.map { case (c, i) =>
-                // an all-null cluster column aggregates to NULL min/max —
-                // Row.getDouble would NPE, so land the column in cell 0
-                // directly (same cell bucket16 gives constant columns)
-                if (mm.isNullAt(2 * i) || mm.isNullAt(2 * i + 1)) lit(0L)
-                else bucket16(col(c), mm.getDouble(2 * i), mm.getDouble(2 * i + 1))
-              })
-            }
-          val shuffleKeys = partCols.map(col) :+ col("__z")
-          val added = DeltaFixtureWriter.appendFiles(
-            rows.drop("__file").withColumn("__z", z)
-              .repartitionByRange(nOut, shuffleKeys: _*)
-              .sortWithinPartitions(shuffleKeys: _*)
-              .drop("__z"),
-            snap.qualifiedTablePath, partCols)
-          DeltaFixtureWriter.writeCommitStream(tablePath, snap.version + 1,
-            "OPTIMIZE", zParams,
-            adds = added.iterator,
-            removes = snap.activeSizes.keys.toSeq.sorted.iterator,
-            partitionBy = partCols)
-      }
-    } finally snap.unpersist()
+    snap.dataWithFile match {
+      case None =>
+        DeltaFixtureWriter.logCommit(tablePath, snap.version + 1, "OPTIMIZE",
+          zParams)
+      case Some(rows) =>
+        val nOut = math.max(1L, math.ceil(
+          snap.activeSizes.values.sum.toDouble / targetFileBytes).toLong).toInt
+        val z =
+          if (rankBased) {
+            // equi-depth cells: 255 approx-quantile boundaries per column
+            // (one GK-sketch pass over the active rows, driver payload =
+            // 255 doubles/col) — immune to outlier-stretched ranges
+            val probs = (1 until 256).map(_ / 256.0).toArray
+            val doubled = rows.select(zorderCols.map(c =>
+              col(c).cast("double").as(c)): _*)
+            val bounds = doubled.stat.approxQuantile(
+              zorderCols.toArray, probs, 0.001)
+            zValue(zorderCols.zipWithIndex.map { case (c, i) =>
+              rankCell(col(c).cast("double"), bounds(i))
+            }, bits = 8)
+          } else {
+            val mmCols = zorderCols.flatMap(c => Seq(
+              min(col(c).cast("double")).as(s"mn_$c"),
+              max(col(c).cast("double")).as(s"mx_$c")))
+            val mm = rows.agg(mmCols.head, mmCols.tail: _*).first()
+            zValue(zorderCols.zipWithIndex.map { case (c, i) =>
+              // an all-null cluster column aggregates to NULL min/max —
+              // Row.getDouble would NPE, so land the column in cell 0
+              // directly (same cell bucket16 gives constant columns)
+              if (mm.isNullAt(2 * i) || mm.isNullAt(2 * i + 1)) lit(0L)
+              else bucket16(col(c), mm.getDouble(2 * i), mm.getDouble(2 * i + 1))
+            })
+          }
+        val shuffleKeys = partCols.map(col) :+ col("__z")
+        val added = DeltaFixtureWriter.appendFiles(
+          rows.drop("__file").withColumn("__z", z)
+            .repartitionByRange(nOut, shuffleKeys: _*)
+            .sortWithinPartitions(shuffleKeys: _*)
+            .drop("__z"),
+          snap.qualifiedTablePath, partCols)
+        DeltaFixtureWriter.writeCommitStream(tablePath, snap.version + 1,
+          "OPTIMIZE", zParams,
+          adds = added.iterator,
+          removes = snap.activeSizes.keys.toSeq.sorted.iterator,
+          partitionBy = partCols)
+    }
   }
 
   /** Equal-width 16-bit cell index of `c` over [mn, mx]; constant columns
@@ -238,46 +236,44 @@ object Maintenance {
              dryRun: Boolean = false): DataFrame = {
     import spark.implicits._
     val snap = DeltaLog.snapshot(spark, tablePath)
-    try {
-      val listing = DeltaLog.dataFiles(spark, tablePath)
-      val dir = new Path(snap.qualifiedTablePath).toUri.getPath.stripSuffix("/")
-      val orphans = StorageAnalyzer.storage(listing, snap.activeSizes, None).orphans
-        .map(rel => (s"$dir/$rel", listing(rel)))
-      val cutoff = System.currentTimeMillis() - retainMs
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      // one row PER candidate with an outcome flag — never a filter on the
-      // delete result: a task re-attempt (retry/speculation) re-runs the
-      // lambda, sees exists()=false for files its first attempt already
-      // removed, and a filter would silently drop those rows, undercounting
-      // numFilesDeleted in the VACUUM commit
-      val processed: Array[(String, Long, String)] = orphans.toDS()
-        .mapPartitions { it =>
-          it.map { case (p, sz) =>
-            val path = new Path(p)
-            val pfs = path.getFileSystem(conf.value)
-            val status =
-              if (!pfs.exists(path)) "missing" // gone already — a prior attempt of this run (or an external actor) removed it
-              else if (pfs.getFileStatus(path).getModificationTime >= cutoff) "retained"
-              else if (dryRun) "deleted"
-              // a false delete() that leaves the file in place is a real
-              // failure (permissions, lease); a false delete() on a vanished
-              // file is just a lost race with a concurrent attempt
-              else if (pfs.delete(path, false) || !pfs.exists(path)) "deleted"
-              else "failed"
-            (p, sz, status)
-          }
+    val listing = DeltaLog.dataFiles(spark, tablePath)
+    val dir = new Path(snap.qualifiedTablePath).toUri.getPath.stripSuffix("/")
+    val orphans = StorageAnalyzer.storage(listing, snap.activeSizes, None).orphans
+      .map(rel => (s"$dir/$rel", listing(rel)))
+    val cutoff = System.currentTimeMillis() - retainMs
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    // one row PER candidate with an outcome flag — never a filter on the
+    // delete result: a task re-attempt (retry/speculation) re-runs the
+    // lambda, sees exists()=false for files its first attempt already
+    // removed, and a filter would silently drop those rows, undercounting
+    // numFilesDeleted in the VACUUM commit
+    val processed: Array[(String, Long, String)] = orphans.toDS()
+      .mapPartitions { it =>
+        it.map { case (p, sz) =>
+          val path = new Path(p)
+          val pfs = path.getFileSystem(conf.value)
+          val status =
+            if (!pfs.exists(path)) "missing" // gone already — a prior attempt of this run (or an external actor) removed it
+            else if (pfs.getFileStatus(path).getModificationTime >= cutoff) "retained"
+            else if (dryRun) "deleted"
+            // a false delete() that leaves the file in place is a real
+            // failure (permissions, lease); a false delete() on a vanished
+            // file is just a lost race with a concurrent attempt
+            else if (pfs.delete(path, false) || !pfs.exists(path)) "deleted"
+            else "failed"
+          (p, sz, status)
         }
-        .collect()   // materializes (and on !dryRun, performs) the deletes
-      // "missing" counts as removed-by-this-run: the only way a listed orphan
-      // is already gone mid-job is an earlier attempt's delete
-      val gone = processed.filter(t => t._3 == "deleted" || t._3 == "missing")
-      if (!dryRun)
-        DeltaFixtureWriter.logCommit(tablePath, snap.version + 1, "VACUUM",
-          Seq("retentionCheck" -> "false",
-              "numFilesDeleted" -> gone.length.toString))
-      gone.toSeq.map { case (p, s, _) => (p, s) }.toDF("path", "size")
-    } finally snap.unpersist()
+      }
+      .collect()   // materializes (and on !dryRun, performs) the deletes
+    // "missing" counts as removed-by-this-run: the only way a listed orphan
+    // is already gone mid-job is an earlier attempt's delete
+    val gone = processed.filter(t => t._3 == "deleted" || t._3 == "missing")
+    if (!dryRun)
+      DeltaFixtureWriter.logCommit(tablePath, snap.version + 1, "VACUUM",
+        Seq("retentionCheck" -> "false",
+            "numFilesDeleted" -> gone.length.toString))
+    gone.toSeq.map { case (p, s, _) => (p, s) }.toDF("path", "size")
   }
 
   /** RESTORE TABLE TO VERSION — Delta's `RESTORE` as a METADATA-ONLY
@@ -299,37 +295,33 @@ object Maintenance {
     * maintenance family alongside MERGE/VACUUM/ZORDER/CDF). */
   def restore(spark: SparkSession, tablePath: String, toVersion: Long): Unit = {
     val cur = DeltaLog.snapshot(spark, tablePath)
-    try {
-      require(toVersion >= 0 && toVersion <= cur.version,
-        s"restore target $toVersion outside [0, ${cur.version}]")
-      if (toVersion == cur.version) {
-        DeltaFixtureWriter.logCommit(tablePath, cur.version + 1, "RESTORE",
-          Seq("version" -> toVersion.toString, "numRestoredFiles" -> "0",
-            "numRemovedFiles" -> "0"))
-        return
-      }
-      val tgt = DeltaLog.snapshotAt(spark, tablePath, toVersion)
-      try {
-        val adds = (tgt.activeSizes -- cur.activeSizes.keys).toSeq.sorted
-        val removes = (cur.activeSizes.keySet -- tgt.activeSizes.keys).toSeq.sorted
-        // vacuum check: every file to re-add must still exist on disk
-        val onDisk = DeltaLog.dataFiles(spark, cur.qualifiedTablePath)
-        val missing = adds.map(_._1).filterNot(onDisk.contains)
-        require(missing.isEmpty,
-          s"restore to $toVersion impossible: ${missing.length} target " +
-            s"files no longer on disk (vacuumed?), e.g. ${missing.head}")
-        DeltaFixtureWriter.writeCommitStream(tablePath, cur.version + 1,
-          "RESTORE",
-          Seq("version" -> toVersion.toString,
-            "numRestoredFiles" -> adds.length.toString,
-            "numRemovedFiles" -> removes.length.toString),
-          adds = adds.iterator,
-          removes = removes.iterator,
-          partitionBy = tgt.partitionColumns,
-          schema = Option.when(cur.tableSchema != tgt.tableSchema)(
-            tgt.tableSchema.getOrElse(new StructType())))
-      } finally tgt.unpersist()
-    } finally cur.unpersist()
+    require(toVersion >= 0 && toVersion <= cur.version,
+      s"restore target $toVersion outside [0, ${cur.version}]")
+    if (toVersion == cur.version) {
+      DeltaFixtureWriter.logCommit(tablePath, cur.version + 1, "RESTORE",
+        Seq("version" -> toVersion.toString, "numRestoredFiles" -> "0",
+          "numRemovedFiles" -> "0"))
+      return
+    }
+    val tgt = DeltaLog.snapshotAt(spark, tablePath, toVersion)
+    val adds = (tgt.activeSizes -- cur.activeSizes.keys).toSeq.sorted
+    val removes = (cur.activeSizes.keySet -- tgt.activeSizes.keys).toSeq.sorted
+    // vacuum check: every file to re-add must still exist on disk
+    val onDisk = DeltaLog.dataFiles(spark, cur.qualifiedTablePath)
+    val missing = adds.map(_._1).filterNot(onDisk.contains)
+    require(missing.isEmpty,
+      s"restore to $toVersion impossible: ${missing.length} target " +
+        s"files no longer on disk (vacuumed?), e.g. ${missing.head}")
+    DeltaFixtureWriter.writeCommitStream(tablePath, cur.version + 1,
+      "RESTORE",
+      Seq("version" -> toVersion.toString,
+        "numRestoredFiles" -> adds.length.toString,
+        "numRemovedFiles" -> removes.length.toString),
+      adds = adds.iterator,
+      removes = removes.iterator,
+      partitionBy = tgt.partitionColumns,
+      schema = Option.when(cur.tableSchema != tgt.tableSchema)(
+        tgt.tableSchema.getOrElse(new StructType())))
   }
 
   /** Write a parquet checkpoint of the current snapshot state — active adds
@@ -342,46 +334,44 @@ object Maintenance {
     * and protocol/metaData survive their cleanup. */
   def checkpoint(spark: SparkSession, tablePath: String): Long = {
     val snap = DeltaLog.snapshot(spark, tablePath)
-    try {
-      val v = snap.version
-      val metaType = DeltaLog.actionSchema("metaData").dataType
-      val protoType = DeltaLog.actionSchema("protocol").dataType
-      val adds = snap.activeFiles.select(
-        struct(
-          col("path"), col("size"), col("partitionValues"),
-          col("modificationTime"), lit(true).as("dataChange"),
-          col("stats")).as("add"),
-        lit(null).cast(metaType).as("metaData"),
-        lit(null).cast(protoType).as("protocol"))
-      // metaData and protocol come from the snapshot's one-row lookup; a log
-      // that predates protocol emission still gets a valid checkpoint with
-      // the minimal classic protocol (1, 2)
-      val meta = Option(snap.latest.getAs[Row]("metaData"))
-      val proto = Option(snap.latest.getAs[Row]("protocol")).getOrElse(Row(1, 2, null))
-      val tail = spark.createDataFrame(
-        (meta.map(m => Row(null, m, null)).toSeq :+ Row(null, null, proto)).asJava,
-        StructType(Seq("add", "metaData", "protocol").map(DeltaLog.actionSchema(_))))
-      val ckpt = adds.unionByName(tail)
-      val dir = DeltaLog.logDir(tablePath)
-      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new Path(dir, f".$v%020d.checkpoint.tmp")
-      ckpt.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = fs.listStatus(tmp).map(_.getPath)
-        .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"checkpoint write produced no part file under $tmp"))
-      val ckptRows = snap.manifest.length + meta.size + 1 // adds + metaData (0|1) + protocol
-      val dest = new Path(dir, f"$v%020d.checkpoint.parquet")
-      if (fs.exists(dest)) fs.delete(dest, true)
-      require(fs.rename(part, dest), s"checkpoint rename failed: $part -> $dest")
-      fs.delete(tmp, true)
-      // _last_checkpoint only after the checkpoint file verifiably exists, and
-      // through the Hadoop fs handle so schemed/remote table paths resolve
-      // (java.nio on an unstripped "file:..." dir string would throw)
-      val lcOut = fs.create(new Path(dir, "_last_checkpoint"), true)
-      try lcOut.write(
-        s"""{"version":$v,"size":$ckptRows}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally lcOut.close()
-      v
-    } finally snap.unpersist()
+    val v = snap.version
+    val metaType = DeltaLog.actionSchema("metaData").dataType
+    val protoType = DeltaLog.actionSchema("protocol").dataType
+    val adds = snap.activeFiles.select(
+      struct(
+        col("path"), col("size"), col("partitionValues"),
+        col("modificationTime"), lit(true).as("dataChange"),
+        col("stats")).as("add"),
+      lit(null).cast(metaType).as("metaData"),
+      lit(null).cast(protoType).as("protocol"))
+    // metaData and protocol are the snapshot's latest ones; a log that
+    // predates protocol emission still gets a valid checkpoint with the
+    // minimal classic protocol (1, 2)
+    val meta = snap.latest("metaData")
+    val proto = snap.latest("protocol").getOrElse(Row(1, 2, null))
+    val tail = spark.createDataFrame(
+      (meta.map(m => Row(null, m, null)).toSeq :+ Row(null, null, proto)).asJava,
+      StructType(Seq("add", "metaData", "protocol").map(DeltaLog.actionSchema(_))))
+    val ckpt = adds.unionByName(tail)
+    val dir = DeltaLog.logDir(tablePath)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(dir, f".$v%020d.checkpoint.tmp")
+    ckpt.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = fs.listStatus(tmp).map(_.getPath)
+      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+      .getOrElse(sys.error(s"checkpoint write produced no part file under $tmp"))
+    val ckptRows = snap.manifest.length + meta.size + 1 // adds + metaData (0|1) + protocol
+    val dest = new Path(dir, f"$v%020d.checkpoint.parquet")
+    if (fs.exists(dest)) fs.delete(dest, true)
+    require(fs.rename(part, dest), s"checkpoint rename failed: $part -> $dest")
+    fs.delete(tmp, true)
+    // _last_checkpoint only after the checkpoint file verifiably exists, and
+    // through the Hadoop fs handle so schemed/remote table paths resolve
+    // (java.nio on an unstripped "file:..." dir string would throw)
+    val lcOut = fs.create(new Path(dir, "_last_checkpoint"), true)
+    try lcOut.write(
+      s"""{"version":$v,"size":$ckptRows}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally lcOut.close()
+    v
   }
 }

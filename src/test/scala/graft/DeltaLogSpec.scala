@@ -434,4 +434,179 @@ class DeltaLogSpec extends SparkSuite {
     val e = intercept[java.io.FileNotFoundException](DeltaLog.snapshot(spark, path))
     assert(e.getMessage.contains(second), e.getMessage)
   }
+
+  /** The Spark jobs `body` starts, by job description. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.TestListenerBus.drain(sc)
+      (r, started.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  // Spark lists more than 32 root paths in a job with this description;
+  // a glob over the commits expands to one root per commit
+  private def listingJobs(jobs: Seq[String]) =
+    jobs.filter(_.startsWith("Listing leaf files and directories"))
+
+  /** A 35-commit log: an overwrite and 34 appends of one two-row file each. */
+  private lazy val longLog: String = {
+    val path = tmpDir("dlog_long")
+    val df = TestFixtures.tips(spark, Seq("Mon" -> 2), Seq("Dinner" -> 2)).coalesce(1)
+    DeltaFixtureWriter.write(df, path, "overwrite", Seq("day"))
+    (1 to 34).foreach(_ => DeltaFixtureWriter.write(df, path, "append", Seq("day")))
+    path
+  }
+
+  test("snapshot opens in 2 jobs on a log of more than 32 commits; a later append relists nothing") {
+    val path = longLog
+    val (snap, jobs) = jobsOf {
+      val s = DeltaLog.snapshot(spark, path)
+      (s.version, s.tableSchema, s.partitionColumns, s.manifest.length, s.history.collect().length)
+      s
+    }
+    assert(jobs.size === 2, jobs.mkString("\n"))
+    assert(listingJobs(jobs).isEmpty, jobs.mkString("\n"))
+    assert(snap.version === 34L)
+    assert(snap.partitionColumns === Seq("day"))
+    assert(snap.tableSchema.map(_.fieldNames.toSeq) ===
+      Some(Seq("total_bill", "tip", "day", "time", "size")))
+    assert(snap.manifest.length === 35)
+    assert(snap.history.collect().map(_.getAs[Long]("version")).toSeq === (0L to 34L))
+    // nothing of the open snapshot is cached, so a write into the table
+    // directory while it is alive refreshes (relists) nothing
+    val (_, appendJobs) = jobsOf(DeltaFixtureWriter.write(
+      TestFixtures.tips(spark, Seq("Tue" -> 2), Seq("Lunch" -> 2)), path, "append", Seq("day")))
+    assert(listingJobs(appendJobs).isEmpty, appendJobs.mkString("\n"))
+    assert(DeltaLog.snapshot(spark, path).version === 35L)
+  }
+
+  test("analyzeTable runs at most 2 jobs on a log of more than 32 commits") {
+    val path = longLog
+    graft.operators.HealthAnalyzer.analyzeTable(spark, path) // warm-up
+    val (m, jobs) = jobsOf(graft.operators.HealthAnalyzer.analyzeTable(spark, path))
+    assert(jobs.size <= 2, jobs.mkString("\n"))
+    val snap = DeltaLog.snapshot(spark, path)
+    assert(m.versionCount === snap.version)
+    assert(m.recordCount === snap.data.count())
+    assert(m.numberOfWrites === snap.version + 1)
+  }
+
+  test("a remove-only commit without commitInfo sets the version") {
+    val path = tmpDir("dlog_removeonly")
+    writeLog(path,
+      Seq(metaData("{}"),
+        """{"add":{"path":"a.parquet","partitionValues":{},"size":10,"modificationTime":1,"dataChange":true}}""",
+        commitInfo("WRITE")),
+      Seq("""{"remove":{"path":"a.parquet","deletionTimestamp":2,"dataChange":true}}"""))
+    val snap = DeltaLog.snapshot(spark, path)
+    assert(snap.version === 1L)
+    assert(snap.manifest.isEmpty)
+    assert(snap.history.select("version", "operation").as[(Long, String)].collect().toSeq ===
+      Seq((0L, "WRITE")))
+    assert(graft.operators.HealthAnalyzer.analyzeTable(spark, path).versionCount === 1L)
+  }
+
+  test("a checkpoint and the JSON commit at its version give the latest metaData") {
+    val path = tmpDir("dlog_ckpt_meta")
+    val df = TestFixtures.tips(spark, Seq("Mon" -> 4), Seq("Dinner" -> 4))
+    DeltaFixtureWriter.write(df, path, "overwrite", Seq("day"))
+    // a schema-evolving append: commit 1 carries the newer metaData
+    DeltaFixtureWriter.write(df.withColumn("extra", lit(1L)), path, "append", Seq("day"))
+    val before = DeltaLog.snapshot(spark, path)
+    val meta = before.latest("metaData")
+    assert(meta.map(_.getAs[String]("schemaString")).exists(_.contains("extra")))
+    assert(graft.operators.Maintenance.checkpoint(spark, path) === 1L)
+    def state() = {
+      val s = DeltaLog.snapshot(spark, path)
+      (s.version, s.latest("metaData"), s.latest("protocol"), s.tableSchema, s.partitionColumns)
+    }
+    val want = (1L, meta, before.latest("protocol"), before.tableSchema, before.partitionColumns)
+    assert(state() === want)
+    // once the JSON commits are cleaned, the checkpoint alone gives them
+    val log = java.nio.file.Paths.get(path, "_delta_log")
+    (0 to 1).foreach(v => java.nio.file.Files.delete(log.resolve(f"$v%020d.json")))
+    assert(state() === want)
+  }
+
+  test("a foreign-shaped checkpoint reads under the action schema") {
+    // the shape of a checkpoint another writer made: an extra top-level
+    // action (txn), extra nested fields (add.tags, metaData.format and
+    // configuration, remove.extendedFileMetadata), fields in another order,
+    // no add.stats and no commitInfo column
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val path = tmpDir("dlog_foreign_ckpt")
+    val strMap = MapType(StringType, StringType)
+    val schema = StructType(Seq(
+      StructField("txn", StructType(Seq(StructField("appId", StringType), StructField("version", LongType)))),
+      StructField("add", StructType(Seq(StructField("path", StringType), StructField("partitionValues", strMap),
+        StructField("size", LongType), StructField("modificationTime", LongType),
+        StructField("dataChange", BooleanType), StructField("tags", strMap)))),
+      StructField("remove", StructType(Seq(StructField("path", StringType),
+        StructField("deletionTimestamp", LongType), StructField("dataChange", BooleanType),
+        StructField("extendedFileMetadata", BooleanType)))),
+      StructField("metaData", StructType(Seq(StructField("id", StringType),
+        StructField("format", StructType(Seq(StructField("provider", StringType), StructField("options", strMap)))),
+        StructField("schemaString", StringType), StructField("partitionColumns", ArrayType(StringType)),
+        StructField("configuration", strMap), StructField("createdTime", LongType)))),
+      StructField("protocol", StructType(Seq(StructField("minReaderVersion", IntegerType),
+        StructField("minWriterVersion", IntegerType))))))
+    val partSchema = StructType(Seq(StructField("id", LongType), StructField("p", StringType))).json
+    def add(p: String, pv: String, size: Long) =
+      Row(null, Row(p, Map("p" -> pv), size, 7L, false, Map("tag" -> "x")), null, null, null)
+    val rows = Seq(
+      Row(Row("app", 4L), null, null, null, null),
+      add("p=1/a.parquet", "1", 100L),
+      add("p=2/b.parquet", "2", 200L),
+      Row(null, null, Row("p=1/gone.parquet", 3L, false, true), null, null),
+      Row(null, null, null, Row("id-1", Row("parquet", Map.empty[String, String]), partSchema,
+        Seq("p"), Map("delta.appendOnly" -> "false"), 5L), null),
+      Row(null, null, null, null, Row(1, 2)))
+    val log = java.nio.file.Paths.get(path, "_delta_log")
+    val tmp = log.resolve(".ckpt.tmp")
+    spark.createDataFrame(rows.asJava, schema).coalesce(1).write.parquet(tmp.toString)
+    val part = java.nio.file.Files.list(tmp).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    java.nio.file.Files.move(part, log.resolve("00000000000000000003.checkpoint.parquet"))
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    java.nio.file.Files.write(log.resolve("_last_checkpoint"), """{"version":3,"size":6}""".getBytes("UTF-8"))
+
+    val snap = DeltaLog.snapshot(spark, path)
+    assert(snap.version === 3L)
+    assert(snap.partitionColumns === Seq("p"))
+    assert(snap.tableSchema.map(_.fieldNames.toSeq) === Some(Seq("id", "p")))
+    assert(snap.activeFiles.select("path", "size", "modificationTime", "stats")
+      .as[(String, Long, Long, String)].collect().toSet ===
+      Set(("p=1/a.parquet", 100L, 7L, null), ("p=2/b.parquet", 200L, 7L, null)))
+    assert(snap.manifest.map(r => r.getString(0) -> r.getMap[String, String](2).toMap).toMap ===
+      Map("p=1/a.parquet" -> Map("p" -> "1"), "p=2/b.parquet" -> Map("p" -> "2")))
+    assert(snap.history.count() === 0L)
+    assert(snap.latest("protocol").map(r => (r.getInt(0), r.getInt(1))) === Some((1, 2)))
+  }
+
+  test("a null partition value is logged as JSON null and reads as null") {
+    val path = tmpDir("dlog_nullpart")
+    val df = Seq((1L, null: String, "x"), (2L, "a", "x"), (3L, null: String, "x"))
+      .toDF("id", "p", "q")
+    DeltaFixtureWriter.write(df, path, "overwrite", Seq("p", "q"))
+    val commit = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path, "_delta_log", "00000000000000000000.json")), "UTF-8")
+    assert(commit.contains(""""partitionValues":{"p":null,"q":"x"}"""), commit)
+    assert(!commit.contains(""""p":"__HIVE_DEFAULT_PARTITION__""""), commit)
+    val snap = DeltaLog.snapshot(spark, path)
+    assert(snap.data.where("p is null").count() === 2L)
+    assert(snap.partitionCounts === Map(Seq(null, "x") -> 2L, Seq("a", "x") -> 1L))
+    val sk = graft.operators.HealthAnalyzer.analyzeTable(spark, path).skewMetrics.get
+    assert(sk.recordsPerPartition.keySet === Set("x", "a/x"))
+  }
 }
