@@ -1,14 +1,17 @@
 package graft.deltalog
 
+import java.io.FileNotFoundException
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.FileFormat
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,9 +21,10 @@ import scala.jdk.CollectionConverters._
 /** Minimal Delta transaction-log reader.
   *
   * The environment ships no delta-spark jar, so the engine implements its own
-  * log layer: parse `_delta_log/NNNNNNNNNNNNNNNNNNNN.json` commit files with
-  * `spark.read.json` under an explicit action schema, and replay add/remove
-  * actions to reconstruct the active-file snapshot.
+  * log layer: list `_delta_log` once on the driver, read the
+  * `NNNNNNNNNNNNNNNNNNNN.json` commits it names (and the checkpoint parts
+  * `_last_checkpoint` points to) under an explicit action schema, and
+  * replay add/remove actions to reconstruct the active-file snapshot.
   *
   * Consumes exactly the six log-derived facts the reference workload needs
   * (see /root/reference/src/delta_lake_health/health_analyzers/
@@ -38,12 +42,13 @@ import scala.jdk.CollectionConverters._
   * aggregation parallelizes over executors for logs with millions of
   * actions, and nothing is cached. Its result, the active manifest plus one
   * row per commit, is collected to the driver (as Delta's own readers do),
-  * in two Spark jobs. Data reads go through a [[ManifestFileIndex]] over
-  * the manifest, and every file-set decision (storage, orphans, OPTIMIZE
-  * selection, RESTORE, VACUUM candidates) is plain Scala over it and the
-  * [[dataFiles]] listing, keyed by the table-relative path both spell the
-  * same way: the table directory is never listed for a read, and removed
-  * or orphan files are never opened.
+  * in two Spark jobs. Log and data reads both go through a
+  * [[ManifestFileIndex]], over the log listing and over the manifest, so
+  * Spark never lists a directory of the table. Every file-set decision
+  * (storage, orphans, OPTIMIZE selection, RESTORE, VACUUM candidates) is
+  * plain Scala over the manifest and the [[dataFiles]] listing, keyed by
+  * the table-relative path both spell the same way: removed or orphan
+  * files are never opened.
   * Checkpoint parquet files ARE supported: `readActions` consults
   * `_last_checkpoint`, reads the checkpoint parquet under `actionSchema`,
   * and unions it with ALL surviving JSON commits — safe because replay is
@@ -93,30 +98,50 @@ object DeltaLog {
 
   def logDir(tablePath: String): String = s"$tablePath/_delta_log"
 
-  /** The surviving JSON commits ONLY — per-commit action rows, version
-    * tagged from the file name. Unlike [[readActions]] this is NOT
+  /** The one listing of the table's `_delta_log`: one `listStatus` on the
+    * driver, its files by name. Every log file a read opens comes from it.
+    * Fails when the table has no log directory. */
+  private def listLog(spark: SparkSession, tablePath: String): Map[String, FileStatus] = {
+    val dir = new Path(logDir(tablePath))
+    val listed = try dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+    catch {
+      case _: FileNotFoundException => throw new IllegalArgumentException(
+        s"$tablePath is not a Delta table: no $dir directory " +
+          "(for plain parquet, read it directly with spark.read.parquet)")
+    }
+    listed.filter(_.isFile).map(st => st.getPath.getName -> st).toMap
+  }
+
+  private val commitFile = """(\d{20})\.json""".r
+
+  /** The actions of the listed `files`, each tagged with its version, in
+    * one scan through a [[ManifestFileIndex]]: Spark opens exactly these. */
+  private def actionsOf(spark: SparkSession, tablePath: String,
+                        files: Seq[(FileStatus, Long)], format: FileFormat): DataFrame =
+    new ManifestFileIndex(new Path(logDir(tablePath)), StructType(Seq(StructField("version", LongType))),
+      files.map { case (st, v) => st -> Seq(v) }).read(spark, actionSchema, format)
+
+  /** The `%020d.json` commits of the listed `log`, the version parsed from
+    * each name on the driver: `.crc` checksums, writers' temporary files and
+    * stray JSON are not read. */
+  private def jsonActions(spark: SparkSession, tablePath: String,
+                          log: Map[String, FileStatus]): DataFrame =
+    actionsOf(spark, tablePath,
+      log.toSeq.collect { case (commitFile(v), st) => st -> v.toLong }, new JsonFileFormat)
+
+  /** The surviving JSON commits ONLY — per-commit action rows, tagged with
+    * the commit version. Unlike [[readActions]] this is NOT
     * checkpoint-aware: a checkpoint's rows aggregate the table STATE at its
     * version, not the commit's changes, so consumers that need per-commit
     * deltas (CDF) must read from here and fail when the window's JSONs have
-    * been cleaned.
-    *
-    * The scan reads the `_delta_log` directory filtered to `*.json`: one
-    * root path, listed serially on the driver however many commits there
-    * are (a glob expands to one root per commit, which Spark lists in a
-    * job once there are more than 32), and a log without JSON commits is
-    * an empty frame rather than a missing path. */
+    * been cleaned. A log without JSON commits is an empty frame. */
   def readJsonActions(spark: SparkSession, tablePath: String): DataFrame =
-    spark.read
-      .schema(actionSchema)
-      .option("pathGlobFilter", "*.json")
-      .json(logDir(tablePath))
-      .withColumn(
-        "version",
-        regexp_extract(col("_metadata.file_name"), "(\\d+)\\.json$", 1).cast(LongType))
+    jsonActions(spark, tablePath, listLog(spark, tablePath))
 
   /** All actions across all commits, one row per JSON line, tagged with the
-    * commit version extracted from the file name (`%020d.json`). The frame
-    * is not cached: its lines are read each time a query over it runs.
+    * commit version (`%020d.json`), from one listing of `_delta_log`. The
+    * frame is not cached: its lines are read each time a query over it
+    * runs; a filter on `version` skips whole files.
     *
     * Checkpoint-aware: if `_last_checkpoint` exists, the parquet checkpoint
     * at version N stands in for all commits <= N (its rows are treated as
@@ -129,56 +154,40 @@ object DeltaLog {
     * ...) are not read, so a foreign writer's checkpoint needs no footer
     * inference. A multi-part checkpoint (`"parts": n` in
     * `_last_checkpoint`) is read as its n
-    * `%020d.checkpoint.%010d.%010d.parquet` files in one scan; a missing
-    * checkpoint file fails naming it. */
+    * `%020d.checkpoint.%010d.%010d.parquet` files in one scan; a
+    * checkpoint file missing from the listing fails naming it. */
   def readActions(spark: SparkSession, tablePath: String): DataFrame = {
-    // _metadata.file_name (not input_file_name(), which Spark's PreReadCheck
-    // forbids in multi-source plans such as the checkpoint union below)
-    val json = readJsonActions(spark, tablePath)
-    lastCheckpoint(spark, tablePath) match {
+    val log = listLog(spark, tablePath)
+    val json = jsonActions(spark, tablePath, log)
+    lastCheckpoint(spark, log) match {
       case None => json
       case Some((ckptV, parts)) =>
-        val files = parts match {
+        val names = parts match {
           case None => Seq(f"$ckptV%020d.checkpoint.parquet")
           case Some(n) => (1 to n).map(i => f"$ckptV%020d.checkpoint.$i%010d.$n%010d.parquet")
         }
-        val paths = files.map(f => new Path(logDir(tablePath), f))
-        val fs = paths.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        paths.find(!fs.exists(_)).foreach { p =>
-          throw new java.io.FileNotFoundException(
-            s"_last_checkpoint names version $ckptV, but its checkpoint file $p is missing")
-        }
-        // Union the checkpoint with ALL surviving JSON commits, not only
-        // those after it: replay is per-path last-add-wins, so checkpoint
-        // rows (at ckptV) and older JSON adds coexist harmlessly, while the
-        // older commitInfo rows keep history metrics and pre-checkpoint
-        // time travel working for as long as those JSONs are retained. Once
-        // every JSON commit has been cleaned up, the checkpoint alone is the
-        // table's state.
-        spark.read.schema(actionSchema).parquet(paths.map(_.toString): _*)
-          .withColumn("version", lit(ckptV))
-          .unionByName(json)
+        val files = names.map(name => log.getOrElse(name, throw new FileNotFoundException(
+          s"_last_checkpoint names version $ckptV, but its checkpoint file " +
+            s"${new Path(logDir(tablePath), name)} is missing")))
+        actionsOf(spark, tablePath, files.map(_ -> ckptV), new ParquetFileFormat).unionByName(json)
     }
   }
 
   /** Version recorded in `_last_checkpoint`, if any. */
   def lastCheckpointVersion(spark: SparkSession, tablePath: String): Option[Long] =
-    lastCheckpoint(spark, tablePath).map(_._1)
+    lastCheckpoint(spark, listLog(spark, tablePath)).map(_._1)
 
-  /** (version, parts) recorded in `_last_checkpoint`, if any; `parts` is
-    * set only for a multi-part checkpoint. */
-  private def lastCheckpoint(spark: SparkSession, tablePath: String): Option[(Long, Option[Int])] = {
-    val p = new Path(logDir(tablePath), "_last_checkpoint")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
+  /** (version, parts) recorded in the listed `log`'s `_last_checkpoint`, if
+    * any; `parts` is set only for a multi-part checkpoint. */
+  private def lastCheckpoint(spark: SparkSession,
+                             log: Map[String, FileStatus]): Option[(Long, Option[Int])] =
+    log.get("_last_checkpoint").flatMap { st =>
+      val in = st.getPath.getFileSystem(spark.sparkContext.hadoopConfiguration).open(st.getPath)
       val content = try scala.io.Source.fromInputStream(in).mkString finally in.close()
       def field(name: String) =
         s"\"$name\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(content).map(_.group(1))
       field("version").map(v => (v.toLong, field("parts").map(_.toInt)))
     }
-  }
 
   /** Change Data Feed between two versions — row-level changes with
     * `_change_type` ('insert' / 'delete') and `_commit_version`, computed
@@ -319,15 +328,14 @@ object DeltaLog {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  def snapshot(spark: SparkSession, tablePath: String): DeltaSnapshot = {
-    require(isDeltaTable(spark, tablePath),
-      s"$tablePath is not a Delta table: no ${logDir(tablePath)} directory " +
-        "(for plain parquet, read it directly with spark.read.parquet)")
+  /** The table at its latest version. A path without a `_delta_log`
+    * directory fails, saying it is not a Delta table. */
+  def snapshot(spark: SparkSession, tablePath: String): DeltaSnapshot =
     open(spark, tablePath, readActions(spark, tablePath))
-  }
 
   /** Time travel: snapshot as of `version` (inclusive). Requires the log to
-    * still contain a checkpoint or JSON commits covering that version. */
+    * still contain a checkpoint or JSON commits covering that version; fails
+    * as [[snapshot]] does on a path that is not a Delta table. */
   def snapshotAt(spark: SparkSession, tablePath: String, version: Long): DeltaSnapshot =
     open(spark, tablePath, readActions(spark, tablePath).where(col("version") <= version))
 
@@ -559,9 +567,15 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
     * without its partition columns, so a column added by a later append
     * reads as null from older files. */
   private[deltalog] def scan(files: Seq[Row]): DataFrame = {
-    val index = new ManifestFileIndex(new Path(qualifiedTablePath), files, partitionColumns)
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-      GraftSqlBridge.asNullable(activeSchema), None, new ParquetFileFormat, Map.empty)(spark))
+    val root = new Path(qualifiedTablePath)
+    val values = StructType(("__file" +: partitionColumns).map(StructField(_, StringType)))
+    new ManifestFileIndex(root, values, files.map { f =>
+      val path = f.getAs[String]("path")
+      val pv = Option(f.getAs[collection.Map[String, String]]("partitionValues"))
+        .getOrElse(Map.empty[String, String])
+      new FileStatus(f.getAs[Long]("size"), false, 0, 0, f.getAs[Long]("modificationTime"),
+        new Path(root, new Path(null, null, path))) -> (path +: partitionColumns.map(pv.getOrElse(_, null)))
+    }).read(spark, activeSchema, new ParquetFileFormat)
   }
 
   // a log that predates schema emission reads with the footer schema of

@@ -1,34 +1,33 @@
 package graft.deltalog
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.types.StructType
 
-/** A Spark [[FileIndex]] over an explicit list of Delta data files, given as
-  * rows with [[DeltaSnapshot.activeFiles]]' columns: Spark lists and opens
-  * exactly these files, never the table directory. Each file is its own
-  * partition directory whose values are `__file` (the `add.path`) and the
-  * table's partition columns, all strings taken from the log — so a filter
-  * on any of them drops whole files before the scan. */
-private[deltalog] final class ManifestFileIndex(root: Path, files: Seq[Row],
-                                                partitionColumns: Seq[String]) extends FileIndex {
+/** A Spark [[FileIndex]] over an explicit list of Delta files, each with its
+  * own values of `partitionSchema`: Spark lists and opens exactly these
+  * files, never a directory. The engine's one file index: the data files
+  * (`__file`, the `add.path`, and the table's partition columns, strings
+  * from the log; [[DeltaSnapshot.scan]]) and the `_delta_log` commits and
+  * checkpoint parts (`version`, a long; [[DeltaLog.readActions]]). Each file
+  * is its own partition directory, so a filter on any of its values drops
+  * whole files before the scan. */
+private[graft] final class ManifestFileIndex(root: Path, override val partitionSchema: StructType,
+                                             files: Seq[(FileStatus, Seq[Any])]) extends FileIndex {
 
-  override val partitionSchema: StructType =
-    StructType(("__file" +: partitionColumns).map(StructField(_, StringType)))
-
-  private val dirs: Seq[PartitionDirectory] = files.map { f =>
-    val path = f.getAs[String]("path")
-    val pv = Option(f.getAs[collection.Map[String, String]]("partitionValues"))
-      .getOrElse(Map.empty[String, String])
-    val values = (path +: partitionColumns.map(pv.getOrElse(_, null))).map(UTF8String.fromString)
-    PartitionDirectory(InternalRow.fromSeq(values), Array(new FileStatus(
-      f.getAs[Long]("size"), false, 0, 0, f.getAs[Long]("modificationTime"),
-      new Path(root, new Path(null, null, path)))))
+  private val dirs: Seq[PartitionDirectory] = files.map { case (status, values) =>
+    PartitionDirectory(InternalRow.fromSeq(values.map(CatalystTypeConverters.convertToCatalyst)),
+      Array(status))
   }
+
+  /** The files read in `format` under `dataSchema`, the values of
+    * [[partitionSchema]] as trailing columns. */
+  def read(spark: SparkSession, dataSchema: StructType, format: FileFormat): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(this, partitionSchema,
+      GraftSqlBridge.asNullable(dataSchema), None, format, Map.empty)(spark))
 
   override def rootPaths: Seq[Path] = Seq(root)
 
@@ -41,7 +40,8 @@ private[deltalog] final class ManifestFileIndex(root: Path, files: Seq[Row],
       case Some(filter) =>
         val keep = Predicate.createInterpreted(filter.transform {
           case a: AttributeReference =>
-            BoundReference(partitionSchema.fieldIndex(a.name), StringType, nullable = true)
+            val i = partitionSchema.fieldIndex(a.name)
+            BoundReference(i, partitionSchema(i).dataType, nullable = true)
         })
         dirs.filter(d => keep.eval(d.values))
     }

@@ -22,8 +22,8 @@ object Dashboard {
   def frames(spark: SparkSession, tablePath: String,
              thresholds: Thresholds = Thresholds()): Frames = {
     // ONE snapshot (one log replay) feeds both the analysis and the frames;
-    // partition counts reuse the map analyzeSnapshot already collected, or
-    // the snapshot's log-derived counts: no data file is opened
+    // partition counts are the snapshot's log-derived counts: no data file
+    // is opened
     val snap = DeltaLog.snapshot(spark, tablePath)
     // dashboard frames are display-sized (top-15, 20 bins, one row per
     // commit) — materialize them eagerly into local frames
@@ -32,16 +32,11 @@ object Dashboard {
         java.util.Arrays.asList(df.collect(): _*), df.schema)
     val m = HealthAnalyzer.analyzeSnapshot(snap, thresholds)
     import spark.implicits._
-    val counts = m.skewMetrics match {
-      case Some(sk) if sk.partitionCount > sk.recordsPerPartition.size =>
-        // the driver dict was capped to the top-N heaviest partitions —
-        // key the FULL log-derived counts so the "Others" bucket sums the
-        // whole tail, not just ranks topN-and-under
-        SkewAnalyzer.keyed(snap.partitionCounts).toDF("partition", "count")
-      case Some(sk) =>
-        sk.recordsPerPartition.toSeq.toDF("partition", "count")
-      case None => Seq.empty[(String, Long)].toDF("partition", "count")
-    }
+    // the skew bar keys the FULL log-derived counts, one row per partition
+    // value tuple: the "Others" bucket sums the whole tail past the top-N
+    // dict, and tuples whose `/`-joined keys collide keep their own rows
+    val counts = (if (snap.partitionColumns.isEmpty) Seq.empty[(String, Long)]
+      else SkewAnalyzer.keyed(snap.partitionCounts)).toDF("partition", "count")
     Frames(
       metrics = m,
       recommendations = HealthAnalyzer.recommendations(spark, m),

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -228,52 +230,35 @@ object Maintenance {
     * deleting. Logs a VACUUM commit like deltalake does.
     *
     * The candidates are the orphan paths of [[StorageAnalyzer.storage]] over
-    * the driver-side folder listing and the manifest; the per-file stat +
-    * delete run inside `mapPartitions` on the executors, and only the
-    * (path, size) result rows come back to the driver. */
+    * the driver-side folder listing and the manifest; each is stat'ed and
+    * deleted in a plain loop on the driver, as Delta's default
+    * (non-parallel) VACUUM does, so no Spark job runs beyond the two that
+    * open the snapshot. */
   def vacuum(spark: SparkSession, tablePath: String,
              retainMs: Long = 7L * 24 * 3600 * 1000,
              dryRun: Boolean = false): DataFrame = {
     import spark.implicits._
     val snap = DeltaLog.snapshot(spark, tablePath)
     val listing = DeltaLog.dataFiles(spark, tablePath)
-    val dir = new Path(snap.qualifiedTablePath).toUri.getPath.stripSuffix("/")
-    val orphans = StorageAnalyzer.storage(listing, snap.activeSizes, None).orphans
-      .map(rel => (s"$dir/$rel", listing(rel)))
+    val root = new Path(snap.qualifiedTablePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dir = root.toUri.getPath.stripSuffix("/")
     val cutoff = System.currentTimeMillis() - retainMs
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    // one row PER candidate with an outcome flag — never a filter on the
-    // delete result: a task re-attempt (retry/speculation) re-runs the
-    // lambda, sees exists()=false for files its first attempt already
-    // removed, and a filter would silently drop those rows, undercounting
-    // numFilesDeleted in the VACUUM commit
-    val processed: Array[(String, Long, String)] = orphans.toDS()
-      .mapPartitions { it =>
-        it.map { case (p, sz) =>
-          val path = new Path(p)
-          val pfs = path.getFileSystem(conf.value)
-          val status =
-            if (!pfs.exists(path)) "missing" // gone already — a prior attempt of this run (or an external actor) removed it
-            else if (pfs.getFileStatus(path).getModificationTime >= cutoff) "retained"
-            else if (dryRun) "deleted"
-            // a false delete() that leaves the file in place is a real
-            // failure (permissions, lease); a false delete() on a vanished
-            // file is just a lost race with a concurrent attempt
-            else if (pfs.delete(path, false) || !pfs.exists(path)) "deleted"
-            else "failed"
-          (p, sz, status)
-        }
-      }
-      .collect()   // materializes (and on !dryRun, performs) the deletes
-    // "missing" counts as removed-by-this-run: the only way a listed orphan
-    // is already gone mid-job is an earlier attempt's delete
-    val gone = processed.filter(t => t._3 == "deleted" || t._3 == "missing")
+    // a candidate counts as deleted when it is gone after the attempt,
+    // including one already missing (removed by a concurrent run); a false
+    // delete() that leaves the file in place is a real failure
+    // (permissions, lease) and does not count
+    val gone = StorageAnalyzer.storage(listing, snap.activeSizes, None).orphans.filter { rel =>
+      val path = new Path(root, new Path(null, null, rel))
+      val status = try Some(fs.getFileStatus(path)) catch { case _: FileNotFoundException => None }
+      status.forall(st => st.getModificationTime < cutoff &&
+        (dryRun || fs.delete(path, false) || !fs.exists(path)))
+    }
     if (!dryRun)
       DeltaFixtureWriter.logCommit(tablePath, snap.version + 1, "VACUUM",
         Seq("retentionCheck" -> "false",
             "numFilesDeleted" -> gone.length.toString))
-    gone.toSeq.map { case (p, s, _) => (p, s) }.toDF("path", "size")
+    gone.map(rel => (s"$dir/$rel", listing(rel))).toDF("path", "size")
   }
 
   /** RESTORE TABLE TO VERSION — Delta's `RESTORE` as a METADATA-ONLY

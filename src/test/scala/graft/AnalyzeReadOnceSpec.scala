@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
@@ -15,12 +12,6 @@ import graft.operators.HealthAnalyzer
   * bounds of reading each file at most once and only the active ones. */
 class AnalyzeReadOnceSpec extends SparkSuite {
   import spark.implicits._
-
-  private final class InputRows extends SparkListener {
-    val rows = new AtomicLong
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      Option(e.taskMetrics).foreach(m => rows.addAndGet(m.inputMetrics.recordsRead))
-  }
 
   private def parquetFiles(f: java.io.File): Seq[java.io.File] =
     if (f.isDirectory) f.listFiles().toSeq.flatMap(parquetFiles)
@@ -65,18 +56,10 @@ class AnalyzeReadOnceSpec extends SparkSuite {
   /** One warm `analyzeTable` with its task input records. */
   private def analyzeCountingRows(path: String): (DeltaAnalyzerMetrics, Long) = {
     HealthAnalyzer.analyzeTable(spark, path) // warm-up: same plans, no first-use effects
-    val listener = new InputRows
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val m =
-      try {
-        val r = HealthAnalyzer.analyzeTable(spark, path)
-        org.apache.spark.TestListenerBus.drain(sc)
-        r
-      } finally sc.removeSparkListener(listener)
+    val (m, rows) = rowsReadOf(HealthAnalyzer.analyzeTable(spark, path))
     assert(m.recordCount === df.where(col("w") >= 100).count() +
       df.where(col("v") < 4000 && col("w") >= 100).count())
-    (m, listener.rows.get())
+    (m, rows)
   }
 
   test("analyzeTable scans each parquet file on disk at most once") {

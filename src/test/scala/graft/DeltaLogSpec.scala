@@ -435,24 +435,6 @@ class DeltaLogSpec extends SparkSuite {
     assert(e.getMessage.contains(second), e.getMessage)
   }
 
-  /** The Spark jobs `body` starts, by job description. */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.TestListenerBus.drain(sc)
-      (r, started.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
-
   // Spark lists more than 32 root paths in a job with this description;
   // a glob over the commits expands to one root per commit
   private def listingJobs(jobs: Seq[String]) =
@@ -608,5 +590,64 @@ class DeltaLogSpec extends SparkSuite {
     assert(snap.partitionCounts === Map(Seq(null, "x") -> 2L, Seq("a", "x") -> 1L))
     val sk = graft.operators.HealthAnalyzer.analyzeTable(spark, path).skewMetrics.get
     assert(sk.recordsPerPartition.keySet === Set("x", "a/x"))
+  }
+
+  test("snapshot and snapshotAt on a path without _delta_log both say it is not a Delta table") {
+    val path = tmpDir("dlog_plain")
+    Seq(1L, 2L).toDF("id").write.mode("overwrite").parquet(path)
+    Seq[(String, () => Any)](
+      "snapshot" -> (() => DeltaLog.snapshot(spark, path)),
+      "snapshotAt" -> (() => DeltaLog.snapshotAt(spark, path, 0L))).foreach { case (name, open) =>
+      val e = intercept[IllegalArgumentException](open())
+      assert(e.getMessage.contains(s"$path is not a Delta table: no $path/_delta_log directory"),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
+  /** The messages log4j receives while `body` runs. */
+  private def logged[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("captured", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try (body, seen.asScala.toSeq)
+    finally { root.removeAppender(appender); appender.stop() }
+  }
+
+  test("only the %020d.json commits are read: .crc, writer temp files, _commits/ and stray JSON are not") {
+    val path = tmpDir("dlog_strays")
+    val df = TestFixtures.tips(spark, Seq("Mon" -> 4, "Tue" -> 4), Seq("Dinner" -> 8))
+    DeltaFixtureWriter.write(df, path, "overwrite", Seq("day"))
+    DeltaFixtureWriter.write(df.limit(3), path, "append", Seq("day"))
+    DeltaFixtureWriter.delete(spark, path, "day = 'Tue'")
+    def state() = {
+      val snap = DeltaLog.snapshot(spark, path)
+      (snap.version, snap.manifest.toSeq.sortBy(_.getString(0)), snap.historyRows.toSeq)
+    }
+    val want = state()
+    val log = java.nio.file.Paths.get(path, "_delta_log")
+    def put(name: String, lines: String*): Unit = java.nio.file.Files.write(log.resolve(name),
+      lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val add = """{"add":{"path":"day=Mon/stray.parquet","partitionValues":{"day":"Mon"},"size":1,"modificationTime":1,"dataChange":true}}"""
+    put("00000000000000000001.crc", """{"tableSizeBytes":1,"numFiles":1,"numMetadata":1,"numProtocol":1}""")
+    put(".00000000000000000003.json.0f5e2c1a-7d7b-4c43-9a52-3f0c1d2e4b6a.tmp", add, commitInfo("WRITE"))
+    java.nio.file.Files.createDirectories(log.resolve("_commits"))
+    put("_commits/00000000000000000003.5b1c3a9e-2f4d-4e6a-8c7b-9d0e1f2a3b4c.json", add, commitInfo("WRITE"))
+    put("notes.json", add, commitInfo("NOTE"))
+
+    val ((got, rows), events) = logged(rowsReadOf(state()))
+    assert(got === want)
+    val commitLines = log.toFile.listFiles().toSeq.filter(_.getName.matches("\\d{20}\\.json")).map { f =>
+      val src = scala.io.Source.fromFile(f)
+      try src.getLines().count(_.trim.nonEmpty).toLong finally src.close()
+    }.sum
+    assert(rows === commitLines)
+    assert(!events.exists(_.contains("All paths were ignored")), events.mkString("\n"))
   }
 }

@@ -196,6 +196,16 @@ class MaintenanceSpec extends SparkSuite {
     assert(vacuumOps === 1L)
   }
 
+  test("vacuum starts only the 2 jobs that open its snapshot") {
+    val path = tmpDir("vacjobs")
+    TestFixtures.buildOrphanTable(spark, path)
+    val orphans = DeltaLog.dataFiles(spark, path).size - DeltaLog.snapshot(spark, path).manifest.length
+    assert(orphans > 0)
+    val (deleted, jobs) = jobsOf(Maintenance.vacuum(spark, path, retainMs = 0L))
+    assert(jobs.size === 2, jobs.mkString("\n"))
+    assert(deleted.count() === orphans)
+  }
+
   test("vacuum is a no-op on a healthy table addressed by file: URI") {
     // regression: manifest paths (tablePath + rel) vs folder-listing paths
     // (always fully qualified) must normalize identically — before the

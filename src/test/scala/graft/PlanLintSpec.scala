@@ -179,4 +179,52 @@ class PlanLintSpec extends SparkSuite {
     assert(e.getMessage.contains("reference profile exceeds"),
       s"guard fired with the wrong message: ${e.getMessage}")
   }
+
+  // ------------------------------------------------- Delta file scans
+
+  test("every Delta file scan (log commits, single and multi-part checkpoint, data, change feed) " +
+      "is a ManifestFileIndex: Spark never lists a Delta directory") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import graft.deltalog.{DeltaFixtureWriter, DeltaLog, ManifestFileIndex}
+    import graft.operators.Maintenance
+    // the names of the files each Delta scan opens; any other leaf fails
+    def scanned(what: String, df: DataFrame): Set[String] = {
+      val leaves = df.queryExecution.analyzed.collectLeaves()
+        .filterNot(_.isInstanceOf[LocalRelation])
+      assert(leaves.nonEmpty, what)
+      leaves.flatMap {
+        case l: LogicalRelation => l.relation match {
+          case HadoopFsRelation(index: ManifestFileIndex, _, _, _, _, _) =>
+            index.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getName)
+          case other => fail(s"$what: a scan of $other")
+        }
+        case other => fail(s"$what: a ${other.nodeName} leaf")
+      }.toSet
+    }
+    val path = tmpDir("lint_delta")
+    val df = spark.range(12).selectExpr("id", "cast(id % 3 as string) as k")
+    DeltaFixtureWriter.write(df, path, "overwrite", Seq("k"))
+    DeltaFixtureWriter.write(df.limit(4), path, "append", Seq("k"))
+    val v = Maintenance.checkpoint(spark, path)
+    DeltaFixtureWriter.delete(spark, path, "id = 1")
+    val log = java.nio.file.Paths.get(path, "_delta_log")
+    val commits = (0L to v + 1).map(i => f"$i%020d.json").toSet
+    assert(scanned("readActions", DeltaLog.readActions(spark, path)) ===
+      commits + f"$v%020d.checkpoint.parquet")
+    val snap = DeltaLog.snapshot(spark, path)
+    assert(scanned("data", snap.data) === snap.manifest.map(_.getString(0).split('/').last).toSet)
+    assert(scanned("changes", DeltaLog.changes(spark, path, 0L, v + 1)).nonEmpty)
+
+    // the checkpoint as two parts (each a copy: replay is per-path
+    // last-add-wins, so duplicated rows at one version are harmless)
+    val parts = (1 to 2).map(i => f"$v%020d.checkpoint.$i%010d.0000000002.parquet")
+    parts.foreach(p => java.nio.file.Files.copy(log.resolve(f"$v%020d.checkpoint.parquet"), log.resolve(p)))
+    // the Hadoop checksum of the old _last_checkpoint would reject the rewrite
+    java.nio.file.Files.deleteIfExists(log.resolve("._last_checkpoint.crc"))
+    java.nio.file.Files.write(log.resolve("_last_checkpoint"),
+      s"""{"version":$v,"parts":2}""".getBytes("UTF-8"))
+    assert(scanned("multi-part readActions", DeltaLog.readActions(spark, path)) === commits ++ parts)
+  }
 }

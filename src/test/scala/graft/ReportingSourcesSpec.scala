@@ -204,6 +204,21 @@ class ReportingSourcesSpec extends SparkSuite {
     assert(top.last === ("Others" -> (1090L - 41L - 14L)))
   }
 
+  test("E3: partitions whose /-joined keys collide keep one dashboard bar row each") {
+    val path = tmpDir("dash_collide")
+    val parts = Seq(("a/b", "c", 3), ("a", "b/c", 5), ("x", "y", 7), ("x", "z", 2), ("y", "y", 4), ("z", "w", 6))
+    val df = parts.flatMap { case (p, q, n) => (1 to n).map(i => (i.toLong, p, q)) }.toDF("id", "p", "q")
+    DeltaFixtureWriter.write(df, path, "overwrite", Seq("p", "q"))
+    val f = graft.operators.Dashboard.frames(spark, path)
+    val sk = f.metrics.skewMetrics.get
+    assert(sk.partitionCount === 6)
+    assert(sk.recordsPerPartition.size === 5, "the record's dict keeps one of the colliding keys")
+    val bars = f.partitionCountsTopN.as[(String, Long)].collect().toSeq
+    assert(bars.length === 6)
+    assert(bars.map(_._2).sum === f.metrics.recordCount)
+    assert(bars.filter(_._1 == "a/b/c").map(_._2).sorted === Seq(3L, 5L))
+  }
+
   // nested two-level partitions and a top-level data file are listed;
   // _SUCCESS, .crc and the checkpoint parquet in _delta_log are not
   test("folderFiles == an independent java.io walk") {

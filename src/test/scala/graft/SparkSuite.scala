@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** Shared local session for all suites (one per JVM, reused via
   * getOrCreate). */
@@ -32,6 +35,39 @@ abstract class SparkSuite extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory(prefix)
     d.toFile.deleteOnExit()
     d.toString
+  }
+
+  /** `body`'s result, `listener` registered while it runs and drained. */
+  private def listening[T](listener: SparkListener)(body: => T): T = {
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.TestListenerBus.drain(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The Spark jobs `body` starts, by job description. */
+  def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val r = listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    })(body)
+    (r, started.asScala.toSeq)
+  }
+
+  /** The input records the tasks `body` starts read. */
+  def rowsReadOf[T](body: => T): (T, Long) = {
+    val rows = new java.util.concurrent.atomic.AtomicLong
+    val r = listening(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => rows.addAndGet(m.inputMetrics.recordsRead))
+    })(body)
+    (r, rows.get())
   }
 
   def sf(path: String = "sf0.001"): String = s"/root/testdata/$path"
