@@ -8,14 +8,18 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.execution.datasources.FileFormat
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.collection.immutable.SortedMap
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Minimal Delta transaction-log reader.
@@ -23,8 +27,8 @@ import scala.jdk.CollectionConverters._
   * The environment ships no delta-spark jar, so the engine implements its own
   * log layer: list `_delta_log` once on the driver, read the
   * `NNNNNNNNNNNNNNNNNNNN.json` commits it names (and the checkpoint parts
-  * `_last_checkpoint` points to) under an explicit action schema, and
-  * replay add/remove actions to reconstruct the active-file snapshot.
+  * `_last_checkpoint` points to) on the driver under an explicit action
+  * schema, and fold their actions in version order into the snapshot.
   *
   * Consumes exactly the six log-derived facts the reference workload needs
   * (see /root/reference/src/delta_lake_health/health_analyzers/
@@ -35,27 +39,18 @@ import scala.jdk.CollectionConverters._
   * record count and partition skew a sum over the manifest, on the driver:
   * no data file is opened and no Spark job runs to count rows.
   *
-  * Scale notes: a snapshot opens with one scan of the log and one
-  * `groupingSets` aggregate over it — grouped by file path it replays
-  * add/remove into the active manifest, grouped by commit version it yields
-  * the version, the latest metaData and protocol and the history — so the
-  * aggregation parallelizes over executors for logs with millions of
-  * actions, and nothing is cached. Its result, the active manifest plus one
-  * row per commit, is collected to the driver (as Delta's own readers do),
-  * in two Spark jobs. Log and data reads both go through a
-  * [[ManifestFileIndex]], over the log listing and over the manifest, so
-  * Spark never lists a directory of the table. Every file-set decision
-  * (storage, orphans, OPTIMIZE selection, RESTORE, VACUUM candidates) is
-  * plain Scala over the manifest and the [[dataFiles]] listing, keyed by
-  * the table-relative path both spell the same way: removed or orphan
-  * files are never opened.
-  * Checkpoint parquet files ARE supported: `readActions` consults
-  * `_last_checkpoint`, reads the checkpoint parquet under `actionSchema`,
-  * and unions it with ALL surviving JSON commits — safe because replay is
-  * per-path last-add-wins, so checkpoint STATE rows and post-checkpoint
-  * deltas reconcile in one aggregation. Consumers that need per-commit
-  * CHANGES (CDF) must use `readJsonActions` instead: checkpoint rows are
-  * cumulative state, not deltas.
+  * Scale notes: a snapshot opens in one process, as Delta readers outside
+  * Spark do: one driver read of the segment's files with Spark's own JSON
+  * and parquet readers (no scan, no Spark job, nothing cached) and one
+  * plain-Scala fold ([[Replay]]), which holds one entry per distinct path in
+  * the segment, dead paths included; a checkpoint bounds it, since the
+  * commits it covers can then be cleaned. The snapshot keeps the active
+  * manifest plus one row per commit. Data reads go through a
+  * [[ManifestFileIndex]] over the manifest, so Spark never lists a
+  * directory of the table. Every file-set decision (storage, orphans,
+  * OPTIMIZE selection, RESTORE, VACUUM candidates) is plain Scala over the
+  * manifest and the [[dataFiles]] listing, keyed by the table-relative path
+  * both spell the same way: removed or orphan files are never opened.
   */
 object DeltaLog {
 
@@ -114,63 +109,104 @@ object DeltaLog {
 
   private val commitFile = """(\d{20})\.json""".r
 
-  /** The actions of the listed `files`, each tagged with its version, in
-    * one scan through a [[ManifestFileIndex]]: Spark opens exactly these. */
-  private def actionsOf(spark: SparkSession, tablePath: String,
-                        files: Seq[(FileStatus, Long)], format: FileFormat): DataFrame =
-    new ManifestFileIndex(new Path(logDir(tablePath)), StructType(Seq(StructField("version", LongType))),
-      files.map { case (st, v) => st -> Seq(v) }).read(spark, actionSchema, format)
-
-  /** The `%020d.json` commits of the listed `log`, the version parsed from
-    * each name on the driver: `.crc` checksums, writers' temporary files and
-    * stray JSON are not read. */
-  private def jsonActions(spark: SparkSession, tablePath: String,
-                          log: Map[String, FileStatus]): DataFrame =
-    actionsOf(spark, tablePath,
-      log.toSeq.collect { case (commitFile(v), st) => st -> v.toLong }, new JsonFileFormat)
-
-  /** The surviving JSON commits ONLY — per-commit action rows, tagged with
-    * the commit version. Unlike [[readActions]] this is NOT
-    * checkpoint-aware: a checkpoint's rows aggregate the table STATE at its
-    * version, not the commit's changes, so consumers that need per-commit
-    * deltas (CDF) must read from here and fail when the window's JSONs have
-    * been cleaned. A log without JSON commits is an empty frame. */
-  def readJsonActions(spark: SparkSession, tablePath: String): DataFrame =
-    jsonActions(spark, tablePath, listLog(spark, tablePath))
-
-  /** All actions across all commits, one row per JSON line, tagged with the
-    * commit version (`%020d.json`), from one listing of `_delta_log`. The
-    * frame is not cached: its lines are read each time a query over it
-    * runs; a filter on `version` skips whole files.
-    *
-    * Checkpoint-aware: if `_last_checkpoint` exists, the parquet checkpoint
-    * at version N stands in for all commits <= N (its rows are treated as
-    * actions at version N) and is unioned with ALL surviving JSON commits —
-    * replay is per-path last-add-wins, so pre-checkpoint JSONs coexist
-    * harmlessly while they keep history/time-travel working, and replay
-    * stays correct after expired JSON commits are cleaned. The checkpoint
-    * is read under [[actionSchema]]: fields and actions it lacks read as
-    * null and those it adds (`txn`, `add.tags`, `metaData.configuration`,
-    * ...) are not read, so a foreign writer's checkpoint needs no footer
-    * inference. A multi-part checkpoint (`"parts": n` in
-    * `_last_checkpoint`) is read as its n
-    * `%020d.checkpoint.%010d.%010d.parquet` files in one scan; a
-    * checkpoint file missing from the listing fails naming it. */
-  def readActions(spark: SparkSession, tablePath: String): DataFrame = {
+  /** The log segment a replay to `target` reads (the latest version when
+    * None or above it), picked from the one listing before any file is
+    * read: the retained `%020d.json` commits up to the target, the version
+    * parsed from each name (`.crc` checksums, writers' temporary files and
+    * stray JSON are not read), and the parts of the checkpoint
+    * `_last_checkpoint` names, if it is at or below the target. Fails,
+    * naming the version, where the fold cannot replay (Delta PROTOCOL.md,
+    * "Delta Log Entries"): a target below the oldest retained state (commit
+    * 0, or else the checkpoint) has expired, and the commits from the first
+    * retained one (at most checkpoint + 1) up to the target must have no
+    * gap. A checkpoint part missing from the listing fails naming it. */
+  private def segment(spark: SparkSession, tablePath: String, target: Option[Long])
+      : (SortedMap[Long, FileStatus], Option[(Long, Seq[FileStatus])]) = {
     val log = listLog(spark, tablePath)
-    val json = jsonActions(spark, tablePath, log)
-    lastCheckpoint(spark, log) match {
-      case None => json
-      case Some((ckptV, parts)) =>
-        val names = parts match {
-          case None => Seq(f"$ckptV%020d.checkpoint.parquet")
-          case Some(n) => (1 to n).map(i => f"$ckptV%020d.checkpoint.$i%010d.$n%010d.parquet")
-        }
-        val files = names.map(name => log.getOrElse(name, throw new FileNotFoundException(
-          s"_last_checkpoint names version $ckptV, but its checkpoint file " +
-            s"${new Path(logDir(tablePath), name)} is missing")))
-        actionsOf(spark, tablePath, files.map(_ -> ckptV), new ParquetFileFormat).unionByName(json)
+    val commits = SortedMap.from(log.collect { case (commitFile(v), st) => v.toLong -> st })
+    val checkpoint = lastCheckpoint(spark, log).map { case (v, parts) =>
+      val names = parts match {
+        case None => Seq(f"$v%020d.checkpoint.parquet")
+        case Some(n) => (1 to n).map(i => f"$v%020d.checkpoint.$i%010d.$n%010d.parquet")
+      }
+      v -> names.map(name => log.getOrElse(name, throw new FileNotFoundException(
+        s"_last_checkpoint names version $v, but its checkpoint file " +
+          s"${new Path(logDir(tablePath), name)} is missing")))
     }
+    val oldest = if (commits.contains(0L)) Some(0L) else checkpoint.map(_._1)
+    target.filter(t => oldest.exists(t < _)).foreach { t =>
+      throw new IllegalArgumentException(s"$tablePath: version $t has expired: the log retains " +
+        s"no commit 0 and no checkpoint at or below it (its oldest state is version ${oldest.get})")
+    }
+    val latest = (commits.keys ++ checkpoint.map(_._1)).maxOption.getOrElse(-1L)
+    val version = target.fold(latest)(math.min(_, latest))
+    val base = checkpoint.filter(_._1 <= version)
+    val kept = commits.rangeTo(version)
+    val from = base.fold(0L)(_._1 + 1)
+    kept.keys.headOption.fold(from)(math.min(_, from)).to(version).find(!kept.contains(_)).foreach { v =>
+      throw new IllegalStateException(s"$tablePath cannot be replayed to version $version: " +
+        s"commit $v (${new Path(logDir(tablePath), f"$v%020d.json")}) is missing" +
+        base.fold(" and no checkpoint precedes it")(c => s" (the checkpoint is at version ${c._1})"))
+    }
+    (kept, base)
+  }
+
+  /** A reader of whole log files in `format` under [[actionSchema]]:
+    * Spark's own reader, called on the driver, so no Spark job runs; it is
+    * given a copy of the Hadoop configuration, which it edits. Fields and
+    * actions the schema lacks read as null, and those it does not name are
+    * not read, so a foreign writer's checkpoint needs no footer inference. */
+  private def reader(spark: SparkSession, format: FileFormat): FileStatus => Iterator[Row] = {
+    val read = format.buildReaderWithPartitionValues(spark, actionSchema, new StructType(),
+      actionSchema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      new Configuration(spark.sparkContext.hadoopConfiguration))
+    val toRow = CatalystTypeConverters.createToScalaConverter(actionSchema)
+    st => read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), 0L, st.getLen,
+      Array.empty, st.getModificationTime, st.getLen)).map(toRow(_).asInstanceOf[Row])
+  }
+
+  /** An active file: path, size, partitionValues, modificationTime, stats. */
+  private[deltalog] val fileSchema: StructType = StructType(StructField("path", StringType) +:
+    Seq("size", "partitionValues", "modificationTime", "stats")
+      .map(actionSchema("add").dataType.asInstanceOf[StructType](_)))
+
+  /** A commit: version, commitInfo, metaData, protocol (null if none). */
+  private[deltalog] val commitSchema: StructType = StructType(StructField("version", LongType) +:
+    Seq("commitInfo", "metaData", "protocol").map(actionSchema(_)))
+
+  /** Replays the log to `target` (the latest version when None) on the
+    * driver: reads the [[segment]]'s files once, in version order with the
+    * checkpoint after the commits up to its version, and folds every action
+    * into a [[Replay]]; `commit` also sees each JSON commit's actions. Fails
+    * fast when the table's protocol needs a reader this one is not: reader
+    * version 2 is column mapping and version 3 lists reader features such
+    * as deletion vectors and v2 checkpoints (Delta PROTOCOL.md, "Protocol
+    * Evolution"). Any of them replays to a plausible but wrong record:
+    * deleted rows still counted, renamed columns resolved by their physical
+    * names. */
+  private def replay(spark: SparkSession, tablePath: String, target: Option[Long],
+                     commit: (Long, Row) => Unit = (_, _) => ()): (DeltaSnapshot, Replay) = {
+    val (commits, checkpoint) = segment(spark, tablePath, target)
+    val fold = new Replay
+    lazy val json = reader(spark, new JsonFileFormat)
+    lazy val parquet = reader(spark, new ParquetFileFormat)
+    (commits.toSeq.map { case (v, st) => (v, false, st) } ++
+      checkpoint.toSeq.flatMap { case (v, parts) => parts.map((v, true, _)) })
+      .sortBy(f => (f._1, f._2)).foreach { case (v, isCheckpoint, st) =>
+        if (isCheckpoint) parquet(st).foreach(fold(v, _))
+        else json(st).foreach { a => fold(v, a); commit(v, a) }
+      }
+    val snap = new DeltaSnapshot(spark, tablePath, fold.manifest, fold.commits)
+    val (readerVersion, features) = snap.readerProtocol
+    if (readerVersion > 1) {
+      val named = if (features.nonEmpty) features else Seq("columnMapping")
+      throw new UnsupportedOperationException(
+        s"$tablePath needs Delta reader version $readerVersion with reader " +
+          s"feature(s) ${named.mkString(", ")}; only reader version 1 " +
+          "tables (no deletion vectors, column mapping or v2 checkpoints) " +
+          "can be analyzed")
+    }
+    (snap, fold)
   }
 
   /** Version recorded in `_last_checkpoint`, if any. */
@@ -198,40 +234,44 @@ object DeltaLog {
     * inclusive — here the FROM snapshot is the baseline, so changes start
     * at fromVersion+1.
     *
-    * How: one scan of exactly the files the window's add and remove
-    * actions name (the snapshot's [[DeltaSnapshot.scan]]) joined on
-    * `__file` against the per-version (path, action) manifest of the
-    * window. A rewriting commit (DELETE, OPTIMIZE, MERGE) both removes and
-    * re-adds the surviving rows, so the net change per row is the ADD
-    * multiplicity minus the REMOVE multiplicity within the commit: one hash
-    * aggregate over (row, version) computes it, and `sequence`-explode
-    * re-emits |net| copies — no per-version driver loop, no exceptAll
-    * cascade, one shuffle keyed by the changed rows themselves. Compaction
-    * commits net to zero everywhere and correctly vanish from the feed.
+    * How: the window's add and remove actions come from the latest
+    * snapshot's one read of the log, as a local (`__file`, version, sign)
+    * frame; one scan of exactly the files they name (the snapshot's
+    * [[DeltaSnapshot.scan]]) is joined on `__file` against it. A rewriting
+    * commit (DELETE, OPTIMIZE, MERGE) both removes and re-adds the surviving
+    * rows, so the net change per row is the ADD multiplicity minus the
+    * REMOVE multiplicity within the commit: one hash aggregate over (row,
+    * version) computes it, and `sequence`-explode re-emits |net| copies —
+    * no per-version driver loop, no exceptAll cascade, one shuffle keyed by
+    * the changed rows themselves. Compaction commits net to zero everywhere
+    * and correctly vanish from the feed.
     *
     * Requires the window's removed files to still exist on disk (VACUUM
     * destroys pre-vacuum change history — the same constraint real Delta
     * CDF has when CDC files were never materialized), and the window's
-    * JSON commits to still be retained: per-commit deltas come from
-    * [[readJsonActions]], NEVER the checkpoint (whose rows aggregate table
-    * STATE at its version — treating them as changes would replay the whole
-    * active set as inserts). A window reaching below the retained log fails
-    * fast rather than returning a silently incomplete feed. */
+    * JSON commits to still be retained: per-commit deltas come from them,
+    * NEVER the checkpoint (whose rows aggregate table STATE at its version —
+    * treating them as changes would replay the whole active set as
+    * inserts). A window reaching below the retained log fails fast rather
+    * than returning a silently incomplete feed. */
   def changes(spark: SparkSession, tablePath: String,
               fromVersion: Long, toVersion: Long): DataFrame = {
     import spark.implicits._
     require(fromVersion <= toVersion,
       s"bad change window ($fromVersion, $toVersion]")
-    val snap = snapshot(spark, tablePath)
+    val present = mutable.Set.empty[Long]
+    val window = Seq.newBuilder[Row]
+    val (snap, fold) = replay(spark, tablePath, None, (v, a) =>
+      if (v > fromVersion && v <= toVersion) {
+        present += v
+        Seq("add" -> 1L, "remove" -> -1L).foreach { case (action, sign) =>
+          Option(a.getAs[Row](action)).flatMap(r => Option(r.getString(0)))
+            .foreach(path => window += Row(path, v, sign))
+        }
+      })
     require(toVersion <= snap.version,
       s"change window ($fromVersion, $toVersion] exceeds current " +
         s"version ${snap.version}")
-    val win = readJsonActions(spark, tablePath)
-      .where($"version" > fromVersion && $"version" <= toVersion)
-    // every commit writes a commitInfo line, so missing versions mean the
-    // window predates the retained JSON log (cleaned after a checkpoint)
-    val present = win.where($"commitInfo".isNotNull)
-      .select($"version").distinct().as[Long].collect().toSet
     val missing = ((fromVersion + 1) to toVersion).filterNot(present)
     require(missing.isEmpty,
       s"change window ($fromVersion, $toVersion] reaches below the " +
@@ -240,28 +280,19 @@ object DeltaLog {
         "unrecoverable from a state checkpoint")
     if (snap.tableSchema.isEmpty) throw new IllegalStateException(
       s"$tablePath: no schemaString in log; CDF needs a schema authority")
-    val addM = win.where($"add".isNotNull)
-      .select($"add.path".as("__file"), $"version", lit(1L).as("__sign"))
-    val remM = win.where($"remove".isNotNull)
-      .select($"remove.path".as("__file"), $"version", lit(-1L).as("__sign"))
-    val manifest = addM.union(remM)
+    val actions = window.result()
+    val manifest = spark.createDataFrame(actions.asJava, StructType(Seq(
+      StructField("__file", StringType), StructField("version", LongType),
+      StructField("__sign", LongType, nullable = false))))
     // fail fast if VACUUM already reclaimed a window file: its changes
     // are gone, and the feed must not come back incomplete
-    val files = manifest.select($"__file").distinct().as[String].collect().toSet
-    val gone = (files -- dataFiles(spark, snap.qualifiedTablePath).keySet).toSeq.sorted
+    val files = actions.map(_.getString(0)).distinct
+    val gone = (files.toSet -- dataFiles(spark, snap.qualifiedTablePath).keySet).toSeq.sorted
     require(gone.isEmpty,
       s"change window ($fromVersion, $toVersion] references data file(s) " +
         s"no longer on disk (vacuumed?), e.g. ${gone.take(3).mkString(", ")}")
-    // partition values from the CHECKPOINT-AWARE adds (snap.actions, not
-    // the JSON window): a file removed inside the window may have been
-    // added in a commit whose JSON has expired — its add action survives
-    // only as a checkpoint row
-    val windowFiles = snap.actions.where($"add.path".isin(files.toSeq: _*))
-      .select($"add.path".as("path"), $"add.size".as("size"),
-        $"add.partitionValues".as("partitionValues"),
-        $"add.modificationTime".as("modificationTime"))
-      .collect().groupBy(_.getString(0)).values.map(_.head).toSeq
-    val rows = snap.scan(windowFiles)
+    // a file removed in the window may have its add only in the checkpoint
+    val rows = snap.scan(files.flatMap(fold.lastAdd))
     val dataAndPartCols = rows.columns.filterNot(_ == "__file").map(col).toSeq
     val changed = rows.join(manifest, Seq("__file"))
       .select(dataAndPartCols :+ $"version" :+ $"__sign": _*)
@@ -331,33 +362,14 @@ object DeltaLog {
   /** The table at its latest version. A path without a `_delta_log`
     * directory fails, saying it is not a Delta table. */
   def snapshot(spark: SparkSession, tablePath: String): DeltaSnapshot =
-    open(spark, tablePath, readActions(spark, tablePath))
+    replay(spark, tablePath, None)._1
 
-  /** Time travel: snapshot as of `version` (inclusive). Requires the log to
-    * still contain a checkpoint or JSON commits covering that version; fails
-    * as [[snapshot]] does on a path that is not a Delta table. */
+  /** Time travel: snapshot as of `version` (inclusive), replayed from the
+    * newest retained state at or below it. A version below the oldest
+    * state the log retains fails, saying it has expired; fails as
+    * [[snapshot]] does on a path that is not a Delta table. */
   def snapshotAt(spark: SparkSession, tablePath: String, version: Long): DeltaSnapshot =
-    open(spark, tablePath, readActions(spark, tablePath).where(col("version") <= version))
-
-  /** Runs the snapshot's one pass over the log and fails fast when the
-    * table's protocol needs a reader this one is not: reader version 2 is
-    * column mapping and version 3 lists reader features such as deletion
-    * vectors and v2 checkpoints (Delta PROTOCOL.md, "Protocol Evolution").
-    * Any of them replays to a plausible but wrong record: deleted rows
-    * still counted, renamed columns resolved by their physical names. */
-  private def open(spark: SparkSession, tablePath: String, actions: DataFrame): DeltaSnapshot = {
-    val snap = DeltaSnapshot(spark, tablePath, actions)
-    val (readerVersion, features) = snap.readerProtocol
-    if (readerVersion > 1) {
-      val named = if (features.nonEmpty) features else Seq("columnMapping")
-      throw new UnsupportedOperationException(
-        s"$tablePath needs Delta reader version $readerVersion with reader " +
-          s"feature(s) ${named.mkString(", ")}; only reader version 1 " +
-          "tables (no deletion vectors, column mapping or v2 checkpoints) " +
-          "can be analyzed")
-    }
-    snap
-  }
+    replay(spark, tablePath, Some(version))._1
 
   /** Fully-qualified form of `tablePath` on its filesystem (absolute, with
     * scheme) — relative paths are resolved against the FS working
@@ -369,71 +381,70 @@ object DeltaLog {
   }
 }
 
-/** Replayed view of a Delta table at its latest version.
-  *
-  * `actions` is the lazy, uncached all-versions action frame. Opening the
-  * snapshot runs ONE aggregate over it ([[groups]]), collected to the
-  * driver: one group per file path, which replays add/remove into the
-  * active-file [[manifest]], and one group per commit version, which
-  * carries that commit's commitInfo, metaData and protocol. Every other
-  * fact is plain Scala over those rows: [[version]], the [[latest]]
-  * metaData and protocol ([[tableSchema]], [[partitionColumns]], the
-  * reader protocol), [[history]] and [[partitionCounts]]. Every data read
-  * is one parquet scan of exactly the manifest's files ([[scan]]).
-  */
-final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: DataFrame) {
-  import spark.implicits._
+/** The in-order fold that replays a log segment on the driver, one action
+  * at a time (Delta PROTOCOL.md, "Action Reconciliation"). Actions arrive
+  * in version order, so a later one replaces an earlier one: per path the
+  * latest add and the versions of it and of the latest remove, per version
+  * the latest commitInfo, metaData and protocol. A path is active when its
+  * latest add is at a version above its latest remove. Holds one entry per
+  * distinct path in the segment, dead paths included. */
+private[deltalog] final class Replay {
+  import DeltaLog.{commitSchema, fileSchema}
 
-  /** The one pass over the log: a `groupingSets` aggregate with one group
-    * per file path (`coalesce(add.path, remove.path)`) and one per commit
-    * version, so the log is scanned once and collected in two Spark jobs
-    * (the aggregate's map stage and its result).
-    *
-    * A path group is a `file` row when the path is active: its latest
-    * `add` survives unless a `remove` with version >= the add's version
-    * exists; a remove without an add yields no row. A version group is a
-    * commit row: `version` and the commit's `commitInfo`, `metaData` and
-    * `protocol` (each null when the commit has none). Dead paths are
-    * dropped before the collect, so the driver holds the active files and
-    * one row per commit. */
-  private lazy val pass: DataFrame = {
-    def inCommit(action: String) =
-      max_by(col(action), when(col(action).isNotNull, $"version")).as(action)
-    actions
-      .withColumn("path", coalesce($"add.path", $"remove.path"))
-      .groupingSets(Seq(Seq($"path"), Seq($"version")), $"path", $"version")
-      .agg(
-        (grouping($"path") === 1).as("isCommit"),
-        max_by(struct($"add.size", $"add.partitionValues", $"add.modificationTime", $"add.stats", $"version"),
-          when($"add".isNotNull, $"version")).as("a"),
-        max(when($"remove".isNotNull, $"version")).as("removeVersion"),
-        inCommit("commitInfo"), inCommit("metaData"), inCommit("protocol"))
-      .where($"isCommit" || ($"path".isNotNull && $"a".isNotNull &&
-        ($"removeVersion".isNull || $"a.version" > $"removeVersion")))
-      .select(
-        when(!$"isCommit", struct($"path", $"a.size", $"a.partitionValues",
-          $"a.modificationTime", $"a.stats")).as("file"),
-        $"version", $"commitInfo", $"metaData", $"protocol")
+  // path -> (version of the latest add, that add, version of the latest
+  // remove); a missing add is null at version -1, a missing remove -1
+  private val paths = mutable.HashMap.empty[String, (Long, Row, Long)]
+  private val versions = mutable.TreeMap.empty[Long, Array[Any]]
+
+  def apply(version: Long, action: Row): Unit = {
+    val commit = versions.getOrElseUpdate(version, Array[Any](version, null, null, null))
+    (1 until commitSchema.size).foreach { i =>
+      Option(action.getAs[Row](commitSchema(i).name)).foreach(commit(i) = _)
+    }
+    def path(name: String) = Option(action.getAs[Row](name)).filter(!_.isNullAt(0)).map(_.getString(0))
+    path("add").foreach(p => paths(p) = (version, action.getAs[Row]("add"), paths.get(p).fold(-1L)(_._3)))
+    path("remove").foreach(p => paths(p) = paths.getOrElse(p, (-1L, null, -1L)).copy(_3 = version))
   }
 
-  private lazy val groups: Array[Row] = pass.collect()
+  /** The latest add of `path`, active or not. */
+  def lastAdd(path: String): Option[Row] = paths.get(path).flatMap(p => Option(p._2))
 
-  /** The commit rows of [[groups]]: version, commitInfo, metaData,
-    * protocol, each action null when the commit has none. */
-  private lazy val commits: Array[Row] =
-    groups.filter(r => r.isNullAt(0) && !r.isNullAt(1))
+  /** The active files as [[DeltaLog.fileSchema]] rows, sorted by path. */
+  def manifest: Array[Row] = paths.iterator.collect {
+    case (path, (added, add, removed)) if added > removed =>
+      new GenericRowWithSchema(path +: fileSchema.fieldNames.tail.map(add.getAs[Any]), fileSchema): Row
+  }.toArray.sortBy(_.getString(0))
 
-  private lazy val historySchema: StructType = StructType(pass.schema("version") +:
-    pass.schema("commitInfo").dataType.asInstanceOf[StructType].fields)
+  /** One [[DeltaLog.commitSchema]] row per version read, in version order. */
+  def commits: Array[Row] = versions.valuesIterator.map(new GenericRowWithSchema(_, commitSchema): Row).toArray
+}
+
+/** Replayed view of a Delta table at its latest version.
+  *
+  * Built by one fold over the log ([[Replay]]), it holds on the driver the
+  * active-file `manifest` ([[DeltaLog.fileSchema]] rows sorted by path; the
+  * `stats` JSON's `numRecords` feeds [[partitionCounts]]) and one commit
+  * row per version ([[DeltaLog.commitSchema]]), in version order. A scan
+  * must name its files on the driver, where every analysis and append
+  * already lists the whole table folder ([[DeltaLog.dataFiles]]). Every
+  * other fact is plain Scala over those rows: [[version]], the [[latest]]
+  * metaData and protocol ([[tableSchema]], [[partitionColumns]], the reader
+  * protocol), [[history]] and [[partitionCounts]]. Every data read is one
+  * parquet scan of exactly the manifest's files ([[scan]]).
+  */
+final class DeltaSnapshot private[deltalog] (val spark: SparkSession, val tablePath: String,
+                                             private[graft] val manifest: Array[Row],
+                                             commits: Array[Row]) {
+  import spark.implicits._
+
+  private val historySchema: StructType = StructType(DeltaLog.commitSchema("version") +:
+    DeltaLog.commitSchema("commitInfo").dataType.asInstanceOf[StructType].fields)
 
   /** History rows, held on the driver in version order: the commits that
     * carry a commitInfo, as version, timestamp (epoch millis), operation,
     * operationParameters, operationMetrics. */
-  private[graft] lazy val historyRows: Array[Row] = commits
-    .filter(_.getAs[Row]("commitInfo") != null)
-    .sortBy(_.getAs[Long]("version"))
-    .map(c => new GenericRowWithSchema(
-      (c.getAs[Long]("version") +: c.getAs[Row]("commitInfo").toSeq).toArray, historySchema))
+  private[graft] lazy val historyRows: Array[Row] = commits.filter(!_.isNullAt(1))
+    .map(c => new GenericRowWithSchema((c.get(0) +: c.getStruct(1).toSeq).toArray, historySchema))
 
   /** [[historyRows]] as a local frame. Mirrors `dt.history()` /
     * `DESCRIBE HISTORY` (delta_python_analyzer.py:167,
@@ -444,15 +455,14 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
   /** The latest `action` ("metaData" or "protocol") in the log, if any:
     * the one carried by the highest commit version that has one. */
   private[graft] def latest(action: String): Option[Row] =
-    commits.filter(_.getAs[Row](action) != null)
-      .maxByOption(_.getAs[Long]("version")).map(_.getAs[Row](action))
+    commits.reverseIterator.map(_.getAs[Row](action)).find(_ != null)
 
   private def latestField[T](action: String, field: String): Option[T] =
     latest(action).flatMap(r => Option(r.getAs[T](field)))
 
   /** max commit version — the reference's `version_count` is max(version),
     * 0-based, NOT len(history) (delta_python_analyzer.py:189). */
-  lazy val version: Long = commits.map(_.getAs[Long]("version")).maxOption.getOrElse(0L)
+  lazy val version: Long = commits.lastOption.fold(0L)(_.getLong(0))
 
   /** Authoritative table schema from the latest metaData action's
     * `schemaString` (the Delta protocol's schema authority — the FULL
@@ -469,7 +479,7 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
   /** Partition columns from the latest metaData action. */
   lazy val partitionColumns: Seq[String] =
     latestField[collection.Seq[String]]("metaData", "partitionColumns")
-      .map(_.toSeq).getOrElse(Seq.empty)
+      .map(_.toList).getOrElse(Nil)
 
   /** (minReaderVersion, readerFeatures) of the latest protocol action;
     * reader version 1 when the log carries none. */
@@ -478,18 +488,8 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
       latestField[collection.Seq[String]]("protocol", "readerFeatures")
         .map(_.toSeq).getOrElse(Seq.empty))
 
-  /** Active file manifest, held on the driver: the `file` rows of
-    * [[groups]], with columns path, size, partitionValues,
-    * modificationTime, stats (the add's per-file statistics JSON, whose
-    * `numRecords` feeds [[partitionCounts]]; null or empty in logs whose
-    * writers recorded none). A scan must name its files on the driver,
-    * where every analysis and append already lists the whole table folder
-    * ([[DeltaLog.dataFiles]]), and the active files are a subset of it. */
-  private[graft] lazy val manifest: Array[Row] = groups.flatMap(r => Option(r.getStruct(0)))
-
   /** [[manifest]] as a local frame. */
-  lazy val activeFiles: DataFrame =
-    spark.createDataFrame(manifest.toSeq.asJava, pass.schema("file").dataType.asInstanceOf[StructType])
+  lazy val activeFiles: DataFrame = spark.createDataFrame(manifest.toSeq.asJava, DeltaLog.fileSchema)
 
   /** Active table-relative path → size, from [[manifest]]. */
   private[graft] lazy val activeSizes: Map[String, Long] =
@@ -575,7 +575,7 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
         .getOrElse(Map.empty[String, String])
       new FileStatus(f.getAs[Long]("size"), false, 0, 0, f.getAs[Long]("modificationTime"),
         new Path(root, new Path(null, null, path))) -> (path +: partitionColumns.map(pv.getOrElse(_, null)))
-    }).read(spark, activeSchema, new ParquetFileFormat)
+    }).read(spark, activeSchema)
   }
 
   // a log that predates schema emission reads with the footer schema of
@@ -588,7 +588,7 @@ final case class DeltaSnapshot(spark: SparkSession, tablePath: String, actions: 
       spark.read.parquet(new Path(new Path(qualifiedTablePath), new Path(null, null, first)).toString).schema
   }
 
-  /** A no-op: a snapshot caches nothing, its state is the driver-held rows
-    * of [[groups]]. Kept for callers written when it released a cache. */
+  /** A no-op: a snapshot caches nothing. Kept for callers written when it
+    * released a cache. */
   def unpersist(): Unit = ()
 }

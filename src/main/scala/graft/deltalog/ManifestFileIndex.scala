@@ -4,17 +4,17 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
-/** A Spark [[FileIndex]] over an explicit list of Delta files, each with its
-  * own values of `partitionSchema`: Spark lists and opens exactly these
-  * files, never a directory. The engine's one file index: the data files
-  * (`__file`, the `add.path`, and the table's partition columns, strings
-  * from the log; [[DeltaSnapshot.scan]]) and the `_delta_log` commits and
-  * checkpoint parts (`version`, a long; [[DeltaLog.readActions]]). Each file
-  * is its own partition directory, so a filter on any of its values drops
-  * whole files before the scan. */
+/** A Spark [[FileIndex]] over an explicit list of Delta data files, each
+  * with its own values of `partitionSchema` (`__file`, the `add.path`, and
+  * the table's partition columns, strings from the log;
+  * [[DeltaSnapshot.scan]]): Spark lists and opens exactly these files,
+  * never a directory. Each file is its own partition directory, so a filter
+  * on any of its values drops whole files before the scan. The log's own
+  * files are read on the driver, without a scan. */
 private[graft] final class ManifestFileIndex(root: Path, override val partitionSchema: StructType,
                                              files: Seq[(FileStatus, Seq[Any])]) extends FileIndex {
 
@@ -23,11 +23,11 @@ private[graft] final class ManifestFileIndex(root: Path, override val partitionS
       Array(status))
   }
 
-  /** The files read in `format` under `dataSchema`, the values of
+  /** The parquet files read under `dataSchema`, the values of
     * [[partitionSchema]] as trailing columns. */
-  def read(spark: SparkSession, dataSchema: StructType, format: FileFormat): DataFrame =
+  def read(spark: SparkSession, dataSchema: StructType): DataFrame =
     spark.baseRelationToDataFrame(HadoopFsRelation(this, partitionSchema,
-      GraftSqlBridge.asNullable(dataSchema), None, format, Map.empty)(spark))
+      GraftSqlBridge.asNullable(dataSchema), None, new ParquetFileFormat, Map.empty)(spark))
 
   override def rootPaths: Seq[Path] = Seq(root)
 

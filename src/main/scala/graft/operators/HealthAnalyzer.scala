@@ -7,16 +7,15 @@ import graft.deltalog.DeltaLog
 import graft.health._
 
 /** End-to-end table health analysis — the re-architected E1 entry point
-  * (SURVEY.md §3): one log snapshot, whose single aggregate over the log
-  * leaves the manifest and the commit history on the driver, then three
+  * (SURVEY.md §3): one log snapshot, whose fold over the log, read on the
+  * driver, leaves the manifest and the commit history there, then three
   * passes that each derive their facts from one source — the history rows
   * counted by [[HistoryAnalyzer.counts]], the manifest's per-file
   * `numRecords` summed per partition and folded into the record count and
   * skew by [[SkewAnalyzer.stats]], and the folder listing set against the
-  * manifest (storage) — feeding the pure-Scala health calculus. Only
-  * opening the snapshot runs Spark jobs (two); the three passes are plain
-  * Scala. No data file is opened: a file whose log stats lack a row count
-  * is counted from its parquet footer.
+  * manifest (storage) — feeding the pure-Scala health calculus. No Spark
+  * job runs, and no data file is opened: a file whose log stats lack a row
+  * count is counted from its parquet footer.
   *
   * Implements the *Python* backend's measured semantics (the honest fork of
   * H6-H10 — delta_python_analyzer.py:224-275) since our log layer has full

@@ -232,8 +232,7 @@ object Maintenance {
     * The candidates are the orphan paths of [[StorageAnalyzer.storage]] over
     * the driver-side folder listing and the manifest; each is stat'ed and
     * deleted in a plain loop on the driver, as Delta's default
-    * (non-parallel) VACUUM does, so no Spark job runs beyond the two that
-    * open the snapshot. */
+    * (non-parallel) VACUUM does, so no Spark job runs. */
   def vacuum(spark: SparkSession, tablePath: String,
              retainMs: Long = 7L * 24 * 3600 * 1000,
              dryRun: Boolean = false): DataFrame = {

@@ -449,15 +449,14 @@ class DeltaLogSpec extends SparkSuite {
     path
   }
 
-  test("snapshot opens in 2 jobs on a log of more than 32 commits; a later append relists nothing") {
+  test("snapshot opens in 0 jobs on a log of more than 32 commits; a later append relists nothing") {
     val path = longLog
     val (snap, jobs) = jobsOf {
       val s = DeltaLog.snapshot(spark, path)
       (s.version, s.tableSchema, s.partitionColumns, s.manifest.length, s.history.collect().length)
       s
     }
-    assert(jobs.size === 2, jobs.mkString("\n"))
-    assert(listingJobs(jobs).isEmpty, jobs.mkString("\n"))
+    assert(jobs.isEmpty, jobs.mkString("\n"))
     assert(snap.version === 34L)
     assert(snap.partitionColumns === Seq("day"))
     assert(snap.tableSchema.map(_.fieldNames.toSeq) ===
@@ -472,11 +471,11 @@ class DeltaLogSpec extends SparkSuite {
     assert(DeltaLog.snapshot(spark, path).version === 35L)
   }
 
-  test("analyzeTable runs at most 2 jobs on a log of more than 32 commits") {
+  test("analyzeTable runs no job on a log of more than 32 commits") {
     val path = longLog
     graft.operators.HealthAnalyzer.analyzeTable(spark, path) // warm-up
     val (m, jobs) = jobsOf(graft.operators.HealthAnalyzer.analyzeTable(spark, path))
-    assert(jobs.size <= 2, jobs.mkString("\n"))
+    assert(jobs.isEmpty, jobs.mkString("\n"))
     val snap = DeltaLog.snapshot(spark, path)
     assert(m.versionCount === snap.version)
     assert(m.recordCount === snap.data.count())
@@ -634,8 +633,11 @@ class DeltaLogSpec extends SparkSuite {
     val log = java.nio.file.Paths.get(path, "_delta_log")
     def put(name: String, lines: String*): Unit = java.nio.file.Files.write(log.resolve(name),
       lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // each stray file carries an add and a commitInfo, so reading any of
+    // them changes the state
     val add = """{"add":{"path":"day=Mon/stray.parquet","partitionValues":{"day":"Mon"},"size":1,"modificationTime":1,"dataChange":true}}"""
-    put("00000000000000000001.crc", """{"tableSizeBytes":1,"numFiles":1,"numMetadata":1,"numProtocol":1}""")
+    put("00000000000000000001.crc", """{"tableSizeBytes":1,"numFiles":1,"numMetadata":1,"numProtocol":1}""",
+      add, commitInfo("CHECKSUM"))
     put(".00000000000000000003.json.0f5e2c1a-7d7b-4c43-9a52-3f0c1d2e4b6a.tmp", add, commitInfo("WRITE"))
     java.nio.file.Files.createDirectories(log.resolve("_commits"))
     put("_commits/00000000000000000003.5b1c3a9e-2f4d-4e6a-8c7b-9d0e1f2a3b4c.json", add, commitInfo("WRITE"))
@@ -643,11 +645,117 @@ class DeltaLogSpec extends SparkSuite {
 
     val ((got, rows), events) = logged(rowsReadOf(state()))
     assert(got === want)
-    val commitLines = log.toFile.listFiles().toSeq.filter(_.getName.matches("\\d{20}\\.json")).map { f =>
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().count(_.trim.nonEmpty).toLong finally src.close()
-    }.sum
-    assert(rows === commitLines)
+    assert(rows === 0L, "the log is read on the driver, by no Spark task")
     assert(!events.exists(_.contains("All paths were ignored")), events.mkString("\n"))
+  }
+
+  test("opening a checkpointed, multi-part log runs 0 jobs") {
+    val path = tmpDir("dlog_multipart_jobs")
+    val df = TestFixtures.tips(spark, Seq("Mon" -> 8, "Tue" -> 8), Seq("Dinner" -> 16))
+    DeltaFixtureWriter.write(df, path, "overwrite", Seq("day"))
+    DeltaFixtureWriter.write(df.limit(4), path, "append", Seq("day"))
+    val v = graft.operators.Maintenance.checkpoint(spark, path)
+    DeltaFixtureWriter.write(df.limit(2), path, "append", Seq("day"))
+    def state() = {
+      val s = DeltaLog.snapshot(spark, path)
+      (s.version, s.manifest.toSeq, s.historyRows.toSeq, s.tableSchema, s.partitionColumns)
+    }
+    val want = state()
+    // two parts, each a copy of the single-file checkpoint, and the
+    // commits it covers cleaned
+    val log = java.nio.file.Paths.get(path, "_delta_log")
+    val single = log.resolve(f"$v%020d.checkpoint.parquet")
+    (1 to 2).foreach(i => java.nio.file.Files.copy(single,
+      log.resolve(f"$v%020d.checkpoint.$i%010d.0000000002.parquet")))
+    java.nio.file.Files.delete(single)
+    java.nio.file.Files.deleteIfExists(log.resolve("._last_checkpoint.crc"))
+    java.nio.file.Files.write(log.resolve("_last_checkpoint"), s"""{"version":$v,"parts":2}""".getBytes("UTF-8"))
+    (0L to v).foreach(i => java.nio.file.Files.delete(log.resolve(f"$i%020d.json")))
+    val (got, jobs) = jobsOf(state())
+    assert(jobs.isEmpty, jobs.mkString("\n"))
+    assert(got === want.copy(_3 = want._3.filter(_.getLong(0) > v)))
+  }
+
+  /** A 5-commit partitioned table (versions 0-4): an overwrite, three
+    * appends and a delete; its log directory. */
+  private def fiveCommits(prefix: String): (String, java.nio.file.Path) = {
+    val path = tmpDir(prefix)
+    val df = TestFixtures.tips(spark, Seq("Mon" -> 10, "Tue" -> 10), Seq("Dinner" -> 10, "Lunch" -> 10))
+    DeltaFixtureWriter.write(df, path, "overwrite", Seq("day"))
+    (1 to 3).foreach(i => DeltaFixtureWriter.write(df.limit(i * 2), path, "append", Seq("day")))
+    DeltaFixtureWriter.delete(spark, path, "total_bill > 45")
+    (path, java.nio.file.Paths.get(path, "_delta_log"))
+  }
+
+  private def dropCommits(log: java.nio.file.Path, versions: Seq[Long]): Unit =
+    versions.foreach(v => java.nio.file.Files.delete(log.resolve(f"$v%020d.json")))
+
+  private def messageOf(body: => Any): String =
+    intercept[RuntimeException](body).getMessage
+
+  test("damaged log: a deleted commit fails the open, naming its version") {
+    val (path, log) = fiveCommits("dlog_gap")
+    dropCommits(log, Seq(2L))
+    val m = messageOf(DeltaLog.snapshot(spark, path))
+    assert(m.contains("commit 2 ") && m.contains("00000000000000000002.json"), m)
+    assert(messageOf(graft.operators.HealthAnalyzer.analyzeTable(spark, path)).contains("commit 2 "))
+    // a version below the gap still replays from commit 0
+    assert(DeltaLog.snapshotAt(spark, path, 1L).version === 1L)
+  }
+
+  test("damaged log: the first commits deleted without a checkpoint fail the open, naming commit 0") {
+    val (path, log) = fiveCommits("dlog_head")
+    dropCommits(log, Seq(0L, 1L))
+    val m = messageOf(DeltaLog.snapshot(spark, path))
+    assert(m.contains("commit 0 ") && m.contains("no checkpoint precedes it"), m)
+  }
+
+  /** [[fiveCommits]] checkpointed at version 4, its commits 0-4 cleaned. */
+  private def cleanedAtCheckpoint(prefix: String): (String, java.nio.file.Path) = {
+    val (path, log) = fiveCommits(prefix)
+    assert(graft.operators.Maintenance.checkpoint(spark, path) === 4L)
+    dropCommits(log, 0L to 4L)
+    (path, log)
+  }
+
+  test("damaged log: snapshotAt below the checkpoint of a cleaned log says the version has expired") {
+    val (path, _) = cleanedAtCheckpoint("dlog_expired")
+    val m = messageOf(DeltaLog.snapshotAt(spark, path, 1L))
+    assert(m.contains("version 1 has expired") && m.contains("oldest state is version 4"), m)
+  }
+
+  test("damaged log: restore to an expired version commits nothing and leaves the log unchanged") {
+    val (path, log) = cleanedAtCheckpoint("dlog_restore")
+    def files() = log.toFile.listFiles().map(f => f.getName -> f.length()).toMap
+    val before = files()
+    val m = messageOf(graft.operators.Maintenance.restore(spark, path, 1L))
+    assert(m.contains("version 1 has expired"), m)
+    assert(files() === before)
+    assert(DeltaLog.snapshot(spark, path).version === 4L)
+  }
+
+  test("damaged log: a torn _last_checkpoint over cleaned commits fails the open, naming commit 0") {
+    val (path, log) = cleanedAtCheckpoint("dlog_torn")
+    DeltaFixtureWriter.write(TestFixtures.tips(spark, Seq("Wed" -> 2), Seq("Lunch" -> 2)),
+      path, "append", Seq("day"))
+    java.nio.file.Files.deleteIfExists(log.resolve("._last_checkpoint.crc"))
+    java.nio.file.Files.write(log.resolve("_last_checkpoint"), Array.emptyByteArray)
+    val m = messageOf(DeltaLog.snapshot(spark, path))
+    assert(m.contains("version 5") && m.contains("commit 0 "), m)
+  }
+
+  test("a cleaned, checkpointed log opens, and time travel at or above the checkpoint works") {
+    val (path, log) = fiveCommits("dlog_cleaned")
+    def state(s: graft.deltalog.DeltaSnapshot) = (s.version, s.manifest.toSeq, s.data.count())
+    val at4 = state(DeltaLog.snapshot(spark, path))
+    assert(graft.operators.Maintenance.checkpoint(spark, path) === 4L)
+    DeltaFixtureWriter.write(TestFixtures.tips(spark, Seq("Wed" -> 2), Seq("Lunch" -> 2)),
+      path, "append", Seq("day"))
+    val at5 = state(DeltaLog.snapshot(spark, path))
+    dropCommits(log, 0L to 4L)
+    assert(state(DeltaLog.snapshot(spark, path)) === at5)
+    assert(state(DeltaLog.snapshotAt(spark, path, 5L)) === at5)
+    assert(state(DeltaLog.snapshotAt(spark, path, 4L)) === at4)
+    assert(DeltaLog.snapshotAt(spark, path, 4L).historyRows.isEmpty)
   }
 }

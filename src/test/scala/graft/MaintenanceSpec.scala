@@ -119,11 +119,9 @@ class MaintenanceSpec extends SparkSuite {
     // replay after JSON cleanup — retain it
     val ckptFile = new java.io.File(path, f"_delta_log/$v%020d.checkpoint.parquet")
     assert(ckptFile.isFile, "checkpoint must be a single file")
-    val proto = snap.actions.where(col("protocol").isNotNull)
-      .select("protocol.minReaderVersion", "protocol.minWriterVersion")
-      .collect()
+    val proto = snap.latest("protocol")
     assert(proto.nonEmpty, "protocol action survives JSON cleanup")
-    assert(proto.head.getInt(0) === 1 && proto.head.getInt(1) === 2)
+    assert(proto.get.getInt(0) === 1 && proto.get.getInt(1) === 2)
     snap.unpersist()
   }
 
@@ -196,13 +194,13 @@ class MaintenanceSpec extends SparkSuite {
     assert(vacuumOps === 1L)
   }
 
-  test("vacuum starts only the 2 jobs that open its snapshot") {
+  test("vacuum starts no Spark job") {
     val path = tmpDir("vacjobs")
     TestFixtures.buildOrphanTable(spark, path)
     val orphans = DeltaLog.dataFiles(spark, path).size - DeltaLog.snapshot(spark, path).manifest.length
     assert(orphans > 0)
     val (deleted, jobs) = jobsOf(Maintenance.vacuum(spark, path, retainMs = 0L))
-    assert(jobs.size === 2, jobs.mkString("\n"))
+    assert(jobs.isEmpty, jobs.mkString("\n"))
     assert(deleted.count() === orphans)
   }
 
@@ -926,7 +924,12 @@ class MaintenanceSpec extends SparkSuite {
     def recorded(adds: org.apache.spark.sql.DataFrame): Seq[(String, Option[Long])] =
       adds.select($"path", get_json_object($"stats", "$.numRecords").cast("long"))
         .as[(String, Option[Long])].collect().toSeq
-    val log = DeltaLog.readJsonActions(spark, path)
+    // the JSON commits, each read with its version
+    val log = new java.io.File(path, "_delta_log").listFiles().toSeq.collect {
+      case f if f.getName.matches("\\d{20}\\.json") =>
+        spark.read.schema(DeltaLog.actionSchema).json(f.getPath)
+          .withColumn("version", lit(f.getName.take(20).toLong))
+    }.reduce(_ unionByName _)
     val ops = log.where($"commitInfo".isNotNull)
       .select($"version", $"commitInfo.operation").as[(Long, String)].collect().toMap
     val jsonAdds = log.where($"add".isNotNull).select($"version", $"add.*")

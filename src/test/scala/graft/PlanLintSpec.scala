@@ -182,8 +182,8 @@ class PlanLintSpec extends SparkSuite {
 
   // ------------------------------------------------- Delta file scans
 
-  test("every Delta file scan (log commits, single and multi-part checkpoint, data, change feed) " +
-      "is a ManifestFileIndex: Spark never lists a Delta directory") {
+  test("every Delta data and change-feed scan is a ManifestFileIndex; opening a JSON, " +
+      "single or multi-part checkpoint log plans no scan and runs no job") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -203,28 +203,45 @@ class PlanLintSpec extends SparkSuite {
         case other => fail(s"$what: a ${other.nodeName} leaf")
       }.toSet
     }
+    // opening the log runs no job, and its frames are local relations
+    def opened(what: String, path: String) = {
+      val (snap, jobs) = jobsOf {
+        val s = DeltaLog.snapshot(spark, path)
+        (s.version, s.tableSchema, s.manifest.length, s.historyRows.length)
+        s
+      }
+      assert(jobs.isEmpty, s"$what: ${jobs.mkString("\n")}")
+      Seq(snap.activeFiles, snap.history).foreach(df =>
+        assert(df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]), what))
+      snap
+    }
     val path = tmpDir("lint_delta")
     val df = spark.range(12).selectExpr("id", "cast(id % 3 as string) as k")
     DeltaFixtureWriter.write(df, path, "overwrite", Seq("k"))
     DeltaFixtureWriter.write(df.limit(4), path, "append", Seq("k"))
+    val json = opened("JSON log", path)
     val v = Maintenance.checkpoint(spark, path)
     DeltaFixtureWriter.delete(spark, path, "id = 1")
-    val log = java.nio.file.Paths.get(path, "_delta_log")
-    val commits = (0L to v + 1).map(i => f"$i%020d.json").toSet
-    assert(scanned("readActions", DeltaLog.readActions(spark, path)) ===
-      commits + f"$v%020d.checkpoint.parquet")
     val snap = DeltaLog.snapshot(spark, path)
+    assert(snap.version === v + 1 && json.version === v)
     assert(scanned("data", snap.data) === snap.manifest.map(_.getString(0).split('/').last).toSet)
     assert(scanned("changes", DeltaLog.changes(spark, path, 0L, v + 1)).nonEmpty)
 
+    // the checkpoint stands alone once the commits it covers are cleaned
+    val log = java.nio.file.Paths.get(path, "_delta_log")
+    (0L to v).foreach(i => java.nio.file.Files.delete(log.resolve(f"$i%020d.json")))
+    assert(opened("single checkpoint log", path).manifest.toSeq === snap.manifest.toSeq)
+
     // the checkpoint as two parts (each a copy: replay is per-path
     // last-add-wins, so duplicated rows at one version are harmless)
+    val single = log.resolve(f"$v%020d.checkpoint.parquet")
     val parts = (1 to 2).map(i => f"$v%020d.checkpoint.$i%010d.0000000002.parquet")
-    parts.foreach(p => java.nio.file.Files.copy(log.resolve(f"$v%020d.checkpoint.parquet"), log.resolve(p)))
+    parts.foreach(p => java.nio.file.Files.copy(single, log.resolve(p)))
+    java.nio.file.Files.delete(single)
     // the Hadoop checksum of the old _last_checkpoint would reject the rewrite
     java.nio.file.Files.deleteIfExists(log.resolve("._last_checkpoint.crc"))
     java.nio.file.Files.write(log.resolve("_last_checkpoint"),
       s"""{"version":$v,"parts":2}""".getBytes("UTF-8"))
-    assert(scanned("multi-part readActions", DeltaLog.readActions(spark, path)) === commits ++ parts)
+    assert(opened("multi-part checkpoint log", path).manifest.toSeq === snap.manifest.toSeq)
   }
 }
