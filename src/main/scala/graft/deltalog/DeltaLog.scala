@@ -26,9 +26,10 @@ import scala.jdk.CollectionConverters._
   *
   * The environment ships no delta-spark jar, so the engine implements its own
   * log layer: list `_delta_log` once on the driver, read the
-  * `NNNNNNNNNNNNNNNNNNNN.json` commits it names (and the checkpoint parts
-  * `_last_checkpoint` points to) on the driver under an explicit action
-  * schema, and fold their actions in version order into the snapshot.
+  * `NNNNNNNNNNNNNNNNNNNN.json` commits it names (and the parts of one
+  * checkpoint: the one `_last_checkpoint` points to, or else the newest
+  * complete one listed) on the driver under an explicit action schema, and
+  * fold their actions in version order into the snapshot.
   *
   * Consumes exactly the six log-derived facts the reference workload needs
   * (see /root/reference/src/delta_lake_health/health_analyzers/
@@ -108,39 +109,56 @@ object DeltaLog {
   }
 
   private val commitFile = """(\d{20})\.json""".r
+  private val checkpointFile = """(\d{20})\.checkpoint(?:\.\d{10}\.(\d{10}))?\.parquet""".r
 
-  /** The log segment a replay to `target` reads (the latest version when
-    * None or above it), picked from the one listing before any file is
-    * read: the retained `%020d.json` commits up to the target, the version
-    * parsed from each name (`.crc` checksums, writers' temporary files and
-    * stray JSON are not read), and the parts of the checkpoint
-    * `_last_checkpoint` names, if it is at or below the target. Fails,
-    * naming the version, where the fold cannot replay (Delta PROTOCOL.md,
-    * "Delta Log Entries"): a target below the oldest retained state (commit
-    * 0, or else the checkpoint) has expired, and the commits from the first
-    * retained one (at most checkpoint + 1) up to the target must have no
-    * gap. A checkpoint part missing from the listing fails naming it. */
+  /** The log segment a replay to `target` (the latest version when None)
+    * reads, picked from the one listing before any file is read: the
+    * retained `%020d.json` commits up to the target, the version parsed
+    * from each name (`.crc` checksums, writers' temporary files and stray
+    * JSON are not read), and the parts of one checkpoint at or below the
+    * target. That checkpoint is the one `_last_checkpoint` names, when the
+    * file parses and names a version at or below the target (a part missing
+    * from the listing fails naming it); otherwise the newest complete one in
+    * the listing (its single file, or all of its parts 1..n), as Delta
+    * readers do (PROTOCOL.md, "Last Checkpoint File"). Fails, naming the
+    * version, where the fold cannot replay (PROTOCOL.md, "Delta Log
+    * Entries"): a target above the latest version does not exist, a target
+    * below the oldest retained state (commit 0, or else the oldest
+    * checkpoint) has expired, and the commits from the first retained one
+    * (at most checkpoint + 1) up to the target must have no gap. */
   private def segment(spark: SparkSession, tablePath: String, target: Option[Long])
       : (SortedMap[Long, FileStatus], Option[(Long, Seq[FileStatus])]) = {
     val log = listLog(spark, tablePath)
     val commits = SortedMap.from(log.collect { case (commitFile(v), st) => v.toLong -> st })
-    val checkpoint = lastCheckpoint(spark, log).map { case (v, parts) =>
-      val names = parts match {
-        case None => Seq(f"$v%020d.checkpoint.parquet")
-        case Some(n) => (1 to n).map(i => f"$v%020d.checkpoint.$i%010d.$n%010d.parquet")
-      }
-      v -> names.map(name => log.getOrElse(name, throw new FileNotFoundException(
-        s"_last_checkpoint names version $v, but its checkpoint file " +
-          s"${new Path(logDir(tablePath), name)} is missing")))
+    // the file names of the checkpoint at version v: one file, or parts 1..n
+    def names(v: Long, n: Option[Long]): Iterator[String] = n match {
+      case None => Iterator(f"$v%020d.checkpoint.parquet")
+      case Some(n) =>
+        Iterator.iterate(1L)(_ + 1).takeWhile(_ <= n).map(i => f"$v%020d.checkpoint.$i%010d.$n%010d.parquet")
     }
-    val oldest = if (commits.contains(0L)) Some(0L) else checkpoint.map(_._1)
+    // every checkpoint in the listing whose files are all listed
+    val complete = SortedMap.from(log.keys.toSeq
+      .collect { case checkpointFile(v, n) => (v.toLong, Option(n).map(_.toLong)) }.distinct
+      .collect { case (v, n) if n.forall(_ > 0) && names(v, n).forall(log.contains) =>
+        v -> names(v, n).map(log).toSeq
+      })
+    val named = lastCheckpoint(spark, log)
+    val oldest = if (commits.contains(0L)) Some(0L) else (complete.keys ++ named.map(_._1)).minOption
     target.filter(t => oldest.exists(t < _)).foreach { t =>
       throw new IllegalArgumentException(s"$tablePath: version $t has expired: the log retains " +
         s"no commit 0 and no checkpoint at or below it (its oldest state is version ${oldest.get})")
     }
-    val latest = (commits.keys ++ checkpoint.map(_._1)).maxOption.getOrElse(-1L)
-    val version = target.fold(latest)(math.min(_, latest))
-    val base = checkpoint.filter(_._1 <= version)
+    val latest = (commits.keys ++ complete.keys ++ named.map(_._1)).maxOption.getOrElse(-1L)
+    target.filter(_ > latest).foreach { t =>
+      throw new IllegalArgumentException(s"$tablePath: version $t does not exist: the latest version is $latest")
+    }
+    val version = target.getOrElse(latest)
+    val base = named.filter(_._1 <= version) match {
+      case Some((v, n)) => Some(v -> names(v, n).map(name => log.getOrElse(name, throw new FileNotFoundException(
+        s"_last_checkpoint names version $v, but its checkpoint file " +
+          s"${new Path(logDir(tablePath), name)} is missing"))).toSeq)
+      case None => complete.rangeTo(version).lastOption
+    }
     val kept = commits.rangeTo(version)
     val from = base.fold(0L)(_._1 + 1)
     kept.keys.headOption.fold(from)(math.min(_, from)).to(version).find(!kept.contains(_)).foreach { v =>
@@ -213,16 +231,18 @@ object DeltaLog {
   def lastCheckpointVersion(spark: SparkSession, tablePath: String): Option[Long] =
     lastCheckpoint(spark, listLog(spark, tablePath)).map(_._1)
 
-  /** (version, parts) recorded in the listed `log`'s `_last_checkpoint`, if
-    * any; `parts` is set only for a multi-part checkpoint. */
+  /** (version, parts) recorded in the listed `log`'s `_last_checkpoint`,
+    * if it parses as JSON with an integral `version` (and a positive
+    * `parts`, if any); `parts` is set only for a multi-part checkpoint. */
   private def lastCheckpoint(spark: SparkSession,
-                             log: Map[String, FileStatus]): Option[(Long, Option[Int])] =
+                             log: Map[String, FileStatus]): Option[(Long, Option[Long])] =
     log.get("_last_checkpoint").flatMap { st =>
       val in = st.getPath.getFileSystem(spark.sparkContext.hadoopConfiguration).open(st.getPath)
       val content = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-      def field(name: String) =
-        s"\"$name\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(content).map(_.group(1))
-      field("version").map(v => (v.toLong, field("parts").map(_.toInt)))
+      scala.util.Try(jsonMapper.readTree(content)).toOption.flatMap(Option(_)).flatMap { json =>
+        def field(name: String) = Option(json.get(name)).filter(_.isIntegralNumber).map(_.asLong)
+        field("version").map(v => (v, field("parts")))
+      }.filter(_._2.forall(_ > 0))
     }
 
   /** Change Data Feed between two versions — row-level changes with
@@ -342,14 +362,14 @@ object DeltaLog {
     try reader.getRecordCount finally reader.close()
   }
 
-  private val statsMapper = new ObjectMapper()
+  private val jsonMapper = new ObjectMapper()
 
   /** The top-level `numRecords` of an `add.stats` JSON string; None for
     * null, empty (legacy `"stats":""`) or unparsable stats, or stats
     * without it. */
   private[graft] def statsNumRecords(stats: String): Option[Long] =
     Option(stats).filter(_.nonEmpty)
-      .flatMap(s => scala.util.Try(statsMapper.readTree(s)).toOption)
+      .flatMap(s => scala.util.Try(jsonMapper.readTree(s)).toOption)
       .flatMap(j => Option(j.get("numRecords")))
       .filter(_.canConvertToLong).map(_.asLong)
 

@@ -1,13 +1,17 @@
 package graft.operators
 
-import java.io.FileNotFoundException
+import java.io.{FileNotFoundException, IOException}
+import java.nio.charset.StandardCharsets
+import java.util.UUID
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-
-import scala.jdk.CollectionConverters._
 
 import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
 
@@ -315,47 +319,47 @@ object Maintenance {
     * (external readers like delta-rs/delta-spark expect one file, not a
     * Spark part-file directory) — and update `_last_checkpoint`. After this,
     * JSON commits <= the checkpoint version are no longer needed for replay,
-    * and protocol/metaData survive their cleanup. */
+    * and protocol/metaData survive their cleanup. Written on the driver by
+    * Spark's parquet writer (no Spark job) to a dot-prefixed temp file, then
+    * renamed into place, as `_last_checkpoint` is after it. */
   def checkpoint(spark: SparkSession, tablePath: String): Long = {
     val snap = DeltaLog.snapshot(spark, tablePath)
     val v = snap.version
-    val metaType = DeltaLog.actionSchema("metaData").dataType
-    val protoType = DeltaLog.actionSchema("protocol").dataType
-    val adds = snap.activeFiles.select(
-      struct(
-        col("path"), col("size"), col("partitionValues"),
-        col("modificationTime"), lit(true).as("dataChange"),
-        col("stats")).as("add"),
-      lit(null).cast(metaType).as("metaData"),
-      lit(null).cast(protoType).as("protocol"))
-    // metaData and protocol are the snapshot's latest ones; a log that
-    // predates protocol emission still gets a valid checkpoint with the
-    // minimal classic protocol (1, 2)
+    // a log that predates protocol emission gets the minimal classic protocol
     val meta = snap.latest("metaData")
     val proto = snap.latest("protocol").getOrElse(Row(1, 2, null))
-    val tail = spark.createDataFrame(
-      (meta.map(m => Row(null, m, null)).toSeq :+ Row(null, null, proto)).asJava,
-      StructType(Seq("add", "metaData", "protocol").map(DeltaLog.actionSchema(_))))
-    val ckpt = adds.unionByName(tail)
-    val dir = DeltaLog.logDir(tablePath)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir, f".$v%020d.checkpoint.tmp")
-    ckpt.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = fs.listStatus(tmp).map(_.getPath)
-      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"checkpoint write produced no part file under $tmp"))
-    val ckptRows = snap.manifest.length + meta.size + 1 // adds + metaData (0|1) + protocol
-    val dest = new Path(dir, f"$v%020d.checkpoint.parquet")
-    if (fs.exists(dest)) fs.delete(dest, true)
-    require(fs.rename(part, dest), s"checkpoint rename failed: $part -> $dest")
-    fs.delete(tmp, true)
-    // _last_checkpoint only after the checkpoint file verifiably exists, and
-    // through the Hadoop fs handle so schemed/remote table paths resolve
-    // (java.nio on an unstripped "file:..." dir string would throw)
-    val lcOut = fs.create(new Path(dir, "_last_checkpoint"), true)
-    try lcOut.write(
-      s"""{"version":$v,"size":$ckptRows}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally lcOut.close()
+    val rows = snap.manifest.toSeq.map(f => Row(Row(f(0), f(1), f(2), f(3), true, f(4)), null, null)) ++
+      meta.map(Row(null, _, null)) :+ Row(null, null, proto)
+    val schema = StructType(Seq("add", "metaData", "protocol").map(DeltaLog.actionSchema(_)))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(tablePath).getFileSystem(conf)
+    val dir = fs.makeQualified(new Path(DeltaLog.logDir(tablePath)))
+    // `replace` renames over an existing file: atomic on HDFS; the local
+    // filesystem deletes it first, and a reader then lists for the newest
+    // checkpoint, already in place. Else a file already there is kept: a
+    // checkpoint at version v holds the same state
+    def publish(name: String, replace: Boolean)(write: Path => Unit): Unit = {
+      val (tmp, dest) = (new Path(dir, s".$name.${UUID.randomUUID}.tmp"), new Path(dir, name))
+      try {
+        write(tmp)
+        if (replace) FileContext.getFileContext(fs.getUri, conf).rename(tmp, dest, Options.Rename.OVERWRITE)
+        else if (!fs.rename(tmp, dest) && !fs.exists(dest))
+          throw new IOException(s"could not rename $tmp to $dest")
+      } finally fs.delete(tmp, false)
+    }
+    publish(f"$v%020d.checkpoint.parquet", replace = false) { tmp =>
+      val job = Job.getInstance(conf)
+      val task = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+      val out = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+        .newInstance(tmp.toString, schema, task)
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+      try rows.foreach(r => out.write(toCatalyst(r).asInstanceOf[InternalRow])) finally out.close()
+    }
+    publish("_last_checkpoint", replace = true) { tmp =>
+      val out = fs.create(tmp, false)
+      try out.write(s"""{"version":$v,"size":${rows.length}}""".getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+    }
     v
   }
 }

@@ -734,14 +734,48 @@ class DeltaLogSpec extends SparkSuite {
     assert(DeltaLog.snapshot(spark, path).version === 4L)
   }
 
-  test("damaged log: a torn _last_checkpoint over cleaned commits fails the open, naming commit 0") {
+  private def replayed(s: graft.deltalog.DeltaSnapshot) =
+    (s.version, s.manifest.toSeq, s.data.collect().map(_.toString).sorted.toSeq)
+
+  test("a torn or missing _last_checkpoint opens from the newest listed checkpoint") {
     val (path, log) = cleanedAtCheckpoint("dlog_torn")
     DeltaFixtureWriter.write(TestFixtures.tips(spark, Seq("Wed" -> 2), Seq("Lunch" -> 2)),
       path, "append", Seq("day"))
+    val intact = replayed(DeltaLog.snapshot(spark, path))
+    assert(intact._1 === 5L)
     java.nio.file.Files.deleteIfExists(log.resolve("._last_checkpoint.crc"))
-    java.nio.file.Files.write(log.resolve("_last_checkpoint"), Array.emptyByteArray)
-    val m = messageOf(DeltaLog.snapshot(spark, path))
-    assert(m.contains("version 5") && m.contains("commit 0 "), m)
+    // stray part files that name no complete checkpoint: zero parts, and one
+    // part of 9999999999
+    Seq("0000000001.0000000000", "0000000001.9999999999").foreach(parts =>
+      java.nio.file.Files.write(log.resolve(s"00000000000000000005.checkpoint.$parts.parquet"), Array.emptyByteArray))
+    Seq("", """{"version":4,"si""", "not json", """{"version":5,"parts":0}""").foreach { torn =>
+      java.nio.file.Files.write(log.resolve("_last_checkpoint"), torn.getBytes("UTF-8"))
+      assert(replayed(DeltaLog.snapshot(spark, path)) === intact, torn)
+    }
+    java.nio.file.Files.delete(log.resolve("_last_checkpoint"))
+    assert(replayed(DeltaLog.snapshot(spark, path)) === intact)
+  }
+
+  test("snapshotAt between two checkpoints replays from the older one once its commits are cleaned") {
+    val (path, log) = fiveCommits("dlog_two_ckpts")
+    val df = TestFixtures.tips(spark, Seq("Wed" -> 2), Seq("Lunch" -> 2))
+    assert(graft.operators.Maintenance.checkpoint(spark, path) === 4L)
+    DeltaFixtureWriter.write(df, path, "append", Seq("day"))
+    val at5 = replayed(DeltaLog.snapshotAt(spark, path, 5L))
+    DeltaFixtureWriter.write(df, path, "append", Seq("day"))
+    assert(graft.operators.Maintenance.checkpoint(spark, path) === 6L)
+    DeltaFixtureWriter.write(df, path, "append", Seq("day"))
+    val at7 = replayed(DeltaLog.snapshot(spark, path))
+    dropCommits(log, 0L to 4L)
+    // _last_checkpoint names version 6, above the target: the checkpoint at 4 is read
+    assert(replayed(DeltaLog.snapshotAt(spark, path, 5L)) === at5)
+    assert(replayed(DeltaLog.snapshot(spark, path)) === at7)
+  }
+
+  test("snapshotAt above the latest version fails, naming it and the latest version") {
+    val (path, _) = fiveCommits("dlog_future")
+    val m = messageOf(DeltaLog.snapshotAt(spark, path, 7L))
+    assert(m.contains("version 7 does not exist") && m.contains("latest version is 4"), m)
   }
 
   test("a cleaned, checkpointed log opens, and time travel at or above the checkpoint works") {

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
 import graft.health.Thresholds
@@ -123,6 +126,78 @@ class MaintenanceSpec extends SparkSuite {
     assert(proto.nonEmpty, "protocol action survives JSON cleanup")
     assert(proto.get.getInt(0) === 1 && proto.get.getInt(1) === 2)
     snap.unpersist()
+  }
+
+  test("checkpoint starts no Spark job") {
+    val path = tmpDir("ckptjobs")
+    TestFixtures.buildOrphanTable(spark, path)
+    val (v, jobs) = jobsOf(Maintenance.checkpoint(spark, path))
+    assert(jobs.isEmpty, jobs.mkString("\n"))
+    assert(DeltaLog.lastCheckpointVersion(spark, path) === Some(v))
+  }
+
+  test("the checkpoint file equals a Spark write.parquet of the same rows") {
+    // a partitioned, schema-evolved log with a delete, and a log with no
+    // metaData or protocol whose adds carry no stats
+    val evolved = tmpDir("ckptref_evolved")
+    DeltaFixtureWriter.write(TestFixtures.tips(spark, Seq("Mon" -> 10, "Tue" -> 10),
+      Seq("Dinner" -> 10, "Lunch" -> 10)), evolved, "overwrite", Seq("day"))
+    DeltaFixtureWriter.write(TestFixtures.tips(spark, Seq("Wed" -> 4), Seq("Lunch" -> 4))
+      .withColumn("source", lit("v2")), evolved, "append", Seq("day"))
+    DeltaFixtureWriter.delete(spark, evolved, "total_bill > 45")
+    val bare = tmpDir("ckptref_bare")
+    val log = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(bare, "_delta_log"))
+    java.nio.file.Files.write(log.resolve(f"${0}%020d.json"), Seq("a", "b").map(n =>
+      s"""{"add":{"path":"part-$n.parquet","partitionValues":{},"size":400,"modificationTime":1,"dataChange":true}}""")
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    val schema = org.apache.spark.sql.types.StructType(
+      Seq("add", "metaData", "protocol").map(DeltaLog.actionSchema(_)))
+    def footer(file: String) = {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
+      try reader.getFooter.getFileMetaData finally reader.close()
+    }
+    Seq(evolved, bare).foreach { path =>
+      // the reference: the same rows through a DataFrame write of one part
+      val snap = DeltaLog.snapshot(spark, path)
+      val adds = snap.activeFiles.select(
+        struct($"path", $"size", $"partitionValues", $"modificationTime",
+          lit(true).as("dataChange"), $"stats").as("add"),
+        lit(null).cast(schema("metaData").dataType).as("metaData"),
+        lit(null).cast(schema("protocol").dataType).as("protocol"))
+      val tail = spark.createDataFrame((snap.latest("metaData").map(m => Row(null, m, null)).toSeq :+
+        Row(null, null, snap.latest("protocol").getOrElse(Row(1, 2, null)))).asJava, schema)
+      val refDir = tmpDir("ckptref_out") + "/ref"
+      adds.unionByName(tail).coalesce(1).write.parquet(refDir)
+      val ref = new java.io.File(refDir).listFiles().map(_.getPath)
+        .find(p => p.endsWith(".parquet") && new java.io.File(p).getName.startsWith("part-")).get
+      val v = Maintenance.checkpoint(spark, path)
+      val ckpt = f"$path/_delta_log/$v%020d.checkpoint.parquet"
+      val (got, want) = (footer(ckpt), footer(ref))
+      assert(got.getSchema === want.getSchema, path)
+      assert(got.getKeyValueMetaData.asScala === want.getKeyValueMetaData.asScala, path)
+      assert(got.getKeyValueMetaData.containsKey("org.apache.spark.sql.parquet.row.metadata"), path)
+      assert(spark.read.parquet(ckpt).collect().toSeq === spark.read.parquet(ref).collect().toSeq, path)
+    }
+  }
+
+  test("checkpointing twice at one version leaves one checkpoint file, its .crc and no temp file") {
+    val path = tmpDir("ckpttwice")
+    DeltaFixtureWriter.write(TestFixtures.tips(spark, Seq("Mon" -> 10), Seq("Dinner" -> 10)),
+      path, "overwrite", Seq("day"))
+    val log = new java.io.File(path, "_delta_log")
+    def listed() = log.listFiles().map(f => f.getName -> f.isFile).toMap
+    assert(Maintenance.checkpoint(spark, path) === 0L)
+    val once = listed()
+    assert(Maintenance.checkpoint(spark, path) === 0L)
+    assert(listed() === once)
+    assert(once.values.forall(identity), once)
+    assert(once.keySet.filter(_.contains("checkpoint")) === Set(
+      "00000000000000000000.checkpoint.parquet", ".00000000000000000000.checkpoint.parquet.crc",
+      "_last_checkpoint", "._last_checkpoint.crc"))
+    assert(!once.keys.exists(_.endsWith(".tmp")), once)
+    assert(DeltaLog.snapshot(spark, path).data.count() === 10L)
   }
 
   test("restore: round-trip returns data+schema to the target version, history renders it") {
