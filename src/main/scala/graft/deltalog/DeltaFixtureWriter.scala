@@ -10,20 +10,24 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-/** Writes valid (minimal) Delta commit JSON so tests can build real
-  * log-backed tables without a delta jar. Mirrors the mutation surface the
-  * reference's fixtures use (populate_sample_delta.py:35-193,
-  * test_delta_analyzer_metrics.py:23-29): partitioned overwrite/append
-  * writes, predicate DELETE, and OPTIMIZE compaction.
+/** The engine's Delta commit writer: valid (minimal) Delta commit JSON,
+  * written without a delta jar. `Maintenance` commits its OPTIMIZE, ZORDER,
+  * RESTORE and VACUUM through it, `SparkEntry.entry` builds its table with
+  * it, and the health benchmark and the specs build their log-backed
+  * tables with it. Its own mutations are the surface the reference's
+  * fixtures use (populate_sample_delta.py:35-193,
+  * test_delta_analyzer_metrics.py:23-29) plus MERGE: partitioned
+  * overwrite/append writes, predicate DELETE, OPTIMIZE compaction and
+  * MERGE upserts.
   *
   * Every mutation appends parquet through Spark, finds the files it added
   * by diffing [[DeltaLog.dataFiles]] around the write ([[appendFiles]]),
-  * and commits them through the one commit writer, [[writeCommitStream]] —
-  * which the scale-path operators in `Maintenance` use too. Every `add`
-  * line carries `"stats":"{\"numRecords\":N}"` (Delta PROTOCOL.md,
-  * "Per-file Statistics"), N read from the file's parquet footer on the
-  * driver, so readers count rows from the log. Commit files are written
-  * with java.nio, so the table must be a local path or a `file:` URI.
+  * and commits them through the one commit writer, [[writeCommitStream]].
+  * Every `add` line carries `"stats":"{\"numRecords\":N}"` (Delta
+  * PROTOCOL.md, "Per-file Statistics"), N read from the file's parquet
+  * footer on the driver, so readers count rows from the log. Commit files
+  * are written with java.nio, so the table must be a local path or a
+  * `file:` URI.
   */
 object DeltaFixtureWriter {
 
@@ -189,27 +193,31 @@ object DeltaFixtureWriter {
   def write(df: DataFrame, table: String, mode: String = "overwrite",
             partitionBy: Seq[String] = Seq.empty): Unit = {
     require(mode == "overwrite" || mode == "append", s"bad mode $mode")
-    // one snapshot read serves the version, the overwrite remove-list and
-    // the schema-evolution check
-    val (version, snapBefore, schemaChanged, effPartitionBy) =
+    // one snapshot read serves the version, the overwrite remove-list, the
+    // schema-evolution check and the partitioning
+    val (version, snapBefore, schemaChanged, pb) =
       if (DeltaLog.isDeltaTable(df.sparkSession, table)) {
         val snap = DeltaLog.snapshot(df.sparkSession, table)
         val files =
           if (mode == "overwrite") snap.manifest.map(_.getString(0)).toSeq
           else Seq.empty
         val changed = !snap.tableSchema.contains(df.schema)
-        // partitioning is immutable in Delta: a later write that omits
-        // partitionBy must not clobber partitionColumns in an evolved
-        // metaData action
-        val pb = if (partitionBy.nonEmpty) partitionBy else snap.partitionColumns
-        (snap.version + 1, files, changed, pb)
+        // partitioning is immutable in Delta: an empty partitionBy means the
+        // table's own, and the files are laid out by it (a flat file under a
+        // partitioned table would read back null partition values); a
+        // different one fails before anything is written
+        val own = snap.partitionColumns
+        require(partitionBy.isEmpty || partitionBy == own,
+          s"$table is partitioned by ${own.mkString("[", ",", "]")}; a write " +
+            s"partitioned by ${partitionBy.mkString("[", ",", "]")} cannot change it")
+        (snap.version + 1, files, changed, own)
       } else (0L, Seq.empty, false, partitionBy)
-    val newFiles = appendFiles(df, table, partitionBy)
+    val newFiles = appendFiles(df, table, pb)
     writeCommitStream(table, version, "WRITE",
       Seq("mode" -> (if (mode == "overwrite") "Overwrite" else "Append"),
-          "partitionBy" -> partitionBy.mkString("[", ",", "]")),
+          "partitionBy" -> pb.mkString("[", ",", "]")),
       adds = newFiles.iterator, removes = snapBefore.iterator,
-      partitionBy = effPartitionBy,
+      partitionBy = pb,
       // metaData rides the first commit AND any commit whose write changes
       // the schema (Delta schema evolution) — replay takes the latest, so
       // schemaString stays the live authority after evolving appends

@@ -249,10 +249,10 @@ object DeltaLog {
     * `_change_type` ('insert' / 'delete') and `_commit_version`, computed
     * from the log's add/remove actions (Delta's `table_changes` semantics
     * for copy-on-write tables without materialized CDC files: an update
-    * surfaces as delete + insert). `(fromVersion, toVersion]`, exclusive
-    * start like Delta's readChangeFeed startingVersion semantics are
-    * inclusive — here the FROM snapshot is the baseline, so changes start
-    * at fromVersion+1.
+    * surfaces as delete + insert). The window is `(fromVersion,
+    * toVersion]`: the snapshot at `fromVersion` is the baseline, so changes
+    * start at fromVersion+1. Delta's readChangeFeed `startingVersion` is
+    * inclusive; its window starting at v is this one from v-1.
     *
     * How: the window's add and remove actions come from the latest
     * snapshot's one read of the log, as a local (`__file`, version, sign)
@@ -439,7 +439,8 @@ private[deltalog] final class Replay {
   def commits: Array[Row] = versions.valuesIterator.map(new GenericRowWithSchema(_, commitSchema): Row).toArray
 }
 
-/** Replayed view of a Delta table at its latest version.
+/** Replayed view of a Delta table at one version: the latest
+  * ([[DeltaLog.snapshot]]) or an earlier one ([[DeltaLog.snapshotAt]]).
   *
   * Built by one fold over the log ([[Replay]]), it holds on the driver the
   * active-file `manifest` ([[DeltaLog.fileSchema]] rows sorted by path; the

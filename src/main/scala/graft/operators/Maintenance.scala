@@ -17,8 +17,9 @@ import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
 
 /** Maintenance operations the health analysis recommends (H12) — the engine
   * can EXECUTE them, not just suggest:
-  *  - OPTIMIZE: bin-pack small files (delegates to the commit-writing
-  *    compactor)
+  *  - OPTIMIZE: bin-pack each partition's small files into ~target-sized
+  *    ones (the selection is plain Scala over the manifest, the rewrite one
+  *    scan and one append)
   *  - VACUUM: physically delete files no longer referenced by the log,
   *    honoring a retention window
   *  - CHECKPOINT: write a parquet checkpoint so expired JSON commits can be

@@ -302,7 +302,7 @@ object PipelineQueries {
     * key encoding, the absent-form algebra, and the G-row construction
     * collects end to end ([[graft.streaming.DriftStreams
     * .driftMonitorJoined]]; route parity also spec-pinned in
-    * DriftStreamsSpec, probed at 5M docs in DriftStreamProbe). */
+    * DriftStreamsSpec, measured at 5M docs in BASELINE.md round 14). */
   def driftMonitorJoinedQ(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("text"))

@@ -371,9 +371,9 @@ object Queries {
     * any scale but serializes each user onto ONE task (window semantics
     * require it, and AQE's skew machinery only splits JOIN stages — a
     * window's hot partition cannot be split by config). Measured on the
-    * 90%-hot SkewProbe twin that bound is a ~2× ratio at sf1 (900k events
-    * on one task); it grows linearly with the hot entity's share, with no
-    * knob to cap it.
+    * 90%-hot twin of sf1 that bound is a ~2× ratio (900k events on one
+    * task; BASELINE.md round 15); it grows linearly with the hot entity's
+    * share, with no knob to cap it.
     *
     * Here the window runs per (user, time-chunk) — parallel ACROSS chunks
     * for the hot user — then chunk-boundary sessions merge through a

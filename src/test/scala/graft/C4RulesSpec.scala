@@ -89,4 +89,12 @@ class C4RulesSpec extends SparkSuite {
       "This tabbed line has exactly enough words here.\n" +
         "Trailing tab then terminal punctuation stays kept.")
   }
+
+  test("keep equals the conjunction of the page rules on every corpus row") {
+    import org.apache.spark.sql.functions.col
+    val c4 = TextFunctions.c4Rules(table("documents"), "doc_id", "text",
+      minLineWords = 5, minKeptLines = 1)
+    assert(c4.where(col("keep") =!= (!col("has_lorem") && !col("has_brace") &&
+      col("n_kept_lines") >= 1)).count() === 0L)
+  }
 }

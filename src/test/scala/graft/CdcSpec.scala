@@ -118,4 +118,23 @@ class CdcSpec extends SparkSuite {
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(hits === Set(1L, 2L))
   }
+
+  test("10-copy corpus: every chunk is shared at minDocs = 10; winnow similarity keeps only " +
+      "identical-copy pairs, at sim 1.0") {
+    val base = table("documents").where(col("doc_id") < 20).select("doc_id", "text")
+    val docs = (0 until 10).map(i => base.withColumn("doc_id", col("doc_id") + i * 100000000L))
+      .reduce(_ unionByName _)
+    val shared = Dedup.cdcSharedChunks(docs, "doc_id", "text", minDocs = 10).count()
+    val distinct = Dedup.cdcChunkTable(docs, "doc_id", "text").select("hash").distinct().count()
+    assert(shared === distinct && distinct > 0)
+    // every fingerprint's df is 10x its base df: a cap at the copy count
+    // removes every fingerprint two base docs share, and the surviving
+    // pairs are copies of one doc
+    val pairs = Dedup.winnowSimilarity(docs, "doc_id", "text", dfCap = 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
+    assert(pairs.length >= 45, s"${pairs.length} pairs")
+    assert(pairs.forall { case (a, b, sim) => a % 100000000L == b % 100000000L && sim == 1.0 },
+      pairs.filter(_._3 != 1.0).take(5).mkString(", "))
+    Dedup.unpersistAll()
+  }
 }

@@ -252,4 +252,16 @@ class ClusteringSpec extends SparkSuite {
       Array(Array(1.0, 2.0), Array(3.0, 5.0)))
     assert(mk() !== other, "different centroid tables must not compare equal")
   }
+
+  test("identical vectors co-cluster: 10 copies of 50 vectors give exactly C(10,2) pairs each at tau = 1.0") {
+    // copies carry bit-identical distances, so the same argmin cell: every
+    // 10-copy family pairs completely, and nothing else reaches tau = 1.0
+    val base = table("embeddings").where(col("vec_id") < 50)
+    val copies = (0 until 10).map(i => base.withColumn("vec_id", col("vec_id") + i * 1000000L))
+      .reduce(_ unionByName _)
+    val pairs = Clustering.semanticDedupPairs(copies, "vec_id", "embedding", k = 8, iters = 1, tau = 1.0)
+      .collect().map(r => (r.getLong(1), r.getLong(2)))
+    assert(pairs.length === 45 * 50)
+    assert(pairs.forall { case (a, b) => a % 1000000L == b % 1000000L })
+  }
 }

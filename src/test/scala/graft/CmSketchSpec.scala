@@ -101,4 +101,18 @@ class CmSketchSpec extends SparkSuite {
         docs.select(col("text").as("token")), "token", depth = 17)
     }
   }
+
+  test("over the corpus: at most depth x width cells, and the top terms never underestimate") {
+    val docs = table("documents")
+    val sk = CorpusOps.cmSketch(docs, "text", depth = 4, width = 1024).cache()
+    assert(sk.count() <= 4L * 1024L)
+    val exact = docs.select(explode(graft.functions.minhashExprs.wordGrams(
+        graft.functions.TextFunctions.normalized(col("text")), 1)).as("token"))
+      .groupBy(col("token")).agg(count(lit(1)).as("tc")).orderBy(col("tc").desc).limit(5)
+    val joined = CorpusOps.cmEstimate(sk, exact.select(col("token")), "token", depth = 4, width = 1024)
+      .join(exact, "token").collect()
+    sk.unpersist()
+    assert(joined.length === 5)
+    joined.foreach(r => assert(r.getLong(1) >= r.getLong(2), s"underestimate for ${r.getString(0)}"))
+  }
 }

@@ -69,6 +69,19 @@ class ContractSpec extends SparkSuite {
     }
   }
 
+  test("demo/ holds only the kept tools: a new one-off main fails here, named") {
+    // a check that a one-off main would hold belongs in a spec; these are
+    // the tools the docs run (verify recipe, bench fixtures, plan audits)
+    // and RetryProbe, whose speculation leg needs its own SparkContext
+    val kept = Set("FourthDecadeProbe", "HealthDemo", "MakeSf1", "PlanAudit", "PlanDump",
+      "PopulateSampleDelta", "QueryJobProbe", "RetryProbe", "VerifyOne")
+    val dir = new java.io.File("src/main/scala/graft/demo")
+    assert(dir.isDirectory, s"${dir.getAbsolutePath} is not a directory")
+    val extra = dir.listFiles().map(_.getName).filter(_.endsWith(".scala"))
+      .map(_.stripSuffix(".scala")).filterNot(kept).sorted
+    assert(extra.isEmpty, s"demo/ files outside the kept tools: ${extra.mkString(", ")}")
+  }
+
   test("A4 parity: python tuple-key format") {
     val df = Seq(("Mon", "Dinner", 1)).toDF("day", "time", "x")
     val single = df.select(SkewAnalyzer.pythonTupleKey(Seq("day"))).first().getString(0)

@@ -651,4 +651,12 @@ class CorpusOpsSpec extends SparkSuite {
       Sampling.weightedSample(df, "id", "w", n = 0)
     }
   }
+
+  test("trainOrder: 5,000 docs into 64 shards, each doc once, no shard above twice the mean") {
+    val t = Sampling.trainOrder(spark.range(5000).select(col("id").as("doc_id")), "doc_id",
+      shards = 64, seed = 42L)
+    val sizes = t.groupBy(col("shard")).count().collect().map(_.getLong(1))
+    assert(sizes.sum === 5000L && t.select("doc_id").distinct().count() === 5000L)
+    assert(sizes.max < 5000 / 64 * 2, s"worst shard ${sizes.max}")
+  }
 }

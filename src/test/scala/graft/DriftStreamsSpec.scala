@@ -121,6 +121,51 @@ class DriftStreamsSpec extends SparkSuite {
     assert(batch === lit0)
   }
 
+  test("planted shift: the alarm fires first on the injection batch, never on an undrifted " +
+      "source; the final stream state == batch == joined route") {
+    // 4 sources x 8 tokens/doc drawn xxhash-uniform from a 50-token
+    // vocabulary (streamed vocab per group <= 100, the exact-MG regime);
+    // from batch 2 on, source C draws from a disjoint 50-token range
+    val (per, driftFrom, alarm) = (1000L, 2000L, 0.02)
+    val sources = array(lit("A"), lit("B"), lit("C"), lit("D"))
+    def docs(lo: Long, hi: Long, drifted: Boolean = true) = {
+      val src = element_at(sources, (col("id") % 4 + 1).cast("int"))
+      val shifted = src === "C" && col("id") >= driftFrom && lit(drifted)
+      def tok(k: Int) = concat(when(shifted, lit("v")).otherwise(lit("w")),
+        pmod(xxhash64(col("id"), lit(k)), lit(50)).cast("string"))
+      spark.range(lo, hi).select(src.as("source"), concat_ws(" ", (0 until 8).map(tok): _*).as("text"))
+    }
+    // the reference profile: 4,000 docs of the clean generator
+    val ref = docs(1000000L, 1004000L, drifted = false)
+    val dir = tmpDir("drift_planted")
+    (0 until 4).foreach { i =>
+      docs(i * per, (i + 1) * per).coalesce(1).write.parquet(s"$dir/b$i")
+      new java.io.File(s"$dir/b$i").listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach(_.setLastModified(1000000000000L + i * 60000L))
+    }
+    val trajectory = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Map[String, Double])]
+    DriftStreams.driftMonitor(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .option("pathGlobFilter", "*.parquet").option("recursiveFileLookup", "true").parquet(dir),
+        ref, "source", "text")
+      .writeStream.outputMode("complete")
+      .option("checkpointLocation", tmpDir("drift_planted_ckpt"))
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        trajectory.add(id -> df.collect().map(r => r.getString(0) -> r.getDouble(3)).toMap); () }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .awaitTermination()
+    val byBatch = trajectory.toArray(Array.empty[(Long, Map[String, Double])]).sortBy(_._1)
+    assert(byBatch.map(_._1).toSeq === (0L until 4L), "one micro-batch per file")
+    val firstAlarm = byBatch.collectFirst { case (id, m) if m("C") > alarm => id }
+    assert(firstAlarm === Some(2L), s"C's trajectory: ${byBatch.map(_._2("C")).toSeq}")
+    val clean = byBatch.flatMap(_._2.collect { case (g, js) if g != "C" => js })
+    assert(clean.max < alarm, s"false alarm on an undrifted source: ${clean.max}")
+    val all = spark.read.parquet((0 until 4).map(i => s"$dir/b$i"): _*)
+    val batch = driftMap(DriftStreams.driftMonitor(all, ref, "source", "text"))
+    assert(driftMap(DriftStreams.driftMonitorJoined(all, ref, "source", "text")) === batch)
+    assert(byBatch.last._2 === batch.map { case (g, v) => g -> v._3 })
+  }
+
   test("stream (2 micro-batches, complete mode) == batch over the union") {
     val dir = tmpDir("drift_stream")
     val parts = Seq(

@@ -91,4 +91,19 @@ class GopherRulesSpec extends SparkSuite {
       assert(!m(id).getAs[Boolean]("keep"))
     }
   }
+
+  test("keep equals the conjunction of the emitted signals on every corpus row") {
+    val g = TextFunctions.gopherRules(table("documents"), "doc_id", "text").cache()
+    val inconsistent = g.where(col("keep") =!= (
+      col("word_count") >= 50 && col("word_count") <= 100000 &&
+        col("mean_word_len") >= 3.0 && col("mean_word_len") <= 10.0 &&
+        col("symbol_ratio") <= 0.1 && col("bullet_ratio") <= 0.9 &&
+        col("ellipsis_ratio") <= 0.3 && col("alpha_frac") >= 0.8 &&
+        col("stop_hits") >= 2L)).count()
+    val n = g.count()
+    val passWc = g.where(col("word_count") >= 50).count()
+    g.unpersist()
+    assert(inconsistent === 0L)
+    assert(passWc > 0 && passWc < n, s"word-count rule passes $passWc of $n")
+  }
 }

@@ -58,6 +58,29 @@ class GraphsSpec extends SparkSuite {
     assert(leaves.toSet.size === 1, "symmetric leaves must tie exactly")
   }
 
+  test("star of 1,000 leaves: hub and leaf ranks equal the scalar replay of the quantized recurrence") {
+    // every edge lands on one reduce key and the hub is dangling; leaves
+    // are symmetric, so the (hub, leaf) pair replays on the driver with the
+    // same 1e-9 contribution grid and round-9 output
+    val nLeaves = 1000L
+    val e = spark.range(nLeaves).select((col("id") + 1L).as("src"), lit(0L).as("dst"))
+    val got = Graphs.pageRank(e, "src", "dst", damping = 0.85, iters = 5)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val nD = (nLeaves + 1).toDouble
+    val base = (1.0 - 0.85) / nD
+    var (rh, rl) = (round9(1.0 / nD), round9(1.0 / nD))
+    for (_ <- 1 to 5) {
+      val cq = nLeaves * math.round(rl * 1e9) // each leaf's one out-edge
+      val dq = math.round(rh * 1e9)           // the hub's dangling mass
+      val nh = round9(base + 0.85 * (cq / 1e9 + dq / 1e9 / nD))
+      rl = round9(base + 0.85 * (dq / 1e9 / nD))
+      rh = nh
+    }
+    assert(got.size === nLeaves + 1)
+    assert(got(0L) === rh, s"hub ${got(0L)} != replayed $rh")
+    assert((got - 0L).values.toSet === Set(rl), s"leaves != replayed $rl")
+  }
+
   test("determinism and validation") {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("src", "dst")
     def run() = Graphs.pageRank(e, "src", "dst", iters = 4)

@@ -75,6 +75,26 @@ class KmvSpec extends SparkSuite {
       s"10k-shared/30k-union resemblance: got $jBig, want ≈ 0.333")
   }
 
+  test("sourceOverlapSketch over 16 groups sharing 400 common tokens: same pairs as the exact " +
+      "matrix, mean |J_est - J| < 0.05 in the estimate regime") {
+    // each group: 10 docs of 100 distinctive tokens drawn from a 10k pool
+    // with a group-keyed stride (pairs overlap partially) plus 40 common
+    // tokens in every group; union per pair ~2,400 >> k = 256
+    val docs = spark.range(160).map { i =>
+      val (g, d) = ((i / 10).toInt, (i % 10).toInt)
+      val distinctive = (0 until 100).map(j => s"t${(g * 131 + d * 100 + j * 7) % 10000}")
+      (s"s$g", (distinctive ++ (0 until 40).map(j => s"c${d * 40 + j}")).mkString(" "))
+    }.toDF("source", "text")
+    val exact = graft.operators.CorpusOps.sourceOverlap(docs, "source", "text", maxGroups = 16)
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(5)).toMap
+    val sk = graft.operators.CorpusOps.sourceOverlapSketch(docs, "source", "text", k = 256,
+        maxGroups = 16)
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(4)).toMap
+    assert(sk.keySet === exact.keySet && exact.size === 120)
+    val meanErr = exact.map { case (p, j) => math.abs(sk(p) - j) }.sum / exact.size
+    assert(meanErr < 0.05, s"mean sketch error $meanErr")
+  }
+
   test("nulls are ignored; empty group yields estimate 0") {
     val df = Seq(Some(1L), None, Some(2L), None, Some(1L)).toDF("v")
     val est = df.agg(

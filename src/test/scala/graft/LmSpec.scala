@@ -243,4 +243,9 @@ class LmSpec extends SparkSuite {
     assert(math.abs(total - 1.0) < 1e-6, s"weights must sum to ~1, got $got")
     assert(got("hard") > got("easy"), s"hard domain must dominate: $got")
   }
+
+  test("bigram scores over the corpus are log-probabilities: no document averages above 0") {
+    val out = LanguageModel.bigramLmScore(table("documents"), "doc_id", "text")
+    assert(out.where(col("avg_logprob") > 0).count() === 0L)
+  }
 }

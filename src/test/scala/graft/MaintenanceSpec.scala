@@ -344,6 +344,25 @@ class MaintenanceSpec extends SparkSuite {
     assert(!new java.io.File(dir).exists())
   }
 
+  test("a write without partitionBy uses the table's partitioning; a different one fails and writes nothing") {
+    val path = tmpDir("partlayout")
+    DeltaFixtureWriter.write(Seq((1L, "Mon"), (2L, "Tue")).toDF("id", "day"), path,
+      "overwrite", Seq("day"))
+    DeltaFixtureWriter.write(Seq((4L, "Tue")).toDF("id", "day"), path, "append")
+    val snap = DeltaLog.snapshot(spark, path)
+    assert(snap.data.select("id", "day").as[(Long, String)].collect().sorted.toSeq ===
+      Seq((1L, "Mon"), (2L, "Tue"), (4L, "Tue")))
+    assert(snap.partitionCounts === Map(Seq("Mon") -> 1L, Seq("Tue") -> 2L))
+    def onDisk() = DeltaLog.dataFiles(spark, path).map(_._1).toSet
+    val files = onDisk()
+    val e = intercept[IllegalArgumentException] {
+      DeltaFixtureWriter.write(Seq((5L, "Wed")).toDF("id", "day"), path, "append", Seq("id"))
+    }
+    assert(e.getMessage.contains("[day]") && e.getMessage.contains("[id]"), e.getMessage)
+    assert(onDisk() === files, "the refused write left data files behind")
+    assert(DeltaLog.snapshot(spark, path).version === 1L, "the refused write committed")
+  }
+
   test("DELETE keeps rows whose predicate evaluates to NULL") {
     val path = tmpDir("delnull")
     val df = Seq(

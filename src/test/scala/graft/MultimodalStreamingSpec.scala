@@ -205,6 +205,74 @@ class MultimodalStreamingSpec extends SparkSuite {
     assert(Multimodal.audioAHash(wav(Array.fill[Short](32)(100))).isEmpty)
   }
 
+  test("multimodal: planted <=3-bit near-dups are recalled over stripe-pattern corpora, " +
+      "image, audio and video") {
+    // id i renders a 16-cell stripe key ((i * 2654435761) bit c, repeated
+    // 4x over the 64 cells / windows); plant i + 1M carries a <=3-bit edit
+    // of base i. A plant's edit also nudges the global mean, so a pattern
+    // with cells on the mean can flip an extra bit: the tolerance is one
+    // miss per modality (1/2000 images, 0/1000 clips and 1/400 videos missed
+    // at scale: BASELINE.md rounds 11 and 12)
+    def stripes(id: Long, edit: (Int, Int) => Option[Int], format: String): Array[Byte] = {
+      val img = new java.awt.image.BufferedImage(64, 64, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val key = id * 2654435761L
+      for (y <- 0 until 64; x <- 0 until 64) {
+        val cell = (x / 8 + 8 * (y / 8)) % 16
+        val base = if (((key >> cell) & 1L) == 1L) 0x101010 else 0xF0F0F0
+        img.setRGB(x, y, edit(x, y).getOrElse(base))
+      }
+      val baos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, format, baos)
+      baos.toByteArray
+    }
+    def blemish(x: Int, y: Int) = if (x < 2 && y < 2) Some(0x808080) else None
+    // audio: 64 windows of 100 samples, window w loud iff key bit (w mod 16);
+    // a plant inverts the first 1-3 windows
+    def wav(id: Long, flips: Int): Array[Byte] = {
+      val key = id * 2654435761L
+      val data = new Array[Byte](6400 * 2)
+      for (i <- 0 until 6400) {
+        val w = i / 100
+        val loud = (((key >> (w % 16)) & 1L) == 1L) != (w < flips)
+        val v = ((if ((i & 1) == 0) 1 else -1) * (if (loud) 0.8 else 0.1) * 32000.0).toInt
+        data(2 * i) = (v & 0xFF).toByte
+        data(2 * i + 1) = ((v >> 8) & 0xFF).toByte
+      }
+      val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
+      val baos = new java.io.ByteArrayOutputStream()
+      javax.sound.sampled.AudioSystem.write(new javax.sound.sampled.AudioInputStream(
+        new java.io.ByteArrayInputStream(data), fmt, 6400L),
+        javax.sound.sampled.AudioFileFormat.Type.WAVE, baos)
+      baos.toByteArray
+    }
+    // video: 6 JPEG frames; a plant blemishes every frame, and frame 3 also
+    // carries a heavy edit that the majority vote must outvote
+    def mjpeg(id: Long, plant: Boolean): Array[Byte] = (0 until 6).map { f =>
+      stripes(id, (x, y) =>
+        if (plant && f == 3 && x >= 32) Some(0x808080)
+        else if (plant) blemish(x, y) else None, "jpg")
+    }.reduce(_ ++ _)
+    type Hasher = org.apache.spark.sql.Dataset[Multimodal.MediaRecord] => org.apache.spark.sql.DataFrame
+    def recall(kind: String, nBase: Int, nPlant: Int, hash: Hasher)(
+        payload: (Long, Boolean) => Array[Byte]): Unit = {
+      def rec(id: Long, base: Long, plant: Boolean) =
+        Multimodal.MediaRecord(id, kind, payload(base, plant), Map.empty)
+      val media = ((0 until nBase).map(i => rec(i, i, plant = false)) ++
+        (0 until nPlant).map(i => rec(1000000L + i, i, plant = true))).toDS()
+      val hashes = hash(media).cache()
+      assert(hashes.count() === nBase + nPlant, s"every $kind payload must hash")
+      val planted = Multimodal.imageNearDupPairs(hashes, maxBits = 3)
+        .where(col("id_b") === col("id_a") + 1000000L).count()
+      hashes.unpersist()
+      assert(planted >= nPlant - 1, s"$kind planted recall $planted/$nPlant")
+    }
+    recall("image", 400, 40, Multimodal.imageHashes(_))((id, plant) =>
+      stripes(id, (x, y) => if (plant) blemish(x, y) else None, "png"))
+    recall("audio", 200, 30, Multimodal.audioHashes(_))((id, plant) =>
+      wav(id, if (plant) 1 + (id % 3).toInt else 0))
+    recall("video", 80, 8, Multimodal.videoHashes(_))(mjpeg)
+  }
+
   test("multimodal: real WAV payload decodes to exact waveform statistics") {
     // 800 samples @ 8 kHz mono 16-bit LE: +8192 for 400 samples, then -8192
     // — every statistic has an exact closed form (8192/32768 = 0.25 exactly)

@@ -104,6 +104,60 @@ class NearDupIngestSpec extends SparkSuite {
     assert(kept === Set(1L, 2L, 11L))
   }
 
+  test("gate -> Gopher filter -> curated sink -> corpus monitor: the stream equals one batch pass") {
+    import graft.functions.TextFunctions
+    import graft.streaming.{EventStreams, SketchStreams}
+    // 40 bases, then exact re-arrivals of every base under new ids (40..79)
+    // in a later file, which the gate's store must drop. Bases with
+    // base % 10 == 7 are '#'-ridden junk that passes the gate and fails
+    // the Gopher rules; every other base is 2 stopwords + 22 base-unique
+    // fillers, so no two bases share a shingle
+    val nBase = 40L
+    def text(b: Long) =
+      if (b % 10 == 7) s"# junk ### t$b ### ... # ## junk2"
+      else "the data of " + (0L until 22L).map(k => f"t${b * 23 + k}%08d").mkString(" ")
+    val docs = (0L until 2 * nBase).map(i => (i, text(i % nBase)))
+    val schema = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
+    val inDir = tmpDir("curation_in")
+    docs.grouped(nBase.toInt).zipWithIndex.foreach { case (rows, i) =>
+      rows.toDF("doc_id", "text").coalesce(1).write.parquet(s"$inDir/b$i")
+      new java.io.File(s"$inDir/b$i").listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach(_.setLastModified(1000000000000L + i * 60000L))
+    }
+    def curate(out: String)(kept: org.apache.spark.sql.DataFrame): Unit =
+      kept.join(TextFunctions.gopherRules(kept, "doc_id", "text", minWords = 20)
+          .where(col("keep")).select("doc_id"), "doc_id")
+        .write.mode("append").parquet(out)
+    val (curatedS, curatedB) = (tmpDir("curated_s"), tmpDir("curated_b"))
+    new NearDupIngest(tmpDir("curation_state_s"), "doc_id", "text")
+      .ingest(spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .option("pathGlobFilter", "*.parquet").option("recursiveFileLookup", "true").parquet(inDir),
+        tmpDir("curation_ckpt"), curate(curatedS))
+      .awaitTermination(120000)
+    new NearDupIngest(tmpDir("curation_state_b"), "doc_id", "text")
+      .processBatch(docs.toDF("doc_id", "text"), 0L, curate(curatedB))
+    def ids(dir: String) = spark.read.parquet(dir).select("doc_id").as[Long].collect().sorted.toSeq
+    assert(ids(curatedS) === (0L until nBase).filter(_ % 10 != 7))
+    assert(ids(curatedB) === ids(curatedS))
+    // the monitor as a streaming aggregation over the curated sink == its
+    // batch form: KMV and KLL exactly, Misra-Gries on the guaranteed heavy
+    // set (the 3 shared words, far above the n/(k+1) deficit bound; the
+    // count-1 tail of the summary depends on merge order by design)
+    val monS = EventStreams.runToMemory(spark,
+      spark.readStream.schema(schema).option("pathGlobFilter", "*.parquet").parquet(curatedS),
+      df => SketchStreams.corpusMonitor(df, "text"), "curation_monitor").collect().head
+    val monB = SketchStreams.corpusMonitor(spark.read.parquet(curatedB), "text").collect().head
+    def heavies(r: org.apache.spark.sql.Row) = {
+      val nTok = 25L * ids(curatedS).size
+      r.getSeq[org.apache.spark.sql.Row](1).filter(_.getLong(1) >= nTok / 65 + 1)
+        .map(h => h.getString(0) -> h.getLong(1)).toSet
+    }
+    assert(monS.getDouble(0) === monB.getDouble(0))
+    assert(monS.getSeq[Double](2) === monB.getSeq[Double](2))
+    assert(heavies(monS).map(_._1) === Set("the", "data", "of"))
+    assert(heavies(monS) === heavies(monB))
+  }
+
   test("crash mid-stream, resume from checkpoint: kept set identical to " +
       "the uninterrupted run, no duplicate state") {
     // the crash is injected in onKept, which runs AFTER the batch's three

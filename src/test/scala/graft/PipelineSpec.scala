@@ -235,6 +235,27 @@ class PipelineSpec extends SparkSuite {
     // only, which the equality above already guarantees)
   }
 
+  test("clusters: chains, reversed-edge stars and untouched singletons label exactly on both paths") {
+    // 3 chains of 40 (diameter 39: the pointer-doubling case), 30 stars of
+    // hub + 9 leaves with every other edge written leaf-first, 50 ids with
+    // no edge; each labels to its chain base, its hub or itself
+    val chains = for (c <- 0L until 3L; i <- 0L until 39L)
+      yield (c * 1000L + i, c * 1000L + i + 1)
+    val stars = for (s <- 0L until 30L; j <- 1L to 9L; hub = 100000L + s * 16L)
+      yield if (j % 2 == 0) (hub, hub + j) else (hub + j, hub)
+    val expected =
+      (for (c <- 0L until 3L; i <- 0L until 40L) yield (c * 1000L + i) -> c * 1000L) ++
+      (for (s <- 0L until 30L; j <- 0L to 9L; hub = 100000L + s * 16L) yield (hub + j) -> hub) ++
+      (200000L until 200050L).map(i => i -> i)
+    val ids = expected.map(_._1).toDF("id")
+    val pairs = (chains ++ stars).toDF("id_a", "id_b")
+    for (limit <- Seq(5000000L, 0L)) {
+      val labeled = Dedup.clusters(ids, pairs, maxIter = 20, driverEdgeLimit = limit)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labeled === expected.toMap, s"driverEdgeLimit=$limit")
+    }
+  }
+
   test("clusters: reliable checkpoints when a checkpoint dir is set") {
     val prev = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(tmpDir("graft_ckpt"))

@@ -141,6 +141,46 @@ class ScaleOpsSpec extends SparkSuite {
     assert(saltedSum === plainSum)
   }
 
+  test("AQE splits a 90%-hot join key once the skew thresholds are scaled to the data; " +
+      "the answer is unchanged") {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, AQEShuffleReadExec}
+    // the hot twin: 90% of lineitem rows (by a hash of the row key) move
+    // onto ONE existing l_orderkey, 90% of orders onto one o_custkey; 8
+    // files each, so a hot partition has map outputs to split along
+    val twin = tmpDir("hot_twin")
+    def hotify(name: String, key: String, rowKey: Seq[String]): Unit = {
+      val df = table(name)
+      val hot = df.agg(min(col(key))).first().getLong(0)
+      df.withColumn(key, when(pmod(xxhash64(rowKey.map(col): _*), lit(10L)) < 9L, lit(hot))
+          .otherwise(col(key)))
+        .repartition(8).write.parquet(s"$twin/$name.parquet")
+    }
+    hotify("lineitem", "l_orderkey", Seq("l_orderkey", "l_linenumber"))
+    hotify("orders", "o_custkey", Seq("o_orderkey"))
+    Seq("customer", "nation").foreach(n => table(n).write.parquet(s"$twin/$n.parquet"))
+    val atDefaults = Queries.joinRevenueByNation(spark, twin).collect().toSeq
+    // at 100 TB the same skew RATIO meets the default thresholds; scaled to
+    // this fixture (and with broadcast off, so the joins shuffle) the split
+    // must engage. force: these joins feed an aggregate on their own keys,
+    // where the split adds a shuffle that AQE otherwise declines
+    val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2k",
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val q = Queries.joinRevenueByNation(spark, twin)
+      assert(q.collect().toSeq === atDefaults)
+      object plans extends AdaptiveSparkPlanHelper
+      val reads = plans.collect(q.queryExecution.executedPlan) { case r: AQEShuffleReadExec => r }
+      assert(reads.exists(_.hasSkewedPartition), q.queryExecution.executedPlan.toString)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("hotKeys surfaces the heaviest grouping keys") {
     val hot = ScaleOps.hotKeys(table("orders"), Seq("o_orderpriority"), 2).collect()
     assert(hot.length === 2)
@@ -302,6 +342,44 @@ class ScaleOpsSpec extends SparkSuite {
     assert(got(0).getAs[Long]("n_events") === 1L)
     assert(got(1).getAs[java.sql.Timestamp]("session_start") === ts("2024-01-01 12:00:00"))
     assert(got(1).getAs[Long]("n_events") === 1L)
+  }
+
+  test("incremental sessionization over 20 users x 2 bursts == the ground truth and the batch sessionizer") {
+    import org.apache.spark.sql.types._
+    // user u's burst k: 4 events 2 min apart at base + k * 2 h, one file per
+    // burst in event-time order (one per micro-batch), so sessions stay
+    // open across batches and close only as the 1-hour watermark passes
+    // them; two sentinel files (a far event, then one more to sweep the
+    // timeouts under it) flush every open session
+    val dir = tmpDir("stream_bursts")
+    val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00").getTime
+    def file(sub: String, order: Int, rows: Seq[(Long, java.sql.Timestamp, Double)]): Unit = {
+      rows.toDF("user_id", "ts", "value").coalesce(1).write.parquet(s"$dir/$sub")
+      new java.io.File(s"$dir/$sub").listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach(_.setLastModified(1000000000000L + order * 60000L))
+    }
+    for (k <- 0 until 2)
+      file(s"b$k", k, for (u <- 0L until 20L; j <- 0 until 4)
+        yield (u, new java.sql.Timestamp(base + k * 7200000L + j * 120000L), (u % 7 + j).toDouble))
+    val far = base + 2 * 7200000L + 86400000L
+    file("s0", 10, Seq((20L, new java.sql.Timestamp(far), 0.0)))
+    file("s1", 11, Seq((20L, new java.sql.Timestamp(far + 3600000L), 0.0)))
+    val schema = StructType(Seq(StructField("user_id", LongType),
+      StructField("ts", TimestampType), StructField("value", DoubleType)))
+    val gap = 30L * 60 * 1000
+    val stream = EventStreams.runToMemoryAppend(spark,
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .option("pathGlobFilter", "*.parquet").option("recursiveFileLookup", "true")
+          .parquet(dir).withWatermark("ts", "1 hour"),
+        df => EventStreams.statefulSessionsIncremental(df, gap), "burst_sessions")
+      .where(col("user_id") < 20L)
+    val got = stream.collect().map(_.toSeq).sortBy(_.take(2).toString)
+    assert(got.length === 40, "20 users x 2 sessions")
+    assert(got.forall(_(3) == 4L), "every session holds its burst's 4 events")
+    val batch = EventStreams.statefulSessions(
+      spark.read.schema(schema).parquet((0 until 2).map(k => s"$dir/b$k"): _*), gap)
+      .collect().map(_.toSeq).sortBy(_.take(2).toString)
+    assert(got.toSeq === batch.toSeq)
   }
 
   test("stateful sessions agree with session_window on counts") {

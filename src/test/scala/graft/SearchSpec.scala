@@ -74,6 +74,39 @@ class SearchSpec extends SparkSuite {
     assert(!plan.contains("Window"), s"unexpected Window in plan:\n$plan")
   }
 
+  test("a 12k-term vocabulary: the df table is semi-joined to the query terms below its broadcast; " +
+      "ranking, ties and absent terms hold") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // doc i: "shared anchor t{12i} .. t{12i+11}", 12 unique terms per doc,
+    // plus a family of 10 identical docs whose two terms occur nowhere else
+    val docs = spark.range(0, 1000).select(col("id").as("doc_id"),
+      concat(lit("shared anchor "), array_join(transform(sequence(lit(0L), lit(11L)),
+        j => concat(lit("t"), col("id") * 12L + j)), " ")).as("text"))
+      .unionByName((5000L until 5010L).map(_ -> "zzqalpha zzqbeta corpus sentinel words")
+        .toDF("doc_id", "text"))
+    val out = Search.bm25TopK(docs, Seq(
+      1L -> "shared anchor",           // every doc but the family: k fills
+      2L -> "t60 anchor",              // t60 is unique to doc 5
+      3L -> "absent0 absent1 absent2", // no posting at all
+      4L -> "zzqalpha zzqbeta"         // the family ties: doc_id order
+    ).toDF("qid", "qtext"), "doc_id", "text", "qid", "qtext", k = 10)
+    val rows = out.collect().map(r =>
+      (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"), r.getAs[Long]("rank")))
+    def ranked(q: Long) = rows.filter(_._1 == q).sortBy(_._3).map(_._2).toSeq
+    assert(ranked(1L).length === 10)
+    assert(ranked(2L).head === 5L, "the unique-term doc must rank first")
+    assert(ranked(3L).isEmpty, "absent terms retrieve nothing")
+    assert(ranked(4L) === (5000L until 5010L))
+    object plans extends AdaptiveSparkPlanHelper
+    val semiBelowBroadcast = plans.collect(out.queryExecution.executedPlan) {
+      case b: BroadcastExchangeExec => b }
+      .exists(b => plans.collect(b.child) { case j: BaseJoinExec if j.joinType == LeftSemi => j }.nonEmpty)
+    assert(semiBelowBroadcast, out.queryExecution.executedPlan.toString)
+  }
+
   test("rrfFuse: doc in both lists sums both reciprocal ranks") {
     val a = Seq((1L, 10L, 1L), (1L, 20L, 2L)).toDF("query_id", "doc_id", "rank")
     val b = Seq((1L, 20L, 1L), (1L, 30L, 2L)).toDF("query_id", "doc_id", "rank")

@@ -99,4 +99,17 @@ class WinnowKernelSpec extends SparkSuite {
     val reparts = out2.queryExecution.analyzed.collect { case r: Repartition => r }
     assert(reparts.size === 1, "only the caller's own repartition may remain")
   }
+
+  test("repeatedSpans: a suffix planted in 50 corpus docs yields a fingerprint at df 50") {
+    // the shared run is longer than w + k - 1, so some fingerprint of it is
+    // selected in every planted doc
+    val bp = " corpus wide boilerplate footer sentence planted for recall"
+    val planted = table("documents").where(col("doc_id") < 50)
+      .select(col("doc_id"), concat(col("text"), lit(bp)).as("text"))
+    val bpFps = kernelFps(bp, 8, 4)
+    val shared = Dedup.repeatedSpans(planted, "doc_id", "text", k = 8, w = 4, minDocs = 50)
+      .where(col("fp").isin(bpFps: _*)).count()
+    assert(shared >= 1)
+    Dedup.unpersistAll()
+  }
 }
