@@ -23,6 +23,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * Every mutation appends parquet through Spark, finds the files it added
   * by diffing [[DeltaLog.dataFiles]] around the write ([[appendFiles]]),
   * and commits them through the one commit writer, [[writeCommitStream]].
+  * DELETE starts at most two Spark jobs: one scan with no exchange, and a
+  * rewrite only when the log's row counts say some row survives.
   * Every `add` line carries `"stats":"{\"numRecords\":N}"` (Delta
   * PROTOCOL.md, "Per-file Statistics"), N read from the file's parquet
   * footer on the driver, so readers count rows from the log. Commit files
@@ -224,31 +226,39 @@ object DeltaFixtureWriter {
       schema = Some(df.schema).filter(_ => version == 0L || schemaChanged))
   }
 
+  /** `__file` → rows of `rows` (a filtered [[DeltaSnapshot.dataWithFile]]):
+    * one job, no exchange; the driver sums each task's counts. */
+  private def touchedFiles(rows: DataFrame): Map[String, Long] = {
+    import rows.sparkSession.implicits._
+    rows.select($"__file").as[String].mapPartitions { files =>
+      val n = scala.collection.mutable.HashMap.empty[String, Long]
+      files.foreach(f => n(f) = n.getOrElse(f, 0L) + 1)
+      n.iterator
+    }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
   /** Predicate DELETE: rewrites only the active files that contain matching
-    * rows; files without matches are untouched (deltalake semantics). */
+    * rows; files without matches are untouched (deltalake semantics). The
+    * survivors are rewritten only if [[DeltaSnapshot.numRecords]] exceeds
+    * the matches [[touchedFiles]] counts in the hit files. */
   def delete(spark: SparkSession, table: String, predicate: String): Unit = {
-    import spark.implicits._
     val snap = DeltaLog.snapshot(spark, table)
     val partitionBy = snap.partitionColumns
-    // __file is the active file's table-relative path (see
-    // DeltaSnapshot.dataWithFile); an empty table still logs the DELETE
-    // commit, with no file changes
+    // an empty table still logs the DELETE commit, with no file changes
     val (adds, removes) = snap.dataWithFile match {
       case None => (Seq.empty, Seq.empty)
       case Some(rows) =>
-        val hitFiles = rows.where(expr(predicate))
-          .select($"__file").distinct().as[String].collect().sorted.toSeq
-        // surviving rows of hit files, rewritten (partition-aware). DELETE
-        // removes rows where the predicate is TRUE — rows where it
+        val matches = touchedFiles(rows.where(expr(predicate)))
+        val hit = snap.manifest.filter(f => matches.contains(f.getString(0)))
+        // DELETE removes rows where the predicate is TRUE — rows where it
         // evaluates NULL must survive (bare !pred would be NULL and
         // silently drop them)
-        val survivors = snap.dataWithFileIn(hitFiles)
-          .where(!coalesce(expr(predicate), lit(false)))
-          .select(snap.data.columns.map(col).toIndexedSeq: _*)
         val written =
-          if (survivors.isEmpty) Seq.empty
-          else appendFiles(survivors, table, partitionBy)
-        (written, hitFiles)
+          if (hit.map(f => snap.numRecords(f) - matches(f.getString(0))).sum <= 0) Seq.empty
+          else appendFiles(snap.dataWithFileIn(matches.keys.toSeq)
+            .where(!coalesce(expr(predicate), lit(false)))
+            .select(snap.data.columns.map(col).toIndexedSeq: _*), table, partitionBy)
+        (written, matches.keys.toSeq.sorted)
     }
     writeCommitStream(table, snap.version + 1, "DELETE",
       Seq("predicate" -> predicate),
@@ -280,10 +290,9 @@ object DeltaFixtureWriter {
     * equal key values, unmatched source rows are inserted. Rewrites only
     * the files containing matched keys (others stay active untouched);
     * logs a MERGE commit — so history-based operation counting (A5) sees
-    * real MERGE operations. */
+    * real MERGE operations. Its files are counted by [[touchedFiles]]. */
   def merge(spark: SparkSession, table: String, source: DataFrame,
             keyCols: Seq[String]): Unit = {
-    import spark.implicits._
     val snap = DeltaLog.snapshot(spark, table)
     val partitionBy = snap.partitionColumns
     val dataCols = snap.data.columns
@@ -291,8 +300,7 @@ object DeltaFixtureWriter {
     val (newRows, removes) = snap.dataWithFile match {
       case None => (src, Seq.empty[String])
       case Some(rows) =>
-        val hitFiles = rows.join(src, keyCols, "left_semi")
-          .select($"__file").distinct().as[String].collect().sorted.toSeq
+        val hitFiles = touchedFiles(rows.join(src, keyCols, "left_semi")).keys.toSeq.sorted
         val survivors = snap.dataWithFileIn(hitFiles)
           .join(src, keyCols, "left_anti")
           .select(dataCols.map(col).toIndexedSeq: _*)

@@ -520,23 +520,24 @@ final class DeltaSnapshot private[deltalog] (val spark: SparkSession, val tableP
     * partition-value tuple (in [[partitionColumns]] order, null for a
     * missing value) → rows, the numbers
     * [[graft.operators.SkewAnalyzer.partitionCounts]] counts over [[data]].
-    * Each active file counts its `add.stats.numRecords`, or, when its
-    * stats lack one (legacy `"stats":""` logs, foreign checkpoints), its
-    * parquet footer row count, read on the driver; no data row is read and
+    * Each active file counts its [[numRecords]]; no data row is read and
     * no Spark job runs. Partitions whose sum is 0 are dropped, as a
     * data-scan `groupBy` never emits them; an unpartitioned table is at
     * most one entry, keyed by the empty tuple. */
-  lazy val partitionCounts: Map[Seq[String], Long] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(qualifiedTablePath)
+  lazy val partitionCounts: Map[Seq[String], Long] =
     manifest.toSeq.map { f =>
       val pv = Option(f.getAs[collection.Map[String, String]]("partitionValues"))
         .getOrElse(Map.empty[String, String])
-      val n = DeltaLog.statsNumRecords(f.getAs[String]("stats"))
-        .getOrElse(DeltaLog.footerRecordCount(conf, root, f.getString(0)))
-      partitionColumns.map(pv.getOrElse(_, null)) -> n
+      partitionColumns.map(pv.getOrElse(_, null)) -> numRecords(f)
     }.groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0)
-  }
+
+  /** The log's row count of the active file `f` (a [[manifest]] row): its
+    * `add.stats.numRecords`, else (legacy `"stats":""` logs, foreign
+    * checkpoints) its parquet footer row count, read on the driver. */
+  private[graft] def numRecords(f: Row): Long =
+    DeltaLog.statsNumRecords(f.getAs[String]("stats"))
+      .getOrElse(DeltaLog.footerRecordCount(spark.sparkContext.hadoopConfiguration,
+        new Path(qualifiedTablePath), f.getString(0)))
 
   /** Fully-qualified table root (scheme + absolute path). */
   lazy val qualifiedTablePath: String = DeltaLog.qualifiedPath(spark, tablePath)
@@ -548,15 +549,6 @@ final class DeltaSnapshot private[deltalog] (val spark: SparkSession, val tableP
     activeFiles.select(
       concat(lit(qualifiedTablePath.stripSuffix("/") + "/"), $"path").as("path"),
       $"size")
-
-  /** DESCRIBE DETAIL-shaped one-row frame: sizeInBytes, numFiles,
-    * partitionColumns (delta_spark_analyzer.py:116,122-124). */
-  lazy val detail: DataFrame = activeFiles
-    .agg(
-      coalesce(sum($"size"), lit(0L)).as("sizeInBytes"),
-      count(lit(1)).as("numFiles"))
-    .withColumn("partitionColumns", lit(partitionColumns.toArray))
-    .withColumn("location", lit(tablePath))
 
   /** Read the table's active rows, partition columns included. */
   lazy val data: DataFrame = dataWithFile match {

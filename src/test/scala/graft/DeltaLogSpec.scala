@@ -87,14 +87,14 @@ class DeltaLogSpec extends SparkSuite {
     snap.unpersist()
   }
 
-  test("detail frame aggregates size and file count") {
+  test("activeSizes and partitionColumns: size, files, partitioning") {
     val path = tmpDir("dlog")
     val df = TestFixtures.tips(spark, Seq("Mon" -> 10), Seq("Dinner" -> 10))
     DeltaFixtureWriter.write(df, path, "overwrite", Seq("day", "time"))
     val snap = DeltaLog.snapshot(spark, path)
-    val d = snap.detail.first()
-    assert(d.getAs[Long]("numFiles") === snap.activeFiles.count())
-    assert(d.getAs[Long]("sizeInBytes") > 0)
+    assert(snap.activeSizes.size.toLong === snap.activeFiles.count())
+    assert(snap.activeSizes.values.sum > 0)
+    assert(snap.partitionColumns === Seq("day", "time"))
     snap.unpersist()
   }
 

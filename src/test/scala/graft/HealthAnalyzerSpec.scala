@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import scala.jdk.CollectionConverters._
-
 import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
 import graft.health.{DeltaAnalyzerMetrics, Thresholds}
 import graft.operators.{HealthAnalyzer, SkewAnalyzer}
@@ -261,41 +259,6 @@ class HealthAnalyzerSpec extends SparkSuite {
       .map(t => String.valueOf(t.getMessage)).toSeq
     val name = victim.split('/').last
     assert(messages.exists(_.contains(name)), messages.mkString("\n"))
-  }
-
-  /** A copy of the table whose every `add.stats` (JSON commits and
-    * checkpoint) is rewritten to `""`, as legacy writers left it: its
-    * counts can only come from parquet footers. */
-  private def copyWithoutStats(path: String): String = {
-    val dest = tmpDir("nostats")
-    val src = java.nio.file.Paths.get(path)
-    val files = java.nio.file.Files.walk(src)
-    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-      .filterNot(_.getFileName.toString.endsWith(".crc")).foreach { f =>
-        val to = java.nio.file.Paths.get(dest).resolve(src.relativize(f))
-        java.nio.file.Files.createDirectories(to.getParent)
-        val name = f.getFileName.toString
-        if (name.endsWith(".json")) {
-          val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-          java.nio.file.Files.write(to,
-            text.replaceAll("\"stats\":\"(?:[^\"\\\\]|\\\\.)*\"", "\"stats\":\"\"").getBytes("UTF-8"))
-        } else if (name.endsWith(".checkpoint.parquet")) {
-          val tmp = tmpDir("ckpt_nostats")
-          spark.read.parquet(f.toString)
-            .withColumn("add", when(col("add").isNotNull, col("add").withField("stats", lit(""))))
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
-          java.nio.file.Files.copy(part.toPath, to)
-        } else java.nio.file.Files.copy(f, to)
-      }
-    finally files.close()
-    val log = new java.io.File(dest, "_delta_log").listFiles().toSeq
-    val stillCounted = log.filter(_.getName.endsWith(".json")).exists { f =>
-      val src = scala.io.Source.fromFile(f)
-      try src.mkString.contains("numRecords") finally src.close()
-    }
-    assert(!stillCounted, "the copy's JSON commits must carry no numRecords")
-    dest
   }
 
   /** The three sources of the record count and skew agree field for

@@ -766,6 +766,100 @@ class MaintenanceSpec extends SparkSuite {
     assert(spark.sharedState.cacheManager.isEmpty, "the snapshot's cached actions leaked")
   }
 
+  /** Ids 0..299 (v0) then 300..599 (v1, an append) with `k` = id % 3, each
+    * write one task: partitioned by `k`, one 100-row file per partition
+    * and write; unpartitioned, one 300-row file per write. */
+  private def twoWrites(path: String, partitionBy: Seq[String] = Seq("k")): Unit =
+    Seq("overwrite" -> 0L, "append" -> 300L).foreach { case (mode, lo) =>
+      DeltaFixtureWriter.write(spark.range(lo, lo + 300)
+        .select(col("id"), (col("id") % 3).as("k")).coalesce(1), path, mode, partitionBy)
+    }
+
+  /** The removed paths and the added files' `numRecords` of the commit at
+    * `version`, each sorted. */
+  private def commitFiles(path: String, version: Long): (Seq[String], Seq[Long]) = {
+    val actions = spark.read.schema(DeltaLog.actionSchema)
+      .json(s"$path/_delta_log/${f"$version%020d"}.json")
+    (actions.where($"remove".isNotNull).select($"remove.path").as[String].collect().sorted.toSeq,
+      actions.where($"add".isNotNull)
+        .select(get_json_object($"add.stats", "$.numRecords").cast("long")).as[Long].collect().sorted.toSeq)
+  }
+
+  test("a partial DELETE on a partitioned table starts 2 jobs: one scan and one rewrite") {
+    val path = tmpDir("deljobs")
+    twoWrites(path)
+    val (_, jobs) = jobsOf(DeltaFixtureWriter.delete(spark, path, "id >= 300 AND id % 7 = 0"))
+    assert(jobs.size === 2, jobs.mkString("\n"))
+    val survivors = (300 until 600).filter(_ % 7 != 0)
+    val (removed, added) = commitFiles(path, 2)
+    assert(removed.size === 3, "the three v1 files hold matches")
+    assert(added === (0 until 3).map(k => survivors.count(_ % 3 == k).toLong).sorted)
+    val snap = DeltaLog.snapshot(spark, path)
+    assert(snap.data.select("id").as[Long].collect().sorted.toSeq
+      === (0L until 300L) ++ survivors.map(_.toLong))
+  }
+
+  test("a DELETE that removes every row of the files it hits starts 1 job and writes no parquet file") {
+    Seq(Seq("k"), Seq.empty[String]).foreach { partitionBy =>
+      val path = tmpDir("delwhole")
+      twoWrites(path, partitionBy)
+      val before = DeltaLog.dataFiles(spark, path).keySet
+      val (_, jobs) = jobsOf(DeltaFixtureWriter.delete(spark, path, "id >= 300"))
+      assert(jobs.size === 1, s"$partitionBy: ${jobs.mkString("\n")}")
+      assert(DeltaLog.dataFiles(spark, path).keySet === before, s"$partitionBy: a parquet file was written")
+      val snap = DeltaLog.snapshot(spark, path)
+      val (removed, added) = commitFiles(path, 2)
+      assert(added.isEmpty && removed.size === before.size / 2, partitionBy)
+      assert(removed === (before -- snap.manifest.map(_.getString(0))).toSeq.sorted, partitionBy)
+      assert(snap.data.select("id").as[Long].collect().sorted.toSeq === (0L until 300L), partitionBy)
+    }
+  }
+
+  test("a DELETE on a log whose adds carry \"stats\":\"\" rewrites the same survivors from the parquet footers") {
+    val withStats = tmpDir("delstats")
+    twoWrites(withStats)
+    val legacy = copyWithoutStats(withStats)
+    assert(DeltaLog.snapshot(spark, legacy).manifest.forall(_.getAs[String]("stats") == ""))
+    // every row of v1's k = 1 file, then part of every other file
+    val predicates = Seq("id >= 300 AND k = 1", "id % 7 = 0")
+    val results = Seq(withStats, legacy).map { path =>
+      val jobs = predicates.map(p => jobsOf(DeltaFixtureWriter.delete(spark, path, p))._2.size)
+      val snap = DeltaLog.snapshot(spark, path)
+      (jobs, Seq(2L, 3L).map(commitFiles(path, _)),
+        snap.data.select("id", "k").as[(Long, String)].collect().sorted.toSeq)
+    }
+    assert(results.head._1 === Seq(1, 2))
+    assert(results(1) === results.head)
+    assert(results.head._3.map(_._1) === (0L until 600L).filterNot(i => i % 7 == 0 || (i >= 300 && i % 3 == 1)))
+  }
+
+  test("a partial DELETE reads its hit files twice and skips the others by their row-group stats") {
+    val path = tmpDir("delrows")
+    twoWrites(path)
+    val (_, read) = rowsReadOf(DeltaFixtureWriter.delete(spark, path, "id >= 300 AND id % 7 = 0"))
+    // the scan reads v1's three 100-row files (v0's files, all ids below
+    // 300, are skipped) and the rewrite reads them again: 600 rows. A
+    // DELETE that probed its survivors with isEmpty read 900 here.
+    assert(read === 600L)
+  }
+
+  test("merge starts 4 jobs: the left_semi join counted per file, and the rewrite") {
+    val path = tmpDir("mergejobs")
+    twoWrites(path)
+    val source = Seq((298L, "7"), (301L, "7"), (900L, "0")).toDF("id", "k")
+    val (_, jobs) = jobsOf(DeltaFixtureWriter.merge(spark, path, source, Seq("id")))
+    // a merge that collected the hit files through a distinct started 5:
+    // its exchange ran as a job of its own
+    assert(jobs.size === 4, jobs.mkString("\n"))
+    val (removed, added) = commitFiles(path, 2)
+    assert(removed.size === 2, "the v0 file of 298 and the v1 file of 301")
+    assert(added.sum === 198L + 3, "their 198 other rows and the three source rows")
+    val snap = DeltaLog.snapshot(spark, path)
+    assert(snap.data.select("id", "k").as[(Long, String)].collect().toSet
+      === (0L until 600L).map(i => i -> (i % 3).toString).toSet -- Seq(298L -> "1", 301L -> "1") ++
+        Seq(298L -> "7", 301L -> "7", 900L -> "0"))
+  }
+
   test("changes: CDF shows appends as inserts, deletes as deletes, compaction as nothing") {
     val path = tmpDir("cdf")
     val mk = (ids: Seq[Int], day: String) =>
@@ -905,7 +999,7 @@ class MaintenanceSpec extends SparkSuite {
     assert(hitY0 === total0, "linear-by-x layout cannot prune on y")
 
     val snap0 = DeltaLog.snapshot(spark, path)
-    val bytes = snap0.detail.select("sizeInBytes").as[Long].first()
+    val bytes = snap0.activeSizes.values.sum
     snap0.unpersist()
     Maintenance.zorder(spark, path, Seq("x", "y"),
       targetFileBytes = math.max(1L, bytes / 16))
@@ -951,7 +1045,7 @@ class MaintenanceSpec extends SparkSuite {
     DeltaFixtureWriter.write(data.repartitionByRange(16, col("y")), path,
       "overwrite", Seq())
     val snap0 = DeltaLog.snapshot(spark, path)
-    val bytes = snap0.detail.select("sizeInBytes").as[Long].first()
+    val bytes = snap0.activeSizes.values.sum
     snap0.unpersist()
 
     Maintenance.zorder(spark, path, Seq("x", "y"),
