@@ -9,14 +9,15 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, FileScanRDD, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.immutable.SortedMap
 import scala.collection.mutable
@@ -47,11 +48,12 @@ import scala.jdk.CollectionConverters._
   * the segment, dead paths included; a checkpoint bounds it, since the
   * commits it covers can then be cleaned. The snapshot keeps the active
   * manifest plus one row per commit. Data reads go through a
-  * [[ManifestFileIndex]] over the manifest, so Spark never lists a
-  * directory of the table. Every file-set decision (storage, orphans,
-  * OPTIMIZE selection, RESTORE, VACUUM candidates) is plain Scala over the
-  * manifest and the [[dataFiles]] listing, keyed by the table-relative path
-  * both spell the same way: removed or orphan files are never opened.
+  * [[ManifestFileIndex]] over the manifest, or a file scan of bins of its
+  * files, so Spark never lists a directory of the table. Every file-set
+  * decision (storage, orphans, OPTIMIZE selection and packing, RESTORE,
+  * VACUUM candidates) is plain Scala over the manifest and the
+  * [[dataFiles]] listing, keyed by the table-relative path both spell the
+  * same way: removed or orphan files are never opened.
   */
 object DeltaLog {
 
@@ -175,13 +177,25 @@ object DeltaLog {
     * actions the schema lacks read as null, and those it does not name are
     * not read, so a foreign writer's checkpoint needs no footer inference. */
   private def reader(spark: SparkSession, format: FileFormat): FileStatus => Iterator[Row] = {
-    val read = format.buildReaderWithPartitionValues(spark, actionSchema, new StructType(),
-      actionSchema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      new Configuration(spark.sparkContext.hadoopConfiguration))
+    val read = fileReader(spark, format, actionSchema, new StructType())
     val toRow = CatalystTypeConverters.createToScalaConverter(actionSchema)
-    st => read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), 0L, st.getLen,
-      Array.empty, st.getModificationTime, st.getLen)).map(toRow(_).asInstanceOf[Row])
+    st => read(wholeFile(st, InternalRow.empty)).map(toRow(_).asInstanceOf[Row])
   }
+
+  /** Spark's own reader of files in `format`: each row holds the
+    * `dataSchema` columns, then the file's values of `partitionSchema`. It
+    * pushes no filter and returns rows, not column batches, and is given a
+    * copy of the Hadoop configuration, which it edits. Serializable, so
+    * tasks can run it too ([[DeltaSnapshot.scanBins]]). */
+  private[deltalog] def fileReader(spark: SparkSession, format: FileFormat, dataSchema: StructType,
+                                   partitionSchema: StructType): PartitionedFile => Iterator[InternalRow] =
+    format.buildReaderWithPartitionValues(spark, dataSchema, partitionSchema, dataSchema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), new Configuration(spark.sparkContext.hadoopConfiguration))
+
+  /** The whole file `st` as one read split, with partition `values`. */
+  private[deltalog] def wholeFile(st: FileStatus, values: InternalRow): PartitionedFile =
+    PartitionedFile(values, SparkPath.fromPath(st.getPath), 0L, st.getLen, Array.empty,
+      st.getModificationTime, st.getLen)
 
   /** An active file: path, size, partitionValues, modificationTime, stats. */
   private[deltalog] val fileSchema: StructType = StructType(StructField("path", StringType) +:
@@ -451,7 +465,9 @@ private[deltalog] final class Replay {
   * other fact is plain Scala over those rows: [[version]], the [[latest]]
   * metaData and protocol ([[tableSchema]], [[partitionColumns]], the reader
   * protocol), [[history]] and [[partitionCounts]]. Every data read is one
-  * parquet scan of exactly the manifest's files ([[scan]]).
+  * parquet scan of exactly the manifest's files: through [[scan]], the one
+  * filtered read (DELETE's pushdown and row-group skipping), or, for a
+  * rewrite of whole files, through [[scanBins]], one task per bin.
   */
 final class DeltaSnapshot private[deltalog] (val spark: SparkSession, val tablePath: String,
                                              private[graft] val manifest: Array[Row],
@@ -525,11 +541,8 @@ final class DeltaSnapshot private[deltalog] (val spark: SparkSession, val tableP
     * data-scan `groupBy` never emits them; an unpartitioned table is at
     * most one entry, keyed by the empty tuple. */
   lazy val partitionCounts: Map[Seq[String], Long] =
-    manifest.toSeq.map { f =>
-      val pv = Option(f.getAs[collection.Map[String, String]]("partitionValues"))
-        .getOrElse(Map.empty[String, String])
-      partitionColumns.map(pv.getOrElse(_, null)) -> numRecords(f)
-    }.groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0)
+    manifest.toSeq.map(f => partitionValues(f) -> numRecords(f))
+      .groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0)
 
   /** The log's row count of the active file `f` (a [[manifest]] row): its
     * `add.stats.numRecords`, else (legacy `"stats":""` logs, foreign
@@ -580,15 +593,43 @@ final class DeltaSnapshot private[deltalog] (val spark: SparkSession, val tableP
     * without its partition columns, so a column added by a later append
     * reads as null from older files. */
   private[deltalog] def scan(files: Seq[Row]): DataFrame = {
-    val root = new Path(qualifiedTablePath)
     val values = StructType(("__file" +: partitionColumns).map(StructField(_, StringType)))
-    new ManifestFileIndex(root, values, files.map { f =>
-      val path = f.getAs[String]("path")
-      val pv = Option(f.getAs[collection.Map[String, String]]("partitionValues"))
-        .getOrElse(Map.empty[String, String])
-      new FileStatus(f.getAs[Long]("size"), false, 0, 0, f.getAs[Long]("modificationTime"),
-        new Path(root, new Path(null, null, path))) -> (path +: partitionColumns.map(pv.getOrElse(_, null)))
+    new ManifestFileIndex(new Path(qualifiedTablePath), values, files.map { f =>
+      status(f) -> (f.getString(0) +: partitionValues(f))
     }).read(spark, activeSchema)
+  }
+
+  /** The read of whole files for a rewrite (OPTIMIZE): each of `bins`
+    * (rows with [[activeFiles]]' columns) is one read partition, whose task
+    * reads its files in order. A `FileScanRDD` under Spark's parquet
+    * reader, the one [[DeltaLog.reader]] also uses, so nothing is listed
+    * and no exchange is planned. Columns: those of [[scan]] without
+    * `__file`. No filter is pushed and no row group is skipped; a filtered
+    * read goes through [[scan]]. */
+  private[graft] def scanBins(bins: Seq[Seq[Row]]): DataFrame = {
+    val dataSchema = GraftSqlBridge.asNullable(activeSchema)
+    val values = StructType(partitionColumns.map(StructField(_, StringType)))
+    val read = DeltaLog.fileReader(spark, new ParquetFileFormat, dataSchema, values)
+    val partitions = bins.zipWithIndex.map { case (files, i) =>
+      FilePartition(i, files.map { f =>
+        DeltaLog.wholeFile(status(f), InternalRow.fromSeq(partitionValues(f).map(UTF8String.fromString)))
+      }.toArray)
+    }
+    val schema = StructType(dataSchema.fields ++ values.fields)
+    GraftSqlBridge.internalCreateDataFrame(spark, new FileScanRDD(spark, read, partitions, schema), schema)
+  }
+
+  /** The file of the [[manifest]] row `f`, under [[qualifiedTablePath]]. */
+  private def status(f: Row): FileStatus =
+    new FileStatus(f.getAs[Long]("size"), false, 0, 0, f.getAs[Long]("modificationTime"),
+      new Path(new Path(qualifiedTablePath), new Path(null, null, f.getString(0))))
+
+  /** The values of [[partitionColumns]] of the [[manifest]] row `f`, null
+    * where the log has none. */
+  private def partitionValues(f: Row): Seq[String] = {
+    val pv = Option(f.getAs[collection.Map[String, String]]("partitionValues"))
+      .getOrElse(Map.empty[String, String])
+    partitionColumns.map(pv.getOrElse(_, null))
   }
 
   // a log that predates schema emission reads with the footer schema of

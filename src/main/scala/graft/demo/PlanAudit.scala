@@ -31,9 +31,9 @@ object PlanAudit {
         snap.data.explain("formatted")
         graft.deltalog.DeltaFixtureWriter.drop(path)
       case "optimize" =>
-        // the OPTIMIZE rewrite: one manifest-index scan of exactly the
-        // chosen files (selected on the driver), binned and shuffled by
-        // (partition cols, bin)
+        // the OPTIMIZE rewrite: the chosen files, packed into bins on the
+        // driver, read one bin per task by a file scan (Scan ExistingRDD)
+        // — the plan must show no Exchange
         println(s"########## optimize (Maintenance.optimizeRewrite)")
         val path = java.nio.file.Files.createTempDirectory("graft_planaudit_opt").toString
         val li = spark.read.parquet(s"$dir/lineitem.parquet")

@@ -13,13 +13,15 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import scala.collection.mutable
+
 import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
 
 /** Maintenance operations the health analysis recommends (H12) — the engine
   * can EXECUTE them, not just suggest:
   *  - OPTIMIZE: bin-pack each partition's small files into ~target-sized
-  *    ones (the selection is plain Scala over the manifest, the rewrite one
-  *    scan and one append)
+  *    ones (the selection and the packing are plain Scala over the
+  *    manifest, the rewrite one Spark job with no shuffle)
   *  - VACUUM: physically delete files no longer referenced by the log,
   *    honoring a retention window
   *  - CHECKPOINT: write a parquet checkpoint so expired JSON commits can be
@@ -39,20 +41,18 @@ object Maintenance {
     * size — real OPTIMIZE never rewrites the whole table.
     *
     * Shape:
-    *  - selection ([[optimizeRewrite]]): plain Scala over the snapshot's
-    *    driver-held manifest, grouped by `partitionValues`;
-    *    ceil(partitionSmallBytes / target) bins per partition;
-    *  - rewrite: ONE scan of exactly the chosen files (the snapshot's
-    *    manifest index), each row binned by a hash of its file, shuffled by
-    *    (partition cols, bin) so each task writes whole output files,
-    *    appended with partitionBy. Bins are size CEILINGS, approximately
-    *    honored: two bins that hash-collide into one shuffle task (or get
-    *    AQE-coalesced) merge into one larger output — benign over-packing,
-    *    never a correctness issue;
+    *  - selection and packing ([[optimizeRewrite]]): plain Scala over the
+    *    snapshot's driver-held manifest, grouped by `partitionValues`; each
+    *    partition's chosen files are packed whole into bins on the driver,
+    *    as Delta's OPTIMIZE does;
+    *  - rewrite: ONE Spark job with no exchange. Each bin is one read
+    *    partition of [[graft.deltalog.DeltaSnapshot.scanBins]], so its task
+    *    reads exactly its files, in order, and the partitioned append writes
+    *    it as one output file;
     *  - discovery: the driver-side data-file listing
     *    ([[graft.deltalog.DeltaLog.dataFiles]]) before and after the write,
     *    diffed in Scala ([[DeltaFixtureWriter.appendFiles]]) — the new
-    *    entries are one per output bin;
+    *    entries are one per bin;
     *  - commit: the chosen paths, sorted on the driver, are the removes.
     *
     * Single-writer assumption, like the commit writer (no
@@ -61,6 +61,7 @@ object Maintenance {
   def optimize(spark: SparkSession, tablePath: String,
                targetFileBytes: Long = 128L * 1024 * 1024,
                smallFileBytes: Long = 0L): Unit = {
+    require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
     val smallThr = if (smallFileBytes > 0L) smallFileBytes else targetFileBytes / 2
     val snap = DeltaLog.snapshot(spark, tablePath)
     val params = Seq("predicate" -> "[]", "targetFileBytes" -> targetFileBytes.toString)
@@ -78,29 +79,35 @@ object Maintenance {
 
   /** The rewrite of [[optimize]], None when no partition has two small
     * files: the rows of every file under `smallThr` in a partition with at
-    * least two of them, repartitioned by (partition cols, bin) with
-    * `bin = pmod(xxhash64(__file), n_bins)`, and those files' paths,
-    * sorted. Exposed separately so PlanAudit can print its plan. */
+    * least two of them, read one bin per task ([[pack]]), and those files'
+    * paths, sorted. Exposed separately so PlanAudit can print its plan. */
   private[graft] def optimizeRewrite(snap: graft.deltalog.DeltaSnapshot,
                                      targetFileBytes: Long,
                                      smallThr: Long): Option[(DataFrame, Seq[String])] = {
-    val small = snap.manifest.toSeq.filter(_.getLong(1) < smallThr)
-    val nBins: Map[String, Int] = small
+    val bins = snap.manifest.toSeq.filter(_.getLong(1) < smallThr)
       .groupBy(f => Option(f.getAs[collection.Map[String, String]]("partitionValues"))
         .getOrElse(Map.empty[String, String]))
-      .values.filter(_.size >= 2)
-      .flatMap { files =>
-        val n = math.max(1L, math.ceil(files.map(_.getLong(1)).sum.toDouble / targetFileBytes).toLong)
-        files.map(_.getString(0) -> n.toInt)
-      }.toMap
-    Option.when(nBins.nonEmpty) {
-      val chosen = nBins.keys.toSeq.sorted
-      val bin = pmod(xxhash64(col("__file")), element_at(typedLit(nBins), col("__file")))
-      val rows = snap.dataWithFileIn(chosen).withColumn("bin", bin.cast("int"))
-        .repartition(snap.partitionColumns.map(col) :+ col("bin"): _*)
-        .drop("__file", "bin")
-      (rows, chosen)
+      .values.filter(_.size >= 2).toSeq
+      .flatMap(pack(_, targetFileBytes))
+    Option.when(bins.nonEmpty)((snap.scanBins(bins), bins.flatten.map(_.getString(0)).sorted))
+  }
+
+  /** One partition's `files` (manifest rows) packed whole into
+    * n = min(files, max(1, ceil(bytes / target))) bins: largest file first
+    * (ties by path), each into the lightest bin (ties by the lower bin);
+    * empty bins are dropped. The file count caps n, so a tiny target makes
+    * one bin per file, never more. */
+  private def pack(files: Seq[Row], target: Long): Seq[Seq[Row]] = {
+    val bytes = files.map(_.getLong(1)).sum
+    val n = math.min(files.size.toLong, math.max(1L, math.ceil(bytes.toDouble / target).toLong)).toInt
+    val bins = Array.fill(n)(Vector.empty[Row])
+    val lightest = mutable.PriorityQueue.from((0 until n).map(0L -> _))(Ordering[(Long, Int)].reverse)
+    files.sortBy(f => (-f.getLong(1), f.getString(0))).foreach { f =>
+      val (filled, i) = lightest.dequeue()
+      bins(i) :+= f
+      lightest.enqueue((filled + f.getLong(1), i))
     }
+    bins.toSeq.filter(_.nonEmpty)
   }
 
   /** OPTIMIZE ZORDER BY — multi-dimensional clustering rewrite (the Delta
@@ -127,7 +134,8 @@ object Maintenance {
     * boundary sampling, no global sort on a single reducer — with
     * `sortWithinPartitions` so every output file covers a contiguous
     * Z-range. Bit interleave is a constant-shift expression tree inside
-    * whole-stage codegen. Commit flow mirrors [[optimize]]: the listings
+    * whole-stage codegen, over one cell column per cluster column, each
+    * computed once. Commit flow mirrors [[optimize]]: the listings
     * before and after the write are diffed for the adds, and the removes
     * are the driver-held manifest's paths, sorted. Single-writer assumption
     * as everywhere. */
@@ -136,6 +144,7 @@ object Maintenance {
              rankBased: Boolean = false): Unit = {
     require(zorderCols.nonEmpty && zorderCols.size <= 3,
       s"zorder takes 1-3 columns, got $zorderCols")
+    require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
     val snap = DeltaLog.snapshot(spark, tablePath)
     val partCols = snap.partitionColumns
     require(zorderCols.forall(c => !partCols.contains(c)),
@@ -150,7 +159,7 @@ object Maintenance {
       case Some(rows) =>
         val nOut = math.max(1L, math.ceil(
           snap.activeSizes.values.sum.toDouble / targetFileBytes).toLong).toInt
-        val z =
+        val (cells, bits) =
           if (rankBased) {
             // equi-depth cells: 255 approx-quantile boundaries per column
             // (one GK-sketch pass over the active rows, driver payload =
@@ -160,25 +169,32 @@ object Maintenance {
               col(c).cast("double").as(c)): _*)
             val bounds = doubled.stat.approxQuantile(
               zorderCols.toArray, probs, 0.001)
-            zValue(zorderCols.zipWithIndex.map { case (c, i) =>
+            (zorderCols.zipWithIndex.map { case (c, i) =>
               rankCell(col(c).cast("double"), bounds(i))
-            }, bits = 8)
+            }, 8)
           } else {
             val mmCols = zorderCols.flatMap(c => Seq(
               min(col(c).cast("double")).as(s"mn_$c"),
               max(col(c).cast("double")).as(s"mx_$c")))
             val mm = rows.agg(mmCols.head, mmCols.tail: _*).first()
-            zValue(zorderCols.zipWithIndex.map { case (c, i) =>
+            (zorderCols.zipWithIndex.map { case (c, i) =>
               // an all-null cluster column aggregates to NULL min/max —
               // Row.getDouble would NPE, so land the column in cell 0
               // directly (same cell bucket16 gives constant columns)
               if (mm.isNullAt(2 * i) || mm.isNullAt(2 * i + 1)) lit(0L)
               else bucket16(col(c), mm.getDouble(2 * i), mm.getDouble(2 * i + 1))
-            })
+            }, 16)
           }
+        // each cell is a column of its own, computed once: zValue reads it
+        // once per bit, and Spark does not inline a non-trivial expression
+        // into a projection that reads it more than once
+        val cellCols = cells.indices.map(i => s"__cell$i")
         val shuffleKeys = partCols.map(col) :+ col("__z")
         val added = DeltaFixtureWriter.appendFiles(
-          rows.drop("__file").withColumn("__z", z)
+          rows.drop("__file")
+            .select(col("*") +: cells.zip(cellCols).map { case (c, n) => c.as(n) }: _*)
+            .withColumn("__z", zValue(cellCols.map(col), bits))
+            .drop(cellCols: _*)
             .repartitionByRange(nOut, shuffleKeys: _*)
             .sortWithinPartitions(shuffleKeys: _*)
             .drop("__z"),

@@ -1,5 +1,7 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -12,6 +14,12 @@ object GraftSqlBridge {
 
   /** `StructType.asNullable` (`private[spark]`): a file read's data schema. */
   def asNullable(s: types.StructType): types.StructType = s.asNullable
+
+  /** A DataFrame of `schema` over `rows` (`internalCreateDataFrame` is
+    * `private[sql]`): a scan built from an RDD of Catalyst rows. */
+  def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+                              schema: types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 
   /** Unset the context's reliable-checkpoint dir (SparkContext offers a
     * setter but no clearer; `checkpointDir` is `private[spark]`, reachable

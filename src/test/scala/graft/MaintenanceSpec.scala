@@ -699,10 +699,7 @@ class MaintenanceSpec extends SparkSuite {
     assert(metrics("num_added_files") === "1" && metrics("num_removed_files") === "3")
     snap.unpersist()
 
-    // a tiny target forces one bin per input file; bins may still merge
-    // when (pkey, bin) hash-collide into one shuffle task or AQE coalesces
-    // tiny partitions (over-packing, never data loss) — so assert the
-    // rewrite happened and data survived, not an exact fan-out
+    // a tiny target makes one bin, and so one output file, per input file
     DeltaFixtureWriter.write(mk(Seq(8L, 9L), "Wed"), path, "append", Seq("day"))
     DeltaFixtureWriter.write(mk(Seq(10L), "Wed"), path, "append", Seq("day"))
     Maintenance.optimize(spark, path, targetFileBytes = 1L, smallFileBytes = 1L << 20)
@@ -711,6 +708,7 @@ class MaintenanceSpec extends SparkSuite {
       .orderBy(col("version").desc).limit(1)
       .select("operationMetrics").collect().head.getMap[String, String](0)
     assert(wedMetrics("num_removed_files") === "2", "both Wed files rewritten")
+    assert(wedMetrics("num_added_files") === "2", "one output per input file")
     assert(snap2.data.count() === 10L)
     snap2.unpersist()
   }
@@ -858,6 +856,68 @@ class MaintenanceSpec extends SparkSuite {
     assert(snap.data.select("id", "k").as[(Long, String)].collect().toSet
       === (0L until 600L).map(i => i -> (i % 3).toString).toSet -- Seq(298L -> "1", 301L -> "1") ++
         Seq(298L -> "7", 301L -> "7", 900L -> "0"))
+  }
+
+  /** [[twoWrites]], then one 50-row file in partition k = 9: OPTIMIZE
+    * chooses the six files of k = 0, 1, 2 and leaves the lone one. */
+  private def optimizable(path: String): Unit = {
+    twoWrites(path)
+    DeltaFixtureWriter.write(spark.range(1000, 1050).select(col("id"), lit(9L).as("k")).coalesce(1),
+      path, "append", Seq("k"))
+  }
+
+  test("optimize starts 1 job and shuffles nothing") {
+    val path = tmpDir("optjobs")
+    optimizable(path)
+    val ((_, jobs), shuffled) = shuffleBytesOf(jobsOf(Maintenance.optimize(spark, path)))
+    // an optimize that hashed each row into a bin started 2: the write and
+    // its bin exchange
+    assert(jobs.size === 1, jobs.mkString("\n"))
+    assert(shuffled === 0L)
+    val (removed, added) = commitFiles(path, 3)
+    assert(removed.size === 6 && added === Seq(200L, 200L, 200L), "one output per partition")
+  }
+
+  test("optimize reads each chosen file once, removes them and keeps every row") {
+    val path = tmpDir("optrows")
+    optimizable(path)
+    val before = DeltaLog.snapshot(spark, path)
+    def rows(snap: graft.deltalog.DeltaSnapshot) =
+      snap.data.select("id", "k").as[(Long, String)].collect().sorted.toSeq
+    val (_, read) = rowsReadOf(Maintenance.optimize(spark, path))
+    val (removed, _) = commitFiles(path, 3)
+    val chosen = before.manifest.filter(f => removed.contains(f.getString(0)))
+    assert(removed === before.manifest.map(_.getString(0)).filterNot(_.startsWith("k=9/")).sorted.toSeq)
+    assert(read === chosen.map(before.numRecords).sum && read === 600L)
+    assert(rows(DeltaLog.snapshot(spark, path)) === rows(before))
+  }
+
+  test("optimize on a schema-evolved table reads the older files' missing column as null") {
+    val path = tmpDir("optevolve")
+    val mk = (ids: Seq[Long]) => ids.map(i => (i, "Mon")).toDF("id", "day").coalesce(1)
+    DeltaFixtureWriter.write(mk(Seq(1L, 2L)), path, "overwrite", Seq("day"))
+    DeltaFixtureWriter.write(mk(Seq(3L)).withColumn("tag", lit("v2")), path, "append", Seq("day"))
+    Maintenance.optimize(spark, path)
+    val snap = DeltaLog.snapshot(spark, path)
+    assert(snap.manifest.length === 1, "both files compacted into one")
+    assert(snap.data.select("id", "day", "tag").as[(Long, String, Option[String])].collect().sorted.toSeq
+      === Seq((1L, "Mon", None), (2L, "Mon", None), (3L, "Mon", Some("v2"))))
+    val written = spark.read.parquet(new java.io.File(path, snap.manifest.head.getString(0)).toString)
+    assert(written.columns.toSeq === Seq("id", "tag"), "the compacted file holds the evolved schema")
+  }
+
+  test("optimize and zorder refuse a target file size of 0 or less before touching the table") {
+    val path = tmpDir("optguard")
+    twoWrites(path)
+    def state() = (new java.io.File(path, "_delta_log").list().toSet, DeltaLog.dataFiles(spark, path))
+    val before = state()
+    Seq[() => Unit](
+      () => Maintenance.optimize(spark, path, targetFileBytes = 0L),
+      () => Maintenance.zorder(spark, path, Seq("id"), targetFileBytes = -1L)).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("targetFileBytes must be positive"), e.getMessage)
+      assert(state() === before, "the log and the data files are unchanged")
+    }
   }
 
   test("changes: CDF shows appends as inserts, deletes as deletes, compaction as nothing") {
@@ -1065,6 +1125,24 @@ class MaintenanceSpec extends SparkSuite {
     assert(hit <= total * 2 / 3,
       s"dense-region x-predicate must prune under rank-based cells " +
         s"($hit of $total overlap)")
+  }
+
+  test("zorder rankBased computes each column's cell tree once") {
+    import org.apache.spark.sql.catalyst.expressions.CaseWhen
+    import org.apache.spark.sql.execution.ProjectExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val path = tmpDir("zorder_cells")
+    DeltaFixtureWriter.write(spark.range(0, 512)
+      .select(col("id").as("x"), (col("id") * 7 % 64).as("y")).coalesce(1), path, "overwrite", Seq())
+    val (_, plans) = executedPlansOf(Maintenance.zorder(spark, path, Seq("x", "y"), rankBased = true))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val projects = plans.map(p => helper.collect(p) { case p: ProjectExec => p })
+      .filter(_.exists(_.projectList.exists(_.name == "__z")))
+    assert(projects.size === 1, "one executed plan computes __z")
+    val caseWhens = projects.head.map(_.projectList.map(_.collect { case c: CaseWhen => c }.size).sum).sum
+    // a 256-cell rankCell tree is 255 nested CaseWhens; one copy per bit
+    // term (8 bits, 2 columns) was 16 trees
+    assert(caseWhens > 0 && caseWhens <= 2 * 255, s"$caseWhens CaseWhen nodes")
   }
 
   test("optimize then vacuum: full maintenance cycle on a churned table") {

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -61,14 +64,36 @@ abstract class SparkSuite extends AnyFunSuite {
     (r, started.asScala.toSeq)
   }
 
-  /** The input records the tasks `body` starts read. */
-  def rowsReadOf[T](body: => T): (T, Long) = {
-    val rows = new java.util.concurrent.atomic.AtomicLong
+  /** The sum of `metric` over the tasks `body` starts. */
+  def taskSumOf[T](metric: TaskMetrics => Long)(body: => T): (T, Long) = {
+    val sum = new java.util.concurrent.atomic.AtomicLong
     val r = listening(new SparkListener {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach(m => rows.addAndGet(m.inputMetrics.recordsRead))
+        Option(e.taskMetrics).foreach(m => sum.addAndGet(metric(m)))
     })(body)
-    (r, rows.get())
+    (r, sum.get())
+  }
+
+  /** The input records the tasks `body` starts read. */
+  def rowsReadOf[T](body: => T): (T, Long) = taskSumOf(_.inputMetrics.recordsRead)(body)
+
+  /** The shuffle bytes the tasks `body` starts write. */
+  def shuffleBytesOf[T](body: => T): (T, Long) = taskSumOf(_.shuffleWriteMetrics.bytesWritten)(body)
+
+  /** The executed plans of the queries `body` runs. */
+  def executedPlansOf[T](body: => T): (T, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = body
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      (r, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   /** A copy of the table whose every `add.stats` (JSON commits and
