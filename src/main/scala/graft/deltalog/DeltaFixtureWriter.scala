@@ -1,7 +1,7 @@
 package graft.deltalog
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -20,16 +20,18 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * overwrite/append writes, predicate DELETE, OPTIMIZE compaction and
   * MERGE upserts.
   *
-  * Every mutation appends parquet through Spark, finds the files it added
-  * by diffing [[DeltaLog.dataFiles]] around the write ([[appendFiles]]),
-  * and commits them through the one commit writer, [[writeCommitStream]].
-  * DELETE starts at most two Spark jobs: one scan with no exchange, and a
-  * rewrite only when the log's row counts say some row survives.
-  * Every `add` line carries `"stats":"{\"numRecords\":N}"` (Delta
-  * PROTOCOL.md, "Per-file Statistics"), N read from the file's parquet
-  * footer on the driver, so readers count rows from the log. Commit files
-  * are written with java.nio, so the table must be a local path or a
-  * `file:` URI.
+  * Every mutation writes its parquet files through [[WriteFiles]], which
+  * returns exactly the files it wrote, each with its size, partition
+  * values and row count, and commits them through the one commit writer,
+  * [[writeCommitStream]]. Nothing lists the table directory and no footer
+  * is opened: a file some other process drops into the table is never
+  * committed as this write's. DELETE starts at most two Spark jobs: one
+  * scan with no exchange, and a rewrite only when the log's row counts say
+  * some row survives. Every `add` line carries
+  * `"stats":"{\"numRecords\":N}"` (Delta PROTOCOL.md, "Per-file
+  * Statistics"), so readers count rows from the log. Commit files are
+  * written with java.nio, so the table must be a local path or a `file:`
+  * URI.
   */
 object DeltaFixtureWriter {
 
@@ -72,18 +74,6 @@ object DeltaFixtureWriter {
     }
   }
 
-  /** Appends `rows` to the table directory as parquet (hive-partitioned by
-    * `partitionBy`) and returns the data files that write added, as
-    * (relative path, size) sorted by path. */
-  private[graft] def appendFiles(rows: DataFrame, table: String,
-                                 partitionBy: Seq[String]): Seq[(String, Long)] = {
-    val spark = rows.sparkSession
-    val before = DeltaLog.dataFiles(spark, table)
-    val w = rows.write.mode("append")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(table)
-    DeltaLog.dataFiles(spark, table).filterNot(f => before.contains(f._1)).toSeq.sorted
-  }
-
   /** The local directory of `table`, a plain path or a `file:` URI; any
     * other scheme fails. */
   private def localDir(table: String): String = {
@@ -98,22 +88,28 @@ object DeltaFixtureWriter {
     * Seq — the driver cost is the JSON bytes themselves, which are inherent
     * to the Delta log format. With a `schema`, the commit also carries the
     * `protocol` and `metaData` actions (the first commit, a schema-evolving
-    * write, a RESTORE across a schema change). commitInfo is appended LAST
-    * (after the counts are known); the log reader is line-order-agnostic
-    * (every action line is parsed independently and commitInfo rows are
-    * filtered by field). Each add's `stats.numRecords` is its parquet
-    * footer row count, read on the driver as the line is written: no Spark
-    * job. `table` is a plain path or a `file:` URI; any other scheme fails
-    * before anything is written. */
+    * write, a RESTORE across a schema change); the protocol is the table's
+    * latest one, `protocol` (a [[DeltaLog.actionSchema]] row), raised to at
+    * least reader 1, writer 2, with its features kept, so a commit never
+    * lowers a table's protocol. commitInfo is appended LAST (after the
+    * counts are known); the log reader is line-order-agnostic (every action
+    * line is parsed independently and commitInfo rows are filtered by
+    * field). `files` are the adds; each add's partition values are parsed
+    * from its hive-style path, and its `stats.numRecords` is the count it
+    * comes with (the writer's, for a file [[WriteFiles]] wrote),
+    * and only an add without one has its parquet footer read, on the
+    * driver. `table` is a plain path or a `file:` URI; any other scheme
+    * fails before anything is written. */
   private[graft] def writeCommitStream(
       table: String,
       version: Long,
       operation: String,
       parameters: Seq[(String, String)],
-      adds: Iterator[(String, Long)],
+      files: Iterator[DataFile],
       removes: Iterator[String],
       partitionBy: Seq[String],
-      schema: Option[StructType] = None): Unit = {
+      schema: Option[StructType] = None,
+      protocol: Option[Row] = None): Unit = {
     val dir = localDir(table)
     val ts = System.currentTimeMillis()
     lazy val conf = SparkSession.active.sparkContext.hadoopConfiguration
@@ -149,7 +145,7 @@ object DeltaFixtureWriter {
           // scans from it, never from a sampled data-file footer
           val id = java.util.UUID.nameUUIDFromBytes(
             dir.getBytes(StandardCharsets.UTF_8)).toString
-          line("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
+          line(s"""{"protocol":${protocolJson(protocol)}}""")
           line(s"""{"metaData":{"id":${jStr(id)},"schemaString":${jStr(st.json)},"partitionColumns":${partitionBy.map(jStr).mkString("[", ",", "]")},"createdTime":$ts}}""")
         }
         var nRemoves = 0L
@@ -158,10 +154,9 @@ object DeltaFixtureWriter {
           line(s"""{"remove":{"path":${jStr(p)},"deletionTimestamp":$ts,"dataChange":true}}""")
           nRemoves += 1
         }
-        adds.foreach { case (p, size) =>
-          val pv = jMap(partitionValuesOf(p, partitionBy))
-          val stats = jStr(s"""{"numRecords":${DeltaLog.footerRecordCount(conf, root, p)}}""")
-          line(s"""{"add":{"path":${jStr(p)},"size":$size,"partitionValues":$pv,"modificationTime":$ts,"dataChange":true,"stats":$stats}}""")
+        files.foreach { f =>
+          val n = f.numRecords.getOrElse(DeltaLog.footerRecordCount(conf, root, f.path))
+          line(s"""{"add":{"path":${jStr(f.path)},"size":${f.size},"partitionValues":${jMap(partitionValuesOf(f.path, partitionBy))},"modificationTime":$ts,"dataChange":true,"stats":${jStr(s"""{"numRecords":$n}""")}}}""")
           nAdds += 1
         }
         val metrics = Seq(
@@ -189,6 +184,32 @@ object DeltaFixtureWriter {
     } finally Files.deleteIfExists(tmp)
   }
 
+  /** [[writeCommitStream]] of adds given as (relative path, size), with no
+    * row count: each add's count is read from its parquet footer. */
+  private[graft] def writeCommitStream(
+      table: String,
+      version: Long,
+      operation: String,
+      parameters: Seq[(String, String)],
+      adds: Iterator[(String, Long)],
+      removes: Iterator[String],
+      partitionBy: Seq[String]): Unit =
+    writeCommitStream(table, version, operation, parameters,
+      adds.map { case (p, size) => DataFile(p, size, None) },
+      removes, partitionBy)
+
+  /** The `protocol` action a schema commit writes: the table's latest one,
+    * if any, raised to at least reader 1, writer 2, its reader and writer
+    * features kept. */
+  private def protocolJson(latest: Option[Row]): String = {
+    def version(i: Int, least: Int) =
+      latest.filterNot(_.isNullAt(i)).fold(least)(p => math.max(least, p.getInt(i)))
+    def features(i: Int, name: String) = latest.filterNot(_.isNullAt(i))
+      .map(p => s""","$name":${p.getSeq[String](i).map(jStr).mkString("[", ",", "]")}""").getOrElse("")
+    s"""{"minReaderVersion":${version(0, 1)},"minWriterVersion":${version(1, 2)}""" +
+      features(2, "readerFeatures") + features(3, "writerFeatures") + "}"
+  }
+
   /** Overwrite or append `df` as a new commit. Overwrite logically removes
     * previous active files (they stay on disk — that is what VACUUM is for,
     * and what the orphan/vacuum metrics detect). */
@@ -197,7 +218,7 @@ object DeltaFixtureWriter {
     require(mode == "overwrite" || mode == "append", s"bad mode $mode")
     // one snapshot read serves the version, the overwrite remove-list, the
     // schema-evolution check and the partitioning
-    val (version, snapBefore, schemaChanged, pb) =
+    val (version, snapBefore, schemaChanged, pb, protocol) =
       if (DeltaLog.isDeltaTable(df.sparkSession, table)) {
         val snap = DeltaLog.snapshot(df.sparkSession, table)
         val files =
@@ -212,18 +233,19 @@ object DeltaFixtureWriter {
         require(partitionBy.isEmpty || partitionBy == own,
           s"$table is partitioned by ${own.mkString("[", ",", "]")}; a write " +
             s"partitioned by ${partitionBy.mkString("[", ",", "]")} cannot change it")
-        (snap.version + 1, files, changed, own)
-      } else (0L, Seq.empty, false, partitionBy)
-    val newFiles = appendFiles(df, table, pb)
+        (snap.version + 1, files, changed, own, snap.latest("protocol"))
+      } else (0L, Seq.empty, false, partitionBy, None)
+    val newFiles = WriteFiles(df, table, pb)
     writeCommitStream(table, version, "WRITE",
       Seq("mode" -> (if (mode == "overwrite") "Overwrite" else "Append"),
           "partitionBy" -> pb.mkString("[", ",", "]")),
-      adds = newFiles.iterator, removes = snapBefore.iterator,
+      files = newFiles.iterator, removes = snapBefore.iterator,
       partitionBy = pb,
       // metaData rides the first commit AND any commit whose write changes
       // the schema (Delta schema evolution) — replay takes the latest, so
       // schemaString stays the live authority after evolving appends
-      schema = Some(df.schema).filter(_ => version == 0L || schemaChanged))
+      schema = Some(df.schema).filter(_ => version == 0L || schemaChanged),
+      protocol = protocol)
   }
 
   /** `__file` → rows of `rows` (a filtered [[DeltaSnapshot.dataWithFile]]):
@@ -246,7 +268,7 @@ object DeltaFixtureWriter {
     val partitionBy = snap.partitionColumns
     // an empty table still logs the DELETE commit, with no file changes
     val (adds, removes) = snap.dataWithFile match {
-      case None => (Seq.empty, Seq.empty)
+      case None => (Seq.empty[DataFile], Seq.empty[String])
       case Some(rows) =>
         val matches = touchedFiles(rows.where(expr(predicate)))
         val hit = snap.manifest.filter(f => matches.contains(f.getString(0)))
@@ -255,14 +277,14 @@ object DeltaFixtureWriter {
         // silently drop them)
         val written =
           if (hit.map(f => snap.numRecords(f) - matches(f.getString(0))).sum <= 0) Seq.empty
-          else appendFiles(snap.dataWithFileIn(matches.keys.toSeq)
+          else WriteFiles(snap.dataWithFileIn(matches.keys.toSeq)
             .where(!coalesce(expr(predicate), lit(false)))
             .select(snap.data.columns.map(col).toIndexedSeq: _*), table, partitionBy)
         (written, matches.keys.toSeq.sorted)
     }
     writeCommitStream(table, snap.version + 1, "DELETE",
       Seq("predicate" -> predicate),
-      adds = adds.iterator, removes = removes.iterator,
+      files = adds.iterator, removes = removes.iterator,
       partitionBy = partitionBy)
   }
 
@@ -275,14 +297,14 @@ object DeltaFixtureWriter {
     // a fully-deleted table logs a no-op OPTIMIZE, nothing to rewrite
     val newFiles =
       if (activeRel.isEmpty) Seq.empty
-      else {
-        val exprs: Seq[org.apache.spark.sql.Column] =
-          if (partitionBy.isEmpty) Seq(lit(1)) else partitionBy.map(col)
-        appendFiles(snap.data.repartition(exprs: _*), table, partitionBy)
-      }
+      // one reducer per partition directory: a fixed count of one, or a
+      // hash on the partition columns
+      else WriteFiles(
+        if (partitionBy.isEmpty) snap.data.repartition(1)
+        else snap.data.repartition(partitionBy.map(col): _*), table, partitionBy)
     writeCommitStream(table, snap.version + 1, "OPTIMIZE",
       Seq("predicate" -> "[]"),
-      adds = newFiles.iterator, removes = activeRel.iterator,
+      files = newFiles.iterator, removes = activeRel.iterator,
       partitionBy = partitionBy)
   }
 
@@ -306,10 +328,10 @@ object DeltaFixtureWriter {
           .select(dataCols.map(col).toIndexedSeq: _*)
         (survivors.union(src), hitFiles)
     }
-    val newFiles = appendFiles(newRows, table, partitionBy)
+    val newFiles = WriteFiles(newRows, table, partitionBy)
     writeCommitStream(table, snap.version + 1, "MERGE",
       Seq("matchedPredicate" -> keyCols.mkString(",")),
-      adds = newFiles.iterator, removes = removes.iterator,
+      files = newFiles.iterator, removes = removes.iterator,
       partitionBy = partitionBy)
   }
 
@@ -317,7 +339,7 @@ object DeltaFixtureWriter {
   def logCommit(table: String, version: Long, operation: String,
                 parameters: Seq[(String, String)]): Unit =
     writeCommitStream(table, version, operation, parameters,
-      adds = Iterator.empty, removes = Iterator.empty, partitionBy = Seq.empty)
+      files = Iterator.empty, removes = Iterator.empty, partitionBy = Seq.empty)
 
   /** rm -rf the table dir (test teardown; clean_delta_data.py:9-22);
     * `table` is a plain path or a `file:` URI. */

@@ -90,7 +90,8 @@ object DeltaLog {
     StructField("protocol", StructType(Seq(
       StructField("minReaderVersion", IntegerType),
       StructField("minWriterVersion", IntegerType),
-      StructField("readerFeatures", ArrayType(StringType))
+      StructField("readerFeatures", ArrayType(StringType)),
+      StructField("writerFeatures", ArrayType(StringType))
     )))
   ))
 
@@ -460,8 +461,7 @@ private[deltalog] final class Replay {
   * active-file `manifest` ([[DeltaLog.fileSchema]] rows sorted by path; the
   * `stats` JSON's `numRecords` feeds [[partitionCounts]]) and one commit
   * row per version ([[DeltaLog.commitSchema]]), in version order. A scan
-  * must name its files on the driver, where every analysis and append
-  * already lists the whole table folder ([[DeltaLog.dataFiles]]). Every
+  * names its files on the driver, from the manifest. Every
   * other fact is plain Scala over those rows: [[version]], the [[latest]]
   * metaData and protocol ([[tableSchema]], [[partitionColumns]], the reader
   * protocol), [[history]] and [[partitionCounts]]. Every data read is one
@@ -570,8 +570,8 @@ final class DeltaSnapshot private[deltalog] (val spark: SparkSession, val tableP
   }
 
   /** Active rows + a `__file` column (the file's table-relative path, as
-    * `add.path` spells it; not the basename, which one write job reuses in
-    * every partition directory) — used by file-targeted rewrites (DELETE).
+    * `add.path` spells it; not the basename, which a Spark write job reuses
+    * in every partition directory) — used by file-targeted rewrites (DELETE).
     * None when no file is active. */
   lazy val dataWithFile: Option[DataFrame] =
     if (manifest.isEmpty) None else Some(scan(manifest.toSeq))

@@ -44,6 +44,15 @@ object PlanAudit {
         graft.operators.Maintenance.optimizeRewrite(snap, 128L * 1024 * 1024, 64L * 1024 * 1024)
           .foreach(_._1.explain("formatted"))
         graft.deltalog.DeltaFixtureWriter.drop(path)
+      case "write" =>
+        // an append laid out by a hash on the partition columns: the static
+        // plan the writer runs as one job, an Exchange hashpartitioning on
+        // l_returnflag under the writer's sort — no AdaptiveSparkPlan
+        println(s"########## write (WriteFiles.staticPlan of a layout append)")
+        import org.apache.spark.sql.functions.col
+        val li = spark.read.parquet(s"$dir/lineitem.parquet")
+          .select("l_orderkey", "l_quantity", "l_returnflag")
+        println(graft.deltalog.WriteFiles.staticPlan(li.repartition(col("l_returnflag")), Seq("l_returnflag")).get)
       case "changes" =>
         // the CDF plan: one scan of the window's files + join to the
         // window's signed actions on `__file` + ONE hash aggregate — no

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 
-import graft.deltalog.{DeltaFixtureWriter, DeltaLog}
+import graft.deltalog.{DataFile, DeltaFixtureWriter, DeltaLog, WriteFiles}
 
 /** Maintenance operations the health analysis recommends (H12) — the engine
   * can EXECUTE them, not just suggest:
@@ -49,10 +49,9 @@ object Maintenance {
     *    partition of [[graft.deltalog.DeltaSnapshot.scanBins]], so its task
     *    reads exactly its files, in order, and the partitioned append writes
     *    it as one output file;
-    *  - discovery: the driver-side data-file listing
-    *    ([[graft.deltalog.DeltaLog.dataFiles]]) before and after the write,
-    *    diffed in Scala ([[DeltaFixtureWriter.appendFiles]]) — the new
-    *    entries are one per bin;
+    *  - discovery: none. The write ([[graft.deltalog.WriteFiles]]) returns
+    *    exactly the files its tasks wrote, one per bin, with their sizes and
+    *    row counts; no directory is listed and no footer is opened;
     *  - commit: the chosen paths, sorted on the driver, are the removes.
     *
     * Single-writer assumption, like the commit writer (no
@@ -69,10 +68,9 @@ object Maintenance {
       case None =>
         DeltaFixtureWriter.logCommit(tablePath, snap.version + 1, "OPTIMIZE", params)
       case Some((rows, removes)) =>
-        val added = DeltaFixtureWriter.appendFiles(rows, snap.qualifiedTablePath,
-          snap.partitionColumns)
+        val added = WriteFiles(rows, snap.qualifiedTablePath, snap.partitionColumns)
         DeltaFixtureWriter.writeCommitStream(tablePath, snap.version + 1, "OPTIMIZE",
-          params, adds = added.iterator, removes = removes.iterator,
+          params, files = added.iterator, removes = removes.iterator,
           partitionBy = snap.partitionColumns)
     }
   }
@@ -135,10 +133,9 @@ object Maintenance {
     * `sortWithinPartitions` so every output file covers a contiguous
     * Z-range. Bit interleave is a constant-shift expression tree inside
     * whole-stage codegen, over one cell column per cluster column, each
-    * computed once. Commit flow mirrors [[optimize]]: the listings
-    * before and after the write are diffed for the adds, and the removes
-    * are the driver-held manifest's paths, sorted. Single-writer assumption
-    * as everywhere. */
+    * computed once. Commit flow mirrors [[optimize]]: the adds are the files
+    * the write returns, and the removes are the driver-held manifest's
+    * paths, sorted. Single-writer assumption as everywhere. */
   def zorder(spark: SparkSession, tablePath: String, zorderCols: Seq[String],
              targetFileBytes: Long = 128L * 1024 * 1024,
              rankBased: Boolean = false): Unit = {
@@ -190,7 +187,7 @@ object Maintenance {
         // into a projection that reads it more than once
         val cellCols = cells.indices.map(i => s"__cell$i")
         val shuffleKeys = partCols.map(col) :+ col("__z")
-        val added = DeltaFixtureWriter.appendFiles(
+        val added = WriteFiles(
           rows.drop("__file")
             .select(col("*") +: cells.zip(cellCols).map { case (c, n) => c.as(n) }: _*)
             .withColumn("__z", zValue(cellCols.map(col), bits))
@@ -201,7 +198,7 @@ object Maintenance {
           snap.qualifiedTablePath, partCols)
         DeltaFixtureWriter.writeCommitStream(tablePath, snap.version + 1,
           "OPTIMIZE", zParams,
-          adds = added.iterator,
+          files = added.iterator,
           removes = snap.activeSizes.keys.toSeq.sorted.iterator,
           partitionBy = partCols)
     }
@@ -309,11 +306,14 @@ object Maintenance {
       return
     }
     val tgt = DeltaLog.snapshotAt(spark, tablePath, toVersion)
-    val adds = (tgt.activeSizes -- cur.activeSizes.keys).toSeq.sorted
+    // each re-added file keeps the size and row count its target add logged
+    val adds = tgt.manifest.toSeq.filterNot(f => cur.activeSizes.contains(f.getString(0))).map { f =>
+      DataFile(f.getString(0), f.getLong(1), DeltaLog.statsNumRecords(f.getAs[String]("stats")))
+    }
     val removes = (cur.activeSizes.keySet -- tgt.activeSizes.keys).toSeq.sorted
     // vacuum check: every file to re-add must still exist on disk
     val onDisk = DeltaLog.dataFiles(spark, cur.qualifiedTablePath)
-    val missing = adds.map(_._1).filterNot(onDisk.contains)
+    val missing = adds.map(_.path).filterNot(onDisk.contains)
     require(missing.isEmpty,
       s"restore to $toVersion impossible: ${missing.length} target " +
         s"files no longer on disk (vacuumed?), e.g. ${missing.head}")
@@ -322,11 +322,12 @@ object Maintenance {
       Seq("version" -> toVersion.toString,
         "numRestoredFiles" -> adds.length.toString,
         "numRemovedFiles" -> removes.length.toString),
-      adds = adds.iterator,
+      files = adds.iterator,
       removes = removes.iterator,
       partitionBy = tgt.partitionColumns,
       schema = Option.when(cur.tableSchema != tgt.tableSchema)(
-        tgt.tableSchema.getOrElse(new StructType())))
+        tgt.tableSchema.getOrElse(new StructType())),
+      protocol = cur.latest("protocol"))
   }
 
   /** Write a parquet checkpoint of the current snapshot state — active adds
@@ -344,7 +345,7 @@ object Maintenance {
     val v = snap.version
     // a log that predates protocol emission gets the minimal classic protocol
     val meta = snap.latest("metaData")
-    val proto = snap.latest("protocol").getOrElse(Row(1, 2, null))
+    val proto = snap.latest("protocol").getOrElse(Row(1, 2, null, null))
     val rows = snap.manifest.toSeq.map(f => Row(Row(f(0), f(1), f(2), f(3), true, f(4)), null, null)) ++
       meta.map(Row(null, _, null)) :+ Row(null, null, proto)
     val schema = StructType(Seq("add", "metaData", "protocol").map(DeltaLog.actionSchema(_)))

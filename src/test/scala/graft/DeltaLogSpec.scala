@@ -316,6 +316,31 @@ class DeltaLogSpec extends SparkSuite {
     } finally v0.unpersist()
   }
 
+  test("a schema-evolving append and a checkpoint keep a (1, 7) table's protocol and writer features") {
+    val path = tmpDir("dlog_keepproto")
+    val protocol = """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["appendOnly","invariants"]}}"""
+    writeLog(path, Seq(protocol, metaData("{}"), commitInfo("CREATE TABLE")))
+    // the log's schema is (id); the append adds a column, so its commit
+    // carries metaData and protocol
+    DeltaFixtureWriter.write(Seq((1L, "a")).toDF("id", "tag"), path, "append")
+    val commit1 = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(path, "_delta_log", f"${1}%020d.json")).asScala
+    assert(commit1.exists(_.startsWith("""{"metaData":""")), commit1.mkString("\n"))
+    assert(commit1.filter(_.startsWith("""{"protocol":""")) === Seq(protocol))
+    val v = graft.operators.Maintenance.checkpoint(spark, path)
+    val ckpt = spark.read.parquet(f"$path/_delta_log/$v%020d.checkpoint.parquet")
+      .where($"protocol".isNotNull).select($"protocol.*")
+    assert(ckpt.as[(Int, Int, Option[Seq[String]], Seq[String])].collect().toSeq ===
+      Seq((1, 7, None, Seq("appendOnly", "invariants"))))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_delta_log", f"${0}%020d.json"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_delta_log", f"${1}%020d.json"))
+    val snap = DeltaLog.snapshot(spark, path)
+    assert(snap.latest("protocol").map(p => (p.getInt(0), p.getInt(1), p.getSeq[String](3))) ===
+      Some((1, 7, Seq("appendOnly", "invariants"))))
+    assert(snap.tableSchema.map(_.fieldNames.toSeq) === Some(Seq("id", "tag")))
+    assert(snap.data.as[(Long, String)].collect().toSeq === Seq((1L, "a")))
+  }
+
   test("replay: re-adds, same-commit add+remove, removes without adds, checkpoint + later remove") {
     val path = tmpDir("dlog_replay")
     def add(p: String, size: Long, t: Long) =

@@ -167,7 +167,7 @@ class MaintenanceSpec extends SparkSuite {
         lit(null).cast(schema("metaData").dataType).as("metaData"),
         lit(null).cast(schema("protocol").dataType).as("protocol"))
       val tail = spark.createDataFrame((snap.latest("metaData").map(m => Row(null, m, null)).toSeq :+
-        Row(null, null, snap.latest("protocol").getOrElse(Row(1, 2, null)))).asJava, schema)
+        Row(null, null, snap.latest("protocol").getOrElse(Row(1, 2, null, null)))).asJava, schema)
       val refDir = tmpDir("ckptref_out") + "/ref"
       adds.unionByName(tail).coalesce(1).write.parquet(refDir)
       val ref = new java.io.File(refDir).listFiles().map(_.getPath)
@@ -878,6 +878,127 @@ class MaintenanceSpec extends SparkSuite {
     assert(removed.size === 6 && added === Seq(200L, 200L, 200L), "one output per partition")
   }
 
+  test("an append laid out by a hash on the partition columns starts 1 job and writes one file per partition directory") {
+    val path = tmpDir("appendjobs")
+    twoWrites(path)
+    val rows = spark.range(600, 900).select(col("id"), (col("id") % 3).as("k")).repartition(col("k"))
+    val ((_, jobs), plans) = executedPlansOf(jobsOf(DeltaFixtureWriter.write(rows, path, "append", Seq("k"))))
+    // an append whose layout shuffle ran under adaptive execution started
+    // 2: the shuffle, then the write
+    assert(jobs.size === 1, jobs.mkString("\n"))
+    // the write's SQL execution reports the static plan that ran
+    assert(plans.size === 1, plans.mkString("\n"))
+    assert(plans.head.collect { case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => s }.size === 1)
+    assert(!plans.head.exists(_.isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]))
+    val (removed, added) = commitFiles(path, 2)
+    assert(removed.isEmpty && added === Seq(100L, 100L, 100L), "one file per k")
+    assert(DeltaLog.snapshot(spark, path).data.count() === 900L)
+  }
+
+  test("an append hashed into more shuffle partitions than task slots keeps the adaptive plan and one file per partition directory") {
+    val path = tmpDir("appendwide")
+    twoWrites(path)
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val jobs = try {
+      // 16 reducers on 4 task slots: the static plan would run all 16,
+      // most of them empty; adaptive execution coalesces them
+      spark.conf.set("spark.sql.shuffle.partitions", "16")
+      val rows = spark.range(600, 900).select(col("id"), (col("id") % 3).as("k")).repartition(col("k"))
+      assert(graft.deltalog.WriteFiles.staticPlan(rows, Seq("k")).isEmpty)
+      jobsOf(DeltaFixtureWriter.write(rows, path, "append", Seq("k")))._2
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert(jobs.size === 2, jobs.mkString("\n"))
+    val (removed, added) = commitFiles(path, 2)
+    assert(removed.isEmpty && added === Seq(100L, 100L, 100L), "one file per k")
+  }
+
+  test("compact starts 1 job and writes one file per partition directory, or one file unpartitioned") {
+    Seq(Seq("k") -> Seq(200L, 200L, 200L), Seq.empty[String] -> Seq(600L)).foreach { case (partitionBy, want) =>
+      val path = tmpDir("compactjobs")
+      twoWrites(path, partitionBy)
+      val (_, jobs) = jobsOf(DeltaFixtureWriter.compact(spark, path))
+      assert(jobs.size === 1, s"$partitionBy: ${jobs.mkString("\n")}")
+      val (removed, added) = commitFiles(path, 2)
+      assert(removed.size === want.size * 2 && added === want, partitionBy)
+    }
+  }
+
+  test("zorder starts 3 jobs: the min/max aggregate, the range-boundary sample and the write") {
+    val path = tmpDir("zorderjobs")
+    twoWrites(path)
+    val (_, jobs) = jobsOf(Maintenance.zorder(spark, path, Seq("id")))
+    // under adaptive execution the range shuffle ran as a job of its own: 4
+    assert(jobs.size === 3, jobs.mkString("\n"))
+    assert(commitFiles(path, 2)._2.sum === 600L)
+    assert(DeltaLog.snapshot(spark, path).data.count() === 600L)
+  }
+
+  test("a write whose input holds an aggregate keeps the adaptive plan and one file per partition directory") {
+    val path = tmpDir("aggwrite")
+    // 150 (id, k) groups over 4 shuffle partitions: the aggregate's
+    // exchange hashes on id and k, so a static plan would spread each k
+    // over up to 4 files; adaptive execution coalesces the reducers into one
+    val rows = spark.range(300).select((col("id") % 50).as("id"), (col("id") % 3).as("k"))
+      .groupBy("id", "k").count()
+    assert(graft.deltalog.WriteFiles.staticPlan(rows, Seq("k")).isEmpty)
+    val (_, jobs) = jobsOf(DeltaFixtureWriter.write(rows, path, "overwrite", Seq("k")))
+    assert(jobs.size === 2, jobs.mkString("\n"))
+    val (_, added) = commitFiles(path, 0)
+    assert(added === Seq(50L, 50L, 50L), "one file per k")
+  }
+
+  test("a file dropped into a partition directory during an append stays an orphan; the table reads the rows written") {
+    val path = tmpDir("foreign")
+    DeltaFixtureWriter.write(Seq((1L, "a"), (2L, "b")).toDF("id", "p").coalesce(1), path, "overwrite", Seq("p"))
+    val copied = new java.io.File(path, DeltaLog.snapshot(spark, path).manifest.head.getString(0))
+    val foreign = new java.io.File(path, "p=a/written-by-someone-else.parquet")
+    // the task that writes the append copies a data file into p=a first
+    val drop = udf { (id: Long) =>
+      if (!foreign.exists()) java.nio.file.Files.copy(copied.toPath, foreign.toPath)
+      id
+    }.asNondeterministic()
+    DeltaFixtureWriter.write(spark.range(3, 4).select(drop(col("id")).as("id"), lit("a").as("p")),
+      path, "append")
+    assert(foreign.exists())
+    val snap = DeltaLog.snapshot(spark, path)
+    assert(snap.data.select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    assert(commitFiles(path, 1) === (Seq.empty, Seq(1L)), "the append committed its own file only")
+    assert(DeltaLog.dataFiles(spark, path).keySet -- snap.manifest.map(_.getString(0)) ===
+      Set("p=a/written-by-someone-else.parquet"))
+  }
+
+  test("two concurrent appends: one commits, one fails at the version claim, no task fails, no _temporary appears") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val path = tmpDir("concurrent")
+    DeltaFixtureWriter.write(Seq((0L, "a")).toDF("id", "p"), path, "overwrite", Seq("p"))
+    val meet = udf { (id: Long) => MaintenanceSpec.meet(path); id }.asNondeterministic()
+    val failedTasks = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.reason != org.apache.spark.Success) failedTasks.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // each append's one task waits in `meet` until both are writing, so
+    // both read version 0 and race for version 1
+    val appends = try Seq(100L, 200L).map { id =>
+      id -> Future(scala.util.Try(DeltaFixtureWriter.write(
+        spark.range(id, id + 1, 1, 1).select(meet(col("id")).as("id"), lit("a").as("p")), path, "append")))
+    }.map { case (id, f) => id -> Await.result(f, scala.concurrent.duration.Duration(120, "s")) }
+    finally {
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val (won, lost) = appends.partition(_._2.isSuccess)
+    assert(won.size === 1 && lost.size === 1, appends)
+    assert(lost.head._2.failed.get.getMessage.contains("concurrent commit"), lost.head._2)
+    assert(failedTasks.get === 0)
+    assert(!MaintenanceSpec.sawTemporary.get && !new java.io.File(path, "_temporary").exists())
+    val snap = DeltaLog.snapshot(spark, path)
+    assert(snap.version === 1L)
+    assert(snap.data.select("id").as[Long].collect().sorted.toSeq === Seq(0L, won.head._1))
+  }
+
   test("optimize reads each chosen file once, removes them and keeps every row") {
     val path = tmpDir("optrows")
     optimizable(path)
@@ -1211,5 +1332,19 @@ class MaintenanceSpec extends SparkSuite {
     (fromJson ++ fromCheckpoint).foreach { case (rel, n) =>
       assert(n === Some(footerRows(rel)), s"$rel: numRecords $n")
     }
+  }
+}
+
+object MaintenanceSpec {
+  private val waiting = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CountDownLatch]
+  val sawTemporary = new java.util.concurrent.atomic.AtomicBoolean
+
+  /** Blocks until two tasks have called it for `table` (60 s at most), then
+    * notes whether the table holds a `_temporary` directory. */
+  def meet(table: String): Unit = {
+    val latch = waiting.computeIfAbsent(table, _ => new java.util.concurrent.CountDownLatch(2))
+    latch.countDown()
+    latch.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    if (new java.io.File(table, "_temporary").exists()) sawTemporary.set(true)
   }
 }

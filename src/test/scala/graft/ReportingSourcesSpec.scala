@@ -233,6 +233,9 @@ class ReportingSourcesSpec extends SparkSuite {
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .find(p => root.relativize(p).getNameCount == 3).get
     java.nio.file.Files.copy(nested, root.resolve("top.parquet"))
+    // the engine's writer leaves no _SUCCESS marker; one a Spark job left
+    // behind must not be listed either
+    java.nio.file.Files.write(root.resolve("_SUCCESS"), Array.emptyByteArray)
     val all = java.nio.file.Files.walk(root).iterator().asScala.toSeq
       .filter(java.nio.file.Files.isRegularFile(_))
     val names = all.map(_.getFileName.toString)
